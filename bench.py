@@ -13,7 +13,6 @@ spread, extras, semantics flags — goes to $SPARK_GRAFT_BENCH_OUT.
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
 import sys
@@ -22,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from scala_data_pipeline_spark.queries import all_queries  # noqa: E402
-from scala_data_pipeline_spark.session import get_session  # noqa: E402
+from scala_data_pipeline_spark.session import HITS, MISSES, get_session  # noqa: E402
 
 # "_warm" suffix records the round-14 semantics change (the r12
 # precedent: rename the metric when what it measures changes): every
@@ -32,23 +31,12 @@ from scala_data_pipeline_spark.session import get_session  # noqa: E402
 # 1:1 comparable with pre-r14 "headline_queries_total_noop_sink".
 METRIC = "headline_queries_total_noop_sink_warm"
 
-# Session-memoized hubs (queries/ext_dedup.py, queries/ext_similarity.py)
-# warmed before timing; consumers are detected from query source so the
-# artifact names exactly which timed entries ride on a warm hub.
-MEMO_HUB_NAMES = ("_lsh_pairs", "_pair_core", "_k1_decisions")
 
+def hub_lookups() -> int:
+    """Session hub lookups in this process so far, hits and builds; a
+    query whose construction moves it reads a pre-materialized hub."""
+    return HITS["hub"] + MISSES["hub"]
 
-def memoized_consumers(queries: dict) -> list[str]:
-    """Registry entries whose source references a memoized hub."""
-    out = []
-    for name, fn in queries.items():
-        try:
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):
-            continue
-        if any(h in src for h in MEMO_HUB_NAMES):
-            out.append(name)
-    return sorted(out)
 
 # Headline set: one per operator family; bench runs each to completion
 # (a noop-sink write materializes the full plan including the final
@@ -167,7 +155,9 @@ def main() -> None:
     # and min-of-3 recovers the uncontended number far more reliably.
     timings: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
+    memoized: list[str] = []
     for name in names:
+        lookups = hub_lookups()
         # One UNTIMED warm rep per query before the three timed ones
         # (round-13 verdict item 5): rep 1 of a wide plan pays one-off
         # whole-stage-codegen JIT compile (sim_semdedup_k1's 64-column
@@ -201,6 +191,8 @@ def main() -> None:
             del df
             gc.collect()
         spark.sparkContext._jvm.System.gc()
+        if hub_lookups() > lookups:
+            memoized.append(name)
         timings[name] = min(reps)
         runs[name] = reps
 
@@ -241,10 +233,10 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         # Timed reps of these entries consume a pre-materialized
-        # session hub (see MEMO_HUB_NAMES): they measure the consumer
+        # session hub (see hub_lookups): they measure the consumer
         # plan, not hub construction.
         "warm_rep": not cold,
-        "memoized": memoized_consumers(queries),
+        "memoized": sorted(memoized),
         "queries": timings,
         # Per-query raw reps + worst per-query rep spread, so a
         # drifted single reading can be adjudicated from the

@@ -404,10 +404,6 @@ def _hamming(a: str, b: str, bits: int) -> Column:
     )
 
 
-def _hamming16(a: str, b: str) -> Column:
-    return _hamming(a, b, 16)
-
-
 # Signature width for the near-dup pair op. 64-bit sha2-256 signatures
 # with 32-bit blocks (2 blocks -> hamming<=1, 2^32 block-key space):
 # the r16 500k-doc probe measured the previous 32/16 layout saturating
@@ -646,7 +642,9 @@ def lsh_quality_metrics(
     so the candidate cache can be released before returning — a lazy
     return would leak the persist for the session or force a recompute
     per downstream action. With caller-provided frames (the memoized
-    hubs) there is nothing to release and the report stays lazy (r20).
+    hubs) there is nothing to release and the report stays lazy (r20);
+    that lazy report re-runs in full on every action, so collect it
+    once.
     """
     # ``candidates`` lets callers hand in an already-materialized pair
     # frame (the query layer's session-memoized _lsh_pairs hub — r17:

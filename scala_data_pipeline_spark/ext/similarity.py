@@ -569,16 +569,16 @@ def _srp_projections_spark(emb: Column, planes: list[list[int]]) -> Column:
     # lit(list) still recurses into ~1,536 per-element py4j lit calls —
     # profiled at 1.3 s of the 3.3 s construction time of
     # sim_knn_recall_eval (r20). One F.expr string hands the whole
-    # matrix to the JVM parser in a SINGLE round-trip; entries are
-    # exact ±1.0 doubles, so the text round-trip is value-identical
-    # (constant-folded to the same nested array literal; oracle
-    # hash-exact at 3 SFs).
+    # matrix to the JVM parser in a SINGLE round-trip; each entry is
+    # rendered as its shortest round-tripping repr, so the text
+    # round-trip is value-identical for any double (constant-folded to
+    # the same nested array literal; oracle hash-exact at 3 SFs).
     tsigns = F.expr(
         "array("
         + ",".join(
             "array("
             + ",".join(
-                f"{float(planes[p][i]):.1f}D" for p in range(n_planes)
+                f"{float(planes[p][i])!r}D" for p in range(n_planes)
             )
             + ")"
             for i in range(dim)

@@ -2,83 +2,25 @@
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from pyspark.sql import DataFrame
 
-from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame, SparkSession
-
-
-def memoized_checkpoint(
-    cache: dict,
-    spark: SparkSession,
-    key: str,
-    build: Callable[[], DataFrame],
-) -> DataFrame:
-    """Materialize ``build()`` once per (application, key) and serve
-    the localCheckpoint'd frame to every later caller — the shared-hub
-    idiom used by the LSH pair list, the shingle pair core, and the
-    SemDeDup k=1 decision frame (a registry sweep pays the expensive
-    frame once, not once per consuming query).
-
-    Always EAGER: a warm call must leave the hub materialized (bench
-    and the scale smokes rely on that). A new session gets a new
-    applicationId, so frames from stopped sessions are never hit —
-    and their entries are EVICTED on the next insert (advisor
-    round-14: without eviction, a long-lived driver cycling sessions
-    pins every dead application's DataFrame objects forever), which
-    releases the Python frames so the checkpointed RDD storage can be
-    GC'd. Eviction is scoped to entries whose OWN context reports
-    stopped (advisor round-15: evicting every foreign app id would
-    make two concurrently live sessions thrash each other's hubs on
-    every cross-session miss — correctness preserved, hubs silently
-    rebuilt each time)."""
-    app_id = spark.sparkContext.applicationId
-    k = (app_id, key)
-    df = cache.get(k)
-    if df is None:
-        for stale_k, stale_df in list(cache.items()):
-            if stale_k[0] == app_id:
-                continue
-            try:
-                stopped = stale_df.sparkSession.sparkContext._jsc.sc().isStopped()
-            except (AttributeError, Py4JError):
-                # Torn-down handle (gateway gone / _jsc None). Narrowed
-                # from bare Exception (advisor r16): a transient probe
-                # error on a LIVE foreign session must not evict its
-                # hub and reintroduce cross-session rebuild thrash.
-                stopped = True
-            if stopped:
-                del cache[stale_k]
-        df = build().localCheckpoint(eager=True)
-        cache[k] = df
-    return df
-
-# Scan parallelism memo: (session id, sorted input files) -> partition
-# count. fan_out is called at ~10 operator entry points, and
-# df.rdd.getNumPartitions() forces full physical planning each time;
-# every call site hands fan_out a scan-stage frame (documents/embeddings
-# straight off parquet), so the partition count is a property of the
-# file set, not of the projection on top — one planning pass per
-# distinct source is enough.
-_NPART_CACHE: dict[tuple[int, tuple[str, ...]], int] = {}
-_NPART_CACHE_MAX = 256
+from ..session import memo
 
 
 def _scan_partitions(df: DataFrame) -> int:
+    """The frame's partition count, memoized per session and input file
+    set: ``df.rdd.getNumPartitions()`` plans the whole frame, and every
+    ``fan_out`` call site hands in a scan-stage frame whose count is a
+    property of its files, not of the projection on top."""
     try:
         files = tuple(sorted(df.inputFiles()))
     except Exception:  # non-file-backed frame (createDataFrame, etc.)
         files = ()
     if not files:
         return df.rdd.getNumPartitions()
-    key = (id(df.sparkSession), files)
-    n = _NPART_CACHE.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if len(_NPART_CACHE) >= _NPART_CACHE_MAX:
-            _NPART_CACHE.clear()
-        _NPART_CACHE[key] = n
-    return n
+    return memo(
+        df.sparkSession, ("scan_partitions", files), lambda: df.rdd.getNumPartitions()
+    )
 
 
 def fan_out(df: DataFrame) -> DataFrame:

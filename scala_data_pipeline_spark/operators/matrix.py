@@ -67,19 +67,6 @@ def users_items_matrix(events: DataFrame) -> DataFrame:
     )
 
 
-def unpivot_matrix(matrix: DataFrame) -> DataFrame:
-    """Wide matrix → (user_id, item, cnt>0) long form (F19, native
-    unpivot instead of generated stack SQL)."""
-    value_cols = [c for c in matrix.columns if c != "user_id"]
-    return (
-        matrix.unpivot(
-            ids=["user_id"], values=value_cols,
-            variableColumnName="item", valueColumnName="cnt",
-        )
-        .filter(F.col("cnt") > 0)
-    )
-
-
 def merge_matrices(old_matrix: DataFrame, new_matrix: DataFrame) -> DataFrame:
     """Union two wide users×items matrices and sum column-wise per user.
 

@@ -80,20 +80,16 @@ def basket_freq_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised by basket_assoc_rules below (rule confidence/lift need
     the model)."""
     baskets = _brand_baskets(spark, sf_dir)
-    # minCount as a broadcast one-row frame instead of a driver count()
-    # scalar (r20): the count job forced a separate serial evaluation
-    # before the main plan could even be built; as a crossJoined column
-    # the same ceil(minSupport * n) long rides the plan, the basket
-    # checkpoint materializes ONCE (first use), and the builder runs no
-    # jobs. F.ceil(double) is the identical IEEE product + ceiling
-    # FPGrowth's driver-side math.ceil computed.
-    min_count = F.broadcast(
-        baskets.agg(
-            F.ceil(F.lit(MIN_SUPPORT) * F.count(F.lit(1)))
-            .cast("long")
-            .alias("_min_count")
-        )
-    )
+    # minCount as a scalar subquery instead of a driver count():
+    # the count job forced a separate serial evaluation before the main
+    # plan could even be built; as a subquery the same ceil(minSupport
+    # * n) long rides the plan, the basket checkpoint materializes ONCE
+    # (first use), and the builder runs no jobs. F.ceil(double) is the
+    # identical IEEE product + ceiling FPGrowth's driver-side math.ceil
+    # computed.
+    min_count = baskets.agg(
+        F.ceil(F.lit(MIN_SUPPORT) * F.count(F.lit(1))).cast("long")
+    ).scalar()
     items = F.col("items")
     idx = F.sequence(F.lit(1), F.size(items))
     singles = F.transform(items, lambda x: F.array(x))
@@ -113,8 +109,7 @@ def basket_freq_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         baskets.select(F.explode(F.concat(singles, pairs)).alias("iset"))
         .groupBy("iset")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .crossJoin(min_count)
-        .filter(F.col("freq") >= F.col("_min_count"))
+        .filter(F.col("freq") >= min_count)
         .select(
             F.array_join("iset", "|").alias("itemset"),
             F.size("iset").alias("sz"),

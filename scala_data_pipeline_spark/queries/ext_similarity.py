@@ -18,6 +18,7 @@ from ..ext.similarity import (
     topk_ivf,
     topk_ivf_sql,
 )
+from ..session import hub
 from ..sources import load_table
 
 N_QUERIES = 5
@@ -513,19 +514,14 @@ _SEMDEDUP_EPS = 0.62  # fixture-calibrated: max pairwise cosine in the
 
 # The k=1 exact-greedy frame is shared by sim_semdedup_k1 (the
 # per-vector decisions) and sim_semdedup_report (their one-row
-# summary): memoize the materialized result per (application, sf_dir)
-# — the _lsh_pairs / _pair_core idiom from queries/ext_dedup.py — so a
-# registry sweep pays the greedy once, not once per consumer.
-_K1_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# summary): a session hub, like _lsh_pairs / _pair_core in
+# queries/ext_dedup.py, so a registry sweep pays the greedy once.
 def _k1_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.semdedup import semantic_dedup_k1_exact
-    from ..ext.util import memoized_checkpoint
 
-    return memoized_checkpoint(
-        _K1_CACHE,
+    return hub(
         spark,
+        "k1_decisions",
         sf_dir,
         lambda: semantic_dedup_k1_exact(
             load_table(spark, sf_dir, "embeddings"), eps=_SEMDEDUP_EPS

@@ -17,8 +17,11 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections import Counter
+from collections.abc import Callable, Hashable
+from weakref import WeakSet
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -99,3 +102,54 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# The one memo for what the engine reuses within a session: lazy table
+# readers, registered views, scan partition counts and the shared hubs.
+# Entries live on the session object, so they go when the session goes;
+# a module-level dict would pin every session, because a DataFrame holds
+# its session. _MEMO_SESSIONS indexes the sessions holding entries
+# without keeping them alive, so a miss can clear the entries of stopped
+# sessions that something else still references.
+_MEMO_SESSIONS: WeakSet = WeakSet()
+# Lookups served from the memo and lookups that built, per kind (key[0]).
+HITS: Counter = Counter()
+MISSES: Counter = Counter()
+
+
+def memo(spark: SparkSession, key: tuple[Hashable, ...], build: Callable[[], object]):
+    """Return ``build()`` once per (session, key); later calls with the
+    same session and key return the stored value."""
+    entries = vars(spark).get("_memo", {})
+    if key in entries:
+        HITS[key[0]] += 1
+        return entries[key]
+    MISSES[key[0]] += 1
+    for other in list(_MEMO_SESSIONS):
+        # Stopping a context from Python drops its JVM handle, so this
+        # check makes no py4j call, and a live session keeps its entries.
+        if other is not spark and other.sparkContext._jsc is None:
+            _MEMO_SESSIONS.discard(other)
+            del other._memo
+    value = build()
+    if "_memo" not in vars(spark):  # build() may have added the first entry
+        spark._memo = {}
+        _MEMO_SESSIONS.add(spark)
+    spark._memo[key] = value
+    return value
+
+
+def forget(spark: SparkSession, kind: str) -> None:
+    """Drop the session's entries of one kind."""
+    entries = vars(spark).get("_memo", {})
+    for key in [k for k in entries if k[0] == kind]:
+        del entries[key]
+
+
+def hub(
+    spark: SparkSession, name: str, sf_dir: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """An eager ``localCheckpoint`` of ``build()``, made once per session
+    and sf dir and shared by every query that reads it. Counted under
+    the kind ``"hub"``."""
+    return memo(spark, ("hub", name, sf_dir), lambda: build().localCheckpoint(eager=True))

@@ -20,17 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_parquet(
-    df: DataFrame, path: str, mode: str = "overwrite", n_files: int | None = None
-) -> None:
-    """S11. ``n_files`` replaces the reference's coalesce(1): explicit,
-    and repartition (not coalesce) so upstream parallelism is preserved
-    during the compute."""
-    if n_files:
-        df = df.repartition(n_files)
-    df.write.mode(mode).parquet(path)
-
-
 def write_partitioned(
     df: DataFrame,
     path: str,

@@ -14,11 +14,11 @@ reading 100 TB and reading 2 TB.
 
 from __future__ import annotations
 
-from weakref import WeakKeyDictionary
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from ..session import forget, memo
 
 TABLE_NAMES = (
     "region",
@@ -34,17 +34,10 @@ TABLE_NAMES = (
 )
 
 
-# Per-session memo of the LAZY reader frames. A DataFrame here is pure
-# plan metadata — no rows are cached and every action still scans the
-# parquet files — but building it costs a schema/footer read plus a
-# handful of py4j round-trips (~0.1 s), paid by almost every query
-# constructor and re-paid on every timed bench rep (r20 construction-
-# cost pass). Production twin: a table registered once per session.
-# WeakKeyDictionary so a stopped session's frames are collectable.
-_TABLE_MEMO: WeakKeyDictionary = WeakKeyDictionary()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The lazy reader frame of one table, memoized per session: the
+    frame holds no rows, every action still scans the parquet files, but
+    building it costs a footer read and several py4j round-trips."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     # Oracle determinism must not depend on the caller's session: DuckDB
@@ -53,10 +46,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Runs on every call — including memo hits — so a caller that
     # re-pointed the session timezone between calls is always re-pinned.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    memo = _TABLE_MEMO.setdefault(spark, {})
-    key = (sf_dir, name)
-    if key in memo:
-        return memo[key]
+    return memo(spark, ("table", sf_dir, name), lambda: _read(spark, sf_dir, name))
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         # The driver has generated events.ts in two physical shapes over
         # time, and both must normalize to a session-TZ TIMESTAMP (the
@@ -82,21 +75,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Belt-and-braces if NTZ inference ever re-activates: with
             # the UTC session the NTZ→TIMESTAMP cast is value-preserving.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        memo[key] = df
         return df
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    memo[key] = df
-    return df
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-# Last directory registered per application — registration is
-# idempotent per (session, dir), and re-pointing the views at a
-# different sf dir must never be skipped (tests alternate dirs).
-_REGISTERED_DIR: dict[str, str] = {}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
@@ -105,13 +89,15 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     reference has no SQL entry (SURVEY.md §3); this is part of the
     PySpark-native surface.
 
-    Memoized per (application, sf_dir): every SQL-surface query calls
-    this, and re-reading ten parquet footers per query added ~0.7 s of
-    pure setup to each (measured at sf0.1). A different ``sf_dir`` in
-    the same session re-registers — correctness over cache."""
-    app = spark.sparkContext.applicationId
-    if _REGISTERED_DIR.get(app) == sf_dir:
-        return
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-    _REGISTERED_DIR[app] = sf_dir
+    Memoized per (session, sf_dir): every SQL-surface query calls this,
+    and re-reading ten parquet footers per query added ~0.7 s of pure
+    setup to each (measured at sf0.1). The views point at one sf dir at
+    a time, so registering another dir forgets the previous one and a
+    session alternating between dirs re-registers on every switch."""
+
+    def register() -> None:
+        forget(spark, "views")
+        for name, df in load_tables(spark, sf_dir).items():
+            df.createOrReplaceTempView(name)
+
+    memo(spark, ("views", sf_dir), register)

@@ -178,3 +178,15 @@ def test_pivot_label_collision_raises():
     # quote-bearing values are escaped in the SQL twin
     sql = pivot_counts_sql("t", "k", "p", ["O'Brien"])
     assert "'O''Brien'" in sql
+
+
+def test_recipe_funnel_reuses_exchanges(spark, sf_dir):
+    """recipe_funnel_accounting's funnel stages share their upstream
+    exchanges instead of recomputing them: the AQE final plan, read
+    after an action, holds at least two ReusedExchange nodes."""
+    df = QUERIES["recipe_funnel_accounting"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("ReusedExchange") >= 2

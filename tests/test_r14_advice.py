@@ -8,126 +8,86 @@
    replay of an uncommitted batch (covered in test_r13_advice.py,
    amended: the advisor-suggested high-water clamp dropped the replay
    on a real engine probe).
-3. memoized_checkpoint must evict entries of stopped applications on
-   insert instead of pinning dead DataFrame objects forever.
+3. The session memo must evict entries of stopped sessions on a miss
+   instead of pinning dead DataFrame objects forever.
 """
 
 from __future__ import annotations
 
 
-class _FakeJvmSc:
-    def __init__(self, stopped: bool):
-        self._stopped = stopped
-
-    def isStopped(self):
-        return self._stopped
-
-
-class _FakeJsc:
-    def __init__(self, stopped: bool):
-        self._sc = _FakeJvmSc(stopped)
-
-    def sc(self):
-        return self._sc
-
-
 class _FakeCtx:
-    def __init__(self, app_id: str, stopped: bool = False):
-        self.applicationId = app_id
-        self._jsc = _FakeJsc(stopped)
+    _jsc = object()  # a live JVM handle; SparkContext.stop() sets it to None
 
 
 class _FakeSession:
-    def __init__(self, app_id: str, stopped: bool = False):
-        self.sparkContext = _FakeCtx(app_id, stopped)
+    def __init__(self):
+        self.sparkContext = _FakeCtx()
 
     def stop(self):
-        self.sparkContext._jsc._sc._stopped = True
+        self.sparkContext._jsc = None
 
 
-class _FakeFrame:
-    """A frame whose .sparkSession reports live/stopped like the real
-    thing (memoized_checkpoint probes it to scope eviction)."""
+def test_memo_evicts_stopped_sessions():
+    from scala_data_pipeline_spark.session import HITS, MISSES, memo
 
-    sparkSession: _FakeSession | None = None
+    hits, misses = HITS["pairs"], MISSES["pairs"]
+    s1 = _FakeSession()
+    a = memo(s1, ("pairs", "sf"), object)
+    memo(s1, ("core", "sf"), object)
+    assert memo(s1, ("pairs", "sf"), object) is a
+    assert (HITS["pairs"] - hits, MISSES["pairs"] - misses) == (1, 1)
 
-    def localCheckpoint(self, eager: bool = True):
-        return self
-
-
-def _builder(session: _FakeSession):
-    def build():
-        f = _FakeFrame()
-        f.sparkSession = session
-        return f
-
-    return build
-
-
-def test_memoized_checkpoint_evicts_stopped_applications():
-    from scala_data_pipeline_spark.ext.util import memoized_checkpoint
-
-    cache: dict = {}
-    s1 = _FakeSession("app-1")
-    a = memoized_checkpoint(cache, s1, "pairs", _builder(s1))
-    b = memoized_checkpoint(cache, s1, "core", _builder(s1))
-    assert memoized_checkpoint(cache, s1, "pairs", _builder(s1)) is a
-    assert set(cache) == {("app-1", "pairs"), ("app-1", "core")}
-
-    # New application after the old session STOPPED: the first insert
-    # evicts every dead-application entry — nothing from app-1 stays
-    # pinned.
+    # A miss in a new session after the old one STOPPED drops every
+    # entry of the stopped session: nothing of it stays pinned.
     s1.stop()
-    s2 = _FakeSession("app-2")
-    c = memoized_checkpoint(cache, s2, "pairs", _builder(s2))
+    s2 = _FakeSession()
+    c = memo(s2, ("pairs", "sf"), object)
     assert c is not a
-    assert set(cache) == {("app-2", "pairs")}
-    assert b is not None  # caller-held frames unaffected, only cache
+    assert "_memo" not in vars(s1)
+    assert memo(s2, ("pairs", "sf"), object) is c
 
 
-def test_memoized_checkpoint_keeps_concurrent_live_sessions():
-    """Advisor r15: two concurrently LIVE sessions sharing the
-    module-level cache must not evict each other's hubs on every
-    cross-session miss (that silently rebuilt hubs each time)."""
-    from scala_data_pipeline_spark.ext.util import memoized_checkpoint
+def test_memo_keeps_concurrent_live_sessions():
+    """Two concurrently LIVE sessions must not evict each other's
+    entries on a miss (that silently rebuilt hubs each time)."""
+    from scala_data_pipeline_spark.session import memo
 
-    cache: dict = {}
-    s1 = _FakeSession("app-1")
-    s2 = _FakeSession("app-2")
-    a = memoized_checkpoint(cache, s1, "pairs", _builder(s1))
-    c = memoized_checkpoint(cache, s2, "pairs", _builder(s2))
-    # Both live -> both cached; s1's hub survives s2's insert...
-    assert set(cache) == {("app-1", "pairs"), ("app-2", "pairs")}
-    # ...and is served warm on the next s1 call (no rebuild thrash).
-    assert memoized_checkpoint(cache, s1, "pairs", _builder(s1)) is a
-    assert memoized_checkpoint(cache, s2, "pairs", _builder(s2)) is c
-    # A frame whose JVM handle is already torn down counts as stopped.
+    s1 = _FakeSession()
+    s2 = _FakeSession()
+    a = memo(s1, ("pairs", "sf"), object)
+    c = memo(s2, ("pairs", "sf"), object)
+    assert c is not a
+    # s1's entry survives s2's miss and is served on the next s1 call.
+    assert memo(s1, ("pairs", "sf"), object) is a
+    assert memo(s2, ("pairs", "sf"), object) is c
+    # A session whose JVM handle is already torn down counts as stopped.
     s2.sparkContext._jsc = None
-    s3 = _FakeSession("app-3")
-    memoized_checkpoint(cache, s3, "pairs", _builder(s3))
-    assert ("app-2", "pairs") not in cache
-    assert ("app-1", "pairs") in cache
+    memo(_FakeSession(), ("pairs", "sf"), object)
+    assert "_memo" not in vars(s2)
+    assert memo(s1, ("pairs", "sf"), object) is a
 
 
-def test_bench_records_warm_semantics():
+def test_bench_records_warm_semantics(spark, sf_dir):
     """The bench artifact must self-describe the r14 semantics change
     (warm rep + memoized hubs) so round-over-round totals are
-    attributable (round-14 advisor, medium)."""
+    attributable (round-14 advisor, medium). The hub consumers it
+    records are the queries whose construction looks up a hub."""
     import bench
 
+    from scala_data_pipeline_spark.queries import all_queries, extra_queries
+
     assert bench.METRIC.endswith("_warm")
-    assert bench.MEMO_HUB_NAMES  # hub list non-empty
 
-    from scala_data_pipeline_spark.queries import all_queries
-
-    from scala_data_pipeline_spark.queries import extra_queries
-
-    memoized = bench.memoized_consumers(all_queries())
-    assert memoized == sorted(memoized)
-    assert set(memoized) <= set(all_queries())
-    # Known fixed points: dedup_components consumes the _lsh_pairs hub
-    # (queries/ext_dedup.py) and dedup_exact consumes none.
-    everything = dict(all_queries(), **extra_queries())
-    names = bench.memoized_consumers(everything)
-    assert "dedup_components" in names
-    assert "dedup_exact" not in names
+    queries = dict(all_queries(), dedup_exact=extra_queries()["dedup_exact"])
+    consumers = set()
+    for name, fn in queries.items():
+        lookups = bench.hub_lookups()
+        fn(spark, sf_dir)
+        if bench.hub_lookups() > lookups:
+            consumers.add(name)
+    assert {
+        "dedup_components_star",
+        "dedup_lsh_quality",
+        "dedup_source_overlap",
+    } <= consumers
+    assert "dedup_exact" not in consumers
