@@ -9,10 +9,12 @@ Usage:
 """
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from scala_data_pipeline_spark.queries import (  # noqa: E402
     all_bounds,
@@ -67,7 +69,7 @@ def lint_bounds() -> list[str]:
             continue
         path, test = loc.split("::", 1)
         try:
-            src = open(f"/root/repo/{path}").read()
+            src = open(os.path.join(ROOT, path)).read()
         except OSError:
             problems.append(f"{name}: cited file {path} missing")
             continue
@@ -107,7 +109,7 @@ def main() -> None:
         if problems:
             print("BOUNDS lint:", *problems, sep="\n  ")
             sys.exit(1)
-        readme = open("/root/repo/README.md").read()
+        readme = open(os.path.join(ROOT, "README.md")).read()
         pats = [
             rf"\b{c['driver']} driver-checked queries\b",
             rf"\b{c['extras']} extras\b",

@@ -1,233 +1,62 @@
 #!/usr/bin/env bash
 # End-of-round gate: run this as the FINAL action of every build round,
-# AFTER the last feature commit (round 4 shipped a feature whose plan
-# lock would have failed here — the full suite had not been re-run;
-# round 13 recorded GREEN and then took seven more source commits,
-# leaving HEAD with a failing plan lock).
-#
-# Exits non-zero if either the full test suite or the benchmark fails.
-#   pytest tests/   — unit + oracle-parity + plan locks (~7 min on local[32])
-#   bench.py        — headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1);
-#                     prints the one-line JSON the driver records AND
-#                     writes it to $SPARK_GRAFT_BENCH_OUT (file-first,
-#                     round-13 item 2: the stdout-scraped r13 artifact
-#                     was truncated mid-JSON).
+# after the last source commit. Exits non-zero unless the suite, the
+# oracle drives and the bench pass, and every artifact below is
+# committed, complete and describes HEAD's source:
+#   FULLDRIVE_r<n>.json  every driver query vs its DuckDB oracle at sf0.1
+#   SWEEP_r<n>.json      every oracled extra vs its oracle at sf0.1
+#   BENCH_r<n>.json      bench.py's artifact (headline queries, sf0.1)
+#   GATE_r<n>.json       the head this GREEN describes
+# Two-step flow: the first run writes the missing artifacts and fails at
+# the commit check; commit them (artifact-only commits keep the recorded
+# heads valid) and the re-run skips those steps and goes green. Timings
+# are nondeterministic, so the first recorded bench is the round's;
+# delete an artifact to force a re-record. Checks and records live in
+# scripts/drive.py.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-# ROUND must be set so the bench output lands as a committed artifact:
-# round 10's bench JSON was never committed (BENCH_r09 -> BENCH_r11
-# gap), breaking round-over-round regression attribution.
 : "${ROUND:?set ROUND=<n> (e.g. ROUND=14) so bench output is recorded as BENCH_r<n>.json}"
+DRIVE="python scripts/drive.py"
+R=$(printf '%02d' "$ROUND")
+TESTDATA=/root/testdata  # the fixture dirs, TESTDATA.md
 
-# The gate record must describe HEAD exactly: any uncommitted source
-# change here means the GREEN it is about to print would not be the
-# tree the round ships (round-13 defect 2 — a ~1,000-line fix wave
-# landed after the recorded gate). Artifacts the gate itself writes
-# (BENCH_r*.json, GATE_r*.json, PLAN_AUDIT.md) are exempt via the
-# pathspec.
-DIRTY=$(git status --porcelain -- scala_data_pipeline_spark tests scripts \
-        __spark_entry__.py bench.py pyproject.toml pytest.ini)
-if [ -n "$DIRTY" ]; then
-  echo "round gate: uncommitted SOURCE changes — commit them first, the gate must describe HEAD:" >&2
-  echo "$DIRTY" >&2
-  exit 1
-fi
+# The GREEN below must describe HEAD, not a tree with uncommitted source.
+$DRIVE clean
 
-# README registry counts must match the live import (they drifted
-# twice when hand-maintained — round-12 verdict item 7).
+# README registry counts must match the live import.
 python scripts/registry_counts.py --check
 
-# Non-UTC parity must not rot (round-16, r15 verdict item 7): drive
-# the timestamp-heavy driver queries against their DuckDB twins under
-# a DST-observing zone (process TZ + JVM default). tz_probe fails on
-# any hash mismatch or if rotation left <3 probe-able names.
-TZ=America/New_York python scripts/tz_probe.py
+# Non-UTC parity: the process TZ and the JVM default in a DST-observing zone.
+TZ=America/New_York $DRIVE tz "$TESTDATA/sf0.01"
 
 python -m pytest tests/ -q
 
-# Full 50-query contract drive at sf0.1 — 10x the driver's correctness
-# SF (round-17, r16 verdict item 6: float order / tie-breaks above the
-# sf0.01 grain only surface here). Two-step artifact flow like BENCH:
-# first full run writes FULLDRIVE_r<n>.json (failing on any non-exact
-# row) and the commit check below fails; commit it; the re-run skips
-# the ~6 min drive and goes green.
-FULLDRIVE_ARTIFACT="FULLDRIVE_r$(printf '%02d' "$ROUND").json"
-if [ ! -f "$FULLDRIVE_ARTIFACT" ]; then
-  ROUND="$ROUND" python scripts/full_drive.py /root/testdata/sf0.1
-fi
-# The committed artifact must record zero failures for the gate's HEAD.
-FULLDRIVE_ARTIFACT="$FULLDRIVE_ARTIFACT" python - <<'PY'
-import json, os
-path = os.environ["FULLDRIVE_ARTIFACT"]
-rec = json.load(open(path))
-assert rec.get("fails") == 0, f"{path}: records {rec.get('fails')} failures"
-assert rec.get("exact", 0) + rec.get("rows_only", 0) == rec.get("queries"), \
-    f"{path}: incomplete drive"
-print(f"{path}: {rec['exact']} exact + {rec['rows_only']} rows-only OK")
-PY
+# sf0.1 is ten times the driver's correctness SF: float order and
+# tie-breaks above the sf0.01 grain only surface here.
+[ -f "FULLDRIVE_r$R.json" ] || $DRIVE driver "$TESTDATA/sf0.1"
+[ -f "SWEEP_r$R.json" ] || $DRIVE extras "$TESTDATA/sf0.1"
 
-# Oracled-EXTRAS sweep at sf0.1 (round-20, r19 verdict item 7: the
-# sweep was only a committed log; rotations demote driver queries into
-# extra slots, so "dropped" rows are the sweep's responsibility and its
-# record gets the same artifact treatment as FULLDRIVE). Same two-step
-# flow: first run writes SWEEP_r<n>.json and the commit check below
-# fails; commit it; the re-run skips the drive.
-SWEEP_ARTIFACT="SWEEP_r$(printf '%02d' "$ROUND").json"
-if [ ! -f "$SWEEP_ARTIFACT" ]; then
-  ROUND="$ROUND" python scripts/sweep_extra_oracles.py /root/testdata/sf0.1
-fi
-SWEEP_ARTIFACT="$SWEEP_ARTIFACT" python - <<'PY'
-import json, os, sys
-sys.path.insert(0, os.getcwd())
-from scala_data_pipeline_spark.queries import extra_oracles
-path = os.environ["SWEEP_ARTIFACT"]
-rec = json.load(open(path))
-assert rec.get("fails") == 0, f"{path}: records {rec.get('fails')} failures"
-expected = set(extra_oracles())
-got = set(rec.get("results", {}))
-missing = expected - got
-assert not missing, f"{path}: extras missing from sweep: {sorted(missing)}"
-print(f"{path}: {rec['exact']}/{rec['queries']} oracled extras exact")
-PY
+python bench.py
+[ -f "BENCH_r$R.json" ] || $DRIVE record BENCH
 
-BENCH_OUT="${SPARK_GRAFT_BENCH_OUT:-/tmp/bench_last.json}"
-rm -f "$BENCH_OUT"
-python bench.py | tee /tmp/bench_gate.out
-# Record the bench result as this round's committed artifact, from the
-# FILE bench.py wrote (never stdout-scraped). Written only if absent
-# (timings are nondeterministic — the first gate run's number IS the
-# round's number; delete the file to force a re-record), then required
-# to be git-tracked: first run writes it and fails, the builder commits
-# it, the re-run goes green — the same two-step flow as the
-# PLAN_AUDIT staleness check below.
-BENCH_ARTIFACT="BENCH_r$(printf '%02d' "$ROUND").json"
-if [ ! -f "$BENCH_ARTIFACT" ]; then
-  ROUND="$ROUND" BENCH_OUT="$BENCH_OUT" python - <<'PY'
-import json, os
-n = int(os.environ["ROUND"])
-with open(os.environ["BENCH_OUT"]) as f:
-    parsed = json.load(f)
-out = {"n": n, "rc": 0, "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-       "sf": parsed.get("sf"), "parsed": parsed}
-with open(f"BENCH_r{n:02d}.json", "w") as f:
-    json.dump(out, f, indent=4)
-    f.write("\n")
-print(f"wrote BENCH_r{n:02d}.json")
-PY
-fi
-# Validate the artifact's integrity (round-13 item 2: the
-# committed r13 artifact had "parsed": null and was missing its
-# headline total plus 8 queries — the gate must refuse that state):
-# parseable, parsed non-null, numeric headline total, and one timing
-# per registered driver query plus each requested extra.
-BENCH_ARTIFACT="$BENCH_ARTIFACT" python - <<'PY'
-import json, numbers, os, sys
-sys.path.insert(0, os.getcwd())
-from scala_data_pipeline_spark.queries import all_queries
-path = os.environ["BENCH_ARTIFACT"]
-with open(path) as f:
-    rec = json.load(f)
-parsed = rec.get("parsed")
-assert isinstance(parsed, dict), f"{path}: parsed is null/not an object"
-assert isinstance(parsed.get("value"), numbers.Number), \
-    f"{path}: headline total missing"
-expected = set(all_queries()) | set(parsed.get("extras", []))
-got = set(parsed.get("queries", {}))
-missing, extra = expected - got, got - expected
-assert not missing, f"{path}: missing query timings: {sorted(missing)}"
-assert not extra, f"{path}: unknown query timings: {sorted(extra)}"
-assert all(isinstance(v, numbers.Number) for v in parsed["queries"].values())
-print(f"{path}: integrity OK ({len(got)} queries, total {parsed['value']}s)")
-PY
-# Every PRIOR round's committed bench artifact must still be complete
-# (round-16, r15 verdict item 3: the driver's round-boundary commit
-# clobbered BENCH_r14.json with a parsed:null stub and it persisted a
-# full round; r13's had been clobbered the same way). A clobber is
-# restorable from history the round it happens — fail loudly here.
-python - <<'PY'
-import glob, json
-bad = []
-for path in sorted(glob.glob("BENCH_r*.json")):
-    try:
-        rec = json.load(open(path))
-    except Exception as ex:  # noqa: BLE001
-        bad.append(f"{path}: unparseable ({ex})")
-        continue
-    if not isinstance(rec.get("parsed"), dict):
-        bad.append(f"{path}: parsed is null — restore the complete "
-                   f"artifact from git history")
-for b in bad:
-    print(b)
-if bad:
-    raise SystemExit(1)
-print(f"bench-artifact series integrity OK "
-      f"({len(glob.glob('BENCH_r*.json'))} artifacts, all parsed)")
-PY
-# Regenerate the plan audit FROM the gate so it can never trail the
-# registry (round-7 defect: two queries committed after the last
-# manual refresh). The generator asserts row count == registry size.
+# Regenerate the plan audit so it cannot trail the registry (the
+# generator asserts row count == registry size), and fail when the
+# committed one is stale.
 python -m scala_data_pipeline_spark.plans.report
-# The regeneration fixes the LOCAL tree only — fail the gate when the
-# COMMITTED audit is stale (advisor round-9: a stale committed audit
-# still gated GREEN).
 git diff --exit-code -- PLAN_AUDIT.md
-# Record the gate itself: GATE_r<n>.json pins the exact HEAD this
-# GREEN describes. A later source commit makes the record stale by
-# construction — the judge (and the next round's builder) compares
-# GATE head to the last commit touching source. Same two-step commit
-# flow as the bench artifact.
-GATE_ARTIFACT="GATE_r$(printf '%02d' "$ROUND").json"
-HEAD_SHA=$(git rev-parse HEAD)
-if [ ! -f "$GATE_ARTIFACT" ]; then
-  printf '{\n    "n": %d,\n    "head": "%s",\n    "suite": "green",\n    "bench_artifact": "%s"\n}\n' \
-    "$ROUND" "$HEAD_SHA" "$BENCH_ARTIFACT" > "$GATE_ARTIFACT"
-fi
-# Both artifacts must be COMMITTED for the gate to pass — the first
-# full run writes whichever are missing and fails here; the builder
-# commits them (artifact-only commits keep the recorded head valid via
-# the ancestry check below) and the second full run goes green.
+
+[ -f "GATE_r$R.json" ] || $DRIVE record GATE
+
+ARTIFACTS="BENCH_r$R.json GATE_r$R.json FULLDRIVE_r$R.json SWEEP_r$R.json"
 MISSING=""
-for a in "$BENCH_ARTIFACT" "$GATE_ARTIFACT" "$FULLDRIVE_ARTIFACT" "$SWEEP_ARTIFACT"; do
+for a in $ARTIFACTS; do
   git ls-files --error-unmatch "$a" > /dev/null 2>&1 || MISSING="$MISSING $a"
 done
 if [ -n "$MISSING" ]; then
   echo "uncommitted gate artifacts:$MISSING — commit them and re-run the gate" >&2
   exit 1
 fi
-RECORDED_HEAD=$(python -c "import json;print(json.load(open('$GATE_ARTIFACT'))['head'])")
-LAST_SOURCE_COMMIT=$(git log -1 --format=%H -- scala_data_pipeline_spark tests scripts \
-                     __spark_entry__.py bench.py pyproject.toml pytest.ini)
-# The recorded gate head must CONTAIN the last source commit (the gate
-# commit itself only adds artifacts, so equality is not required —
-# ancestry is).
-if ! git merge-base --is-ancestor "$LAST_SOURCE_COMMIT" "$RECORDED_HEAD"; then
-  echo "round gate: $GATE_ARTIFACT records head $RECORDED_HEAD but source was committed later ($LAST_SOURCE_COMMIT) — delete the artifact and re-run the full gate" >&2
-  exit 1
-fi
-# The FULLDRIVE artifact gets the SAME staleness guard (round-18
-# advisor item, medium: full_drive.py previously recorded no head, so
-# an existing artifact was reused verbatim across later source commits
-# — FULLDRIVE_r17's "50/50 exact at sf0.1" was recorded at 4a80d0a and
-# survived the f25b20f dedup_lsh_quality change unre-verified).
-FULLDRIVE_HEAD=$(python -c "import json;print(json.load(open('$FULLDRIVE_ARTIFACT')).get('head') or '')")
-if [ -z "$FULLDRIVE_HEAD" ]; then
-  echo "round gate: $FULLDRIVE_ARTIFACT records no head sha (pre-r18 format) — delete the artifact and re-run the full gate" >&2
-  exit 1
-fi
-if ! git merge-base --is-ancestor "$LAST_SOURCE_COMMIT" "$FULLDRIVE_HEAD"; then
-  echo "round gate: $FULLDRIVE_ARTIFACT records head $FULLDRIVE_HEAD but source was committed later ($LAST_SOURCE_COMMIT) — delete the artifact and re-run the full gate" >&2
-  exit 1
-fi
-# The SWEEP artifact gets the same staleness guard (r20): ancestry-
-# checked against the last source commit like GATE/FULLDRIVE.
-SWEEP_HEAD=$(python -c "import json;print(json.load(open('$SWEEP_ARTIFACT')).get('head') or '')")
-if [ -z "$SWEEP_HEAD" ]; then
-  echo "round gate: $SWEEP_ARTIFACT records no head sha — delete the artifact and re-run the full gate" >&2
-  exit 1
-fi
-if ! git merge-base --is-ancestor "$LAST_SOURCE_COMMIT" "$SWEEP_HEAD"; then
-  echo "round gate: $SWEEP_ARTIFACT records head $SWEEP_HEAD but source was committed later ($LAST_SOURCE_COMMIT) — delete the artifact and re-run the full gate" >&2
-  exit 1
-fi
+# shellcheck disable=SC2086  # one word per artifact
+$DRIVE check $ARTIFACTS
 echo "round gate: GREEN"
