@@ -121,7 +121,15 @@ def _strip_lr_summary(model: PipelineModel) -> PipelineModel:
 
 
 def train_model(train_df: DataFrame, vocab_size: int = 1000) -> PipelineModel:
-    return _strip_lr_summary(build_pipeline(train_df, vocab_size).fit(train_df))
+    """Fit the pipeline on one eager ``localCheckpoint`` of ``train_df``:
+    the StringIndexer fit, the CountVectorizer fit and LR's passes then
+    read the materialized rows instead of each re-running the frame's
+    token building and global sort. The model equals a fit on
+    ``train_df`` itself. Not ``persist()``: fits on a cached frame changed
+    the vocabulary order (CountVectorizer orders tied counts as it meets
+    the rows), and so the coefficients, from run to run."""
+    frame = train_df.localCheckpoint()
+    return _strip_lr_summary(build_pipeline(frame, vocab_size).fit(frame))
 
 
 def train_model_hashed(

@@ -1083,7 +1083,7 @@ FROM dow
 """
 
 # Round-18 rotation: both promoted to driver slots (never driver-
-# checked; timestamp-heavy — also added to scripts/tz_probe.py PROBE).
+# checked; timestamp-heavy — also in scripts/drive.py's TZ_PROBE).
 QUERIES["yoy_revenue_growth"] = yoy_revenue_growth
 ORACLES["yoy_revenue_growth"] = YOY_ORACLE
 QUERIES["dow_seasonality"] = dow_seasonality

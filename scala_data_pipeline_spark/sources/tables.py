@@ -10,13 +10,23 @@ Scans stay declarative (``spark.read.parquet``) so Catalyst pushes
 filters and prunes columns into the parquet reader — at 100 TB the scan
 is the dominant cost and pushdown/pruning is the difference between
 reading 100 TB and reading 2 TB.
+
+Each reader is given its schema (``spark.read.schema(s).parquet``), so
+building it starts no Spark job: Spark's own inference reads even one
+footer inside a job. ``s`` is the schema that inference would give. It
+is read on the driver from the one footer inference reads, and Spark's
+``ParquetToSparkSchemaConverter`` converts it under the session's confs
+(INT96, TIMESTAMP(NANOS) as long, NTZ inference, binary as string).
 """
 
 from __future__ import annotations
 
+import json
+
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from ..session import forget, memo
 
@@ -50,6 +60,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # The driver has generated events.ts in two physical shapes over
         # time, and both must normalize to a session-TZ TIMESTAMP (the
@@ -65,10 +76,12 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         #    taken as a UTC instant, value-identical to DuckDB under the
         #    UTC session pinned above, and `ts` predicates keep pushing
         #    into the parquet reader (a post-scan cast would block that).
+        # Both are set before footer_schema, whose converter reads them.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = df.schema["ts"].dataType
+        schema = footer_schema(spark, path)
+        df = spark.read.schema(schema).parquet(path)
+        ts_type = schema["ts"].dataType
         if isinstance(ts_type, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(ts_type, TimestampNTZType):
@@ -76,7 +89,60 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # the UTC session the NTZ→TIMESTAMP cast is value-preserving.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(footer_schema(spark, path)).parquet(path)
+
+
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet"
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer (without
+    schema merging), read from one parquet footer on the driver. As with
+    an inferred schema, a reader given it marks every field nullable.
+
+    The footer is the one Spark's inference reads: the file itself, or
+    for a directory its ``_common_metadata`` summary, else its
+    ``_metadata`` summary, else its first data file in path order
+    (names starting with ``_`` or ``.`` are not data). Partitioned
+    layouts are not handled: no table read here is partitioned. A
+    missing path raises Spark's own error."""
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    jpath = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
+    fs = jpath.getFileSystem(conf)
+    if not fs.exists(jpath):
+        spark.read.parquet(path)  # raises [PATH_NOT_FOUND]
+    status = fs.getFileStatus(jpath)
+    if status.isDirectory():
+        status = _schema_file(fs.listStatus(jpath), path)
+    metadata = _jclass(spark, f"{_PARQUET}.ParquetFooterReader").readFooter(
+        _jclass(spark, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(status, conf),
+        _jclass(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+    )
+    schema = _jclass(spark, f"{_PARQUET}.ParquetFileFormat").readSchemaFromFooter(
+        _jclass(spark, "org.apache.parquet.hadoop.Footer")(status.getPath(), metadata),
+        _jclass(spark, f"{_PARQUET}.ParquetToSparkSchemaConverter")(state.conf()),
+    )
+    return StructType.fromJson(json.loads(schema.json()))
+
+
+def _jclass(spark: SparkSession, name: str) -> JavaClass:
+    """A JVM class by its full name. Resolving it through ``spark._jvm``
+    costs one py4j round-trip per name segment; this costs none."""
+    return JavaClass(name, spark._jvm._gateway_client)
+
+
+def _schema_file(statuses, path: str):
+    """The file status of a directory's listing that Spark's non-merging
+    inference takes its schema from."""
+    files = {s.getPath().getName(): s for s in statuses if s.isFile()}
+    for summary in ("_common_metadata", "_metadata"):
+        if summary in files:
+            return files[summary]
+    data = sorted(n for n in files if not n.startswith(("_", ".")))
+    if not data:
+        raise FileNotFoundError(f"no parquet data file in {path}")
+    return files[data[0]]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

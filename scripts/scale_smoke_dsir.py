@@ -18,10 +18,12 @@ Defaults: 10 100 /root/testdata/sf0.1.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -16,11 +16,13 @@ Defaults: 100 copies for the graph, sf0.1.
 """
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

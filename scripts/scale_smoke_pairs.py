@@ -19,11 +19,13 @@ Defaults: 100 copies of /root/testdata/sf0.1/documents.parquet.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 

@@ -26,12 +26,13 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 # Python workers unpickle module-level functions BY REFERENCE
 # (applyInPandas ships _greedy_cluster), so the package must be
 # importable executor-side too — sys.path edits don't propagate.
 os.environ["PYTHONPATH"] = (
-    "/root/repo" + os.pathsep + os.environ.get("PYTHONPATH", "")
+    ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 )
 
 from pyspark.sql import functions as F  # noqa: E402

@@ -68,6 +68,55 @@ def test_streaming_inference(model_and_frame, spark, sf_dir, tmp_path):
     )
 
 
+def seeded_corpus(spark, seed: int = 7, n: int = 400):
+    """Documents in three languages whose words overlap, so many tokens
+    tie on count and the vocabulary order depends on how ties break."""
+    import random
+
+    rng = random.Random(seed)
+    words = {lang: [f"{lang}{i}" for i in range(40)] for lang in ("de", "en", "fr")}
+    rows = []
+    for doc_id in range(n):
+        lang = rng.choice(sorted(words))
+        pool = words[lang][:30] + words[rng.choice(sorted(words))][30:]
+        text = " ".join(rng.choice(pool) for _ in range(rng.randint(5, 15)))
+        rows.append((doc_id, text, lang))
+    return spark.createDataFrame(rows, "doc_id BIGINT, text STRING, lang STRING")
+
+
+def test_checkpointed_fit_matches_plain_fit(spark):
+    """train_model fits on one localCheckpoint of its frame: two such
+    fits give the same model, a fit on the frame itself gives it too, and
+    the checkpointed fit runs fewer Spark jobs."""
+    from scala_data_pipeline_spark.ml.pipeline import build_pipeline
+
+    frame = prepare_training_frame(seeded_corpus(spark))
+    sc = spark.sparkContext
+
+    def fit(group, build):
+        sc.setJobGroup(group, "fit")
+        try:
+            model = build()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        cv, indexer, lr = model.stages[:3]
+        state = (
+            cv.vocabulary,
+            indexer.labels,
+            lr.coefficientMatrix.toArray().tolist(),
+            lr.interceptVector.toArray().tolist(),
+        )
+        return state, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    first, jobs = fit("fit-1", lambda: train_model(frame, vocab_size=128))
+    second, _ = fit("fit-2", lambda: train_model(frame, vocab_size=128))
+    plain, plain_jobs = fit("fit-plain", lambda: build_pipeline(frame, 128).fit(frame))
+    assert len(first[0]) == 128
+    assert first == second == plain
+    assert jobs < plain_jobs
+
+
 def test_hashed_pipeline_accuracy(spark, sf_dir):
     """HashingTF variant (no vocabulary pass): trains and predicts with
     accuracy comparable to the CountVectorizer pipeline."""
