@@ -310,8 +310,8 @@ def pii_redacted_col(text: Column) -> Column:
     """The redacted text as a bare column expression — the same chained
     email → phone → ipv4 replacement :func:`pii_redact` applies, for
     pipelines that only need the scrubbed text and would otherwise
-    self-join the redaction frame back on doc_id (r19: the export
-    chain's clean stage)."""
+    self-join the redaction frame back on doc_id (the export chain's
+    clean stage)."""
     red = text
     for kind in ("email", "phone", "ipv4"):
         red = F.regexp_replace(red, PII_PATTERNS[kind], f"<{kind.upper()}>")
@@ -759,7 +759,7 @@ FROM scored s JOIN rep r ON s.source = r.source AND s.lang = r.lang
 
 
 # ---------------------------------------------------------------------------
-# Cross-source score calibration (round 7)
+# Cross-source score calibration
 # ---------------------------------------------------------------------------
 
 
@@ -774,36 +774,32 @@ def score_calibration(docs: DataFrame, score_frame: DataFrame) -> DataFrame:
     DISTINCT-score grain, which 6-decimal rounding bounds at 10⁶+1
     rows REGARDLESS of corpus size.
 
-    Shape (round 12, final form — one corpus pass + ONE ranking
-    sweep): the per-source ECDFs AND the global ECDF come out of a
-    single :func:`with_grouped_rank` sweep over the union of both
-    grains, the global grain riding along as one more group under a
-    non-colliding sentinel key (its per-group cumulative count IS the
-    global cumulative count). The G⁻¹ backfill then needs NO second
-    sweep: each global row already carries its ECDF interval
-    ``(lo, hi] = ((cum-cnt)/N, cum/N]`` from the same cumulative
-    counts, and those intervals PARTITION (0, 1] with boundaries that
-    are bitwise the neighbouring rows' positions (``cum - cnt`` is
-    exact integer arithmetic), so every source-row position p maps to
-    exactly one global row via a bucketized interval equi-join
-    (bucket = ceil(p·NB); a global row expands to the buckets its
-    interval overlaps — Σ spans ≈ NB + |grain| rows, never a
-    nested-loop range join). Boundary semantics are identical to the
-    previous descending carry-backfill: p == hi maps to that row,
-    matching "smallest global position >= p".
+    Shape (one corpus pass + ONE ranking sweep): the per-source ECDFs
+    AND the global ECDF come out of a single :func:`with_rank` sweep
+    over the union of both grains, the global grain riding along as one
+    more group under a non-colliding sentinel key (its per-group
+    cumulative count IS the global cumulative count). The G⁻¹ backfill
+    then needs NO second sweep: each global row already carries its ECDF
+    interval ``(lo, hi] = ((cum-cnt)/N, cum/N]`` from the same
+    cumulative counts, and those intervals PARTITION (0, 1] with
+    boundaries that are bitwise the neighbouring rows' positions
+    (``cum - cnt`` is exact integer arithmetic), so every source-row
+    position p maps to exactly one global row via a bucketized interval
+    equi-join (bucket = ceil(p·NB); a global row expands to the buckets
+    its interval overlaps — Σ spans ≈ NB + |grain| rows, never a
+    nested-loop range join). Boundary semantics: p == hi maps to that
+    row, matching "smallest global position >= p".
 
-    Every window is DISTRIBUTED (round-10, verdict item 3 — this
-    query previously held the largest single-partition-window
-    allowlist grain). ``src_grain`` feeds the union twice (B rows
-    directly, A rows via the per-score re-aggregation); the eager pin
-    makes the second read hit the bounded materialized grain, not the
-    corpus lineage (AQE does not reliably fold the two branches into
-    a ReusedExchange across the union — measured, round 12).
+    Every window is DISTRIBUTED. ``src_grain`` feeds the union twice
+    (B rows directly, A rows via the per-score re-aggregation); the
+    eager pin makes the second read hit the bounded materialized grain,
+    not the corpus lineage (AQE does not reliably fold the two branches
+    into a ReusedExchange across the union).
 
     Returns the (source, score) → calibrated mapping table (join it
     back to docs to materialize per-doc scores).
     """
-    from ..operators.ranking import with_grouped_rank
+    from ..operators.ranking import with_rank
 
     joined = docs.select("doc_id", "source").join(score_frame, on="doc_id")
     src_grain = (
@@ -840,7 +836,7 @@ def score_calibration(docs: DataFrame, score_frame: DataFrame) -> DataFrame:
             ),
         )
     )
-    ranked = with_grouped_rank(
+    ranked, _ = with_rank(
         union0, ["_grp"], ["score"], rank_col="_i", cum_cols=["cnt"]
     )
     # B rows: position p = per-source ECDF. A rows: the interval of the
@@ -985,8 +981,7 @@ def unimax_allocation(
     )
     # Alias to "lang" BEFORE any window: the later k/cum_k windows
     # reuse this ordering, and the source column name no longer exists
-    # after the select (a non-default lang_col crashed them, round-13
-    # review finding).
+    # after the select (a non-default lang_col would crash them).
     w_ord = Window.orderBy("capacity", "lang")
     w_all = w_ord.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -1029,7 +1024,7 @@ def unimax_allocation(
         # try_divide: a language whose documents are all empty has
         # n_tokens = 0 (capacity 0, capped first) — plain division
         # throws DIVIDE_BY_ZERO under ANSI while the DuckDB twin's /0
-        # is NULL natively (round-13 advisor).
+        # is NULL natively.
         F.round(F.try_divide(alloc, F.col("n_tokens")), 6).alias("epochs"),
         (F.col("rn") <= k).alias("capped"),
     )

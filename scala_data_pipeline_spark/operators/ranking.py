@@ -1,36 +1,40 @@
-"""Distributed exact global ranking: ``row_number()``/running sums over
-a total order WITHOUT a single-partition sort.
+"""Distributed exact ranking: ``row_number()`` and running sums over a
+total order, per group or over the whole frame, WITHOUT a
+single-partition sort.
 
 ``Window.orderBy(...)`` with an empty ``partitionBy`` funnels the whole
-frame through ONE task — fine on structurally bounded grains (days,
-cent values, a 25-brand axis), fatal on corpus-proportional grains
-(customers, parts: ~10^8+ rows at 100 TB). This module provides the
+frame through ONE task, and ``Window.partitionBy(group)`` funnels each
+group through one: fine on structurally bounded grains (days, cent
+values, a 25-brand axis), fatal on corpus-proportional grains
+(customers, parts: ~10^8+ rows at 100 TB) and on few, huge groups
+(5 market segments over 10^8 customers). :func:`with_rank` is the
 scale-safe equivalent, the classic two-pass range-partitioned ranking
 (the same scheme Spark's own ``sortByKey``/range shuffle uses for
 distributed sorts):
 
-1. ``repartitionByRange`` on the order keys — each output partition
-   holds a contiguous, non-overlapping key range, so global order ==
-   (partition id, local order). Equal keys land in one partition.
-2. One tiny aggregation: per-partition row counts (and optional value
-   sums), collected to the driver — BOUNDED: one row per shuffle
-   partition, never corpus-proportional.
-3. Exclusive prefix offsets are broadcast-joined back on partition id;
-   the final rank is a PARTITION-LOCAL window (every task ranks only
-   its own range) plus the offset. Running sums likewise: local
-   cumulative sum + the exact (decimal) sum of all preceding
-   partitions.
+1. ``repartitionByRange`` on the group and order keys: each output
+   partition holds a contiguous, non-overlapping slice of one or more
+   (group, key range) runs, so a group's order == (partition id,
+   local order). Equal keys land in one partition.
+2. One tiny aggregation: per-(partition, group) row counts and value
+   sums, collected to the driver. BOUNDED: partitions x groups rows,
+   never corpus-proportional.
+3. Exclusive prefix offsets and group totals are broadcast-joined back
+   on (partition id, group); the final rank is a PARTITION-LOCAL
+   window (every task ranks only its own range) plus the offset.
+   Running sums likewise: local cumulative sum + the exact (decimal)
+   sum of the group's preceding partitions.
 
-The result is bit-identical to the single-task global window (ties are
-resolved by the caller-supplied total order, which must be a total
-order — include a unique tiebreak column), but the frame never
+The result is bit-identical to the single-task window (ties are
+resolved by the caller-supplied order, which must be a total order
+within a group: include a unique tiebreak column), but the frame never
 collapses to one task: wall-clock scales with the widest partition,
 not the corpus.
 
 Reference parity note: the reference engine (dlomakov/scala_data_pipeline)
-has no distributed ranking — this operator exists so the analytics
-queries (ABC classes, Lorenz deciles, Gini ranks) survive a 1000×
-scale-up.
+has no distributed ranking; this operator exists so the analytics
+queries (ABC classes, Lorenz deciles, Gini ranks, percentiles, class
+balancing) survive a 1000x scale-up.
 """
 
 from __future__ import annotations
@@ -47,9 +51,7 @@ def _to_dec(x) -> Decimal:
     partials; float/double partials route through ``str()`` (shortest
     round-trip repr), so the PREFIX arithmetic is exact over the
     partials — the partials themselves already carry executor-side
-    float rounding, which no driver-side scheme can undo. (Advisor
-    round-9 finding: ``Decimal(0) += float`` raised TypeError, making
-    cum_cols silently decimal/int-only.)"""
+    float rounding, which no driver-side scheme can undo."""
     if x is None:
         return Decimal(0)
     if isinstance(x, float):
@@ -67,154 +69,6 @@ def _emit(v: Decimal, type_str: str):
     return v
 
 
-def with_global_rank(
-    df: DataFrame,
-    order_cols: list[str],
-    rank_col: str = "i",
-    cum_cols: list[str] | None = None,
-    total_cols: list[str] | None = None,
-    min_cols: list[str] | None = None,
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, int, dict[str, Decimal]]:
-    """Attach an exact global 1-based ``rank_col`` (row_number over
-    ``ORDER BY order_cols``) and, for each ``c`` in ``cum_cols``, an
-    exact global running sum ``cum_<c>`` (rows unbounded-preceding to
-    current) — all computed with partition-local windows only.
-
-    ``order_cols`` must define a TOTAL order (append a unique key as
-    tiebreak); ascending order (the windows the trio of ranking
-    queries need can be expressed ascending — a descending rank is
-    ``n + 1 - i``).
-
-    Returns ``(frame, n_rows, totals)`` where ``n_rows`` and the exact
-    per-column decimal ``totals`` (for every column in ``cum_cols`` +
-    ``total_cols``) fall out of the same bounded per-partition
-    aggregate that produced the offsets — callers use them as
-    broadcast scalars (ntile arithmetic, share denominators) instead
-    of re-aggregating through a global window. ``total_cols`` columns
-    get a total only, no per-row running sum.
-
-    For each ``c`` in ``min_cols`` the output carries ``cummin_<c>``:
-    the exact running MIN over rows unbounded-preceding to current
-    (nulls ignored, SQL ``min`` semantics) — a partition-local min
-    window plus the driver-side exclusive prefix min, same scheme as
-    the running sums. This is the distributed form of the
-    ``last_value(ignorenulls)`` carry-backfill pattern whenever the
-    carried value is monotone along the sort order (an ECDF inverse
-    lookup, an as-of price carry).
-
-    The driver-side ``.collect()`` here is a DOCUMENTED BOUNDED SET:
-    one row per range partition (``num_partitions``, default the
-    session's shuffle partitioning), independent of corpus size.
-
-    When ``num_partitions`` is not given, the range shuffle omits an
-    explicit partition count so AQE may COALESCE it: a bounded grain
-    (an ECDF score axis, a day axis) collapses to a handful of tasks
-    instead of paying shuffle-partitions-many, while a
-    corpus-proportional frame keeps them all. Coalescing merges
-    ADJACENT range partitions only, so the scheme's invariants —
-    contiguous non-overlapping key ranges, equal keys co-located,
-    global order == (partition id, local order) — are preserved.
-    """
-    cum_cols = list(cum_cols or [])
-    min_cols = list(min_cols or [])
-    sum_cols = cum_cols + [
-        c for c in (total_cols or []) if c not in cum_cols
-    ]
-    spark = df.sparkSession
-    if num_partitions:
-        ranged = df.repartitionByRange(
-            num_partitions, *[F.asc(c) for c in order_cols]
-        )
-    else:
-        ranged = df.repartitionByRange(*[F.asc(c) for c in order_cols])
-    ranged = ranged.withColumn("_pid", F.spark_partition_id())
-    # Two actions consume `ranged` (offset scan + final plan); pin it so
-    # the range shuffle runs once and both see identical partitioning
-    # (localCheckpoint precedent: knn srp_index).
-    ranged = ranged.localCheckpoint(eager=True)
-
-    aggs = (
-        [F.count(F.lit(1)).alias("_cnt")]
-        + [F.sum(c).alias(f"_sum_{c}") for c in sum_cols]
-        + [F.min(c).alias(f"_min_{c}") for c in min_cols]
-    )
-    part_rows = sorted(
-        ranged.groupBy("_pid").agg(*aggs).collect(),
-        key=lambda r: r["_pid"],
-    )
-    sum_types = {
-        c: ranged.groupBy().agg(F.sum(c).alias("x")).schema["x"]
-        .dataType.simpleString()
-        for c in cum_cols
-    }
-    min_types = {
-        c: next(
-            f.dataType.simpleString()
-            for f in df.schema.fields
-            if f.name == c
-        )
-        for c in min_cols
-    }
-    n_rows = 0
-    run: dict[str, Decimal] = {c: Decimal(0) for c in sum_cols}
-    run_min: dict[str, object] = {c: None for c in min_cols}
-    offsets = []  # (pid, rank_offset, *offsets) — exclusive prefixes
-    for r in part_rows:
-        offsets.append(
-            (
-                r["_pid"],
-                n_rows,
-                *[_emit(run[c], sum_types[c]) for c in cum_cols],
-                *[run_min[c] for c in min_cols],
-            )
-        )
-        n_rows += r["_cnt"]
-        for c in sum_cols:
-            run[c] += _to_dec(r[f"_sum_{c}"])
-        for c in min_cols:
-            v = r[f"_min_{c}"]
-            # NaN partials (an all-NaN partition) must not freeze the
-            # running min: Spark orders NaN greater than every value,
-            # so skip it here exactly as `least` does executor-side.
-            if v is None or (isinstance(v, float) and v != v):
-                continue
-            if run_min[c] is None or v < run_min[c]:
-                run_min[c] = v
-
-    off_schema = ", ".join(
-        ["_pid int", "_rank_off long"]
-        + [f"_off_{c} {sum_types[c]}" for c in cum_cols]
-        + [f"_minoff_{c} {min_types[c]}" for c in min_cols]
-    )
-    off_df = spark.createDataFrame(offsets, off_schema)
-
-    w = Window.partitionBy("_pid").orderBy(*[F.asc(c) for c in order_cols])
-    out = ranged.join(F.broadcast(off_df), "_pid").withColumn(
-        rank_col, F.row_number().over(w) + F.col("_rank_off")
-    )
-    for c in cum_cols:
-        local = F.sum(c).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        out = out.withColumn(f"cum_{c}", local + F.col(f"_off_{c}"))
-    for c in min_cols:
-        local = F.min(c).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # least() skips nulls: first partitions carry a null prefix,
-        # rows before the first non-null value carry a null local min.
-        out = out.withColumn(
-            f"cummin_{c}", F.least(local, F.col(f"_minoff_{c}"))
-        )
-    drop = (
-        ["_pid", "_rank_off"]
-        + [f"_off_{c}" for c in cum_cols]
-        + [f"_minoff_{c}" for c in min_cols]
-    )
-    return out.drop(*drop), n_rows, run
-
-
 def _floordiv(a: Column, b) -> Column:
     """Exact integer floor division for non-negative long operands:
     ``(a - a mod b) / b``. The numerator is an exact multiple of ``b``,
@@ -222,7 +76,7 @@ def _floordiv(a: Column, b) -> Column:
     ``a < 2^53`` (~9e15 — beyond any feasible rank grain) — unlike
     naive ``(a / b).cast('long')``, whose correctly-rounded double
     quotient can land just above an integer boundary and bump a row
-    into the wrong tile (advisor round-9 finding)."""
+    into the wrong tile."""
     a = a.cast("long")
     return ((a - F.pmod(a, b)) / b).cast("long")
 
@@ -254,67 +108,58 @@ def ntile_from_rank(i, n_rows, n_tiles: int):
     return F.when((base == 0) | (i <= cut), big).otherwise(small)
 
 
-def with_grouped_rank(
+def with_rank(
     df: DataFrame,
     group_cols: list[str],
     order_cols: list[str],
     rank_col: str = "i",
-    size_col: str = "n_in_group",
     cum_cols: list[str] | None = None,
     num_partitions: int | None = None,
-    return_sizes: bool = False,
-    return_offsets: bool = False,
-) -> DataFrame:
-    """Exact per-group 1-based rank (row_number over ``PARTITION BY
-    group_cols ORDER BY order_cols``) plus each row's group size —
-    without ever materializing a whole group in one task.
+) -> tuple[DataFrame, list[dict]]:
+    """Exact 1-based ``rank_col`` (row_number over ``PARTITION BY
+    group_cols ORDER BY order_cols``; ``group_cols=[]`` ranks the whole
+    frame) computed with partition-local windows only.
 
-    ``Window.partitionBy(group)`` is already distributed when groups
-    are numerous and small (per-user, per-order); it becomes the
-    scale-killer when there are FEW, HUGE groups (5 market segments
-    over 10^8 customers → 5 tasks). This is the grouped variant of
-    :func:`with_global_rank` for exactly that case:
-    ``repartitionByRange(group_cols + order_cols)`` keeps each
-    partition a contiguous slice of one-or-more (group, key-range)
-    runs, a bounded ``(partition, group)`` count scan yields exclusive
-    prefix offsets AND group totals, and the final rank is a
-    partition-LOCAL window plus the broadcast offset.
+    ``order_cols`` must define a TOTAL order within a group (append a
+    unique key as tiebreak) and sort ascending (a descending order is
+    an ascending one on a negated key).
+
+    The frame gains ``rank_col``, ``n_in_group`` (the row's group size)
+    and ``_pid`` (its range partition), and for each ``c`` in
+    ``cum_cols`` the exact running sum ``cum_<c>`` (rows
+    unbounded-preceding to current within the group) and the group
+    total ``total_<c>``.
+
+    ``parts`` is the layout the offset scan collected, one dict per
+    (range partition, group) in partition order: ``{"pid", "group",
+    "rank_off", "cnt", "off": {c: Decimal}, "sum": {c: Decimal}}``,
+    where ``rank_off``/``off`` are the group's rows and sums in earlier
+    partitions and ``cnt``/``sum`` its rows and sums in this one. A
+    group's size, the row count and exact decimal totals are sums over
+    it. A consumer that needs only the rows around given cumulative
+    positions can filter ``_pid`` to :func:`crossing_pids`: the
+    predicate is on the window's partition key and the join key, so it
+    pushes below both and the other partitions skip the sort.
 
     The driver-side collect is bounded by ``num_partitions x
-    |groups|`` — use this operator only for LOW-CARDINALITY group
-    axes (segments, sources, priority classes); high-cardinality keys
-    should keep using ``Window.partitionBy``, which is already
-    parallel there.
+    |groups|``. Use a group axis only when it has LOW cardinality
+    (segments, sources, priority classes): ``Window.partitionBy`` is
+    already parallel over many small groups; it is FEW, HUGE groups
+    that it collapses into a few tasks.
 
-    For each ``c`` in ``cum_cols`` the output additionally carries the
-    exact per-group running sum ``cum_<c>`` (rows unbounded-preceding
-    to current within the group) and the per-group total ``total_<c>``
-    — the pieces a per-group Pareto/ABC share needs, computed from the
-    same bounded offset scan.
-
-    ``return_sizes=True`` returns ``(frame, sizes)`` where ``sizes``
-    maps each group tuple to its row count — the offset scan computes
-    these driver-side anyway, so callers needing a group-size scalar
-    (e.g. the minority-class size) read it for free instead of running
-    another distinct+collect job over the frame (r19).
-
-    ``return_offsets=True`` additionally returns the per-(partition,
-    group) layout the offset scan collected — a list of dicts
-    ``{"pid", "group", "rank_off", "cnt", "off": {c: Decimal},
-    "sum": {c: Decimal}}`` — and KEEPS the ``_pid`` column on the
-    output frame. A consumer that only needs the rows around specific
-    cumulative positions (an exact percentile, a weighted median) can
-    compute the crossing partitions driver-side
-    (:func:`crossing_pids`) and filter ``_pid`` to them: the predicate
-    pushes below the rank window (it is on the window's partition key)
-    and below the broadcast offset join, so every other range
-    partition skips the sort/cumsum work entirely (r20; guide §2.4).
+    When ``num_partitions`` is not given, the range shuffle omits an
+    explicit partition count so AQE may COALESCE it: a bounded grain
+    collapses to a handful of tasks, while a corpus-proportional frame
+    keeps them all. Coalescing merges ADJACENT range partitions only,
+    so the scheme's invariants (contiguous non-overlapping key ranges,
+    equal keys co-located, order == (partition id, local order)) are
+    preserved.
     """
     spark = df.sparkSession
     sort_cols = [F.asc(c) for c in [*group_cols, *order_cols]]
-    # No explicit partition count unless pinned: AQE coalesces the
-    # range shuffle on bounded grains (adjacent-merge preserves the
-    # scheme's contiguity invariants — see with_global_rank).
+    # The offset scan and the final plan both read `ranged`; the eager
+    # checkpoint runs the range shuffle once, so both see the same
+    # partitioning.
     ranged = (
         (
             df.repartitionByRange(num_partitions, *sort_cols)
@@ -332,82 +177,59 @@ def with_grouped_rank(
         ranged.groupBy("_pid", *group_cols).agg(*aggs).collect(),
         key=lambda r: r["_pid"],
     )
-    gsum_types = {
+    sum_types = {
         c: ranged.groupBy().agg(F.sum(c).alias("x")).schema["x"]
         .dataType.simpleString()
         for c in cum_cols
     }
     seen: dict[tuple, int] = {}  # group -> rows in earlier partitions
-    run: dict[tuple, list] = {}  # group -> per-cum-col prefix sums
-    offsets = []
-    parts: list[dict] = []  # return_offsets records (driver-bounded)
+    run: dict[tuple, dict] = {}  # group -> sums in earlier partitions
+    parts: list[dict] = []
     for r in part_rows:
         g = tuple(r[c] for c in group_cols)
-        prefix = run.setdefault(g, [Decimal(0)] * len(cum_cols))
-        offsets.append(
-            (
-                r["_pid"],
-                *g,
-                seen.get(g, 0),
-                *[
-                    _emit(p, gsum_types[c])
-                    for p, c in zip(prefix, cum_cols)
-                ],
-            )
+        prefix = run.get(g, dict.fromkeys(cum_cols, Decimal(0)))
+        sums = {c: _to_dec(r[f"_sum_{c}"]) for c in cum_cols}
+        parts.append(
+            {
+                "pid": r["_pid"],
+                "group": g,
+                "rank_off": seen.get(g, 0),
+                "cnt": r["_cnt"],
+                "off": prefix,
+                "sum": sums,
+            }
         )
-        if return_offsets:
-            parts.append(
-                {
-                    "pid": r["_pid"],
-                    "group": g,
-                    "rank_off": seen.get(g, 0),
-                    "cnt": r["_cnt"],
-                    "off": dict(zip(cum_cols, prefix)),
-                    "sum": {
-                        c: _to_dec(r[f"_sum_{c}"]) for c in cum_cols
-                    },
-                }
-            )
         seen[g] = seen.get(g, 0) + r["_cnt"]
-        run[g] = [
-            p + _to_dec(r[f"_sum_{c}"])
-            for p, c in zip(prefix, cum_cols)
-        ]
+        run[g] = {c: prefix[c] + sums[c] for c in cum_cols}
     gtypes = {
         f.name: f.dataType.simpleString()
         for f in df.schema.fields
         if f.name in group_cols
     }
-    # ONE broadcast frame carries both the per-(partition, group)
-    # exclusive prefixes AND the group-level size/totals (repeated per
-    # partition row — a few dozen extra literals, one fewer broadcast
-    # join in every caller's plan; r19, was two joins). The group
-    # columns ride under `_g_` aliases and join back with eqNullSafe:
-    # NULL group keys form their own group (Window.partitionBy
-    # semantics, which this operator claims bit-parity with) — a plain
-    # equi-join would silently drop every NULL-keyed row (advisor
-    # round-9 finding).
+    # One broadcast frame carries the per-(partition, group) exclusive
+    # prefixes and the group size and totals. The group columns ride
+    # under `_g_` aliases and join back with eqNullSafe: NULL group
+    # keys form their own group (Window.partitionBy semantics), which a
+    # plain equi-join would drop.
     off_schema = ", ".join(
         ["_opid int"]
         + [f"_g_{c} {gtypes[c]}" for c in group_cols]
         + ["_rank_off long"]
-        + [f"_off_{c} {gsum_types[c]}" for c in cum_cols]
-        + [f"{size_col} long"]
-        + [f"total_{c} {gsum_types[c]}" for c in cum_cols]
+        + [f"_off_{c} {sum_types[c]}" for c in cum_cols]
+        + ["n_in_group long"]
+        + [f"total_{c} {sum_types[c]}" for c in cum_cols]
     )
-    off_rows = []
-    for row in offsets:
-        g = tuple(row[1 : 1 + len(group_cols)])
-        off_rows.append(
-            (
-                *row,
-                seen[g],
-                *[
-                    _emit(p, gsum_types[c])
-                    for p, c in zip(run[g], cum_cols)
-                ],
-            )
+    off_rows = [
+        (
+            p["pid"],
+            *p["group"],
+            p["rank_off"],
+            *[_emit(p["off"][c], sum_types[c]) for c in cum_cols],
+            seen[p["group"]],
+            *[_emit(run[p["group"]][c], sum_types[c]) for c in cum_cols],
         )
+        for p in parts
+    ]
     off_df = spark.createDataFrame(off_rows, off_schema)
     off_cond = F.col("_pid") == F.col("_opid")
     for c in group_cols:
@@ -425,17 +247,7 @@ def with_grouped_rank(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         out = out.withColumn(f"cum_{c}", local + F.col(f"_off_{c}"))
-    drop = ["_rank_off"] + [f"_off_{c}" for c in cum_cols]
-    if not return_offsets:
-        drop.append("_pid")
-    out = out.drop(*drop)
-    if return_sizes and return_offsets:
-        return out, dict(seen), parts
-    if return_sizes:
-        return out, dict(seen)
-    if return_offsets:
-        return out, parts
-    return out
+    return out.drop("_rank_off", *[f"_off_{c}" for c in cum_cols]), parts
 
 
 def crossing_pids(
@@ -444,7 +256,7 @@ def crossing_pids(
     positions_by_group: dict[tuple, list],
 ) -> set[int]:
     """The range-partition ids that contain the given 1-based
-    cumulative positions, per group, from a ``return_offsets`` layout.
+    cumulative positions, per group, from a :func:`with_rank` layout.
 
     A position ``P`` (in ``cum_<cum_col>`` units — weighted row
     positions) lives in the partition whose exclusive prefix satisfies

@@ -153,15 +153,9 @@ def curation_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return training_shuffle(load_table(spark, sf_dir, "documents"))
 
 
-# curation_stratified promoted to a driver slot round 4; Round-9
-# rotation: demoted after 5 green rounds (r4-r8) — added to
-# EXTRA_QUERIES below; its slot funds curation_score_calibration.
-
-# curation_decontaminate promoted to a driver slot in round 5 (never
-# driver-checked before).
-# Round-10 rotation: demoted after 5 green driver rounds (r5-r9).
 EXTRA_QUERIES["curation_decontaminate"] = curation_decontaminate
 EXTRA_ORACLES["curation_decontaminate"] = DECON_ORACLE
+
 
 def curation_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-ES weighted sample: top-50 docs by md5-uniform priority
@@ -186,14 +180,12 @@ def _cluster_split_oracle() -> str:
     return cluster_split_sql(minhash_lsh_sql())
 
 
-# Round-19 rotation: promoted (never driver-checked).
 QUERIES["curation_training_shuffle"] = curation_training_shuffle
 ORACLES["curation_training_shuffle"] = training_shuffle_sql()
 
 EXTRA_QUERIES.update({
     "curation_source_quota": curation_source_quota,
     "curation_repetition": curation_repetition,
-    # Round-9 demotion (green r4-r8):
     "curation_stratified": curation_stratified,
 })
 
@@ -203,27 +195,15 @@ EXTRA_ORACLES.update({
     "curation_stratified": STRATIFIED_ORACLE,
 })
 
-# Round-18 rotation: promoted (never driver-checked; hash-deterministic
-# Bernoulli document sampling).
 QUERIES["curation_sample"] = curation_sample
 ORACLES["curation_sample"] = SAMPLE_ORACLE
 
-# Round-16 rotation: promoted to a driver slot (never driver-checked;
-# the language-mixture downsampler over the UniMax-style target).
 QUERIES["curation_mixture_sample"] = curation_mixture_sample
 ORACLES["curation_mixture_sample"] = mixture_sample_sql(MIXTURE_TARGET)
 
-# Round-6 rotation: curation_cluster_split promoted to a driver slot
-# (per-verdict: the leakage-free split keyed on near-dup clusters closes
-# the dedup→curation chain and was never driver-checked).
-# Round-10 rotation: demoted after 4 green driver rounds (r6-r9).
 EXTRA_QUERIES["curation_cluster_split"] = curation_cluster_split
 EXTRA_ORACLES["curation_cluster_split"] = _cluster_split_oracle()
 
-# Round-6 rotation: curation_weighted_sample promoted to a driver slot
-# (round-5 Efraimidis-Spirakis A-ES weighted sampling, never
-# driver-checked).
-# Round-10 rotation: demoted after 4 green driver rounds (r6-r9).
 EXTRA_QUERIES["curation_weighted_sample"] = curation_weighted_sample
 EXTRA_ORACLES["curation_weighted_sample"] = weighted_sample_sql(n=50)
 
@@ -247,8 +227,6 @@ def _epoch_oracle() -> str:
     return epoch_oversample_sql(EPOCH_RATES)
 
 
-# Round-18 rotation: promoted (never driver-checked; deterministic
-# epoch-rate oversampling — the fractional-epoch replication step).
 QUERIES["curation_epoch_mixture"] = curation_epoch_mixture
 ORACLES["curation_epoch_mixture"] = _epoch_oracle()
 
@@ -272,7 +250,7 @@ EXTRA_ORACLES["curation_source_reputation"] = _source_reputation_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Temporal embargo split (round 7)
+# Temporal embargo split
 # ---------------------------------------------------------------------------
 
 _EMBARGO_DAYS = 7
@@ -348,16 +326,13 @@ SELECT CASE WHEN day >= test_start THEN 'test'
 FROM tagged GROUP BY 1
 """
 
-# Round-12 rotation: promoted to a driver slot (never driver-checked;
-# temporal-embargo train/test split — day-grain windows).
-# Round-17 rotation: demoted after 5 green driver rounds (r12-r16).
 EXTRA_QUERIES["curation_time_split"] = curation_time_split
 EXTRA_ORACLES["curation_time_split"] = TIME_SPLIT_ORACLE
 
 
 def curation_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-map per-source quality-score distributions onto the
-    global one (round 7; see ext/curation.py::score_calibration)."""
+    global one (see ext/curation.py::score_calibration)."""
     from ..ext.curation import score_calibration
     from ..ext.textstats import quality_features
 
@@ -375,49 +350,37 @@ def _calibration_oracle() -> str:
     return score_calibration_sql(quality_score_sql())
 
 
-# Round-9 driver rotation: curation_score_calibration promoted (never
-# driver-checked; ECDF backfill-window calibration over the bounded
-# 6-decimal score grain).
-# Round-15 rotation: score_calibration demoted (green driver rows in 5
-# rounds), pii_redact promoted (never driver-checked).
 EXTRA_QUERIES["curation_score_calibration"] = curation_score_calibration
 EXTRA_ORACLES["curation_score_calibration"] = _calibration_oracle()
-# Round-19 demotion (green r15-r18).
 EXTRA_QUERIES["curation_pii_redact"] = curation_pii_redact
 EXTRA_ORACLES["curation_pii_redact"] = PII_ORACLE
 
 
 def curation_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic class-balanced downsample (round 9): every
+    """Deterministic class-balanced downsample: every
     language keeps exactly min-class-size documents, picked by md5
     order (reproducible, seed-free) — the balancing step a
     multilingual pretraining mix runs on its language axis. The
     language axis is the textbook FEW-HUGE-GROUPS case (5 groups over
     the whole corpus), so the per-class rank comes from
-    operators/ranking.py::with_grouped_rank — bounded (partition x
+    operators/ranking.py::with_rank — bounded (partition x
     lang) offset scan, partition-local windows — never a 5-task
     Window.partitionBy(lang). The min class size reduces the bounded
     (lang, size) frame driver-side (5 rows, documented bounded set)."""
     from pyspark.sql import functions as F
 
-    from ..operators.ranking import with_grouped_rank
+    from ..operators.ranking import with_rank
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.md5(F.col("doc_id").cast("string")).alias("h")
     )
-    # return_sizes (r19): the minority-class size falls out of the
-    # machinery's own bounded driver-side offset scan — the old
-    # distinct().collect() job over the ranked frame is gone.
-    ranked, sizes, parts = with_grouped_rank(
-        docs,
-        ["lang"],
-        ["h", "doc_id"],
-        rank_col="rn",
-        return_sizes=True,
-        return_offsets=True,
-    )
+    ranked, parts = with_rank(docs, ["lang"], ["h", "doc_id"], rank_col="rn")
+    # The class sizes come from the bounded offset scan's layout.
+    sizes: dict[tuple, int] = {}
+    for p in parts:
+        sizes[p["group"]] = sizes.get(p["group"], 0) + p["cnt"]
     min_size = min(sizes.values())
-    # Partition prune (r20, guide §2.4): a row with rn <= min_size sits
+    # Partition prune: a row with rn <= min_size sits
     # in a partition whose exclusive rank offset is < min_size — the
     # majority classes' tail partitions can contain no kept row, so the
     # rank window never touches them (the filter pushes below it).
@@ -445,8 +408,6 @@ SELECT lang, doc_id, CAST(rn AS BIGINT) AS rn
 FROM ranked, m WHERE rn <= min_size
 """
 
-# Round-17 rotation: promoted (never driver-checked; per-class
-# downsampling to the minority class size).
 QUERIES["curation_class_balance"] = curation_class_balance
 ORACLES["curation_class_balance"] = CLASS_BALANCE_ORACLE
 
@@ -470,8 +431,6 @@ def _dsir_weights_oracle() -> str:
     return dsir_weights_sql("lang = 'en'")
 
 
-# Round-13 rotation: promoted; round-18 rotation: demoted after 5
-# green driver rounds (r13-r17) — still oracle-checked locally.
 EXTRA_QUERIES["curation_dsir_weights"] = curation_dsir_weights
 EXTRA_ORACLES["curation_dsir_weights"] = _dsir_weights_oracle()
 
@@ -495,8 +454,6 @@ def _dsir_sample_oracle() -> str:
     return dsir_sample_sql("lang = 'en'", k=50)
 
 
-# Round-13 rotation: promoted; round-18 rotation: demoted after 5
-# green driver rounds (r13-r17) — still oracle-checked locally.
 EXTRA_QUERIES["curation_dsir_sample"] = curation_dsir_sample
 EXTRA_ORACLES["curation_dsir_sample"] = _dsir_sample_oracle()
 
@@ -523,10 +480,6 @@ def _unimax_oracle() -> str:
     return unimax_allocation_sql(budget_factor=1.5, max_epochs=2.0)
 
 
-# Round-14 rotation: promoted (never driver-checked; the epochs
-# column switched to try_divide this round — the hard hash signal
-# belongs on the changed code) in place of the demoted table_fingerprint.
-# Round-19 demotion (green r14-r18).
 EXTRA_QUERIES["curation_unimax_alloc"] = curation_unimax_alloc
 EXTRA_ORACLES["curation_unimax_alloc"] = _unimax_oracle()
 
@@ -558,9 +511,5 @@ def _semantic_decon_oracle() -> str:
     )
 
 
-# Round-14 rotation: promoted (round-13 feature, landed after that
-# round's sweep — never driver-checked) in place of the demoted
-# running_distinct_users.
-# Round-19 demotion (green r14-r18).
 EXTRA_QUERIES["curation_semantic_decon"] = curation_semantic_decon
 EXTRA_ORACLES["curation_semantic_decon"] = _semantic_decon_oracle()

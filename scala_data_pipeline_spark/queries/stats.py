@@ -121,9 +121,7 @@ FROM agg
 """
 
 
-# Round-5 rotation: percentile_prices (green since round 2) demoted to
-# an extra; its driver slot goes to the never-checked profile_orders
-# (registered below, after its definition).
+# profile_orders is registered below, after its definition.
 QUERIES = {}
 
 ORACLES = {}
@@ -163,9 +161,6 @@ FROM part
 GROUP BY 1
 """
 
-# minmax_by / variance_stats: round-4 rotation — small single-agg scans
-# whose machinery percentile_prices already exercises; their driver
-# slots went to flagship extras. Still green via test_oracle_parity.
 EXTRA_QUERIES = {
     "histogram_prices": histogram_prices,
     "minmax_by": minmax_by,
@@ -264,37 +259,31 @@ def winsorize_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     outlier treatment applied before training on heavy-tailed numerics.
 
     Exact interpolated percentiles compute on the range-partitioned
-    grouped-rank machinery (operators/ranking.py::with_grouped_rank —
+    grouped-rank machinery (operators/ranking.py::with_rank —
     the same scheme weighted_median_prices uses): the (group, price)
     value grain carries count weights and exact running counts, and the
     percentile is the standard weighted interpolation
     ``v[FRN]*(CRN-RN) + v[CRN]*(RN-FRN)`` at RN = (n-1)*p — double-for-
     double the formula both Spark's ``percentile`` and DuckDB's
-    ``quantile_cont`` implement, so the oracle stays hash-exact. The
-    r17 form's single ``F.percentile`` agg held each group's full
+    ``quantile_cont`` implement, so the oracle stays hash-exact. A
+    single ``F.percentile`` agg would hold each group's full
     distinct-value histogram in ONE aggregation buffer (bounded by
-    distinct cent values, but the 100 TB memory ceiling — r17 verdict
-    item 3); here no task ever sees more than its contiguous price
-    range, and the driver-side offset collect stays bounded by
-    partitions x groups. The clip is a broadcast join back + clamp
-    (no second wide shuffle)."""
+    distinct cent values, but the 100 TB memory ceiling); here no task
+    ever sees more than its contiguous price range, and the driver-side
+    offset collect stays bounded by partitions x groups. The clip is a
+    broadcast join back + clamp (no second wide shuffle)."""
     import math
 
-    from ..operators.ranking import crossing_pids, with_grouped_rank
+    from ..operators.ranking import crossing_pids, with_rank
 
     lineitem = load_table(spark, sf_dir, "lineitem")
     grain = lineitem.groupBy(
         "l_linestatus", F.col("l_extendedprice").alias("price")
     ).agg(F.count(F.lit(1)).alias("w"))
-    ranked, parts = with_grouped_rank(
-        grain,
-        ["l_linestatus"],
-        ["price"],
-        rank_col="_i",
-        cum_cols=["w"],
-        return_offsets=True,
+    ranked, parts = with_rank(
+        grain, ["l_linestatus"], ["price"], rank_col="_i", cum_cols=["w"]
     )
-    # Percentile partition pruning (r20; guide §2.4): the offset scan
+    # Percentile partition pruning: the offset scan
     # already knows which range partition holds each percentile's
     # weighted position — vlo/vhi below read only the FIRST row whose
     # running count reaches floor(rn)+1 / ceil(rn)+1, and every later
@@ -383,8 +372,6 @@ SELECT l_linestatus,
 FROM clipped GROUP BY l_linestatus
 """
 
-# Round-17 rotation: promoted (never driver-checked; percentile-clamp
-# robust statistics).
 QUERIES["winsorize_prices"] = winsorize_prices
 ORACLES["winsorize_prices"] = WINSORIZE_ORACLE
 
@@ -413,7 +400,6 @@ def _profile_oracle() -> str:
     )
 
 
-# Promoted to a driver slot in round 5 (never driver-checked before).
 EXTRA_QUERIES["profile_orders"] = profile_orders
 EXTRA_ORACLES["profile_orders"] = _profile_oracle()
 
@@ -469,8 +455,6 @@ SELECT cur_type, next_type, n_transitions,
 FROM counts
 """
 
-# Round-6 rotation: promoted to a driver slot — the registry's only
-# Markov-transition (lead-window + conditional-probability) shape.
 EXTRA_QUERIES["event_transitions"] = event_transitions
 EXTRA_ORACLES["event_transitions"] = EVENT_TRANSITIONS_ORACLE
 
@@ -532,15 +516,12 @@ SELECT bucket,
 FROM bucketed GROUP BY bucket
 """
 
-# Round-10 rotation: promoted to a driver slot (never driver-checked).
-# Round-16 rotation: demoted after 5 green driver rounds (r11-r15) —
-# still oracle-checked locally by tests/test_oracle_parity.py.
 EXTRA_QUERIES["histogram_equidepth_prices"] = histogram_equidepth_prices
 EXTRA_ORACLES["histogram_equidepth_prices"] = HISTOGRAM_EQUIDEPTH_ORACLE
 
 
 def skewsafe_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-mitigated join, oracle-checked end-to-end (round 9): the
+    """Skew-mitigated join, oracle-checked end-to-end: the
     orders⋈customer join keyed on c_nationkey is the classic hot-key
     shape (every nation is a huge key group); this runs it through
     operators/skew.py::adaptive_salted_join — frequency profile, hot
@@ -585,8 +566,6 @@ JOIN nation ON n_nationkey = c_nationkey
 GROUP BY n_name
 """
 
-# Round-16 rotation: demoted after 5 green driver rounds (r11-r15) —
-# still oracle-checked locally by tests/test_oracle_parity.py.
 EXTRA_QUERIES["skewsafe_nation_revenue"] = skewsafe_nation_revenue
 EXTRA_ORACLES["skewsafe_nation_revenue"] = SKEWSAFE_ORACLE
 
@@ -594,7 +573,7 @@ EXTRA_ORACLES["skewsafe_nation_revenue"] = SKEWSAFE_ORACLE
 def chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-squared test of independence between the two categorical
     curation axes of the corpus (``lang`` x ``source``) plus Cramér's V
-    effect size (round 12) — the "is my source mix language-balanced?"
+    effect size — the "is my source mix language-balanced?"
     audit a pretraining recipe runs before fixing per-source quotas.
 
     Plan shape: ONE corpus scan aggregated straight to the bounded
@@ -655,8 +634,7 @@ def chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("r") - 1) * (F.col("c") - 1)).cast("long").alias("dof"),
             # try_divide: a single-lang or single-source corpus makes
             # least(r-1, c-1) zero — NULL V (matching DuckDB's /0)
-            # instead of an ANSI throw on a legal degenerate input
-            # (round-13 review).
+            # instead of an ANSI throw on a legal degenerate input.
             F.round(
                 F.sqrt(
                     F.try_divide(
@@ -707,15 +685,13 @@ SELECT chi2,
 FROM agg
 """
 
-# Round-16 rotation: demoted after 5 green driver rounds (r11-r15) —
-# still oracle-checked locally by tests/test_oracle_parity.py.
 EXTRA_QUERIES["chi2_lang_source"] = chi2_lang_source
 EXTRA_ORACLES["chi2_lang_source"] = CHI2_ORACLE
 
 
 def mutual_info_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information (nats) between ``lang`` and ``source`` plus
-    both marginal entropies and normalized MI (round 12) — the
+    both marginal entropies and normalized MI — the
     information-theoretic twin of :func:`chi2_lang_source`: how much
     knowing a document's source tells you about its language, the
     redundancy number a mixture designer watches when sources are
@@ -774,8 +750,7 @@ def mutual_info_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "h_source",
             # try_divide: a single-category axis has entropy exactly 0,
             # so sqrt(h_lang*h_source) is 0 — NULL NMI (the
-            # conventional "undefined") matching DuckDB (round-13
-            # review).
+            # conventional "undefined") matching DuckDB.
             F.round(
                 F.try_divide(
                     F.col("mi_nats"),
@@ -820,10 +795,6 @@ SELECT mi_nats, h_lang, h_source,
 FROM mi CROSS JOIN hl CROSS JOIN hs
 """
 
-# Round-13 rotation: promoted to a driver slot (per round-12 verdict:
-# never driver-checked; normalized mutual information over the
-# lang x source contingency grid).
-# Round-18 rotation: demoted after 5 green driver rounds (r13-r17).
 EXTRA_QUERIES["mutual_info_lang_source"] = mutual_info_lang_source
 EXTRA_ORACLES["mutual_info_lang_source"] = MUTUAL_INFO_ORACLE
 
@@ -837,7 +808,7 @@ BOUNDS = {
 
 
 # ---------------------------------------------------------------------------
-# Poisson bootstrap (round-16): uncertainty for massive data in ONE pass
+# Poisson bootstrap: uncertainty for massive data in ONE pass
 # ---------------------------------------------------------------------------
 
 # Poisson(1) CDF at k = 0..7 (inverse-transform thresholds). Literal
@@ -902,7 +873,7 @@ def poisson_bootstrap_ci(
     """
     from ..ext.util import fan_out
 
-    # fan_out (r17): a single-row-group scan would run the whole
+    # fan_out: a single-row-group scan would run the whole
     # (rows x n_boot) explode + md5 pipeline on ONE task — measured
     # 30.9 s for 150k x 100 at sf0.1; parallel + the _u fix below it
     # is ~1.5 s. No-op on multi-partition inputs (the 100 TB case).
@@ -959,8 +930,7 @@ def _bootstrap_ci_sql(
 ) -> str:
     # salt is threaded (not hardcoded '') so a future registration of a
     # non-default-salt poisson_bootstrap_ci variant stays oracled —
-    # mirroring simhash_neardup_sql's bits/block parameterization
-    # (advisor r16).
+    # mirroring simhash_neardup_sql's bits/block parameterization.
     u = (
         f"(CAST(concat('0x', substr(md5(concat({salt!r}, CAST(o_orderkey AS"
         " VARCHAR), ':', CAST(t.b AS VARCHAR))), 1, 13)) AS BIGINT) + 1)"
@@ -990,7 +960,5 @@ FROM means GROUP BY 1
 """
 
 
-# Round-17 rotation: promoted (new in r16, never driver-checked; the
-# one-pass Poisson-bootstrap CI).
 QUERIES["bootstrap_ci_revenue"] = bootstrap_ci_revenue
 ORACLES["bootstrap_ci_revenue"] = _bootstrap_ci_sql()

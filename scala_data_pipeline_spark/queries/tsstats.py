@@ -127,12 +127,12 @@ def survival_km_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from first active day to death/censoring. One row per distinct
     death time: at-risk count, deaths, and the KM survival estimate.
 
-    (Round-8 fix: the previous edge-censoring definition produced an
-    EMPTY curve on this corpus at every SF — ~67 events/user over 30
-    days means no user's last event ever trails the corpus max by the
-    horizon. Gap-churn is the standard engagement-KM formulation and
+    Death is gap-churn, not edge-censoring: with ~67 events/user over
+    30 days no user's last event ever trails the corpus max by the
+    horizon, so an edge-censoring definition gives an EMPTY curve at
+    every SF. Gap-churn is the standard engagement-KM formulation and
     yields a deaths/censored mix at every SF; the constant is replayed
-    into the DuckDB oracle below via the f-string.)
+    into the DuckDB oracle below via the f-string.
 
     Scale shape: one distinct to the (user, day) grain, one lag window
     partitioned BY USER (bounded per-partition by a user's active
@@ -299,9 +299,9 @@ def benford_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = F.col("n") / n_total
     expected = F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit"))
     # Pearson per-digit contribution is N*(f-e)^2/e — WITH the total
-    # count factor (round-13 review: omitting N made every term ~N
-    # times too small, so a chi2(8df) cutoff test would declare grossly
-    # fabricated data clean).
+    # count factor: omitting N makes every term ~N times too small, so
+    # a chi2(8df) cutoff test would declare grossly fabricated data
+    # clean.
     chi2 = (
         n_total
         * (observed - expected)
@@ -338,21 +338,10 @@ SELECT digit, n,
 FROM counts
 """
 
-# Round-15 promotion (never driver-checked):
-# Round-19 demotion (green r15-r18).
 EXTRA_QUERIES["anomaly_daily_revenue"] = anomaly_daily_revenue
 EXTRA_ORACLES["anomaly_daily_revenue"] = ANOMALY_ORACLE
-# Round-6 rotation: promoted to a driver slot (per-verdict: never
-# driver-checked; now carries the deaths==at_risk terminal-step guard
-# from the round-5 advisor finding, mirrored in the oracle).
-# Round-13 rotation: demoted after 6 green driver rounds; still
-# oracle-checked locally.
 EXTRA_QUERIES["survival_km_users"] = survival_km_users
 EXTRA_ORACLES["survival_km_users"] = KM_ORACLE
-# Round-12 rotation: promoted to a driver slot (never driver-checked;
-# leading-digit distribution vs Benford expectation — a log10/floor
-# digit-extraction plan shape nothing else exercises).
-# Round-17 rotation: demoted after multiple green driver rounds.
 EXTRA_QUERIES["benford_prices"] = benford_prices
 EXTRA_ORACLES["benford_prices"] = BENFORD_ORACLE
 
@@ -427,7 +416,7 @@ def abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/ranking.py) instead of a single-task global window:
     descending revenue order is expressed as ascending (-rev, partkey).
     """
-    from ..operators.ranking import with_global_rank
+    from ..operators.ranking import with_rank
 
     lineitem = load_table(spark, sf_dir, "lineitem")
     per_part = lineitem.groupBy("l_partkey").agg(
@@ -440,10 +429,11 @@ def abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rev DESC, partkey ASC == (-rev) ASC, partkey ASC — lets the
     # ascending range-ranking operator carry the exact running sum.
     per_part = per_part.withColumn("_negrev", -F.col("rev"))
-    ranked, _n, totals = with_global_rank(
-        per_part, ["_negrev", "l_partkey"], rank_col="i", cum_cols=["rev"]
+    ranked, parts = with_rank(
+        per_part, [], ["_negrev", "l_partkey"], rank_col="i", cum_cols=["rev"]
     )
-    total = F.lit(str(totals["rev"])).cast("decimal(38,4)")
+    total_rev = sum(p["sum"]["rev"] for p in parts)
+    total = F.lit(str(total_rev)).cast("decimal(38,4)")
     share = F.col("cum_rev").cast("double") / total.cast("double")
     klass = (
         F.when(share <= 0.80, "A")
@@ -502,15 +492,13 @@ def skew_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task global window — fitting, for the query whose job is
     pre-shuffle skew diagnosis.
     """
-    from ..operators.ranking import with_global_rank
+    from ..operators.ranking import with_rank
 
     orders = load_table(spark, sf_dir, "orders")
     per_key = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    ranked, _n, _tot = with_global_rank(
-        per_key, ["cnt", "o_custkey"], rank_col="i"
-    )
+    ranked, _ = with_rank(per_key, [], ["cnt", "o_custkey"], rank_col="i")
     stats = ranked.agg(
         F.count(F.lit(1)).cast("long").alias("n_keys"),
         F.sum("cnt").cast("long").alias("n_rows"),
@@ -519,7 +507,7 @@ def skew_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(cnt, 0.5)").alias("median_mult"),
         F.sum(F.col("i").cast("decimal(38,0)") * F.col("cnt")).alias("iw"),
     )
-    # n_keys * n_rows as DOUBLES (round-13 review): the long*long
+    # n_keys * n_rows as DOUBLES: the long*long
     # product overflows int64 at ~1e10 keys x 1.5e11 rows — exactly the
     # 100 TB scale this diagnostic targets — raising ARITHMETIC_OVERFLOW
     # under ANSI. Double arithmetic is what the ratio needs anyway.
@@ -566,13 +554,10 @@ SELECT n_keys, n_rows, max_mult,
 FROM s
 """
 
-# Round-15 promotion (never driver-checked):
-# Round-19 demotion (green r15-r18).
 EXTRA_QUERIES["attribution_last_touch"] = attribution_last_touch
 EXTRA_ORACLES["attribution_last_touch"] = ATTRIBUTION_ORACLE
 EXTRA_QUERIES["abc_parts"] = abc_parts
 EXTRA_ORACLES["abc_parts"] = ABC_ORACLE
-# Round-19 rotation: promoted (never driver-checked).
 QUERIES["skew_profile_orders"] = skew_profile_orders
 ORACLES["skew_profile_orders"] = SKEW_PROFILE_ORACLE
 
@@ -610,7 +595,7 @@ def regress_brand_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     # try_divide: a single-part or constant-size brand makes den_x
     # exactly 0.0 — NULL slope/r2 (matching DuckDB's /0) instead of an
-    # ANSI DIVIDE_BY_ZERO that killed all 25 brands (round-13 review).
+    # ANSI DIVIDE_BY_ZERO that would kill all 25 brands.
     slope = F.try_divide(cov, den_x)
     intercept = F.try_divide(F.col("sy") - slope * F.col("sx"), F.col("n"))
     r2 = F.try_divide(cov * cov, den_x * den_y)
@@ -688,7 +673,7 @@ def ab_welch_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(F.broadcast(b), F.col("type_a") < F.col("type_b"))
     ma = F.col("sa") / F.col("na")
     mb = F.col("sb") / F.col("nb")
-    # try_divide on the n-1 terms (round-13 review): an event type with
+    # try_divide on the n-1 terms: an event type with
     # a SINGLE non-null value has undefined sample variance — NULL t/df
     # (matching DuckDB's /0) instead of an ANSI throw killing all 10
     # pairs.
@@ -821,7 +806,6 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_converted,
 FROM lat
 """
 
-# Round-19 rotation: promoted (never driver-checked).
 QUERIES["conversion_latency"] = conversion_latency
 ORACLES["conversion_latency"] = CONVERSION_LATENCY_ORACLE
 
@@ -882,10 +866,6 @@ FROM (SELECT DISTINCT CAST(ts AS DATE) AS day
       FROM events WHERE user_id IS NOT NULL) d
 """
 
-# Round-7 driver rotation: promoted (never driver-checked; the
-# first-appearance-arithmetic vs correlated-DISTINCT cross-algorithm
-# parity is a strong external check) in place of sim_topk_ivf.
-# Round-14: demoted after 6 green rounds; slot funds curation_semantic_decon.
 EXTRA_QUERIES["running_distinct_users"] = running_distinct_users
 EXTRA_ORACLES["running_distinct_users"] = RUNNING_DISTINCT_ORACLE
 
@@ -953,8 +933,6 @@ SELECT d AS day,
 FROM pairs GROUP BY d
 """
 
-# Round-17 rotation: promoted (never driver-checked; recursive EWMA
-# smoothing over the day grain).
 QUERIES["ewma_daily_revenue"] = ewma_daily_revenue
 ORACLES["ewma_daily_revenue"] = EWMA_ORACLE
 
@@ -978,11 +956,11 @@ def yoy_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = orders.groupBy(month.alias("m")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("rev")
     )
-    # RANGE frames keyed on the month INDEX, not row lags (round-13
-    # review: lag(rev, 12) is 12 ROWS back, so one zero-order month
-    # silently shifted every later comparison to the wrong base month;
-    # a range frame of exactly [m-k, m-k] is calendar-true with gaps
-    # and emits NULL when the base month is absent).
+    # RANGE frames keyed on the month INDEX, not row lags: lag(rev, 12)
+    # is 12 ROWS back, so one zero-order month would shift every later
+    # comparison to the wrong base month; a range frame of exactly
+    # [m-k, m-k] is calendar-true with gaps and emits NULL when the
+    # base month is absent.
     prev = F.max("rev").over(
         Window.orderBy("m").rangeBetween(-1, -1)
     )
@@ -1082,8 +1060,6 @@ SELECT CAST(iso_weekday AS INTEGER) AS iso_weekday,
 FROM dow
 """
 
-# Round-18 rotation: both promoted to driver slots (never driver-
-# checked; timestamp-heavy — also in scripts/drive.py's TZ_PROBE).
 QUERIES["yoy_revenue_growth"] = yoy_revenue_growth
 ORACLES["yoy_revenue_growth"] = YOY_ORACLE
 QUERIES["dow_seasonality"] = dow_seasonality
@@ -1184,11 +1160,6 @@ SELECT CAST(m // 12 AS INTEGER) AS year,
 FROM deltas WHERE delta IS NOT NULL
 """
 
-# Round-6 rotation: promoted to a driver slot (per-verdict: never
-# driver-checked; the densified-grid MoM decomposition is the
-# registry's only waterfall query).
-# Round-13 rotation: demoted after 6 green driver rounds; still
-# oracle-checked locally.
 EXTRA_QUERIES["waterfall_nation_mom"] = waterfall_nation_mom
 EXTRA_ORACLES["waterfall_nation_mom"] = WATERFALL_ORACLE
 
@@ -1231,7 +1202,7 @@ def hhi_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         shared.groupBy("nation")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-            # order-independent sum (round-13 review): raw double
+            # order-independent sum: raw double
             # accumulation varies with task order at the last ulp and
             # can flip the 6dp rounding vs the sequential oracle —
             # per-term 8dp rounding + decimal sum is the house rule
@@ -1327,7 +1298,7 @@ def drift_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_categories"),
             # 8dp-rounded decimal terms: order-independent sum (house
-            # rule, round-13 review)
+            # rule)
             F.round(
                 F.sum(F.round(chi_term, 8).cast("decimal(18,8)")).cast(
                     "double"
@@ -1361,8 +1332,6 @@ SELECT CAST(yr AS INTEGER) AS year,
 FROM joined GROUP BY yr
 """
 
-# Round-15 promotion (never driver-checked):
-# Round-19 demotion (green r15-r18).
 EXTRA_QUERIES["hhi_supplier_concentration"] = hhi_supplier_concentration
 EXTRA_ORACLES["hhi_supplier_concentration"] = HHI_ORACLE
 EXTRA_QUERIES["drift_priority_mix"] = drift_priority_mix
@@ -1471,12 +1440,6 @@ FROM seq WHERE e3 IS NOT NULL
 GROUP BY e1, e2, e3
 """
 
-# Round-7 driver rotation: both promoted (never driver-checked) —
-# backlog_open_lineitems replaces the demoted range_join_price_bands
-# (same band-join family, checked via the delta-sweep cross-algorithm
-# oracle), event_trigrams replaces the demoted text_lang_id.
-# Round-14: both demoted after 6 green rounds; slots fund
-# sql_idle_rich_customers and sql_rollup_rank_share.
 EXTRA_QUERIES["backlog_open_lineitems"] = backlog_open_lineitems
 EXTRA_ORACLES["backlog_open_lineitems"] = BACKLOG_ORACLE
 EXTRA_QUERIES["event_trigrams"] = event_trigrams
@@ -1500,16 +1463,17 @@ def lorenz_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking operator (operators/ranking.py) — exact ntile(10) replayed
     from the global rank, NO single-partition sort; the 10-row decile
     frame's cumulative window is bounded-grain."""
-    from ..operators.ranking import ntile_from_rank, with_global_rank
+    from ..operators.ranking import ntile_from_rank, with_rank
 
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("spend")
     )
-    ranked, n_cust, totals = with_global_rank(
-        per_cust, ["spend", "o_custkey"], rank_col="i",
-        total_cols=["spend"],
+    ranked, parts = with_rank(
+        per_cust, [], ["spend", "o_custkey"], rank_col="i",
+        cum_cols=["spend"],
     )
+    n_cust = sum(p["cnt"] for p in parts)
     deciled = ranked.withColumn(
         "decile", ntile_from_rank(F.col("i"), n_cust, 10)
     )
@@ -1520,7 +1484,8 @@ def lorenz_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total spend: exact decimal scalar from the same bounded offset
     # scan (decimal addition is exact — identical to an engine-side
     # global sum), broadcast as a literal instead of a global window.
-    total = F.lit(str(totals["spend"])).cast("decimal(38,4)")
+    total_spend = sum(p["sum"]["spend"] for p in parts)
+    total = F.lit(str(total_spend)).cast("decimal(38,4)")
     w_cum = Window.orderBy("decile").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )  # bounded grain: exactly 10 decile rows
@@ -1559,8 +1524,5 @@ SELECT CAST(decile AS INTEGER) AS decile,
 FROM per_dec
 """
 
-# Round-7 driver rotation: promoted (never driver-checked) in place
-# of the demoted dedup_ngram_jaccard.
-# Round-14: demoted after 6 green rounds; slot funds text_token_count.
 EXTRA_QUERIES["lorenz_customer_spend"] = lorenz_customer_spend
 EXTRA_ORACLES["lorenz_customer_spend"] = LORENZ_ORACLE

@@ -1,7 +1,5 @@
-"""Distributed exact ranking analytics — the round-9 family split out
-of queries/tsstats.py (r17 verdict item 8: pure hygiene, registry
-names unchanged). Every query here runs on the range-partitioned
-exact-rank machinery (operators/ranking.py) instead of a
+"""Distributed exact ranking analytics. Every query here runs on the
+range-partitioned exact-rank machinery (operators/ranking.py) instead of a
 single-partition global window: percentile ranks, grouped deciles,
 per-brand ABC/Pareto classes, robust statistics (MAD anomalies, CUSUM,
 Theil-Sen), and the quantity-weighted median. Beyond-reference surface
@@ -20,7 +18,7 @@ EXTRA_QUERIES: dict = {}
 EXTRA_ORACLES: dict = {}
 
 # ---------------------------------------------------------------------------
-# Distributed exact percentile rank (round 9)
+# Distributed exact percentile rank
 # ---------------------------------------------------------------------------
 
 
@@ -33,15 +31,16 @@ def spend_percentile_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass range-partitioned ranking (operators/ranking.py); the
     oracle computes the same thing with a one-task window — a
     cross-algorithm check, not a replay."""
-    from ..operators.ranking import with_global_rank
+    from ..operators.ranking import with_rank
 
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("spend")
     )
-    ranked, n, _tot = with_global_rank(
-        per_cust, ["spend", "o_custkey"], rank_col="i"
+    ranked, parts = with_rank(
+        per_cust, [], ["spend", "o_custkey"], rank_col="i"
     )
+    n = sum(p["cnt"] for p in parts)
     denom = float(max(n - 1, 1))
     return ranked.select(
         F.col("o_custkey").cast("long").alias("cust_key"),
@@ -66,14 +65,12 @@ SELECT CAST(cust_key AS BIGINT) AS cust_key,
 FROM per_cust
 """
 
-# Round-16 rotation: demoted after 5 green driver rounds (r11-r15) —
-# still oracle-checked locally by tests/test_oracle_parity.py.
 EXTRA_QUERIES["spend_percentile_customers"] = spend_percentile_customers
 EXTRA_ORACLES["spend_percentile_customers"] = SPEND_PERCENTILE_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Grouped exact deciles: few huge groups (round 9)
+# Grouped exact deciles: few huge groups
 # ---------------------------------------------------------------------------
 
 
@@ -82,12 +79,12 @@ def segment_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHIN each of the 5 segments. The naive plan —
     ``Window.partitionBy(segment)`` — collapses 10^8 customers into 5
     tasks at 100 TB (few-huge-groups, the grouped scale-killer); this
-    runs on operators/ranking.py::with_grouped_rank instead:
+    runs on operators/ranking.py::with_rank instead:
     range-partition on (segment, spend, key), bounded (partition x
     segment) offset scan, partition-local windows, exact ntile replay
     from the per-group rank + group size. The final share window runs
     on the bounded segment x decile frame (50 rows)."""
-    from ..operators.ranking import ntile_from_rank, with_grouped_rank
+    from ..operators.ranking import ntile_from_rank, with_rank
 
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -106,7 +103,7 @@ def segment_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    ranked = with_grouped_rank(
+    ranked, _ = with_rank(
         per_cust, ["segment"], ["spend", "o_custkey"], rank_col="i"
     )
     deciled = ranked.withColumn(
@@ -152,14 +149,12 @@ SELECT segment, CAST(decile AS INTEGER) AS decile, n_customers,
 FROM per_dec
 """
 
-# Round-18 rotation: promoted (never driver-checked; grouped exact
-# deciles on the range-partitioned rank machinery).
 QUERIES["segment_spend_deciles"] = segment_spend_deciles
 ORACLES["segment_spend_deciles"] = SEGMENT_DECILES_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Per-brand ABC classes: grouped Pareto via grouped prefix sums (round 9)
+# Per-brand ABC classes: grouped Pareto via grouped prefix sums
 # ---------------------------------------------------------------------------
 
 
@@ -167,12 +162,12 @@ def brand_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC inventory classes WITHIN each of the 25 brands — abc_parts'
     grouped twin (category managers read per-brand Paretos, not the
     global one). The brand axis is few-huge-groups, so the per-brand
-    revenue running sums come from with_grouped_rank's grouped
-    prefix-sum extension (bounded (partition x brand) offset scan,
-    partition-local windows) — never a 25-task
-    Window.partitionBy(brand) over the corpus-proportional part grain.
+    revenue running sums come from with_rank's grouped prefix sums
+    (bounded (partition x brand) offset scan, partition-local windows),
+    never a 25-task Window.partitionBy(brand) over the
+    corpus-proportional part grain.
     """
-    from ..operators.ranking import with_grouped_rank
+    from ..operators.ranking import with_rank
 
     lineitem = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
@@ -193,7 +188,7 @@ def brand_abc_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     per_part = per_part.withColumn("_negrev", -F.col("rev"))
-    ranked = with_grouped_rank(
+    ranked, _ = with_rank(
         per_part,
         ["p_brand"],
         ["_negrev", "l_partkey"],
@@ -245,7 +240,7 @@ EXTRA_ORACLES["brand_abc_parts"] = BRAND_ABC_ORACLE
 
 
 # ---------------------------------------------------------------------------
-# Robust statistics: MAD anomalies, CUSUM changepoint, Theil-Sen (round 9)
+# Robust statistics: MAD anomalies, CUSUM changepoint, Theil-Sen
 # ---------------------------------------------------------------------------
 
 
@@ -305,8 +300,6 @@ SELECT day,
 FROM daily, mad
 """
 
-# Round-10 rotation: promoted to a driver slot (never driver-checked).
-# Round-17 rotation: demoted after multiple green driver rounds.
 EXTRA_QUERIES["mad_anomaly_revenue"] = mad_anomaly_revenue
 EXTRA_ORACLES["mad_anomaly_revenue"] = MAD_ANOMALY_ORACLE
 
@@ -408,9 +401,6 @@ SELECT b.changepoint_day,
 FROM best b
 """
 
-# Round-10 rotation: promoted to a driver slot (never driver-checked).
-# Round-16 rotation: demoted after 5 green driver rounds (r11-r15) —
-# still oracle-checked locally by tests/test_oracle_parity.py.
 EXTRA_QUERIES["cusum_revenue_shift"] = cusum_revenue_shift
 EXTRA_ORACLES["cusum_revenue_shift"] = CUSUM_ORACLE
 
@@ -474,9 +464,6 @@ SELECT CAST((SELECT COUNT(*) FROM daily) AS BIGINT) AS n_days,
 FROM daily d, sl
 """
 
-# Round-10 rotation: promoted to a driver slot (never driver-checked).
-# Round-16 rotation: demoted after 5 green driver rounds (r11-r15) —
-# still oracle-checked locally by tests/test_oracle_parity.py.
 EXTRA_QUERIES["theilsen_event_trend"] = theilsen_event_trend
 EXTRA_ORACLES["theilsen_event_trend"] = THEILSEN_ORACLE
 
@@ -486,25 +473,20 @@ def weighted_median_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest price whose cumulative quantity weight reaches half the
     group's total (lower weighted median — the robust 'typical traded
     price' a mean would let outliers drag). Runs on
-    operators/ranking.py::with_grouped_rank (3 huge groups — exactly
+    operators/ranking.py::with_rank (3 huge groups — exactly
     the few-huge-groups case Window.partitionBy mishandles at scale);
     the half-total comparison is exact long arithmetic
     (2*cum >= total), no float boundary."""
-    from ..operators.ranking import crossing_pids, with_grouped_rank
+    from ..operators.ranking import crossing_pids, with_rank
 
     li = load_table(spark, sf_dir, "lineitem")
     grain = li.groupBy(
         "l_returnflag", F.col("l_extendedprice").alias("price")
     ).agg(F.sum(F.col("l_quantity").cast("long")).alias("w"))
-    ranked, parts = with_grouped_rank(
-        grain,
-        ["l_returnflag"],
-        ["price"],
-        rank_col="_i",
-        cum_cols=["w"],
-        return_offsets=True,
+    ranked, parts = with_rank(
+        grain, ["l_returnflag"], ["price"], rank_col="_i", cum_cols=["w"]
     )
-    # Median partition pruning (r20; guide §2.4): 2*cum >= total over
+    # Median partition pruning: 2*cum >= total over
     # integer weights first holds at weighted position ceil(total/2),
     # and min(price)/min(total_w) read only that first crossing row
     # (later partitions hold strictly larger prices and the same
@@ -549,6 +531,5 @@ FROM c WHERE 2 * cumw >= totw
 GROUP BY l_returnflag
 """
 
-# Round-16 rotation: promoted to a driver slot (never driver-checked).
 QUERIES["weighted_median_prices"] = weighted_median_prices
 ORACLES["weighted_median_prices"] = WEIGHTED_MEDIAN_ORACLE

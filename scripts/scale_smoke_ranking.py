@@ -1,5 +1,5 @@
 """Scale smoke for the two-pass distributed ranking
-(operators/ranking.py, round 9): the single-task global window it
+(operators/ranking.py::with_rank): the single-task global window it
 replaces serializes the WHOLE frame through one task; this smoke pins
 the operator's two claims at 100x with a committed artifact:
 
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from scala_data_pipeline_spark.operators.ranking import (  # noqa: E402
     ntile_from_rank,
-    with_global_rank,
+    with_rank,
 )
 from scala_data_pipeline_spark.session import get_session  # noqa: E402
 from scala_data_pipeline_spark.sources import load_table  # noqa: E402
@@ -77,9 +77,10 @@ def main() -> None:
     report["ranked_rows"] = n_frame
 
     t0 = time.monotonic()
-    ranked, n, totals = with_global_rank(
-        frame, ["v", "k"], rank_col="i", cum_cols=["v"]
+    ranked, parts = with_rank(
+        frame, [], ["v", "k"], rank_col="i", cum_cols=["v"]
     )
+    n = sum(p["cnt"] for p in parts)
     dist = ranked.select(
         "k",
         "i",
@@ -146,15 +147,11 @@ def main() -> None:
     assert a == b
     report["slice_rows_checked"] = len(a)
 
-    # grouped variant: 5 huge groups over the same frame — the case
-    # where Window.partitionBy(group) itself is the scale-killer
-    from scala_data_pipeline_spark.operators.ranking import (
-        with_grouped_rank,
-    )
-
+    # grouped: 5 huge groups over the same frame — the case where
+    # Window.partitionBy(group) itself is the scale-killer
     gframe = frame.withColumn("g", (F.col("k") % 5).cast("int"))
     t0 = time.monotonic()
-    granked = with_grouped_rank(gframe, ["g"], ["v", "k"], rank_col="i")
+    granked, _ = with_rank(gframe, ["g"], ["v", "k"], rank_col="i")
     g_fp = granked.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("i").cast("decimal(38,0)")).alias("si"),

@@ -1,7 +1,7 @@
-"""operators/ranking.py: the two-pass range-partitioned global ranking
-must be bit-identical to the single-task global window it replaces —
-rank, running sums, totals, and the ntile replay — while never planning
-a single-partition sort of the input frame."""
+"""operators/ranking.py: the two-pass range-partitioned ranking must be
+bit-identical to the single-task window it replaces, global or per
+group: rank, group sizes, running sums, totals, and the ntile replay,
+while never planning a single-partition sort of the input frame."""
 
 from __future__ import annotations
 
@@ -12,8 +12,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Window
 
 from scala_data_pipeline_spark.operators.ranking import (
+    crossing_pids,
     ntile_from_rank,
-    with_global_rank,
+    with_rank,
 )
 from scala_data_pipeline_spark.plans.inspect import explain_str
 from scala_data_pipeline_spark.sources import load_table
@@ -33,8 +34,8 @@ def _per_cust(spark):
 
 def test_rank_matches_global_window(spark):
     df = _per_cust(spark)
-    got, n, totals = with_global_rank(
-        df, ["v", "o_custkey"], rank_col="i", cum_cols=["v"]
+    got, parts = with_rank(
+        df, [], ["v", "o_custkey"], rank_col="i", cum_cols=["v"]
     )
     w = Window.orderBy(F.asc("v"), F.asc("o_custkey"))
     want = df.withColumn("i", F.row_number().over(w)).withColumn(
@@ -52,15 +53,16 @@ def test_rank_matches_global_window(spark):
         for r in want.collect()
     }
     assert g == e
-    assert n == df.count()
-    assert totals["v"] == sum(
+    assert sum(p["cnt"] for p in parts) == df.count()
+    assert sum(p["sum"]["v"] for p in parts) == sum(
         (r["v"] for r in df.collect()), Decimal(0)
     )
 
 
 def test_ntile_replay_matches_builtin(spark):
     df = _per_cust(spark)
-    got, n, _ = with_global_rank(df, ["v", "o_custkey"], rank_col="i")
+    got, parts = with_rank(df, [], ["v", "o_custkey"], rank_col="i")
+    n = sum(p["cnt"] for p in parts)
     for tiles in (3, 7, 10):
         replay = {
             r["o_custkey"]: r["t"]
@@ -81,7 +83,8 @@ def test_ntile_replay_matches_builtin(spark):
 
 def test_ntile_fewer_rows_than_tiles(spark):
     df = _per_cust(spark).limit(4)
-    got, n, _ = with_global_rank(df, ["v", "o_custkey"], rank_col="i")
+    got, parts = with_rank(df, [], ["v", "o_custkey"], rank_col="i")
+    n = sum(p["cnt"] for p in parts)
     assert n == 4
     tiles = sorted(
         r["t"]
@@ -93,9 +96,7 @@ def test_ntile_fewer_rows_than_tiles(spark):
 
 
 def test_no_single_partition_window_in_plan(spark):
-    got, _, _ = with_global_rank(
-        _per_cust(spark), ["v", "o_custkey"], rank_col="i"
-    )
+    got, _ = with_rank(_per_cust(spark), [], ["v", "o_custkey"], rank_col="i")
     simple = explain_str(got, mode="simple")
     lines = simple.splitlines()
     for i, ln in enumerate(lines):
@@ -106,17 +107,13 @@ def test_no_single_partition_window_in_plan(spark):
 
 def test_empty_input(spark):
     df = _per_cust(spark).where(F.lit(False))
-    got, n, totals = with_global_rank(
-        df, ["v", "o_custkey"], rank_col="i", cum_cols=["v"]
+    got, parts = with_rank(
+        df, [], ["v", "o_custkey"], rank_col="i", cum_cols=["v"]
     )
-    assert n == 0 and got.count() == 0 and totals["v"] == 0
+    assert parts == [] and got.count() == 0
 
 
 def test_grouped_rank_matches_partitioned_window(spark):
-    from scala_data_pipeline_spark.operators.ranking import (
-        with_grouped_rank,
-    )
-
     orders = load_table(spark, SF, "orders")
     customer = load_table(spark, SF, "customer")
     df = (
@@ -130,7 +127,7 @@ def test_grouped_rank_matches_partitioned_window(spark):
         .groupBy("seg", "o_custkey")
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("v"))
     )
-    got = with_grouped_rank(df, ["seg"], ["v", "o_custkey"], rank_col="i")
+    got, _ = with_rank(df, ["seg"], ["v", "o_custkey"], rank_col="i")
     w = Window.partitionBy("seg").orderBy(F.asc("v"), F.asc("o_custkey"))
     want = df.withColumn("i", F.row_number().over(w)).withColumn(
         "n_in_group", F.count(F.lit(1)).over(Window.partitionBy("seg"))
@@ -147,15 +144,10 @@ def test_grouped_rank_matches_partitioned_window(spark):
 
 
 def test_grouped_ntile_column_n_matches_builtin(spark):
-    from scala_data_pipeline_spark.operators.ranking import (
-        ntile_from_rank,
-        with_grouped_rank,
-    )
-
     df = _per_cust(spark).withColumn(
         "g", (F.col("o_custkey") % 3).cast("int")
     )
-    got = with_grouped_rank(df, ["g"], ["v", "o_custkey"], rank_col="i")
+    got, _ = with_rank(df, ["g"], ["v", "o_custkey"], rank_col="i")
     replay = {
         (r["g"], r["o_custkey"]): r["t"]
         for r in got.select(
@@ -239,17 +231,13 @@ def test_ntile_replay_property_column_n(spark):
 
 
 def test_grouped_cum_matches_partitioned_window(spark):
-    """with_grouped_rank's cum_cols extension: per-group running sums
-    and totals must numerically equal the partitioned-window builtins
-    (Decimal compare — scales differ, values must not)."""
-    from scala_data_pipeline_spark.operators.ranking import (
-        with_grouped_rank,
-    )
-
+    """cum_cols: per-group running sums and totals must numerically
+    equal the partitioned-window builtins (Decimal compare — scales
+    differ, values must not)."""
     df = _per_cust(spark).withColumn(
         "g", (F.col("o_custkey") % 4).cast("int")
     )
-    got = with_grouped_rank(
+    got, _ = with_rank(
         df, ["g"], ["v", "o_custkey"], rank_col="i", cum_cols=["v"]
     )
     w = Window.partitionBy("g").orderBy(F.asc("v"), F.asc("o_custkey"))
@@ -281,13 +269,8 @@ def test_grouped_cum_matches_partitioned_window(spark):
 
 
 def test_grouped_rank_two_group_columns(spark):
-    """with_grouped_rank over a COMPOSITE group axis (two columns) —
-    offsets and sizes keyed on the tuple must match the
-    partitioned-window builtins."""
-    from scala_data_pipeline_spark.operators.ranking import (
-        with_grouped_rank,
-    )
-
+    """A COMPOSITE group axis (two columns): offsets and sizes keyed on
+    the tuple must match the partitioned-window builtins."""
     orders = load_table(spark, SF, "orders")
     df = orders.select(
         F.col("o_orderstatus").alias("g1"),
@@ -295,7 +278,7 @@ def test_grouped_rank_two_group_columns(spark):
         F.col("o_orderkey").alias("k"),
         F.col("o_totalprice").cast("decimal(18,4)").alias("v"),
     )
-    got = with_grouped_rank(df, ["g1", "g2"], ["v", "k"], rank_col="i")
+    got, _ = with_rank(df, ["g1", "g2"], ["v", "k"], rank_col="i")
     w = Window.partitionBy("g1", "g2").orderBy(F.asc("v"), F.asc("k"))
     want = df.withColumn("i", F.row_number().over(w)).withColumn(
         "n_in_group",
@@ -307,12 +290,8 @@ def test_grouped_rank_two_group_columns(spark):
 
 def test_grouped_rank_null_group_keys(spark):
     """NULL group keys must form their own group (Window.partitionBy
-    semantics) — advisor round-9: the plain equi-join back onto the
-    offset/size frames silently dropped every NULL-keyed row."""
-    from scala_data_pipeline_spark.operators.ranking import (
-        with_grouped_rank,
-    )
-
+    semantics): a plain equi-join back onto the offset frame would drop
+    every NULL-keyed row."""
     df = _per_cust(spark).withColumn(
         "g",
         F.when(F.col("o_custkey") % 3 == 0, F.lit(None)).otherwise(
@@ -320,7 +299,7 @@ def test_grouped_rank_null_group_keys(spark):
         ),
     )
     n_in = df.count()
-    got = with_grouped_rank(df, ["g"], ["v", "o_custkey"], rank_col="i")
+    got, _ = with_rank(df, ["g"], ["v", "o_custkey"], rank_col="i")
     assert got.count() == n_in  # no silent loss of the NULL group
     w = Window.partitionBy("g").orderBy(F.asc("v"), F.asc("o_custkey"))
     want = df.withColumn("i", F.row_number().over(w)).withColumn(
@@ -337,58 +316,25 @@ def test_grouped_rank_null_group_keys(spark):
     assert a == b
 
 
-def test_global_rank_double_cum_col(spark):
-    """cum_cols on a double column must work (advisor round-9: the
-    Decimal(0) += float prefix accumulation raised TypeError) and agree
-    with the single-task window to float tolerance — the prefix
-    arithmetic is exact over the per-partition partials; only the
-    partials' own float rounding differs from the window's running
-    order."""
+def _check_double_cum(spark, group_cols):
+    """cum_cols on a double column: the Decimal prefix accumulation
+    takes float partials, and the result agrees with the single-task
+    window to float tolerance — the prefix arithmetic is exact over the
+    per-partition partials; only the partials' own float rounding
+    differs from the window's running order."""
     import math
-
-    df = _per_cust(spark).withColumn("vd", F.col("v").cast("double"))
-    got, n, totals = with_global_rank(
-        df, ["vd", "o_custkey"], rank_col="i", cum_cols=["vd"]
-    )
-    w = Window.orderBy(F.asc("vd"), F.asc("o_custkey"))
-    want = df.withColumn("i", F.row_number().over(w)).withColumn(
-        "cum_vd",
-        F.sum("vd").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    a = {r["o_custkey"]: (r["i"], r["cum_vd"]) for r in got.collect()}
-    b = {r["o_custkey"]: (r["i"], r["cum_vd"]) for r in want.collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k][0] == b[k][0]
-        assert math.isclose(a[k][1], b[k][1], rel_tol=1e-9), k
-    assert n == df.count()
-    assert math.isclose(
-        float(totals["vd"]),
-        sum(r["vd"] for r in df.collect()),
-        rel_tol=1e-9,
-    )
-
-
-def test_grouped_rank_double_cum_col(spark):
-    """Grouped variant of the float-cum fix: double cum_cols through
-    the (partition x group) prefix scan."""
-    import math
-
-    from scala_data_pipeline_spark.operators.ranking import (
-        with_grouped_rank,
-    )
 
     df = (
         _per_cust(spark)
         .withColumn("g", (F.col("o_custkey") % 3).cast("int"))
         .withColumn("vd", F.col("v").cast("double"))
     )
-    got = with_grouped_rank(
-        df, ["g"], ["vd", "o_custkey"], rank_col="i", cum_cols=["vd"]
+    got, parts = with_rank(
+        df, group_cols, ["vd", "o_custkey"], rank_col="i", cum_cols=["vd"]
     )
-    w = Window.partitionBy("g").orderBy(F.asc("vd"), F.asc("o_custkey"))
+    w = Window.partitionBy(*group_cols).orderBy(
+        F.asc("vd"), F.asc("o_custkey")
+    )
     want = (
         df.withColumn("i", F.row_number().over(w))
         .withColumn(
@@ -397,14 +343,16 @@ def test_grouped_rank_double_cum_col(spark):
                 w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
             ),
         )
-        .withColumn("total_vd", F.sum("vd").over(Window.partitionBy("g")))
+        .withColumn(
+            "total_vd", F.sum("vd").over(Window.partitionBy(*group_cols))
+        )
     )
     a = {
-        (r["g"], r["o_custkey"]): (r["i"], r["cum_vd"], r["total_vd"])
+        r["o_custkey"]: (r["i"], r["cum_vd"], r["total_vd"])
         for r in got.collect()
     }
     b = {
-        (r["g"], r["o_custkey"]): (r["i"], r["cum_vd"], r["total_vd"])
+        r["o_custkey"]: (r["i"], r["cum_vd"], r["total_vd"])
         for r in want.collect()
     }
     assert set(a) == set(b)
@@ -412,12 +360,23 @@ def test_grouped_rank_double_cum_col(spark):
         assert a[k][0] == b[k][0], k
         assert math.isclose(a[k][1], b[k][1], rel_tol=1e-9), k
         assert math.isclose(a[k][2], b[k][2], rel_tol=1e-9), k
+    assert sum(p["cnt"] for p in parts) == df.count()
+
+
+def test_global_rank_double_cum_col(spark):
+    """Double cum_cols with no group columns (one global order)."""
+    _check_double_cum(spark, [])
+
+
+def test_grouped_rank_double_cum_col(spark):
+    """Double cum_cols through the (partition x group) prefix scan."""
+    _check_double_cum(spark, ["g"])
 
 
 def test_ntile_exact_at_huge_ranks(spark):
-    """The integer-floor-division replay must stay exact where the old
-    double-division form went off by one tile (advisor round-9): ranks
-    near 2^50 with tile boundaries landing a ULP away from integers."""
+    """The integer-floor-division replay must stay exact where a
+    double-division form goes off by one tile: ranks near 2^50 with
+    tile boundaries landing a ULP away from integers."""
     n = (1 << 50) + 7
     tiles = 3
     base, rem = divmod(n, tiles)
@@ -444,135 +403,51 @@ def test_ntile_exact_at_huge_ranks(spark):
     got = {r["i"]: r["t"] for r in df.collect()}
     assert got == want
 
-def test_global_rank_cummin_matches_window(spark):
-    """min_cols: the distributed running min (partition-local min +
-    driver prefix min) must equal the single-task window's running
-    min, including null handling (rows before the first non-null carry
-    null)."""
+def _check_aqe_coalesced(spark, group_cols):
+    """Without a pinned num_partitions the range shuffle is
+    AQE-coalescible. Adjacent-merge must preserve the scheme's
+    invariants: identical ranks, sizes and cums whether the shuffle is
+    pinned wide, pinned narrow, or left to AQE, on a frame small enough
+    that AQE collapses it hard."""
     df = _per_cust(spark).withColumn(
-        "m",
-        F.when(F.col("o_custkey") % 5 == 0, F.lit(None)).otherwise(
-            -F.col("o_custkey").cast("double")
-        ),
+        "g", (F.col("o_custkey") % 3).cast("int")
     )
-    got, n, _ = with_global_rank(
-        df, ["v", "o_custkey"], rank_col="i", min_cols=["m"]
-    )
-    w = Window.orderBy(F.asc("v"), F.asc("o_custkey"))
-    want = df.withColumn("i", F.row_number().over(w)).withColumn(
-        "cummin_m",
-        F.min("m").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    a = {r["o_custkey"]: (r["i"], r["cummin_m"]) for r in got.collect()}
-    b = {r["o_custkey"]: (r["i"], r["cummin_m"]) for r in want.collect()}
-    assert a == b
 
-def test_global_rank_cummin_nan_partials(spark):
-    """An all-NaN range partition's partial min is NaN; the driver
-    prefix scan must skip it (Spark orders NaN greater than every
-    value) instead of freezing the running min (round-10 review
-    finding)."""
-    import math
+    def run(n_part):
+        got, _ = with_rank(
+            df, group_cols, ["v", "o_custkey"], rank_col="i",
+            cum_cols=["v"], num_partitions=n_part,
+        )
+        return {
+            r["o_custkey"]: (r["i"], r["n_in_group"], Decimal(r["cum_v"]))
+            for r in got.collect()
+        }
 
-    rows = [
-        (1, float("nan")),
-        (2, float("nan")),
-        (3, 5.0),
-        (4, 7.0),
-        (5, 9.0),
-        (6, 11.0),
-    ]
-    df = spark.createDataFrame(rows, "k long, m double")
-    got, _, _ = with_global_rank(
-        df, ["k"], rank_col="i", min_cols=["m"], num_partitions=3
-    )
-    w = Window.orderBy(F.asc("k"))
-    want = df.withColumn(
-        "cummin_m",
-        F.min("m").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    a = {r["k"]: r["cummin_m"] for r in got.collect()}
-    b = {r["k"]: r["cummin_m"] for r in want.collect()}
-    assert set(a) == set(b)
-    for k in a:
-        if b[k] != b[k]:  # NaN expected
-            assert a[k] != a[k], (k, a[k])
-        else:
-            assert a[k] == b[k], (k, a[k], b[k])
+    base = run(64)
+    for n_part in (None, 2):
+        assert run(n_part) == base, f"num_partitions={n_part}"
 
 
 def test_aqe_coalesced_matches_pinned_partitions(spark):
-    """Round-12 change: without a pinned num_partitions the range
-    shuffle is AQE-coalescible. Adjacent-merge must preserve the
-    scheme's invariants — identical ranks/cums whether the shuffle is
-    pinned wide, pinned narrow, or left to AQE, on a frame small
-    enough that AQE collapses it hard."""
-    df = _per_cust(spark)
-    base = {
-        r["o_custkey"]: (r["i"], Decimal(r["cum_v"]))
-        for r in with_global_rank(
-            df, ["v", "o_custkey"], rank_col="i", cum_cols=["v"],
-            num_partitions=64,
-        )[0].collect()
-    }
-    for n_part in (None, 2):
-        got = {
-            r["o_custkey"]: (r["i"], Decimal(r["cum_v"]))
-            for r in with_global_rank(
-                df, ["v", "o_custkey"], rank_col="i", cum_cols=["v"],
-                num_partitions=n_part,
-            )[0].collect()
-        }
-        assert got == base, f"num_partitions={n_part}"
+    _check_aqe_coalesced(spark, [])
 
 
 def test_aqe_coalesced_grouped_matches_pinned(spark):
-    from scala_data_pipeline_spark.operators.ranking import (
-        with_grouped_rank,
-    )
-
-    df = _per_cust(spark).withColumn(
-        "g", (F.col("o_custkey") % 3).cast("int")
-    )
-    def run(n_part):
-        return {
-            r["o_custkey"]: (r["i"], r["n_in_group"], Decimal(r["cum_v"]))
-            for r in with_grouped_rank(
-                df, ["g"], ["v", "o_custkey"], rank_col="i",
-                cum_cols=["v"], num_partitions=n_part,
-            ).collect()
-        }
-    base = run(64)
-    assert run(None) == base
-    assert run(2) == base
+    _check_aqe_coalesced(spark, ["g"])
 
 
-def test_return_offsets_layout_and_crossing_pids(spark):
-    """return_offsets: the per-(partition, group) layout must tile each
-    group exactly (contiguous rank offsets, partials summing to the
-    group total), and crossing_pids must name the partition whose range
-    holds each weighted position — verified by reading the rows back
-    with the _pid column the flag preserves."""
-    from scala_data_pipeline_spark.operators.ranking import (
-        crossing_pids,
-        with_grouped_rank,
-    )
-
+def test_layout_and_crossing_pids(spark):
+    """The per-(partition, group) layout must tile each group exactly
+    (contiguous rank offsets, partials summing to the group total), and
+    crossing_pids must name the partition whose range holds each
+    weighted position — verified by reading the rows back with their
+    _pid column."""
     df = _per_cust(spark).withColumn(
         "g", (F.col("o_custkey") % 3).cast("int")
     ).withColumn("w", (F.col("o_custkey") % 7 + 1).cast("long"))
-    out, parts = with_grouped_rank(
-        df,
-        ["g"],
-        ["v", "o_custkey"],
-        rank_col="i",
-        cum_cols=["w"],
+    out, parts = with_rank(
+        df, ["g"], ["v", "o_custkey"], rank_col="i", cum_cols=["w"],
         num_partitions=8,
-        return_offsets=True,
     )
     assert "_pid" in out.columns
     rows = out.collect()
@@ -611,23 +486,13 @@ def test_percentile_prune_matches_unpruned_bounds(spark):
     the crossing partitions equals the full-frame computation."""
     import math
 
-    from scala_data_pipeline_spark.operators.ranking import (
-        crossing_pids,
-        with_grouped_rank,
-    )
-
     li = load_table(spark, SF, "lineitem")
     grain = li.groupBy(
         "l_linestatus", F.col("l_extendedprice").alias("price")
     ).agg(F.count(F.lit(1)).alias("w"))
-    ranked, parts = with_grouped_rank(
-        grain,
-        ["l_linestatus"],
-        ["price"],
-        rank_col="_i",
-        cum_cols=["w"],
+    ranked, parts = with_rank(
+        grain, ["l_linestatus"], ["price"], rank_col="_i", cum_cols=["w"],
         num_partitions=16,
-        return_offsets=True,
     )
 
     def bounds(frame):
