@@ -2,18 +2,32 @@
 step that turns near-dup PAIRS into dedup CLUSTERS (keep one document
 per component). Standard tail of a MinHash/SimHash dedup pipeline.
 
-Algorithm: min-label propagation. Each vertex starts labeled with its
-own id; every round each vertex takes the min of its label and its
-neighbors' labels; fixpoint = every vertex carries its component's
-minimum id. Rounds needed = graph diameter, which for near-dup graphs
-is small (clusters are cliques or star fragments from the capped pair
-generators — see dedup.lsh_candidate_pairs). Each round is one join +
-one aggregation on the edge list; the driver only evaluates the
-converged? counter, never the data. For adversarial long-chain graphs
-at extreme scale, the alternating large-star/small-star formulation
-(Kiveris et al., "Connected Components in MapReduce") converges in
-O(log n) rounds with the same per-round plan shape — diameter-bound
-propagation is the right default for dedup workloads.
+One function, two paths, chosen by the size of the bidirectional edge
+list:
+
+- At or below ``SMALL_GRAPH_EDGES`` edges the list is collected and
+  solved by union-find on the driver (:func:`_solve_small_graph`). The
+  post-LSH pair graph is edges-bounded by the capped pair generators,
+  so every fixture takes this path.
+- Above the bound, min-label propagation: each vertex starts labeled
+  with its own id; every round each vertex takes the min of its label
+  and its neighbors' labels; fixpoint = every vertex carries its
+  component's minimum id. Rounds needed = graph diameter, which for
+  near-dup graphs is small (clusters are cliques or star fragments from
+  the capped pair generators — see dedup.lsh_candidate_pairs). Each
+  round is one join + one aggregation on the edge list; the driver only
+  evaluates the convergence probe, never the data.
+
+There is no large-star/small-star (O(log n) rounds) path: on a 10×
+dense near-dup graph (scripts/scale_smoke_pairs.py 10, 285,599 pairs,
+4 cores) star contraction ran 61 jobs to propagation's 34, and was
+slower in each of 3 paired runs (19.5–32.2 s against 12.1–23.3 s),
+with identical labels. A graph whose diameter exceeds ``MAX_ROUNDS``
+raises :class:`ComponentsNotConverged` rather than returning split
+clusters.
+
+Propagation needs numeric ids (every caller's are bigint): its
+convergence probe sums the labels.
 
 Oracle: a DuckDB recursive CTE computes min-reachable-id per vertex —
 exponential-closure semantics that agree with the fixpoint label.
@@ -21,16 +35,14 @@ exponential-closure semantics that agree with the fixpoint label.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StructField, StructType
 
 
 class ComponentsNotConverged(RuntimeError):
-    """Raised when min-label propagation exhausts max_iter without
+    """Raised when min-label propagation exhausts MAX_ROUNDS without
     reaching a fixpoint: labels are still moving, so the returned
     clustering would silently split long-diameter components and
     downstream dedup would keep multiple copies of the same near-dup
@@ -43,6 +55,10 @@ class ComponentsNotConverged(RuntimeError):
 # other documented bounded-driver sets' ceilings — while each avoided
 # iteration round costs 3 jobs (join + checkpoint + probe).
 SMALL_GRAPH_EDGES = 200_000
+
+# Propagation rounds after the fused first round before
+# ComponentsNotConverged is raised.
+MAX_ROUNDS = 25
 
 
 def _solve_small_graph(edges: DataFrame) -> DataFrame:
@@ -77,12 +93,9 @@ def _solve_small_graph(edges: DataFrame) -> DataFrame:
     vertices = {v for r in rows for v in (r["src"], r["dst"])}
     # Union-by-min makes find(v) ITSELF the component minimum: every
     # vertex starts as its own root and unions always attach the larger
-    # root under the smaller, so no separate min pass is needed
-    # (round-13 review removed the redundant comp_min dict).
+    # root under the smaller, so no separate min pass is needed.
     labels = sorted((v, find(v)) for v in vertices)
     id_type = edges.schema["src"].dataType
-    from pyspark.sql.types import StructField, StructType
-
     schema = StructType(
         [
             StructField("doc_id", id_type, nullable=False),
@@ -92,293 +105,76 @@ def _solve_small_graph(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(labels, schema)
 
 
+def _label_sum(frame: DataFrame):
+    # Min-label propagation only ever DECREASES labels, so the label
+    # sum is strictly monotone while anything moves: sum unchanged ⟺
+    # fixpoint. This convergence probe is one aggregate over the
+    # checkpointed frame — the join-and-count alternative costs a
+    # full extra join per round. decimal(38,0) keeps the sum exact
+    # (no float drift, no bigint overflow at cluster scale).
+    return frame.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
+
+
 def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
-    on_unconverged: str = "raise",
-    small_graph_bound: int = SMALL_GRAPH_EDGES,
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
 ) -> DataFrame:
     """(doc_id, cluster_id) for every vertex appearing in ``pairs``;
     ``cluster_id`` = min doc_id of the vertex's component.
 
-    ``on_unconverged``: "raise" (default) raises ComponentsNotConverged
-    if max_iter rounds pass without a fixpoint; "warn" emits a warning
-    and returns the partial labels (callers that can tolerate split
-    clusters, e.g. exploratory profiling).
-
-    ``small_graph_bound``: bidirectional-edge count at or below which
-    the graph is solved exactly in one driver pass
-    (:func:`_solve_small_graph`) instead of by iteration — identical
-    labels, ~10× fewer jobs on small graphs. Pass 0 to force the
-    iterative path (tests of iteration semantics do)."""
+    Raises ComponentsNotConverged if propagation has not reached a
+    fixpoint after MAX_ROUNDS rounds."""
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if small_graph_bound:
-        # One job over the persisted edge list; the collect below then
-        # reads the cache rather than re-deriving the pair pipeline.
-        if edges.count() <= small_graph_bound:
-            try:
-                return _solve_small_graph(edges)
-            finally:
-                edges.unpersist()
-    labels = (
-        # Fused first round: the identity labeling's round 1 reduces to
-        # min(v, min(neighbors)) — one groupBy over the edge list, no
-        # join and no separate identity materialization. Saves a full
-        # join+checkpoint round per call (clique/star components, the
-        # common near-dup shape, then need only the confirming round).
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select(F.col("src").alias("v"), F.least("mn", "src").alias("label"))
-        # localCheckpoint (not persist): each round's plan must START
-        # from materialized data, or the lineage nests one full copy of
-        # itself per iteration and the driver dies planning an
-        # exponentially-growing tree. Production long-job twin: reliable
-        # checkpoint() to the checkpoint dir (survives executor loss).
-        .localCheckpoint(eager=True)
-    )
-    numeric_label = not isinstance(
-        labels.schema["label"].dataType, StringType
-    )
-
-    def _label_sum(frame: DataFrame):
-        # Min-label propagation only ever DECREASES labels, so the label
-        # sum is strictly monotone while anything moves: sum unchanged ⟺
-        # fixpoint. This convergence probe is one aggregate over the
-        # checkpointed frame — the join-and-count alternative costs a
-        # full extra join per round. decimal(38,0) keeps the sum exact
-        # (no float drift, no bigint overflow at cluster scale).
-        return frame.agg(
-            F.sum(F.col("label").cast("decimal(38,0)"))
-        ).first()[0]
-
     try:
-        converged = False
-        prev = _label_sum(labels) if numeric_label else None
-        for _ in range(max_iter):
-            nbr = edges.join(
-                labels, edges["dst"] == labels["v"]
-            ).select(F.col("src").alias("v"), "label")
-            new_labels = (
+        # One job over the persisted edge list; the collect in the
+        # driver solve then reads the cache rather than re-deriving the
+        # pair pipeline.
+        if edges.count() <= SMALL_GRAPH_EDGES:
+            return _solve_small_graph(edges)
+        labels = (
+            # Fused first round: the identity labeling's round 1 reduces
+            # to min(v, min(neighbors)) — one groupBy over the edge list,
+            # no join and no separate identity materialization (clique
+            # and star components, the common near-dup shape, then need
+            # only the confirming round).
+            edges.groupBy("src")
+            .agg(F.min("dst").alias("mn"))
+            .select(F.col("src").alias("v"), F.least("mn", "src").alias("label"))
+            # localCheckpoint (not persist): each round's plan must START
+            # from materialized data, or the lineage nests one full copy
+            # of itself per iteration and the driver dies planning an
+            # exponentially-growing tree. Production long-job twin:
+            # reliable checkpoint() to the checkpoint dir (survives
+            # executor loss).
+            .localCheckpoint(eager=True)
+        )
+        prev = _label_sum(labels)
+        for _ in range(MAX_ROUNDS):
+            nbr = edges.join(labels, edges["dst"] == labels["v"]).select(
+                F.col("src").alias("v"), "label"
+            )
+            labels = (
                 labels.union(nbr)
                 .groupBy("v")
                 .agg(F.min("label").alias("label"))
                 .localCheckpoint(eager=True)
             )
-            if numeric_label:
-                cur = _label_sum(new_labels)
-                changed = int(cur != prev)
-                prev = cur
-            else:  # string ids: exact per-vertex compare (no sum order)
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), on="v")
-                    .filter(F.col("n.label") != F.col("o.label"))
-                    .count()
+            cur = _label_sum(labels)
+            if cur == prev:
+                return labels.select(
+                    F.col("v").alias("doc_id"), F.col("label").alias("cluster_id")
                 )
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                break
-        if not converged:
-            msg = (
-                f"connected_components: no fixpoint after {max_iter} rounds "
-                "(labels still moving) — component diameter exceeds "
-                "max_iter; raise max_iter or use a large-star/small-star "
-                "O(log n) formulation"
-            )
-            if on_unconverged == "warn":
-                warnings.warn(msg, RuntimeWarning, stacklevel=2)
-            else:
-                raise ComponentsNotConverged(msg)
-        return labels.select(
-            F.col("v").alias("doc_id"), F.col("label").alias("cluster_id")
+            prev = cur
+        raise ComponentsNotConverged(
+            f"connected_components: no fixpoint after {MAX_ROUNDS} rounds "
+            "(labels still moving) — component diameter exceeds MAX_ROUNDS"
         )
     finally:
         edges.unpersist()
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 40,
-    small_graph_bound: int = SMALL_GRAPH_EDGES,
-) -> DataFrame:
-    """(doc_id, cluster_id) via alternating large-star / small-star
-    contraction (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond") — O(log n) rounds regardless of graph DIAMETER, vs the
-    O(diameter) rounds of :func:`connected_components`'s min-label
-    propagation. Same per-round plan shape (one groupBy + one join on
-    the edge list), so this is the variant to reach for on adversarial
-    long-chain graphs at extreme scale; propagation stays the default
-    for near-dup workloads whose components are shallow.
-
-    - large-star: every node's strictly-LARGER neighbors re-attach to
-      the minimum of its closed neighborhood.
-    - small-star: every node and its strictly-smaller neighbors attach
-      to the smallest of them.
-
-    The edge set monotonically contracts toward a star forest (child →
-    component-min root), which is a fixpoint of both operations. The
-    convergence probe is a 3-scalar aggregate (count + exact decimal
-    src/dst sums) with a one-off exact ``exceptAll`` confirmation when
-    the probe stabilizes — sums alone could collide, the exact check
-    never lies and runs once.
-
-    ``small_graph_bound``: the same bounded-driver dispatch as
-    :func:`connected_components` — at or below this bidirectional-edge
-    count the graph is solved exactly in one driver union-find pass
-    (identical labels; the post-LSH pair graph is edges-bounded by the
-    capped generators, and each avoided star round costs ~6 shuffles +
-    a checkpoint + a probe job). Pass 0 to force star contraction
-    (tests of the O(log n) iteration semantics do; above the bound the
-    iterative path always runs).
-    """
-    bi = None
-    if small_graph_bound:
-        bi = (
-            pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-            .union(
-                pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-            )
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if bi.count() <= small_graph_bound:
-            try:
-                return _solve_small_graph(bi)
-            finally:
-                bi.unpersist()
-    # Vertices seen ONLY in self-pairs survive the a != b edge filter as
-    # nothing — remember the full vertex set so they re-enter the output
-    # labeled with their own id, matching connected_components (whose
-    # fused first round labels them least(v, v) = v) and the
-    # recursive-CTE oracle.
-    #
-    # Above the bound the persisted bidirectional frame is REUSED for
-    # both derivations instead of re-deriving the (potentially
-    # expensive LSH) pair pipeline from scratch — the r19 advisor's
-    # finding: the old finally-unpersist threw away one full pair-
-    # pipeline evaluation exactly in the large-graph regime the bound
-    # protects. `bi` is already distinct and holds both directions, so
-    # the canonical a>b edge set is one filter over it; it stays
-    # persisted until the eager edge checkpoint has materialized (and
-    # through the lazy `vertices` read at labeling time via the cache).
-    if bi is not None:
-        try:
-            # Both frames materialize off the cached bi while it is
-            # hot; vertices is vertex-count bounded, so its checkpoint
-            # is no bigger than the labels this function returns. bi
-            # is then released deterministically instead of leaking a
-            # persist whose lifetime would depend on when the caller
-            # finally acts on the (lazy) result.
-            edges = (
-                bi.filter(F.col("src") > F.col("dst"))
-                .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-                .localCheckpoint(eager=True)
-            )
-            vertices = (
-                bi.select(F.col("src").alias("doc_id"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            bi.unpersist()
-    else:  # small_graph_bound == 0: star path forced, no bi frame built
-        vertices = (
-            pairs.select(F.col(a_col).alias("doc_id"))
-            .union(pairs.select(F.col(b_col).alias("doc_id")))
-            .distinct()
-        )
-        edges = (
-            pairs.select(
-                F.greatest(F.col(a_col), F.col(b_col)).alias("a"),
-                F.least(F.col(a_col), F.col(b_col)).alias("b"),
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-
-    def _nbrs(e: DataFrame) -> DataFrame:
-        return e.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        nbrs = _nbrs(e)
-        m = nbrs.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        return (
-            nbrs.filter(F.col("v") > F.col("u"))
-            .join(m, on="u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        nbrs = _nbrs(e)
-        smalls = nbrs.filter(F.col("v") < F.col("u"))
-        m = smalls.groupBy("u").agg(F.min("v").alias("m"))
-        re_small = (
-            smalls.join(m, on="u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-        )
-        re_center = m.select(F.col("u").alias("a"), F.col("m").alias("b"))
-        return re_small.union(re_center).distinct()
-
-    def _probe(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)),
-            F.sum(F.col("a").cast("decimal(38,0)")),
-            F.sum(F.col("b").cast("decimal(38,0)")),
-        ).first()
-        return tuple(row)
-
-    prev = _probe(edges)
-    converged = False
-    for _ in range(max_iter):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(
-            eager=True
-        )
-        cur = _probe(new_edges)
-        if cur == prev and new_edges.exceptAll(edges).isEmpty():
-            converged = True
-            edges = new_edges
-            break
-        prev = cur
-        edges = new_edges
-    if not converged:
-        raise ComponentsNotConverged(
-            f"connected_components_star: no fixpoint after {max_iter} "
-            "rounds — raise max_iter"
-        )
-    # Fixpoint edge set is a star forest (child a → root b): labels are
-    # the child edges plus one self-edge per root, plus identity labels
-    # for vertices whose only incident pairs were self-loops.
-    labeled = (
-        edges.select(F.col("a").alias("doc_id"), F.col("b").alias("cluster_id"))
-        .union(
-            edges.select(
-                F.col("b").alias("doc_id"), F.col("b").alias("cluster_id")
-            ).distinct()
-        )
-        .distinct()
-    )
-    isolated = vertices.join(labeled, on="doc_id", how="left_anti").select(
-        "doc_id", F.col("doc_id").alias("cluster_id")
-    )
-    return labeled.union(isolated)
 
 
 def connected_components_sql(pairs_sql: str) -> str:

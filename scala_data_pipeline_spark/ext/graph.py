@@ -468,11 +468,10 @@ def bfs_hops(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # No cast on the seed ids (round-13 review): connected_components
-    # supports string-id graphs, and a hard cast('long') threw
-    # CAST_INVALID_INPUT under ANSI (or silently emptied every join) —
-    # while the SQL twin applied no cast. Seeds join edges at whatever
-    # id type the caller's graph uses.
+    # No cast on the seed ids: a hard cast('long') throws
+    # CAST_INVALID_INPUT under ANSI on a non-numeric id graph (or
+    # silently empties every join), and the SQL twin applies no cast.
+    # Seeds join edges at whatever id type the caller's graph uses.
     visited = (
         seeds.select("doc_id")
         .distinct()

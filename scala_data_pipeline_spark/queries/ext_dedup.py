@@ -97,16 +97,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_from_intersections(_pair_core(spark, sf_dir))
 
 
-# Round-6 rotation: dedup_simhash (fingerprint scan, green r1-r4)
-# demoted to an extra — simhash stays covered locally (plus the
-# simhash_pairs twin); its slot goes to the round-5 edit-distance
-# verify, which has never had a driver row.
-# Round-7 rotation: dedup_minhash_lsh / dedup_ngram_jaccard (green
-# r1-r6, the longest-tenured dedup rows) demoted to extras — the LSH
-# family keeps driver rows via cluster_keepers / containment /
-# edit_distance / incremental, and both demotees stay under local
-# oracle parity; their slots go to graph_kcore and
-# dedup_contrastive_triplets (never driver-checked).
 QUERIES = {}
 
 ORACLES = {}
@@ -117,8 +107,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate pairs → transitive dedup clusters (iterative
-    min-label propagation; recursive-CTE oracle)."""
+    """LSH candidate pairs → transitive dedup clusters
+    (ext/components.connected_components; recursive-CTE oracle)."""
     from ..ext.components import connected_components
 
     return connected_components(_lsh_pairs(spark, sf_dir))
@@ -130,29 +120,19 @@ def _components_oracle() -> str:
     return connected_components_sql(minhash_lsh_sql())
 
 
-# dedup_components / dedup_cluster_keepers hold driver slots (promoted
-# in round 3 over near-twin matrix variants): they are the flagship
-# iterative + windowed tail of the dedup pipeline, and the recursive-CTE
-# oracle is the strongest non-trivial parity check in the repo.
-# Round-7 rotation: dedup_components (green r3-r6) demoted to an extra
-# — the components formulation stays driver-covered transitively via
-# dedup_cluster_keepers (pairs → components → keeper) and locally via
-# this oracle plus the star twin; its slot goes to graph_kcore
-# (registered into EXTRA_QUERIES below, with the other demotions).
-
 def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering as dedup_components via the O(log n)
-    large-star/small-star contraction (adversarial-diameter scale path);
-    shares the recursive-CTE oracle."""
-    from ..ext.components import connected_components_star
+    """The driver-facing row of the LSH clustering: the same
+    connected_components call as dedup_components (an extra), and the
+    same recursive-CTE oracle."""
+    from ..ext.components import connected_components
 
-    return connected_components_star(_lsh_pairs(spark, sf_dir))
+    return connected_components(_lsh_pairs(spark, sf_dir))
 
 
 def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall of the LSH candidate generator vs exact
-    Jaccard. Candidates come from the session-memoized _lsh_pairs hub
-    (r17): the audit consumes the SAME pair frame the dedup family
+    Jaccard. Candidates come from the session-memoized _lsh_pairs hub:
+    the audit consumes the SAME pair frame the dedup family
     serves, instead of rebuilding the candidate pipeline per call."""
     return lsh_quality_metrics(
         load_table(spark, sf_dir, "documents"),
@@ -172,9 +152,6 @@ def dedup_hot_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hot_ngram_flags(load_table(spark, sf_dir, "documents"))
 
 
-# dedup_segments promoted to a driver slot round 4; Round-9 rotation:
-# demoted after 5 green rounds (r4-r8) — added to EXTRA_QUERIES below.
-
 def dedup_common_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated k-token spans (ExactSubstr-style,
     Lee et al. 2021) with merged-interval per-doc coverage."""
@@ -189,8 +166,8 @@ def dedup_span_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_span_excise_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path ExactSubstr cut plan: per-doc cut intervals + token
-    arithmetic, never the reassembled text (round-13 verdict item 4 —
-    the full-text form's 10x cost is pure output width)."""
+    arithmetic, never the reassembled text (the full-text form's 10x
+    cost is pure output width)."""
     from ..ext.dedup import excise_duplicated_spans_intervals
 
     return excise_duplicated_spans_intervals(
@@ -210,44 +187,22 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_from_intersections(_pair_core(spark, sf_dir))
 
 
-# Round-6 rotation: dedup_common_spans + dedup_span_excise (the
-# ExactSubstr family, added round 5, never driver-checked) promoted to
-# driver slots; dedup_exact (green r1-r5, the simplest query in the
-# dedup family) demoted to fund one of them. Still green locally.
-# Round-13 rotation: dedup_common_spans demoted after 6 green driver
-# rounds (its sibling dedup_span_excise stays — it is the bench watch
-# item); slot funds the never-driver-checked DSIR family.
-# Round-14 rotation: dedup_span_excise demoted after 7 green rounds;
-# its slot goes to dedup_span_excise_intervals — the SCALE-path
-# variant of the same ExactSubstr family (6.3x cheaper at 10x), never
-# driver-checked. Both stay bench watch items via
-# SPARK_GRAFT_BENCH_EXTRAS.
-# Round-17 rotation: dedup_lsh_quality promoted (never driver-checked;
-# the LSH precision/recall audit — the "measure, don't guess" row for
-# the near-dup family).
 QUERIES["dedup_lsh_quality"] = dedup_lsh_quality
 ORACLES["dedup_lsh_quality"] = lsh_quality_metrics_sql()
 
 EXTRA_QUERIES = {
     "dedup_common_spans": dedup_common_spans,
     "dedup_span_excise": dedup_span_excise,
-    # Round-19 demotion (green r14-r18):
     "dedup_span_excise_intervals": dedup_span_excise_intervals,
     "dedup_exact": dedup_exact,
     "dedup_containment": dedup_containment,
-    # Round-7 demotions (long-green; see rotation comments above):
     "dedup_minhash_lsh": dedup_minhash_lsh,
     "dedup_ngram_jaccard": dedup_ngram_jaccard,
     "dedup_components": dedup_components,
-    # Round-9 demotion (green r4-r8):
     "dedup_segments": dedup_segments,
 }
-# Round-18 rotation: promoted (never driver-checked; corpus-wide hot
-# n-gram flags — the boilerplate-detection screen).
 QUERIES["dedup_hot_ngrams"] = dedup_hot_ngrams
 ORACLES["dedup_hot_ngrams"] = hot_ngram_flags_sql()
-# Round-19 rotation: promoted (never driver-checked; the bounded
-# union-find / min-label-propagation connected-components surface).
 QUERIES["dedup_components_star"] = dedup_components_star
 ORACLES["dedup_components_star"] = _components_oracle()
 
@@ -315,8 +270,6 @@ FROM ranked WHERE rnk = 1
 """
 
 
-# Round-9 driver rotation: dedup_cluster_keepers demoted after 5 green
-# rounds (r4-r8); still oracle-checked locally.
 EXTRA_QUERIES["dedup_cluster_keepers"] = dedup_cluster_keepers
 EXTRA_ORACLES["dedup_cluster_keepers"] = _cluster_keepers_oracle()
 
@@ -341,9 +294,6 @@ def _incremental_oracle() -> str:
     return lsh_incremental_sql("source IN ('src18', 'src19')")
 
 
-# Promoted to a driver slot round 4; Round-9 rotation: demoted after 5
-# green rounds (r4-r8) — its slot funds the never-checked
-# dedup_reweight below.
 EXTRA_QUERIES["dedup_incremental_lsh"] = dedup_incremental_lsh
 EXTRA_ORACLES["dedup_incremental_lsh"] = _incremental_oracle()
 
@@ -363,13 +313,6 @@ def _pagerank_oracle() -> str:
     return pagerank_sql(minhash_lsh_sql())
 
 
-# Round-6 rotation: both promoted to driver slots — graph_pagerank is
-# the new iterative-graph flagship; dedup_containment (asymmetric
-# Jaccard, round 5) was never driver-checked.
-# Round-10 rotation: demoted after 4 green driver rounds (r6-r9).
-# Round-13 rotation: dedup_containment demoted after 7 green driver
-# rounds (it stays in EXTRA_QUERIES above, still oracle-checked
-# locally); its slot funds a never-driver-checked promotion.
 EXTRA_QUERIES["graph_pagerank"] = graph_pagerank
 EXTRA_ORACLES["graph_pagerank"] = _pagerank_oracle()
 
@@ -392,8 +335,6 @@ def _edit_distance_oracle() -> str:
     return edit_distance_sql()
 
 
-# Round-13 rotation: dedup_edit_distance demoted after 7 green driver
-# rounds; still oracle-checked locally and watched in the 10x artifact.
 EXTRA_QUERIES["dedup_edit_distance"] = dedup_edit_distance
 EXTRA_ORACLES["dedup_edit_distance"] = _edit_distance_oracle()
 EXTRA_QUERIES["dedup_simhash"] = dedup_simhash
@@ -414,11 +355,6 @@ def _triangles_oracle() -> str:
     return triangle_counts_sql(minhash_lsh_sql())
 
 
-# Round-7 rotation: triangle counting takes a driver slot (never
-# driver-checked; the registry's only wedge-fan-out graph shape —
-# pagerank and components cover the iterative families).
-# Round-13 rotation: demoted after 7 green driver rounds (r7-r12 +
-# local); slot funds a never-driver-checked promotion.
 EXTRA_QUERIES["graph_triangles"] = graph_triangles
 EXTRA_ORACLES["graph_triangles"] = _triangles_oracle()
 
@@ -463,17 +399,16 @@ GROUP BY 1, 2
 """
 
 
-# Round-16 rotation: promoted to a driver slot (never driver-checked).
 QUERIES["dedup_source_overlap"] = dedup_source_overlap
 ORACLES["dedup_source_overlap"] = _source_overlap_oracle()
 
 
 # k for the DRIVER-FACING k-core query. The library default (k=3)
-# yields an EMPTY core at sf0.01 — the driver's correctness SF — so the
-# r7 driver row externally verified nothing but an empty frame (round-7
-# verdict finding #1). k=2 (vertices on cycles of the near-dup graph)
-# is non-empty at every test SF; the same k is replayed into the
-# DuckDB oracle so both engines peel to the same fixpoint.
+# yields an EMPTY core at sf0.01 — the driver's correctness SF — so a
+# driver row would verify nothing but an empty frame. k=2 (vertices on
+# cycles of the near-dup graph) is non-empty at every test SF; the same
+# k is replayed into the DuckDB oracle so both engines peel to the same
+# fixpoint.
 KCORE_QUERY_K = 2
 
 
@@ -492,17 +427,13 @@ def _kcore_oracle() -> str:
     return kcore_sql(minhash_lsh_sql(), k=KCORE_QUERY_K)
 
 
-# Round-7 rotation: graph_kcore promoted to a driver slot (never
-# driver-checked; the iterative-peel + unrolled-oracle parity is the
-# strongest new graph check) in place of the demoted dedup_components.
-# Round-14: demoted after 6 green rounds; slot funds sim_semdedup_k1.
 EXTRA_QUERIES["graph_kcore"] = graph_kcore
 EXTRA_ORACLES["graph_kcore"] = _kcore_oracle()
 
 
 def dedup_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive (anchor, positive, hard-negative) training triplets
-    mined from the LSH candidate graph (new r6): positives are exact
+    mined from the LSH candidate graph: positives are exact
     near-dups, negatives are LSH collisions with near-zero true
     Jaccard — the embedding-training data-prep step (see
     ext/dedup.py::contrastive_triplets)."""
@@ -519,12 +450,6 @@ def _contrastive_oracle() -> str:
     return contrastive_triplets_sql(minhash_lsh_sql())
 
 
-# Round-7 rotation: promoted to a driver slot (never driver-checked;
-# hardened this round against the advisor's edge-parity findings) in
-# place of the demoted dedup_minhash_lsh.
-# Round-15 rotation: contrastive_triplets demoted (7 green driver
-# rounds, the registry record), simhash_pairs promoted (never
-# driver-checked).
 EXTRA_QUERIES["dedup_contrastive_triplets"] = dedup_contrastive_triplets
 EXTRA_ORACLES["dedup_contrastive_triplets"] = _contrastive_oracle()
 QUERIES["dedup_simhash_pairs"] = dedup_simhash_pairs
@@ -533,7 +458,7 @@ ORACLES["dedup_simhash_pairs"] = simhash_neardup_sql()
 
 def graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vertex local clustering coefficient over the LSH near-dup
-    graph (round 7): C≈1 = mutual near-dup clique (template farm),
+    graph: C≈1 = mutual near-dup clique (template farm),
     C≈0 = hub-and-spoke collision star (see
     ext/graph.py::clustering_coefficients)."""
     from ..ext.graph import clustering_coefficients
@@ -547,13 +472,12 @@ def _clustering_oracle() -> str:
     return clustering_coefficients_sql(minhash_lsh_sql())
 
 
-# Round-17 rotation: demoted after 6 green driver rounds (r11-r16).
 EXTRA_QUERIES["graph_clustering"] = graph_clustering
 EXTRA_ORACLES["graph_clustering"] = _clustering_oracle()
 
 
 def dedup_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-and-reweight (round 7): drop every near-dup cluster member
+    """Dedup-and-reweight: drop every near-dup cluster member
     except the quality keeper, but carry the cluster SIZE as a sample
     weight on the keeper — the de-dup policy that preserves the
     corpus's true distribution (naive dedup silently down-weights
@@ -635,16 +559,12 @@ WHERE c.doc_id IS NULL OR k.doc_id IS NOT NULL
 """
 
 
-# Round-9 driver rotation: dedup_reweight promoted (never
-# driver-checked; closes the dedup→sampler loop — keeper carries
-# cluster mass, mass conservation test-asserted).
-# Round-15 demotion (green driver rows in 5 rounds):
 EXTRA_QUERIES["dedup_reweight"] = dedup_reweight
 EXTRA_ORACLES["dedup_reweight"] = _reweight_oracle()
 
 
 def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-size distribution of the near-dup graph (round 7):
+    """Cluster-size distribution of the near-dup graph:
     (cluster_size, n_clusters) — the corpus-health fingerprint dedup
     monitoring dashboards track (a fat tail of giant clusters means
     template floods; mass in size-2 clusters means fuzzy mirrors).
@@ -702,9 +622,6 @@ def _prefix_jaccard_oracle() -> str:
     return prefix_jaccard_sql(t_num=95, t_den=100)
 
 
-# Round-12 rotation: promoted to a driver slot; round-18 rotation:
-# demoted after 6 green driver rounds (r12-r17) — still oracle-checked
-# locally by tests/test_oracle_parity.py.
 EXTRA_QUERIES["dedup_prefix_jaccard"] = dedup_prefix_jaccard
 EXTRA_ORACLES["dedup_prefix_jaccard"] = _prefix_jaccard_oracle()
 
@@ -738,10 +655,6 @@ def _bfs_oracle() -> str:
     return bfs_hops_sql(minhash_lsh_sql(), seeds, max_hops=4)
 
 
-# Round-12 rotation: promoted to a driver slot (round-11 addition,
-# never driver-checked; iterative frontier expansion vs unrolled-CTE
-# oracle).
-# Round-17 rotation: demoted after 5 green driver rounds (r12-r16).
 EXTRA_QUERIES["graph_bfs_hops"] = graph_bfs_hops
 EXTRA_ORACLES["graph_bfs_hops"] = _bfs_oracle()
 
@@ -776,9 +689,5 @@ def _ppr_oracle() -> str:
     return personalized_pagerank_sql(minhash_lsh_sql(), seeds)
 
 
-# Round-12 rotation: promoted to a driver slot (round-11 addition,
-# never driver-checked; power-iteration PageRank vs unrolled-CTE
-# oracle).
-# Round-17 rotation: demoted after 5 green driver rounds (r12-r16).
 EXTRA_QUERIES["graph_personalized_pagerank"] = graph_personalized_pagerank
 EXTRA_ORACLES["graph_personalized_pagerank"] = _ppr_oracle()

@@ -6,11 +6,11 @@ variants per doc, so every source doc's 100 variants share most
 shingles) and runs the full chain the engine advertises as its headline
 capability:
 
-    lsh_candidate_pairs -> connected_components (propagation AND star)
-    -> quality keepers
+    lsh_candidate_pairs -> connected_components -> quality keepers
 
 recording wall-clock, edge counts, cap-engagement counters, and an
-exact label-agreement check between the two components formulations.
+exact label-agreement check of connected_components against a driver
+union-find (ext/components._solve_small_graph) over the same pairs.
 Results go to SCALE_NOTES.md; this script is the reproducible harness.
 
 Run:  python scripts/scale_smoke_pairs.py [n_copies] [sf_dir]
@@ -30,8 +30,8 @@ sys.path.insert(0, ROOT)
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from scala_data_pipeline_spark.ext.components import (  # noqa: E402
+    _solve_small_graph,
     connected_components,
-    connected_components_star,
 )
 from scala_data_pipeline_spark.ext.dedup import (  # noqa: E402
     edit_distance_verify,
@@ -149,7 +149,7 @@ def main() -> None:
         )
 
         report["t_prop"], report["n_prop"] = timed(
-            "connected_components (propagation)",
+            "connected_components",
             lambda: connected_components(pairs)
             .write.mode("overwrite")
             .parquet(f"{tmp}/prop")
@@ -157,19 +157,24 @@ def main() -> None:
         )
         prop = spark.read.parquet(f"{tmp}/prop")
 
-        report["t_star"], report["n_star"] = timed(
-            "connected_components (star)",
-            lambda: connected_components_star(pairs)
+        # Reference labels: union-find on the driver over the same pairs,
+        # whatever their count (the engine takes this path only at or
+        # below SMALL_GRAPH_EDGES).
+        report["t_ref"], report["n_ref"] = timed(
+            "driver union-find (reference)",
+            lambda: _solve_small_graph(
+                pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+            )
             .write.mode("overwrite")
-            .parquet(f"{tmp}/star")
-            or spark.read.parquet(f"{tmp}/star").count(),
+            .parquet(f"{tmp}/ref")
+            or spark.read.parquet(f"{tmp}/ref").count(),
         )
-        star = spark.read.parquet(f"{tmp}/star")
+        ref = spark.read.parquet(f"{tmp}/ref")
 
         # Exact agreement: same (doc_id -> cluster_id) map both ways.
         _, mismatches = timed(
             "label agreement (exceptAll both ways)",
-            lambda: prop.exceptAll(star).count() + star.exceptAll(prop).count(),
+            lambda: prop.exceptAll(ref).count() + ref.exceptAll(prop).count(),
         )
         report["label_mismatches"] = mismatches
         report["n_clusters"] = prop.select("cluster_id").distinct().count()

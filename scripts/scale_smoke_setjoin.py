@@ -147,11 +147,9 @@ def main() -> None:
     # must be reachable in the capped pair graph. Sufficient check
     # (and the actual keeper-star guarantee): each family stays one
     # connected component.
-    from scala_data_pipeline_spark.ext.components import (
-        connected_components_star,
-    )
+    from scala_data_pipeline_spark.ext.components import connected_components
 
-    comp = connected_components_star(pairs_big).localCheckpoint()
+    comp = connected_components(pairs_big).localCheckpoint()
     fam = dup_sets.select(
         F.monotonically_increasing_id().alias("fam_id"), "ids"
     ).select("fam_id", F.explode("ids").alias("doc_id"))

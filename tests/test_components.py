@@ -1,54 +1,73 @@
-"""Connected components: chains, multiple components, convergence."""
+"""Connected components: chains, multiple components, convergence — on
+both paths (driver union-find and min-label propagation)."""
 
 from __future__ import annotations
 
-from scala_data_pipeline_spark.ext.components import connected_components
+import random
+
+import pytest
+
+from scala_data_pipeline_spark.ext import components
+from scala_data_pipeline_spark.ext.components import (
+    ComponentsNotConverged,
+    connected_components,
+)
+
+from .oracle_harness import compare, duckdb_run
 
 
-def test_components_chain_and_islands(spark):
+@pytest.fixture
+def paths(monkeypatch):
+    """Iterating runs the test body once per path: the driver solve (the
+    default bound) and propagation (bound 0). The test ids stay one per
+    test."""
+
+    def each():
+        for name, bound in (
+            ("driver", components.SMALL_GRAPH_EDGES),
+            ("propagation", 0),
+        ):
+            monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", bound)
+            yield name
+
+    return each()
+
+
+def _labels(pairs) -> dict:
+    return {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components(pairs).collect()
+    }
+
+
+def test_components_chain_and_islands(spark, paths):
     # chain 1-2-3 ... 9-1 merges {1,2,3,8,9}; {5,6} separate.
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (8, 9), (9, 1)], ["doc_a", "doc_b"]
     )
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 8: 1, 9: 1, 5: 5, 6: 5}
+    for path in paths:
+        assert _labels(pairs) == {1: 1, 2: 1, 3: 1, 8: 1, 9: 1, 5: 5, 6: 5}, path
 
 
-def test_components_long_chain_converges(spark):
+def test_components_long_chain_converges(spark, paths):
     # path graph 0-1-2-...-12: diameter > a couple rounds, still
-    # converges. small_graph_bound=0 forces the ITERATIVE path (the
-    # default would take the single-pass small-graph solve).
+    # converges.
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], ["doc_a", "doc_b"]
     )
-    got = connected_components(pairs, small_graph_bound=0).collect()
-    assert {r["cluster_id"] for r in got} == {0}
-    assert len(got) == 13
+    for path in paths:
+        assert _labels(pairs) == {i: 0 for i in range(13)}, path
 
 
-def test_components_unconverged_raises_and_warn_mode(spark):
-    import warnings
-
-    import pytest
-
-    from scala_data_pipeline_spark.ext.components import ComponentsNotConverged
-
+def test_components_unconverged_raises(spark, monkeypatch):
     # path graph 0-1-...-8 has diameter 8; 2 rounds cannot reach fixpoint
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    monkeypatch.setattr(components, "MAX_ROUNDS", 2)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], ["doc_a", "doc_b"]
     )
     with pytest.raises(ComponentsNotConverged):
-        connected_components(pairs, max_iter=2, small_graph_bound=0)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        got = connected_components(
-            pairs, max_iter=2, on_unconverged="warn", small_graph_bound=0
-        )
-        assert len(got.collect()) == 9  # partial labels still returned
-    assert any("no fixpoint" in str(w.message) for w in caught)
+        connected_components(pairs)
 
 
 def _union_find_components(edges):
@@ -69,131 +88,63 @@ def _union_find_components(edges):
     return {v: find(v) for v in list(parent)}
 
 
-def test_components_random_graphs_match_union_find(spark):
+def test_components_random_graphs_match_union_find(spark, paths):
     """Property check against a pure-Python union-find on a batch of
-    random graphs (seeded; one Spark run per graph shape)."""
-    import random
-
-    rng = random.Random(7)
-    for trial in range(4):
-        n = rng.randint(2, 40)
-        m = rng.randint(1, 60)
-        edges = [
-            (rng.randint(0, n), rng.randint(0, n)) for _ in range(m)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
-        want = _union_find_components(edges)
-        pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-        # Both paths must agree with the reference union-find: the
-        # default (small-graph single-pass solve) and the forced
-        # iterative propagation.
-        for bound in (None, 0):
-            kwargs = {} if bound is None else {"small_graph_bound": 0}
-            got = {
-                r["doc_id"]: r["cluster_id"]
-                for r in connected_components(pairs, **kwargs).collect()
-            }
-            assert got == want, f"trial {trial} bound={bound}: {sorted(edges)}"
+    random graphs (seeded; one Spark run per graph shape and path)."""
+    graphs = []
+    for seed in (7, 11):
+        rng = random.Random(seed)
+        for _ in range(4):
+            n = rng.randint(2, 40)
+            m = rng.randint(1, 60)
+            edges = [
+                (rng.randint(0, n), rng.randint(0, n)) for _ in range(m)
+            ]
+            edges = [(a, b) for a, b in edges if a != b]
+            if edges:
+                graphs.append(edges)
+    frames = [spark.createDataFrame(e, ["doc_a", "doc_b"]) for e in graphs]
+    for path in paths:
+        for edges, pairs in zip(graphs, frames):
+            want = _union_find_components(edges)
+            assert _labels(pairs) == want, f"{path}: {sorted(edges)}"
 
 
-def test_star_components_long_chain_logarithmic(spark):
-    """large-star/small-star resolves a diameter-30 path in far fewer
-    rounds than the diameter (the O(log n) claim): max_iter=12 would
-    fail propagation but must succeed here."""
-    from scala_data_pipeline_spark.ext.components import (
-        connected_components_star,
-    )
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], ["doc_a", "doc_b"]
-    )
-    # small_graph_bound=0 forces star contraction (the default would
-    # dispatch this tiny graph to the single-pass driver solve).
-    got = connected_components_star(
-        pairs, max_iter=12, small_graph_bound=0
-    ).collect()
-    assert {r["cluster_id"] for r in got} == {0}
-    assert len(got) == 31
-
-
-def test_star_components_random_graphs_match_union_find(spark):
-    from scala_data_pipeline_spark.ext.components import (
-        connected_components_star,
-    )
-    import random
-
-    rng = random.Random(11)
-    for trial in range(4):
-        n = rng.randint(2, 40)
-        m = rng.randint(1, 60)
-        edges = [
-            (rng.randint(0, n), rng.randint(0, n)) for _ in range(m)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
-        want = _union_find_components(edges)
-        pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-        # Both paths must agree with the reference union-find: the
-        # default (small-graph single-pass solve, r19) and the forced
-        # star contraction.
-        for bound in (None, 0):
-            kwargs = {} if bound is None else {"small_graph_bound": 0}
-            got = {
-                r["doc_id"]: r["cluster_id"]
-                for r in connected_components_star(pairs, **kwargs).collect()
-            }
-            assert got == want, f"trial {trial} bound={bound}: {sorted(edges)}"
-
-
-def test_star_components_self_loop_only_vertices_labeled(spark):
-    # ADVICE r3: a vertex appearing ONLY in self-pairs must still be
-    # labeled with its own id, matching the propagation variant and the
-    # recursive-CTE oracle.
-    from scala_data_pipeline_spark.ext.components import (
-        connected_components_star,
-    )
-
+def test_components_self_loop_only_vertices_labeled(spark, paths):
+    # A vertex appearing ONLY in self-pairs must still be labeled with
+    # its own id, matching the recursive-CTE oracle.
     pairs = spark.createDataFrame(
         [(1, 2), (7, 7), (9, 9)], ["doc_a", "doc_b"]
     )
-    # Self-loop handling must hold on BOTH star paths (driver dispatch
-    # and forced contraction) and match the propagation variant.
-    for bound in (None, 0):
-        kwargs = {} if bound is None else {"small_graph_bound": 0}
-        star = {
-            r["doc_id"]: r["cluster_id"]
-            for r in connected_components_star(pairs, **kwargs).collect()
-        }
-        assert star == {1: 1, 2: 1, 7: 7, 9: 9}, f"bound={bound}"
-    prop = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(pairs).collect()
-    }
-    assert star == prop
+    for path in paths:
+        assert _labels(pairs) == {1: 1, 2: 1, 7: 7, 9: 9}, path
 
 
-def test_star_components_above_bound_reuses_bi_and_matches(spark):
-    """small_graph_bound EXCEEDED: the star path must run off the
-    already-persisted bidirectional frame (r19 advisor: the old code
-    unpersisted it and re-derived the pair pipeline from scratch) and
-    still produce union-find-identical labels — including self-loop-only
-    vertices, which only survive via the bi-derived vertex set."""
-    from scala_data_pipeline_spark.ext.components import (
-        connected_components_star,
-    )
+def test_components_above_bound_matches(spark, monkeypatch):
+    """A bound that the edge list exceeds sends the graph to propagation,
+    never to the driver solve, and the labels still match union-find,
+    self-loop-only vertices included."""
 
+    def no_driver_solve(edges):
+        raise AssertionError("driver solve taken above the bound")
+
+    monkeypatch.setattr(components, "_solve_small_graph", no_driver_solve)
+    # 3 undirected non-loop edges -> 6 bidirectional + 1 self row = 7
+    # distinct edge rows > bound 2.
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 2)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (7, 7)], ["doc_a", "doc_b"]
     )
-    # 3 undirected non-loop edges -> 6 bidirectional + 1 self row = 7
-    # distinct bi rows > bound, forcing the star path through bi.
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components_star(
-            pairs, small_graph_bound=2
-        ).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 7: 7}
+    assert _labels(pairs) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 7: 7}
+
+
+def test_components_iterative_matches_oracle(spark, sf_dir, monkeypatch):
+    """Propagation on a real LSH pair graph: the dedup_components query
+    with the driver solve switched off equals its recursive-CTE
+    oracle."""
+    from scala_data_pipeline_spark.queries import extra_oracles, extra_queries
+
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
+    got = extra_queries()["dedup_components"](spark, sf_dir)
+    want = duckdb_run(extra_oracles()["dedup_components"], sf_dir)
+    compare(got, want, "dedup_components (propagation)")
