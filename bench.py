@@ -49,6 +49,13 @@ def hub_lookups() -> int:
     return HITS["hub"] + MISSES["hub"]
 
 
+def codegen_compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far;
+    a cache hit compiles nothing."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def out_path() -> str:
     return os.environ.get("SPARK_GRAFT_BENCH_OUT", "/tmp/bench_last.json")
 
@@ -93,7 +100,7 @@ def main() -> None:
     # warm rep: it measures first-execution cost including hub
     # materialization and codegen JIT. The artifact records the mode.
     cold = os.environ.get("SPARK_GRAFT_BENCH_COLD", "") == "1"
-    runs, memoized = run(names, queries, sf_dir, cold)
+    runs, memoized, compiles = run(names, queries, sf_dir, cold)
     timings = {n: min(r) for n, r in runs.items()}
     total = round(
         sum(t for n, t in timings.items() if n not in extra_names), 3
@@ -124,6 +131,9 @@ def main() -> None:
         # Raw reps and the worst spread, so a drifted reading can be
         # judged from the artifact itself.
         "runs": runs,
+        # Classes compiled by the three timed reps: 0 when the warm rep
+        # left every generated class in the codegen cache.
+        "codegen_compiles": compiles,
         "max_spread_pct": spread_pct,
         "spread_floor_sec": SPREAD_FLOOR_SEC,
         # queries that rode along via SPARK_GRAFT_BENCH_EXTRAS
@@ -221,15 +231,17 @@ def _warm_up(spark, sf_dir: str, cold: bool) -> None:
 
 def run(
     names: list[str], queries: dict, sf_dir: str, cold: bool = False
-) -> tuple[dict[str, list[float]], list[str]]:
+) -> tuple[dict[str, list[float]], list[str], dict[str, int]]:
     """Time each named query in the bench session: warm-ups, then per
     query one untimed warm rep (skipped when ``cold``), gc, and three
-    timed noop-sink reps. Returns the reps per query and the queries
-    that consumed a session hub."""
+    timed noop-sink reps. Returns the reps per query, the queries that
+    consumed a session hub and the classes each query's timed reps
+    compiled."""
     spark = get_session("bench")
     _warm_up(spark, sf_dir, cold)
     runs: dict[str, list[float]] = {}
     memoized: list[str] = []
+    compiles: dict[str, int] = {}
     for name in names:
         lookups = hub_lookups()
         # The warm rep takes the one-off whole-stage-codegen JIT compile
@@ -243,6 +255,7 @@ def run(
         # min-of-3: this container's CPU budget is bursty, and the min
         # recovers the uncontended number.
         reps: list[float] = []
+        compiled = codegen_compiles(spark)
         for _ in range(3):
             start = time.perf_counter()
             df = queries[name](spark, sf_dir)
@@ -252,11 +265,12 @@ def run(
             # next query.
             del df
             gc.collect()
+        compiles[name] = codegen_compiles(spark) - compiled
         spark.sparkContext._jvm.System.gc()
         if hub_lookups() > lookups:
             memoized.append(name)
         runs[name] = reps
-    return runs, sorted(memoized)
+    return runs, sorted(memoized), compiles
 
 
 if __name__ == "__main__":

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
 from .textstats import tokens_col
 
 N_MERGES = 10
@@ -146,7 +147,8 @@ def bpe_train(
     ]
     merges = train_merges(vocab, n_merges)
     spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (i + 1, left, right, int(cnt))
             for i, (left, right, cnt) in enumerate(merges)

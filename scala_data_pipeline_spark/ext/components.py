@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..session import local_frame
+
 
 class ComponentsNotConverged(RuntimeError):
     """Raised when min-label propagation exhausts MAX_ROUNDS without
@@ -102,7 +104,7 @@ def _solve_small_graph(edges: DataFrame) -> DataFrame:
             StructField("cluster_id", id_type, nullable=False),
         ]
     )
-    return edges.sparkSession.createDataFrame(labels, schema)
+    return local_frame(edges.sparkSession, labels, schema)
 
 
 def _label_sum(frame: DataFrame):

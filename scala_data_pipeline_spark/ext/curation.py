@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import shingles, shingles_sql
 from .textstats import quality_features
 from .util import fan_out
@@ -622,8 +623,10 @@ def epoch_oversample(
             .filter(F.lit(False))
             .withColumn("epoch", F.lit(1).cast("long"))
         )
-    rates_df = spark.createDataFrame(
-        _epoch_rate_rows(rates), [strata_col, "n_full", "thr"]
+    rates_df = local_frame(
+        spark,
+        _epoch_rate_rows(rates),
+        f"{strata_col} string, n_full bigint, thr string",
     )
     digest = F.substring(
         F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), 1, 4

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .util import fan_out
 
 # ---------------------------------------------------------------------------
@@ -709,7 +710,7 @@ def lsh_quality_metrics(
             # freed before returning).
             return report
         rows = report.collect()
-        return docs.sparkSession.createDataFrame(rows, report.schema)
+        return local_frame(docs.sparkSession, rows, report.schema)
     finally:
         if owned:
             cand.unpersist()

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 HDR_SUB_BITS = 5  # 32 linear sub-buckets per octave -> <= 2^-5 rel err
 DEFAULT_QS = (0.5, 0.9, 0.99, 0.999)
 
@@ -80,9 +82,7 @@ def hdr_quantiles(
             Window.partitionBy()
         ).cast("long").alias("total"),
     )
-    probes = spark.createDataFrame(
-        [(q,) for q in qs], "q double"
-    )
+    probes = local_frame(spark, [(q,) for q in qs], "q double")
     # first qualifying bucket = min of the packed (e, sub) key — the
     # packing keeps the argmin a plain long MIN in both engines
     hit = (

@@ -49,6 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+
 # Defaults tuned on the synthetic 64-d embeddings: 16 subspaces of 4
 # dims, 32 centroids each (codes fit 5 bits; stored as ints) gives
 # mean recall@10 ≈ 0.5 vs exact brute force at 4x compression —
@@ -353,8 +355,8 @@ def save_pq_index(
         for j in range(m)
         for c in range(k)
     ]
-    spark.createDataFrame(
-        rows, "subspace int, centroid int, center array<double>"
+    local_frame(
+        spark, rows, "subspace int, centroid int, center array<double>"
     ).write.mode("overwrite").parquet(f"{path}/codebooks")
     encoded.write.mode("overwrite").parquet(f"{path}/codes")
 

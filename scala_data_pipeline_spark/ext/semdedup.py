@@ -46,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .ivf import assign_buckets, fit_ivf
 from .similarity import prep_vectors
 
@@ -319,8 +320,9 @@ def semantic_dedup(
         )
         ctr = F.element_at(ctr_arr, F.col("cluster") + 1)
     else:
-        ctr_df = prepped.sparkSession.createDataFrame(
-            [(i, c) for i, c in enumerate(centers)],
+        ctr_df = local_frame(
+            prepped.sparkSession,
+            list(enumerate(centers)),
             "cluster int, _ctr array<double>",
         )
         prepped = prepped.join(F.broadcast(ctr_df), "cluster")

@@ -44,6 +44,8 @@ from decimal import Decimal
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _to_dec(x) -> Decimal:
     """Coerce a collected per-partition partial sum to Decimal for the
@@ -60,8 +62,8 @@ def _to_dec(x) -> Decimal:
 
 
 def _emit(v: Decimal, type_str: str):
-    """Render a Decimal prefix for a createDataFrame cell of the given
-    Spark type — Double/Float/Long type verification rejects Decimal."""
+    """Render a Decimal prefix for an offset-frame cell of the given
+    Spark type: the double and integer columns take floats and ints."""
     if type_str in ("double", "float"):
         return float(v)
     if type_str in ("bigint", "int", "smallint", "tinyint"):
@@ -230,7 +232,7 @@ def with_rank(
         )
         for p in parts
     ]
-    off_df = spark.createDataFrame(off_rows, off_schema)
+    off_df = local_frame(spark, off_rows, off_schema)
     off_cond = F.col("_pid") == F.col("_opid")
     for c in group_cols:
         off_cond = off_cond & F.col(c).eqNullSafe(F.col(f"_g_{c}"))

@@ -7,7 +7,9 @@
 - broadcast joins vs sort-merge joins — dimension joins must broadcast;
 - pushed filters / read schema on parquet scans — a scan without
   PushedFilters/narrow ReadSchema reads the whole table;
-- whole-stage codegen coverage — Python UDFs puncture it.
+- whole-stage codegen coverage — Python UDFs puncture it. AQE inserts
+  WholeStageCodegen only as it plans each stage, so this one count
+  reads the final adaptive plan, after the query has run.
 
 Used by tests/test_plans.py to LOCK the plan shape of headline queries:
 a regression that adds a shuffle or loses pushdown fails CI, not the
@@ -30,9 +32,31 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def _python_ops(plan: str) -> int:
+    # Row-at-a-time UDFs, Arrow-vectorized UDFs, AND the grouped/
+    # iterator Pandas operators (applyInPandas → FlatMapGroupsInPandas,
+    # mapInPandas → MapInPandas) — an audit that misses the latter two
+    # under-reports Python on the hot path.
+    return sum(
+        plan.count(op)
+        for op in (
+            "BatchEvalPython",
+            "ArrowEvalPython",
+            "FlatMapGroupsInPandas",
+            "MapInPandas",
+        )
+    )
+
+
 def plan_audit(df: DataFrame) -> dict:
+    """The plan signals of ``df``. All but ``codegen_stages`` read the
+    plan before execution; when that plan is adaptive and not yet final,
+    ``df`` is collected so the codegen count reads the final plan."""
     plan = explain_str(df)
     simple = explain_str(df, mode="simple")
+    if "isFinalPlan=false" in simple:
+        df.collect()
+        simple = explain_str(df, mode="simple")
     # Formatted mode numbers nodes as "(N) Exchange"; a bare Exchange is a
     # shuffle, BroadcastExchange is not. Simple mode marks codegen with
     # "*(id)".
@@ -40,14 +64,7 @@ def plan_audit(df: DataFrame) -> dict:
         "n_shuffle_exchanges": len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M)),
         "n_broadcast_joins": plan.count("BroadcastHashJoin"),
         "n_sortmerge_joins": plan.count("SortMergeJoin"),
-        # Row-at-a-time UDFs, Arrow-vectorized UDFs, AND the grouped/
-        # iterator Pandas operators (applyInPandas → FlatMapGroupsInPandas,
-        # mapInPandas → MapInPandas) — an audit that misses the latter two
-        # under-reports Python on the hot path.
-        "n_python_udfs": plan.count("BatchEvalPython")
-        + plan.count("ArrowEvalPython")
-        + plan.count("FlatMapGroupsInPandas")
-        + plan.count("MapInPandas"),
+        "n_python_udfs": _python_ops(plan),
         "has_partial_agg": "partial_" in plan,
         "has_pushed_filters": "PushedFilters: [" in plan
         and not re.search(r"PushedFilters: \[\]", plan),
@@ -76,12 +93,12 @@ def plan_lint(df: DataFrame) -> list[dict]:
                          an empty PushedFilters — the scan reads
                          everything a predicate could have skipped.
     """
-    audit = plan_audit(df)
-    plan = audit["plan"]
+    plan = explain_str(df)
     # simple mode spells single-partition exchanges inline
     # ("Exchange SinglePartition"); formatted mode splits node and
     # arguments across lines.
     simple = explain_str(df, mode="simple")
+    n_python = _python_ops(plan)
     findings: list[dict] = []
     if "CartesianProduct" in plan:
         findings.append(
@@ -91,12 +108,12 @@ def plan_lint(df: DataFrame) -> list[dict]:
                 "detail": "plan contains CartesianProduct",
             }
         )
-    if audit["n_python_udfs"]:
+    if n_python:
         findings.append(
             {
                 "rule": "python-in-plan",
                 "severity": "warn",
-                "detail": f"{audit['n_python_udfs']} Python eval operator(s)"
+                "detail": f"{n_python} Python eval operator(s)"
                 " in the plan (BatchEval/ArrowEval/MapInPandas/"
                 "FlatMapGroupsInPandas)",
             }

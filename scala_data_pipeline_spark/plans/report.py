@@ -1,7 +1,8 @@
 """Plan-audit report: run ``python -m scala_data_pipeline_spark.plans.report``
 to regenerate PLAN_AUDIT.md — one row per registry query with its
 shuffle count, join strategies, Python presence, partial-agg and
-pushdown flags, and codegen stage count. The tabular twin of the
+pushdown flags, and codegen stage count. Each query runs once, so the
+codegen column reads its final adaptive plan. The tabular twin of the
 plan-lock tests: locks pin the load-bearing shapes, the report shows
 the whole surface at a glance.
 """
@@ -62,8 +63,10 @@ def generate(out_path: str = "PLAN_AUDIT.md", sf_dir: str | None = None) -> str:
         "each documented at the operator);",
         "partial = map-side combine",
         "present; pushdown = non-empty PushedFilters on a scan; codegen =",
-        "distinct WholeStageCodegen spans. `*name` rows are the",
-        "locally-oracled EXTRA queries beyond the 50 driver slots.",
+        "distinct WholeStageCodegen spans in the final adaptive plan, read",
+        "after the query has run (the other columns read the plan before",
+        "execution). `*name` rows are the locally-oracled EXTRA queries",
+        "beyond the 50 driver slots.",
         "",
         "NB: the dedup/graph family consumes MEMOIZED checkpointed hubs",
         "(the LSH candidate-pair list and the shingle-intersection core,",

@@ -14,6 +14,7 @@ from ..operators.temporal import (
     session_agg,
     sliding_agg,
 )
+from ..session import local_frame
 from ..sources import load_table
 
 
@@ -74,7 +75,7 @@ PRICE_BANDS = [
 
 def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = load_table(spark, sf_dir, "lineitem")
-    bands = spark.createDataFrame(PRICE_BANDS, ["band", "lo", "hi"])
+    bands = local_frame(spark, PRICE_BANDS, "band string, lo double, hi double")
     joined = range_band_join(lineitem, bands, "l_extendedprice")
     return joined.groupBy("band").agg(
         F.count(F.lit(1)).alias("cnt"),

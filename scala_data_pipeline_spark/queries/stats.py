@@ -594,10 +594,14 @@ def chi2_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = cells.groupBy("source").agg(
         F.sum("o").cast("long").alias("cs")
     )
+    # Distinct counts as set sizes over the bounded grain: two
+    # count_distinct aggregates plan an Expand whose branch order
+    # follows the hash of per-build expression ids, so each build could
+    # generate different code and miss the codegen cache.
     tot = cells.agg(
         F.sum("o").cast("long").alias("n"),
-        F.count_distinct("lang").cast("long").alias("r"),
-        F.count_distinct("source").cast("long").alias("c"),
+        F.size(F.collect_set("lang")).cast("long").alias("r"),
+        F.size(F.collect_set("source")).cast("long").alias("c"),
     )
     grid = (
         rows.crossJoin(F.broadcast(cols))

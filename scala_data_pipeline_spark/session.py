@@ -18,10 +18,11 @@ from __future__ import annotations
 import os
 import tempfile
 from collections import Counter
-from collections.abc import Callable, Hashable
+from collections.abc import Callable, Hashable, Iterable, Sequence
 from weakref import WeakSet
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_parallelism() -> int:
@@ -61,6 +62,27 @@ def get_session(
         # staying far below JIT method-size trouble (Spark splits
         # generated methods; the hugeMethodLimit fallback still guards).
         .config("spark.sql.codegen.maxFields", "300")
+        # Spark keeps the classes it generates in a cache of 100 entries
+        # by default. One pass over all_queries() and extra_queries() at
+        # sf0.001 compiles 2,771 distinct classes (the 50 driver queries
+        # at sf0.1, 859), so at that size every warm rerun evicts and
+        # recompiles its own code, and each recompiled class starts again
+        # in the JVM interpreter. 8,192 holds the whole registry with
+        # headroom for the plans AQE picks at larger scale factors. The
+        # cache is a static conf, read once per JVM: it takes effect only
+        # when get_session starts the JVM's first session, so a driver
+        # that brings its own session keeps Spark's default.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
+        # The cache is keyed by the generated source, and by default a
+        # whole-stage class is named after its codegen stage id. AQE
+        # numbers stages in the order they are planned, which follows
+        # the order in which independent stages finish, so a rerun of
+        # the same plan can name the same code differently and miss the
+        # cache: with the id in the name, recipe_funnel_accounting and
+        # sim_knn_recall_eval recompile 8-10 classes on every warm pass.
+        # Without it, the same plan reuses its classes. The id stays in a
+        # comment of the generated code.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # PySpark 4's DataFrame-debugging origin capture wraps EVERY
         # DataFrame/Column API call with call-site bookkeeping that
         # costs ~4 py4j round-trips per call (getActiveSession + a
@@ -153,3 +175,29 @@ def hub(
     and sf dir and shared by every query that reads it. Counted under
     the kind ``"hub"``."""
     return memo(spark, ("hub", name, sf_dir), lambda: build().localCheckpoint(eager=True))
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType | str
+) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in the field order of
+    ``schema``, a ``StructType`` or a DDL string), with exactly that
+    schema.
+
+    ``createDataFrame`` on a Python list plans a scan of
+    ``sc.parallelize``, and running it starts a Python worker task per
+    slice. From a ``pyarrow.Table`` it plans a ``LocalRelation``: the
+    rows ride in the plan and need no Python worker. Naive datetimes
+    are read as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

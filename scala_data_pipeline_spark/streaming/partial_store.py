@@ -40,6 +40,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 
 def per_batch_writer(
     target_dir: str, partials_fn: Callable[..., DataFrame]
@@ -109,6 +111,6 @@ def read_partials(
             # a bare catch here made a broken store indistinguishable
             # from an empty one (advisor round-11).
             if (exc.getCondition() or "") == "PATH_NOT_FOUND":
-                return spark.createDataFrame([], schema)
+                return local_frame(spark, [], schema)
             raise
     return reader.parquet(target_dir)

@@ -265,7 +265,7 @@ def main(argv: list[str]) -> None:
         unknown = [n for n in names if n not in queries]
         if unknown:
             raise SystemExit(f"unknown queries: {unknown}")
-        runs, _ = bench.run(names, queries, sf)
+        runs, _, _ = bench.run(names, queries, sf)
         mins = {n: min(r) for n, r in runs.items()}
         print(json.dumps({"queries": mins, "runs": runs}))
     elif cmd == "record" and args == ["BENCH"]:

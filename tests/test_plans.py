@@ -35,6 +35,16 @@ def test_aggregates_are_partial(audits):
         assert audits[name]["has_partial_agg"], name
 
 
+def test_codegen_counted_on_the_final_plan(audits):
+    """AQE inserts WholeStageCodegen only as it plans each stage, so the
+    plan before execution of a shuffling query has no codegen span; the
+    audit counts the final plan."""
+    a = audits["pricing_summary"]
+    assert a["n_shuffle_exchanges"] >= 1
+    assert "isFinalPlan=false" in a["plan"]
+    assert a["codegen_stages"] >= 2
+
+
 def test_single_shuffle_for_simple_aggs(audits):
     """One groupBy = exactly one exchange."""
     assert audits["pricing_summary"]["n_shuffle_exchanges"] == 1
