@@ -102,16 +102,57 @@ def shingles_sql(text_expr: str, n: int = 3) -> str:
 N_HASHES = 8
 BAND_SIZE = 2  # → 4 bands
 
+# Bucket size above which lsh_candidate_pairs and lsh_incremental_pairs
+# emit a keeper star instead of the full clique.
+LSH_BUCKET_CAP = 64
+
 # observe() metric names must be unique within a query; two
-# lsh_candidate_pairs plans meeting in one query (e.g. compared in a
-# test) would otherwise collide.
+# bucket_pairs plans meeting in one query (e.g. compared in a test)
+# would otherwise collide.
 _obs_seq = 0
 
 
 def _next_obs_name() -> str:
     global _obs_seq
     _obs_seq += 1
-    return f"lsh_buckets_{_obs_seq}"
+    return f"bucket_pairs_{_obs_seq}"
+
+
+def bucket_pairs(grouped: DataFrame, cap: int) -> DataFrame:
+    """(a, b): the candidate pairs inside each bucket of ``grouped``.
+
+    ``grouped`` holds one row per bucket with ``ids``, a sorted,
+    duplicate-free array of scalars or structs; buckets of fewer than
+    2 ids emit nothing. A bucket of at most ``cap`` ids emits every
+    pair a < b. A larger one emits the keeper star, ``ids[1]`` paired
+    with every other id: n-1 pairs that keep the bucket connected,
+    where the clique would put C(n,2) pairs on one task.
+
+    Pairs are emitted per anchor: each row explodes its anchor
+    positions (1..n-1, or only 1 above the cap), then each anchor's
+    suffix slice, so a row holds O(bucket) values, never a C(n,2)
+    array. Both cases are one conditional expression, not a union of
+    two filtered branches, which would run the input plan once per
+    branch. The plan carries the observe metrics ``oversized_buckets``
+    (buckets over the cap) and ``max_bucket``.
+    """
+    n = F.size("ids")
+    anchors = F.when(n <= cap, F.sequence(F.lit(1), n - 1)).otherwise(
+        F.array(F.lit(1))
+    )
+    return (
+        grouped.filter(n >= 2)
+        .observe(
+            _next_obs_name(),
+            F.sum(F.when(n > cap, 1).otherwise(0)).alias("oversized_buckets"),
+            F.max(n).alias("max_bucket"),
+        )
+        .select("ids", F.explode(anchors).alias("i"))
+        .select(
+            F.element_at("ids", F.col("i")).alias("a"),
+            F.explode(F.slice("ids", F.col("i") + 1, n)).alias("b"),
+        )
+    )
 
 
 def minhash_signature(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -150,76 +191,38 @@ def lsh_band_buckets(signature: DataFrame) -> DataFrame:
     ).select("doc_id", "b.band", "b.bucket")
 
 
-def _pairs_from_sorted_ids(ids: Column) -> Column:
-    """All (a < b) combinations of a sorted id array, generated JVM-side
-    with indexed higher-order transforms.
-
-    PRECONDITION: ids must be duplicate-free (both call sites group a
-    frame that is distinct per (bucket, doc)); duplicated ids would
-    yield self-pairs and double-counted pairs.
-    """
-    return F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-
-
 def lsh_candidate_pairs(
-    docs: DataFrame, text_col: str = "text", bucket_cap: int = 64
+    docs: DataFrame, text_col: str = "text", bucket_cap: int = LSH_BUCKET_CAP
 ) -> DataFrame:
     """Distinct candidate pairs (a < b) sharing at least one LSH band
     bucket — the scalable near-dup candidate generator.
 
-    Pairs are generated per bucket from a collected id list instead of a
-    bucket self-join: the signature pipeline runs ONCE (a self-join
-    recomputes it per side — measured 2× the work), and LSH buckets are
-    tiny by construction (a bucket = an exact band-signature match) —
-    EXCEPT on degenerate corpora (N boilerplate/error-template documents
-    share every band bucket), where the combination explode would be
-    O(N²) on one task. Buckets larger than ``bucket_cap`` therefore emit
-    a keeper STAR (min id paired with every other id, N-1 pairs) instead
-    of the full clique: for dedup, candidate pairs only need to preserve
-    the connected component, and a star does exactly that with linear
-    output. Run exact dedup first (corpus_job does) so only true
-    near-dups reach this stage. The overflow count is observable as the
-    ``oversized_buckets`` metric on the returned plan.
+    Pairs come from each bucket's collected id list through
+    :func:`bucket_pairs` instead of a bucket self-join: the signature
+    pipeline runs ONCE (a self-join recomputes it per side — measured
+    2× the work). LSH buckets are tiny by construction (a bucket = an
+    exact band-signature match) EXCEPT on degenerate corpora (N
+    boilerplate/error-template documents share every band bucket), so
+    buckets larger than ``bucket_cap`` emit a keeper star: for dedup,
+    candidate pairs only need to preserve the connected component, and
+    a star does exactly that with linear output. Run exact dedup first
+    (corpus_job does) so only true near-dups reach this stage.
     """
     buckets = lsh_band_buckets(minhash_signature(docs, text_col))
-    grouped = (
-        buckets.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .observe(
-            _next_obs_name(),
-            F.sum(
-                F.when(F.size("ids") > bucket_cap, 1).otherwise(0)
-            ).alias("oversized_buckets"),
-        )
+    grouped = buckets.groupBy("band", "bucket").agg(
+        F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
-    # One conditional pair-emit, NOT a union of two filtered branches: a
-    # union would execute the signature pipeline once per branch.
-    ids = F.col("ids")
-    star_pairs = F.transform(
-        F.slice(ids, 2, F.size(ids)),
-        lambda y: F.struct(F.element_at(ids, 1).alias("a"), y.alias("b")),
-    )
-    pairs_arr = F.when(
-        F.size(ids) <= bucket_cap, _pairs_from_sorted_ids(ids)
-    ).otherwise(star_pairs)
     return (
-        grouped.select(F.explode(pairs_arr).alias("p"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        bucket_pairs(grouped, bucket_cap)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
     )
 
 
 def minhash_lsh_sql(
-    text_col: str = "text", table: str = "documents", bucket_cap: int = 64
+    text_col: str = "text",
+    table: str = "documents",
+    bucket_cap: int = LSH_BUCKET_CAP,
 ) -> str:
     """DuckDB oracle for the full MinHash+LSH candidate-pair pipeline.
 
@@ -435,43 +438,34 @@ def simhash_neardup_pairs(
     buckets, so candidates grow ~n²/512 regardless of content (measured
     1.53M candidate pairs on 50k docs at sf0.1); 16-bit blocks widen the
     key space 256× (349k candidates on the same corpus) but saturate at
-    500k docs (r16 probe: max bucket 38,698, 3.38e9 uncapped
-    candidates); the r17 default 32-bit blocks (2^32 keys, sha2-256
-    digests) measure max bucket 1,264 and 44.8M uncapped candidates on
-    the same 500k-doc corpus — a 75× reduction, full pair run 60.5 s
-    (scripts/scale_smoke_simhash_width.py). Block-LSH candidate volume
-    is governed by key-space size, not by the verifier.
+    500k docs (max bucket 38,698, 3.38e9 uncapped candidates); the
+    default 32-bit blocks (2^32 keys, sha2-256 digests) measure max
+    bucket 1,264 and 44.8M uncapped candidates on the same 500k-doc
+    corpus — a 75× reduction (scripts/scale_smoke_simhash_width.py).
+    Block-LSH candidate volume is governed by key-space size, not by
+    the verifier.
 
-    Scale shape mirrors lsh_candidate_pairs: per-bucket pair generation
-    from a collected sorted id list (one signature pass, no self-join),
-    with oversized buckets (> ``bucket_cap``) degraded to keeper stars —
-    linear output on degenerate corpora at the cost of completeness
-    inside those buckets (connected components are preserved). Pairs
-    emit per ANCHOR (explode the 1-based anchor positions, then explode
-    each anchor's suffix slice), so per-row memory is O(bucket), not the
-    r17 one-array form's O(bucket²) — that form made the cap an
-    ALLOCATION bound (1024 → ≤524k structs ~16 MB; a 10× smoke OOMed at
-    cap 4096) and the r17 500k-doc probe then measured max bucket 1,264:
-    realistic corpora silently engaged the keeper-star degradation
-    (round-18 advisor item). With chunked emission the cap is purely an
-    OUTPUT bound (≤ C(cap,2) pairs from one degenerate bucket's task),
-    so the default rises to 4096 — above any measured realistic bucket
-    (500 k docs: 1,264; the 2^32 key space keeps growth sublinear) —
-    and capped buckets are OBSERVABLE: the plan carries
-    ``oversized_buckets`` / ``max_bucket`` observe metrics (same
-    pattern as lsh_candidate_pairs), so completeness loss is a metric,
-    never silent. (Minhash band buckets are near-exact matches and use
-    a far smaller cap; simhash halves legitimately cluster, hence the
-    larger default here.)
+    Scale shape mirrors lsh_candidate_pairs: per-bucket pairs from a
+    collected sorted id list through :func:`bucket_pairs` (one
+    signature pass, no self-join), with buckets over ``bucket_cap``
+    degraded to keeper stars — linear output on degenerate corpora at
+    the cost of completeness inside those buckets (connected components
+    are preserved). Per-anchor emission makes the cap an OUTPUT bound
+    (≤ C(cap,2) pairs from one degenerate bucket's task), not a per-row
+    allocation bound, so the default 4096 sits above any measured
+    realistic bucket (500k docs: max bucket 1,264), and the plan's
+    ``oversized_buckets`` / ``max_bucket`` observe metrics make any
+    completeness loss visible. (Minhash band buckets are near-exact
+    matches and use a far smaller cap; simhash halves legitimately
+    cluster, hence the larger default here.)
 
     ``bits``/``block`` parameterize the signature width and LSH block
-    width (round-15 verdict item 8: width is THE scale knob, so a 100×
-    corpus can widen without a source edit — 32/8 gives 4 blocks and
-    full recall up to hamming 3). Recall guard: with ``bits // block``
-    blocks, pigeonhole only guarantees a shared block for hamming ≤
-    ``bits // block - 1``; a larger ``max_hamming`` would silently drop
-    true pairs (identically in the SQL twin, so the oracle could not
-    catch it) — raise instead.
+    width, so a 100× corpus can widen without a source edit (32/8 gives
+    4 blocks and full recall up to hamming 3). Recall guard: with
+    ``bits // block`` blocks, pigeonhole only guarantees a shared block
+    for hamming ≤ ``bits // block - 1``; a larger ``max_hamming`` would
+    silently drop true pairs (identically in the SQL twin, so the oracle
+    could not catch it) — raise instead.
     """
     if bits % block != 0:
         raise ValueError(f"block ({block}) must divide bits ({bits})")
@@ -502,50 +496,12 @@ def simhash_neardup_pairs(
         )
         + ")) AS b",
     ).selectExpr("doc_id", "b.block AS block", "b.key AS key")
-    grouped = (
-        halves.groupBy("block", "key")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .observe(
-            _next_obs_name(),
-            F.sum(F.when(F.size("ids") > bucket_cap, 1).otherwise(0)).alias(
-                "oversized_buckets"
-            ),
-            F.max(F.size("ids")).alias("max_bucket"),
-        )
+    grouped = halves.groupBy("block", "key").agg(
+        F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
-    # Per-anchor chunked emission: full buckets explode every 1-based
-    # anchor position 1..n-1 and pair the anchor with its sorted suffix;
-    # star buckets emit anchor 1 only (keeper star). One conditional,
-    # NOT a union of two branches (a union executes the signature
-    # pipeline once per branch), and never a C(n,2) array in one row.
-    #
-    # r19 adjudication of the r18 verdict's "size-dispatched fast path"
-    # item (one-array emission for buckets <= 256 to recover the
-    # 2.36 s -> 3.44 s sf0.1 delta): IMPLEMENTED, MEASURED, REJECTED.
-    # Same-session interleaved A/B on one container: r17 one-array
-    # 3.07-3.61 s, r18 chunked 2.97-3.98 s, dispatched 3.21-3.61 s —
-    # indistinguishable; the r17->r18 "regression" was container drift.
-    # The floor is the signature stage itself (~2.4-2.7 s warm for the
-    # ~12M-token sha2+64-bit-sum aggregate; a projected-digest variant
-    # and a packed-lane 22-long aggregate both measured within noise of
-    # it), not pair emission. On a clique-heavy corpus (100 buckets x
-    # 200 docs) the dispatched form was 5-8% SLOWER (20.6-21.5 s
-    # chunked vs 22.2-23.4 s dispatched). Full numbers in
-    # SCALE_NOTES.md r19.
-    ids = F.col("ids")
-    anchor_idx = F.when(
-        F.size(ids) <= bucket_cap,
-        F.sequence(F.lit(1), F.size(ids) - 1),
-    ).otherwise(F.array(F.lit(1)))
     cand = (
-        grouped.select(ids.alias("ids"), F.explode(anchor_idx).alias("i"))
-        .select(
-            F.element_at("ids", F.col("i")).alias("doc_a"),
-            F.explode(
-                F.slice("ids", F.col("i") + 1, F.size("ids"))
-            ).alias("doc_b"),
-        )
+        bucket_pairs(grouped, bucket_cap)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
     )
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"))
@@ -1464,10 +1420,10 @@ def block_pair_intersections(
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shingles"))
     )
+    # kept buckets are within max_doc_freq, so the keeper star never fires.
     inter = (
-        kept.filter(F.size("ids") >= 2)
-        .select(F.explode(_pairs_from_sorted_ids(F.col("ids"))).alias("p"))
-        .groupBy(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        bucket_pairs(kept, max_doc_freq)
+        .groupBy(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     # No broadcast hint: sizes has one row per corpus document, far too
@@ -1940,7 +1896,7 @@ def lsh_incremental_pairs(
     old_docs: DataFrame,
     new_docs: DataFrame,
     text_col: str = "text",
-    bucket_cap: int = 64,
+    bucket_cap: int = LSH_BUCKET_CAP,
 ) -> DataFrame:
     """Candidate near-dup pairs INVOLVING AT LEAST ONE NEW DOCUMENT —
     the production dedup shape at 100 TB: the corpus index (band
@@ -1973,40 +1929,15 @@ def lsh_incremental_pairs(
                 F.collect_list(F.struct("doc_id", "is_new"))
             ).alias("ids")
         )
-        .filter(
-            (F.size("ids") >= 2)
-            & F.exists("ids", lambda x: x["is_new"])
-        )
+        .filter(F.exists("ids", lambda x: x["is_new"]))
     )
-    ids = F.col("ids")
-
-    def _pair(x, y):
-        return F.struct(
-            x["doc_id"].alias("a"),
-            y["doc_id"].alias("b"),
-            (x["is_new"] | y["is_new"]).alias("keep"),
-        )
-
-    full = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)), lambda y: _pair(x, y)
-            ),
-        )
-    )
-    keeper = F.element_at(ids, 1)
-    star = F.transform(
-        F.slice(ids, 2, F.size(ids)), lambda y: _pair(keeper, y)
-    )
-    pairs_arr = F.when(F.size(ids) <= bucket_cap, full).otherwise(star)
     return (
-        grouped.select(F.explode(pairs_arr).alias("p"))
-        .filter(F.col("p.keep"))
-        .select(F.col("p.a").alias("doc_a"), F.col("p.b").alias("doc_b"))
+        bucket_pairs(grouped, bucket_cap)
+        .filter(F.col("a.is_new") | F.col("b.is_new"))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         # Guard against a doc_id present in BOTH sides (a re-delivered
         # batch): its bucket entry appears once per side and the pair
-        # builder would emit a keep=true self-pair — drop those rather
+        # builder would emit a new self-pair — drop those rather
         # than require callers to guarantee id-disjointness.
         .filter(F.col("doc_a") != F.col("doc_b"))
         .distinct()

@@ -29,12 +29,12 @@ Scale posture (100 TB):
   connected component; a mixed over-cap bucket holding several
   distinct families can split all but the keeper's. Size the cap to
   the corpus's largest legitimate near-dup family (it bounds one
-  task's join fan-out, the same memory law as the other pair
+  task's pair fan-out, the same memory law as the other pair
   generators).
-- No per-row combinatorial arrays: candidates come from a plain
-  equi-join on the prefix token (two shuffle-join inputs), never a
-  collect-then-explode of C(n,2) structs (the round-10 pair-array
-  memory bound).
+- Candidates come from one aggregation on the prefix token: each
+  bucket collects its sorted (doc_id, sz) list and emits its pairs
+  through ext/dedup.py::bucket_pairs, one anchor per row, so a row
+  holds O(bucket) values, never a C(n,2) array.
 - All thresholds are evaluated in EXACT integer arithmetic
   (t = t_num/t_den): ``ceil(t*s) = (t_num*s + t_den - 1) div t_den``,
   size filter ``s_min*t_den >= s_max*t_num``, verify
@@ -48,9 +48,10 @@ DuckDB SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import bucket_pairs
 from .textstats import tokens_col
 
 DEFAULT_BUCKET_CAP = 1024
@@ -107,12 +108,10 @@ def prefix_jaccard_join(
     keeper-star pairs (the family-standard degenerate-corpus bound).
     Returns (doc_a, doc_b, inter, sz_a, sz_b, jaccard), doc_a < doc_b.
 
-    Deliberately NO localCheckpoint pin on the token-set frame despite
-    its three textual references: AQE exchange reuse reclaims the
-    duplicate subtrees in the final adaptive plan, and an explicit pin
-    was MEASURED 0.2 s slower at sf0.1 (round-12 plan audit) — the
-    opposite of the graph/srp cases where the re-derived subtree has no
-    common exchange. Re-measure before "fixing" this.
+    The token-set frame has three references (the prefix buckets and
+    both verify sides) and no localCheckpoint pin, so the builder runs
+    no job: the final adaptive plan computes it twice, and the two
+    verify sides share one exchange.
     """
     sets = token_sets(docs, text_col)
     prefix = sets.select(
@@ -122,35 +121,17 @@ def prefix_jaccard_join(
             F.slice(F.col("tokens"), 1, _prefix_len(F.col("sz"), t_num, t_den))
         ).alias("token"),
     )
-    w = Window.partitionBy("token")
-    bucketed = prefix.withColumn("bsz", F.count(F.lit(1)).over(w)).withColumn(
-        "keeper", F.min("doc_id").over(w)
-    )
-    a = bucketed.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sz").alias("sz_a"),
-        "token",
-        "bsz",
-        "keeper",
-    )
-    b = bucketed.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sz").alias("sz_b"),
-        "token",
+    grouped = prefix.groupBy("token").agg(
+        F.array_sort(F.collect_list(F.struct("doc_id", "sz"))).alias("ids")
     )
     cand = (
-        a.join(b, on="token")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        # cap keeper-star (doc_a < doc_b makes the keeper the a side)
-        .filter(
-            (F.col("bsz") <= bucket_cap) | (F.col("doc_a") == F.col("keeper"))
-        )
+        bucket_pairs(grouped, bucket_cap)
         # size filter: Jaccard >= t needs t*|bigger| <= |smaller|, exact
         .filter(
-            F.least("sz_a", "sz_b") * t_den
-            >= F.greatest("sz_a", "sz_b") * t_num
+            F.least("a.sz", "b.sz") * t_den
+            >= F.greatest("a.sz", "b.sz") * t_num
         )
-        .select("doc_a", "doc_b")
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
     ta = sets.select(F.col("doc_id").alias("doc_a"), F.col("tokens").alias("toks_a"), F.col("sz").alias("sz_a"))

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import bucket_pairs
 from .util import fan_out
 
 
@@ -672,7 +673,6 @@ def knn_join(
     n_planes: int = KNN_PLANES,
     band_bits: int = KNN_BAND_BITS,
     seed: int = 42,
-    broadcast_vectors: bool = True,
     bucket_cap: int = KNN_BUCKET_CAP,
     sample_bound: int | None = None,
 ) -> DataFrame:
@@ -690,22 +690,22 @@ def knn_join(
 
     Scale shape: the hyperplane projection is a per-row JVM fold (no
     shuffle); candidates come from one (band, bucket) aggregation whose
-    buckets emit their in-bucket pairs — never all-pairs — and
-    per-vector top-k is one window over the candidate pairs. Honest scaling note: expected bucket size is
-    n/2^band_bits, so candidate volume grows as Σ buckets·size² ≈
-    6·n²/2^band_bits — ``band_bits`` is NOT a constant of the design
-    but the dial that must grow ≈ log2(n) with the corpus (16-bit
-    bands ⇒ 65k buckets; the same reasoning Spark's own MinHashLSH
-    leaves to its numHashTables/bucketLength knobs). On top of that
-    dial, ``bucket_cap`` is the hard backstop (wired per the round-5
-    verdict): a bucket larger than the cap — N identical/near-identical
-    vectors landing in one band bucket — degrades to a keeper STAR
-    (min id paired with every other member, N−1 candidate edges)
-    instead of the N²/2 clique, exactly the lsh_candidate_pairs
-    degradation. For KNN this trades recall inside a degenerate bucket
+    buckets emit their in-bucket pairs through :func:`bucket_pairs` —
+    never all-pairs — and per-vector top-k is one window over the
+    candidate pairs. Honest scaling note:
+    expected bucket size is n/2^band_bits, so candidate volume grows as
+    Σ buckets·size² ≈ 6·n²/2^band_bits — ``band_bits`` is NOT a
+    constant of the design but the dial that must grow ≈ log2(n) with
+    the corpus (16-bit bands ⇒ 65k buckets; the same reasoning Spark's
+    own MinHashLSH leaves to its numHashTables/bucketLength knobs). On
+    top of that dial, ``bucket_cap`` is the hard backstop: a bucket
+    larger than the cap — N identical/near-identical vectors landing in
+    one band bucket — degrades to a keeper STAR (min id paired with
+    every other member, N−1 candidate edges) instead of the N²/2
+    clique. For KNN this trades recall inside a degenerate bucket
     (non-keeper members see the keeper but not each other) for a
-    linear output bound; the ``oversized_knn_buckets`` observe metric
-    makes the engagement visible, and the 100× planted-truth smoke
+    linear output bound; the ``oversized_buckets`` observe metric makes
+    the engagement visible, and the 100× planted-truth smoke
     (scripts/scale_smoke_knn.py) records the recall cost. The oracle
     replays the IDENTICAL seeded hyperplanes AND the identical cap
     (size/keeper window + star predicate), so candidates, cosines and
@@ -714,40 +714,19 @@ def knn_join(
     n_bands = n_planes // band_bits
     keyed = srp_index(corpus, n_planes=n_planes, band_bits=band_bits, seed=seed)
     # Candidates via ONE bucket aggregation instead of a self-join per
-    # band (the lsh_candidate_pairs pattern): explode each vector into
-    # its (band, bucket) memberships, collect each bucket's sorted id
-    # list, emit the in-bucket pairs. Same candidate SET — pairs (a<b)
-    # sharing any band bucket, distinct-ed across bands — but 1 shuffle
-    # + explode replaces 6 shuffle joins + a 6-way union (sf0.1 warm
-    # run 6.1 → 4.1 s under a default session; oracle unchanged).
-    from .dedup import _next_obs_name, _pairs_from_sorted_ids
-
-    memberships = srp_memberships(keyed, n_bands)
+    # band: explode each vector into its (band, bucket) memberships,
+    # collect each bucket's sorted id list, emit the in-bucket pairs.
+    # Same candidate SET — pairs (a<b) sharing any band bucket,
+    # distinct-ed across bands — but 1 shuffle + explode replaces 6
+    # shuffle joins + a 6-way union.
     grouped = (
-        memberships.groupBy("band", "bk")
+        srp_memberships(keyed, n_bands)
+        .groupBy("band", "bk")
         .agg(F.array_sort(F.collect_list("vec_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .observe(
-            _next_obs_name(),
-            F.sum(
-                F.when(F.size("ids") > bucket_cap, 1).otherwise(0)
-            ).alias("oversized_knn_buckets"),
-        )
     )
-    # Cap-with-keeper-star degradation (same conditional single-branch
-    # emit as lsh_candidate_pairs — a union of two filtered branches
-    # would run the bucket aggregation twice).
-    ids = F.col("ids")
-    star_pairs = F.transform(
-        F.slice(ids, 2, F.size(ids)),
-        lambda y: F.struct(F.element_at(ids, 1).alias("a"), y.alias("b")),
-    )
-    pairs_arr = F.when(
-        F.size(ids) <= bucket_cap, _pairs_from_sorted_ids(ids)
-    ).otherwise(star_pairs)
     cands = (
-        grouped.select(F.explode(pairs_arr).alias("p"))
-        .select(F.col("p.a").alias("vec_a"), F.col("p.b").alias("vec_b"))
+        bucket_pairs(grouped, bucket_cap)
+        .select(F.col("a").alias("vec_a"), F.col("b").alias("vec_b"))
         .distinct()
     )
     if sample_bound is not None:
@@ -762,28 +741,19 @@ def knn_join(
         cands = cands.filter(
             (F.col("vec_a") < sample_bound) | (F.col("vec_b") < sample_bound)
         )
-    va = keyed.select(
+    # Broadcast the vector sides: without the hint Spark broadcasts the
+    # pair aggregate instead (the checkpointed index has no catalog
+    # stats), a hash relation far larger than the vectors.
+    va = F.broadcast(keyed.select(
         F.col("vec_id").alias("vec_a"),
         F.col("emb_r").alias("emb_ra"),
         F.col("emb_norm").alias("norm_a"),
-    )
-    vb = keyed.select(
+    ))
+    vb = F.broadcast(keyed.select(
         F.col("vec_id").alias("vec_b"),
         F.col("emb_r").alias("emb_rb"),
         F.col("emb_norm").alias("norm_b"),
-    )
-    # Join strategy dial: pairs grow ~n²/2^band_bits while vectors grow
-    # n, so for in-memory-index corpora (the ANN serving shape — every
-    # production ANN system replicates its index per node) broadcast
-    # the VECTOR sides and stream the pair set. Left to stats, Spark
-    # broadcast the 650k-row pair aggregate instead (checkpointed keyed
-    # has no catalog stats), building a hash relation 300× larger than
-    # needed. A corpus too big to broadcast sets
-    # ``broadcast_vectors=False`` and gets shuffled hash joins on the
-    # uniform vec_id keys — the right plan at 100 TB, where no side is
-    # broadcastable.
-    if broadcast_vectors:
-        va, vb = F.broadcast(va), F.broadcast(vb)
+    ))
     scored = (
         cands.join(va, on="vec_a")
         .join(vb, on="vec_b")

@@ -58,7 +58,6 @@ def pivot_counts(
     pivot_col: str,
     values: Sequence[str],
     prefix: str = "",
-    agg_col: str | None = None,
 ) -> DataFrame:
     """Wide count matrix: semantically ``groupBy(key).pivot(pivot_col,
     values).count()`` + ``na.fill(0)``, but planned as ONE conditional
@@ -70,22 +69,14 @@ def pivot_counts(
     on ``key`` with map-side partial aggregation. At 100 TB that halves
     the shuffle volume of the reference's workhorse operator
     (users_items/users_items.scala:76-82 et al.).
-
-    ``agg_col``: when given, cells are ``sum(agg_col)`` over matching
-    rows instead of row counts (the merge path of matrix.merge_matrix).
     """
     labels = _checked_labels(values, prefix)
-    exprs = []
-    for v in values:
-        cond = F.col(pivot_col) == v
-        if agg_col is None:
-            cell = F.count(F.when(cond, 1))
-        else:
-            cell = F.coalesce(
-                F.sum(F.when(cond, F.col(agg_col))), F.lit(0).cast("long")
-            )
-        exprs.append(cell.alias(labels[v]))
-    return df.groupBy(key).agg(*exprs)
+    return df.groupBy(key).agg(
+        *(
+            F.count(F.when(F.col(pivot_col) == v, 1)).alias(labels[v])
+            for v in values
+        )
+    )
 
 
 def pivot_counts_sql(
@@ -94,7 +85,6 @@ def pivot_counts_sql(
     pivot_col: str,
     values: Sequence[str],
     prefix: str = "",
-    value_expr: str = "1",
 ) -> str:
     """DuckDB oracle twin of :func:`pivot_counts` via CASE-sums.
     Values are SQL-escaped (quote doubling — a value like "O'Brien"
@@ -103,7 +93,7 @@ def pivot_counts_sql(
     labels = _checked_labels(values, prefix)
     cols = ",\n    ".join(
         f"CAST(COALESCE(SUM(CASE WHEN {pivot_col} = "
-        f"'{v.replace(chr(39), chr(39) * 2)}' THEN {value_expr} END), 0)"
+        f"'{v.replace(chr(39), chr(39) * 2)}' THEN 1 END), 0)"
         f" AS BIGINT) AS {labels[v]}"
         for v in values
     )

@@ -4,16 +4,9 @@ The reference's ONLY analytic window is W1: an empty-partitionBy window
 ordered by date desc, with ``first(...)`` broadcasting the dataset-wide
 max date onto every row (users_items/users_items.scala:28,33,40).
 
-Both forms are provided:
-- ``stamp_max_literal`` — the reference's literal shape. An empty
-  ``partitionBy`` forces EVERY row through a single task: correct, and
-  catastrophic at scale. Kept for parity and to document the hazard.
-- ``stamp_max_scalar`` — the idiomatic replacement: scalar ``agg(max)``
-  + broadcast cross-join. Two jobs, no single-task bottleneck.
-
-``ranked``/``with_lag`` round out the standard analytic set (the
-reference never uses rank/lag — SURVEY.md §2.5 notes their absence —
-but any engine claiming its query surface needs them).
+``stamp_max_literal`` is the reference's literal shape. An empty
+``partitionBy`` forces EVERY row through a single task: correct, and
+catastrophic at scale. Kept for parity and to document the hazard.
 """
 
 from __future__ import annotations
@@ -27,24 +20,3 @@ def stamp_max_literal(df: DataFrame, order_col: Column, out_name: str) -> DataFr
     DO NOT use on large inputs — every row funnels through one task."""
     w = Window.partitionBy().orderBy(order_col.desc())
     return df.withColumn(out_name, F.first(order_col).over(w))
-
-
-def stamp_max_scalar(df: DataFrame, agg_expr: Column, out_name: str) -> DataFrame:
-    """Idiomatic W1: one scalar aggregate broadcast onto every row."""
-    scalar = df.agg(agg_expr.alias(out_name))
-    return df.crossJoin(F.broadcast(scalar))
-
-
-def ranked(
-    df: DataFrame, partition_by: str, order_col: Column, out_name: str = "rnk"
-) -> DataFrame:
-    return df.withColumn(
-        out_name, F.row_number().over(Window.partitionBy(partition_by).orderBy(order_col))
-    )
-
-
-def with_lag(
-    df: DataFrame, partition_by: str, order_col: Column, value_col: str
-) -> DataFrame:
-    w = Window.partitionBy(partition_by).orderBy(order_col)
-    return df.withColumn(f"prev_{value_col}", F.lag(value_col).over(w))

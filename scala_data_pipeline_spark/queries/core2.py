@@ -113,8 +113,7 @@ def window_rank_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
     )
     # o_orderdate ties within a customer would make rank/lag ambiguous —
-    # tiebreak on o_orderkey for a total order (operators.windows.ranked/
-    # with_lag take any order Column; composed inline here).
+    # tiebreak on o_orderkey for a total order.
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
     )

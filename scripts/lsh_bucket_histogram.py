@@ -1,13 +1,14 @@
 """LSH bucket-size histogram at a given SF (round-12, verdict item 8).
 
 The dedup pair generators never go all-pairs because oversized
-band/bucket groups degrade to keeper stars (``bucket_cap=64`` in
-``lsh_candidate_pairs``). Whether that cap actually BINDS at a scaled
-SF is the leading indicator for the two superlinear dedup tails
-(edit-distance, contrastive triplets): if pair counts grow faster than
-the corpus, it shows up here first as bucket-size mass crossing the
-cap. This script records the histogram so the sfx10 artifact carries
-the evidence, via bench_scale_report's extras arg.
+band/bucket groups degrade to keeper stars (``LSH_BUCKET_CAP``, the
+default ``bucket_cap`` of ``lsh_candidate_pairs``). Whether that cap
+actually BINDS at a scaled SF is the leading indicator for the two
+superlinear dedup tails (edit-distance, contrastive triplets): if pair
+counts grow faster than the corpus, it shows up here first as
+bucket-size mass crossing the cap. This script records the histogram
+so the sfx10 artifact carries the evidence, via bench_scale_report's
+extras arg.
 
 Run:  python scripts/lsh_bucket_histogram.py [sf_dir] [out.json]
 Defaults: /tmp/sfx10, stdout only.
@@ -24,12 +25,11 @@ sys.path.insert(0, ROOT)
 from pyspark.sql import functions as F  # noqa: E402
 
 from scala_data_pipeline_spark.ext.dedup import (  # noqa: E402
+    LSH_BUCKET_CAP as CAP,
     lsh_band_buckets,
     minhash_signature,
 )
 from scala_data_pipeline_spark.session import get_session  # noqa: E402
-
-CAP = 64  # lsh_candidate_pairs' default bucket_cap
 
 
 def main() -> None:

@@ -34,6 +34,7 @@ from scala_data_pipeline_spark.ext.components import (  # noqa: E402
     connected_components,
 )
 from scala_data_pipeline_spark.ext.dedup import (  # noqa: E402
+    LSH_BUCKET_CAP,
     edit_distance_verify,
     lsh_band_buckets,
     lsh_candidate_pairs,
@@ -105,13 +106,13 @@ def main() -> None:
         report["n_docs"] = n_docs
         corpus = spark.read.parquet(f"{tmp}/corpus")
 
-        # Cap-engagement counter: buckets over the star-overflow cap (64).
+        # Cap-engagement counter: buckets over the star-overflow cap.
         _, oversized = timed(
-            "oversized buckets (cap 64)",
+            f"oversized buckets (cap {LSH_BUCKET_CAP})",
             lambda: lsh_band_buckets(minhash_signature(corpus))
             .groupBy("band", "bucket")
             .count()
-            .filter(F.col("count") > 64)
+            .filter(F.col("count") > LSH_BUCKET_CAP)
             .count(),
         )
         report["oversized_buckets"] = oversized
