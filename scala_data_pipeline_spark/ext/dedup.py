@@ -441,7 +441,7 @@ def simhash_neardup_pairs(
     500k docs (max bucket 38,698, 3.38e9 uncapped candidates); the
     default 32-bit blocks (2^32 keys, sha2-256 digests) measure max
     bucket 1,264 and 44.8M uncapped candidates on the same 500k-doc
-    corpus — a 75× reduction (scripts/scale_smoke_simhash_width.py).
+    corpus — a 75× reduction (SCALE_NOTES.md, "Scale harness").
     Block-LSH candidate volume is governed by key-space size, not by
     the verifier.
 

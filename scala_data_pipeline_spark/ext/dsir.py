@@ -64,7 +64,6 @@ def dsir_weights(
     target: Column,
     n_buckets: int = N_BUCKETS,
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """(doc_id, n_tokens, weight) for every document with ≥1 token:
     weight = Σ_tokens round(log(p̂_target(b)) − log(p̂_raw(b)), 8),
@@ -72,11 +71,10 @@ def dsir_weights(
     Column over ``docs``' columns selecting the target subset.
 
     Both passes run over a SHARED (doc_id, bucket, count) frame —
-    aggregated from one tokenize+hash sweep and (with ``materialize``)
-    localCheckpoint'd, so the corpus is scanned, split, and md5-hashed
-    ONCE instead of once per pass (round-13 10x artifact: the two-pass
-    form's 6.5x decade ratio was dominated by the repeated token
-    sweep; the bucket frame is ≤ min(tokens, 4096/doc) rows per doc —
+    aggregated from one tokenize+hash sweep and localCheckpoint'd, so
+    the corpus is scanned, split, and md5-hashed ONCE instead of once
+    per pass (round-13 10x artifact: the two-pass form's 6.5x decade
+    ratio was dominated by the repeated token sweep; the bucket frame is ≤ min(tokens, 4096/doc) rows per doc —
     far smaller than the token grain it replaces). Per-token Σlr over
     a doc equals Σ_b cnt·lr with lr pre-rounded at 8dp, so the
     weights are bit-identical to the per-token form and the DuckDB
@@ -89,13 +87,13 @@ def dsir_weights(
 
     # Shared bucket-grain frame: partial-aggregates map-side, then one
     # shuffle on (doc_id, b); _tgt is constant per doc_id.
-    bt = toks.groupBy("doc_id", "_tgt", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt")
+    # localCheckpoint, not persist: released when the Python frame is
+    # GC'd (the queries/matrix.py precedent).
+    bt = (
+        toks.groupBy("doc_id", "_tgt", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        .localCheckpoint(eager=False)
     )
-    if materialize:
-        # localCheckpoint, not persist: released when the Python frame
-        # is GC'd (the queries/matrix.py precedent).
-        bt = bt.localCheckpoint(eager=False)
 
     # Pass 1 — fit both hashed unigram models in ONE aggregate.
     model = bt.groupBy("b").agg(

@@ -50,7 +50,6 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = 2,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Top-k by cosine among the nprobe nearest centroid buckets of each
     query. indexed = assign_buckets output; queries carry vec_id +
@@ -133,13 +132,9 @@ def ivf_topk(
         {"emb_r": "q_r", "emb_norm": "q_norm"}
     )
     c_prepped = prep_vectors(indexed)
-    # Serving batches are usually small vs the corpus → broadcast them.
-    # For bulk re-scoring batches rivaling the corpus, pass
-    # broadcast_queries=False and let the bucket-key shuffle join win
-    # (both sides partition on ivf_bucket; no broadcast memory cliff).
-    q_side = F.broadcast(q_prepped) if broadcast_queries else q_prepped
+    # Serving batches are small vs the corpus → broadcast them.
     scored = (
-        c_prepped.join(q_side, on="ivf_bucket")
+        c_prepped.join(F.broadcast(q_prepped), on="ivf_bucket")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",

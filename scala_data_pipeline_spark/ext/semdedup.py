@@ -25,8 +25,8 @@ Spark shape, built for 100 TB:
    batch per cluster, numpy chunked matmul) — EXACTLY how the
    reference implementation shards the problem (one GPU per cluster);
    choose ``k ~ corpus_size / target_cluster_size`` so a cluster fits
-   an executor. Clusters above ``cluster_cap`` RAISE (never silently
-   keep duplicates): the fix is a larger k, same as the paper.
+   an executor. Clusters above ``cluster_cap`` are split into
+   sub-clusters first (``_split_over_cap``).
 
 The greedy set is genuinely iterative (kept-set membership depends on
 earlier decisions), so the registry entry is rows-only; the invariant
@@ -143,12 +143,11 @@ def _split_over_cap(
     with a doubled shard count for up to ``_HASH_MAX_ROUNDS`` rounds.
     Within a shard all near-dups are still found; across shards they
     are invisible — for identical points the result is one keeper per
-    shard instead of one total, the documented last-resort degradation
-    (strict callers pass ``over_cap='raise'`` upstream). If even the
-    hash rounds cannot satisfy the cap (only possible when vec_ids are
-    themselves duplicated, so every row of a group hashes identically)
-    the error names the split fallback — not the misleading
-    'increase k'.
+    shard instead of one total, the documented last-resort degradation.
+    If even the hash rounds cannot satisfy the cap (only possible when
+    vec_ids are themselves duplicated, so every row of a group hashes
+    identically) the error names the split fallback — not the
+    misleading 'increase k'.
 
     Returns ``(assigned, centers, hash_sharded_ids)`` where the third
     element lists the FINAL cluster ids produced by hash sharding, so
@@ -174,7 +173,7 @@ def _split_over_cap(
             return assigned, centers, sorted(hash_ids)
         if depth >= _SPLIT_MAX_DEPTH + _HASH_MAX_ROUNDS:
             raise ValueError(
-                f"semantic_dedup over_cap='split': clusters {over!r} still"
+                f"semantic_dedup: clusters {over!r} still"
                 f" exceed cluster_cap={cluster_cap} after"
                 f" {_SPLIT_MAX_DEPTH} KMeans rounds and {_HASH_MAX_ROUNDS}"
                 " md5(vec_id) hash-shard rounds — vec_id values must be"
@@ -256,23 +255,15 @@ def semantic_dedup(
     eps: float = DEFAULT_EPS,
     seed: int = 42,
     cluster_cap: int = DEFAULT_CLUSTER_CAP,
-    over_cap: str = "split",
 ) -> DataFrame:
     """(vec_id, cluster, centroid_sim, keep, dup_of) for every corpus
     vector. ``keep=False`` rows carry the kept ``dup_of`` vector that
     shadowed them (cosine >= 1 - eps, same cluster, earlier in rank
     order).
 
-    ``over_cap`` governs clusters larger than ``cluster_cap`` (the
-    executor-memory bound on the per-cluster Arrow batch):
-    ``'split'`` (default) recursively sub-clusters them via
-    :func:`_split_over_cap` so the job completes at any corpus size;
-    ``'raise'`` is the r16 strict mode — abort rather than alter the
-    pair-visibility trade."""
-    if over_cap not in ("split", "raise"):
-        raise ValueError(
-            f"over_cap must be 'split' or 'raise', got {over_cap!r}"
-        )
+    Clusters larger than ``cluster_cap`` (the executor-memory bound on
+    the per-cluster Arrow batch) are recursively sub-clustered by
+    :func:`_split_over_cap`, so the job completes at any corpus size."""
     if k == 1:
         # No quantizer (MLlib KMeans needs k >= 2): one global cluster,
         # centroid = the corpus mean — the pure-greedy mode the k=1
@@ -299,11 +290,9 @@ def semantic_dedup(
             "ivf_bucket", "cluster"
         )
         centers = [[float(v) for v in c] for c in model.clusterCenters()]
-    hash_ids: list[int] = []
-    if over_cap == "split":
-        assigned, centers, hash_ids = _split_over_cap(
-            assigned, centers, cluster_cap, seed
-        )
+    assigned, centers, hash_ids = _split_over_cap(
+        assigned, centers, cluster_cap, seed
+    )
     prepped = prep_vectors(assigned)
 
     # Map-side cosine to the own-cluster centroid. Small center sets

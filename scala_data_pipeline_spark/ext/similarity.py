@@ -652,8 +652,7 @@ def srp_index(
 
 def srp_memberships(keyed: DataFrame, n_bands: int) -> DataFrame:
     """(vec_id, band, bk) membership rows from an srp_index frame — the
-    unpivot knn_join aggregates into buckets; exposed so scale smokes
-    can count cap engagement through the exact production code path."""
+    unpivot knn_join aggregates into buckets."""
     # One selectExpr per step instead of ~5 py4j calls per band (r20
     # construction-cost pass; value-identical named_struct unpivot).
     return keyed.selectExpr(
@@ -705,8 +704,8 @@ def knn_join(
     clique. For KNN this trades recall inside a degenerate bucket
     (non-keeper members see the keeper but not each other) for a
     linear output bound; the ``oversized_buckets`` observe metric makes
-    the engagement visible, and the 100× planted-truth smoke
-    (scripts/scale_smoke_knn.py) records the recall cost. The oracle
+    the engagement visible, and SCALE_NOTES.md ("Scale harness")
+    records the recall cost on a 100× planted-truth corpus. The oracle
     replays the IDENTICAL seeded hyperplanes AND the identical cap
     (size/keeper window + star predicate), so candidates, cosines and
     ranks all match exactly — recall approximation, cap and all.

@@ -7,11 +7,8 @@ COST HONESTY (round-13 review): one scan is NOT one cheap aggregation
 in exact mode. N different COUNT(DISTINCT c_i) in one agg plan through
 an Expand node that replicates every input row once per distinct
 column — the shuffle carries ~(N+1)x the input rows. That still beats
-N separate jobs (N scans AND N Expand-free shuffles), but for
-trillion-row profiling pass ``approx=True``: approx_count_distinct is
-a plain (mergeable-sketch) aggregate, no Expand, a true single
-aggregation at ±2% error. The registry query pins ``approx=False``
-because exact distincts are what the DuckDB oracle can check
+N separate jobs (N scans AND N Expand-free shuffles). Distincts are
+exact because exact distincts are what the DuckDB oracle can check
 bit-for-bit.
 
 Output is long-form (column, n_nulls, n_distinct, min_num, max_num):
@@ -33,7 +30,6 @@ from pyspark.sql.types import (
 def profile_table(
     df: DataFrame,
     cols: list[str] | None = None,
-    approx: bool = False,
 ) -> DataFrame:
     cols = cols or df.columns
     aggs = []
@@ -54,11 +50,7 @@ def profile_table(
             F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(
                 f"__nn_{c}"
             ),
-            (
-                F.approx_count_distinct(F.col(c))
-                if approx
-                else F.count_distinct(F.col(c))
-            ).alias(f"__nd_{c}"),
+            F.count_distinct(F.col(c)).alias(f"__nd_{c}"),
             mn.alias(f"__mn_{c}"),
             mx.alias(f"__mx_{c}"),
         ]

@@ -169,13 +169,13 @@ def cdc_latest_wins(
     overwrite ``acctbal``, untouched base rows pass through, inserts
     for keys absent from base synthesize a name. Exactly the merge
     body of queries/scd_queries.py::cdc_apply_customer, lifted to
-    frame level so jobs and the IVM/CDC scale smoke drive the same
-    code path.
+    frame level so jobs and the streaming CDC sink drive the same code
+    path.
 
     Scale shape: one changelog-sized window (uniform key) + one full
     outer join onto base — no iteration. Exactly IDEMPOTENT: applying
     the same log twice yields the same state (at-least-once delivery
-    safety; asserted by scripts/scale_smoke_ivm.py at 100x).
+    safety; asserted by tests/test_scd.py::test_cdc_latest_wins_idempotent).
 
     ``base`` columns: (key, name, acctbal); ``log`` columns:
     (key, op in {'U','D'}, new_acctbal, *seq_cols).

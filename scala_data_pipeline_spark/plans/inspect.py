@@ -8,8 +8,9 @@
 - pushed filters / read schema on parquet scans — a scan without
   PushedFilters/narrow ReadSchema reads the whole table;
 - whole-stage codegen coverage — Python UDFs puncture it. AQE inserts
-  WholeStageCodegen only as it plans each stage, so this one count
-  reads the final adaptive plan, after the query has run.
+  WholeStageCodegen only as it plans each stage, so ``plan_audit``
+  reads this one count from the final adaptive plan, after the query
+  has run; ``plan_shape`` reads the rest without running anything.
 
 Used by tests/test_plans.py to LOCK the plan shape of headline queries:
 a regression that adds a shuffle or loses pushdown fails CI, not the
@@ -48,18 +49,13 @@ def _python_ops(plan: str) -> int:
     )
 
 
-def plan_audit(df: DataFrame) -> dict:
-    """The plan signals of ``df``. All but ``codegen_stages`` read the
-    plan before execution; when that plan is adaptive and not yet final,
-    ``df`` is collected so the codegen count reads the final plan."""
+def plan_shape(df: DataFrame) -> dict:
+    """The plan signals of ``df`` read from its plan before execution:
+    nothing runs, so the same query over the same data gives the same
+    values on every call."""
     plan = explain_str(df)
-    simple = explain_str(df, mode="simple")
-    if "isFinalPlan=false" in simple:
-        df.collect()
-        simple = explain_str(df, mode="simple")
     # Formatted mode numbers nodes as "(N) Exchange"; a bare Exchange is a
-    # shuffle, BroadcastExchange is not. Simple mode marks codegen with
-    # "*(id)".
+    # shuffle, BroadcastExchange is not.
     return {
         "n_shuffle_exchanges": len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M)),
         "n_broadcast_joins": plan.count("BroadcastHashJoin"),
@@ -69,9 +65,23 @@ def plan_audit(df: DataFrame) -> dict:
         "has_pushed_filters": "PushedFilters: [" in plan
         and not re.search(r"PushedFilters: \[\]", plan),
         "scan_schemas": re.findall(r"ReadSchema: (struct<[^\n]*)", plan),
-        "codegen_stages": len(set(re.findall(r"\*\((\d+)\)", simple))),
         "plan": plan,
     }
+
+
+def plan_audit(df: DataFrame) -> dict:
+    """:func:`plan_shape` plus ``codegen_stages``, counted on the final
+    adaptive plan: when the plan is adaptive and not yet final, ``df``
+    is collected first. AQE's runtime choices can move that count from
+    one run to the next."""
+    shape = plan_shape(df)
+    simple = explain_str(df, mode="simple")
+    if "isFinalPlan=false" in simple:
+        df.collect()
+        simple = explain_str(df, mode="simple")
+    # Simple mode marks codegen with "*(id)".
+    shape["codegen_stages"] = len(set(re.findall(r"\*\((\d+)\)", simple)))
+    return shape
 
 
 def plan_lint(df: DataFrame) -> list[dict]:

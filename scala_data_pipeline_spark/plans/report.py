@@ -1,10 +1,11 @@
 """Plan-audit report: run ``python -m scala_data_pipeline_spark.plans.report``
 to regenerate PLAN_AUDIT.md — one row per registry query with its
-shuffle count, join strategies, Python presence, partial-agg and
-pushdown flags, and codegen stage count. Each query runs once, so the
-codegen column reads its final adaptive plan. The tabular twin of the
-plan-lock tests: locks pin the load-bearing shapes, the report shows
-the whole surface at a glance.
+shuffle count, join strategies, Python presence, and partial-agg and
+pushdown flags, all read from the plan before execution (``plan_shape``),
+so two runs on one tree write the same bytes. The codegen stage count
+follows AQE's runtime choices and is left to ``plan_audit``. The tabular
+twin of the plan-lock tests: locks pin the load-bearing shapes, the
+report shows the whole surface at a glance.
 """
 
 from __future__ import annotations
@@ -16,7 +17,7 @@ import sys
 def generate(out_path: str = "PLAN_AUDIT.md", sf_dir: str | None = None) -> str:
     from ..queries import all_queries, extra_queries
     from ..session import get_session
-    from .inspect import plan_audit
+    from .inspect import plan_shape
 
     sf_dir = sf_dir or os.environ.get(
         "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
@@ -32,7 +33,7 @@ def generate(out_path: str = "PLAN_AUDIT.md", sf_dir: str | None = None) -> str:
     )
     for name, fn in audited.items():
         try:
-            a = plan_audit(fn(spark, sf_dir))
+            a = plan_shape(fn(spark, sf_dir))
             rows.append(
                 (
                     name,
@@ -42,15 +43,14 @@ def generate(out_path: str = "PLAN_AUDIT.md", sf_dir: str | None = None) -> str:
                     a["n_python_udfs"],
                     "y" if a["has_partial_agg"] else "",
                     "y" if a["has_pushed_filters"] else "",
-                    a["codegen_stages"],
                 )
             )
         except Exception as exc:  # pragma: no cover - report must not die
-            # Exactly as many cells as the header (name + 7 metric
-            # columns); the error text rides in the last (codegen) cell
+            # Exactly as many cells as the header (name + 6 metric
+            # columns); the error text rides in the last (pushdown) cell
             # so a failing query still renders inside the table grid.
             err = str(exc).replace("|", "/").replace("\n", " ")[:40]
-            rows.append((name, "-", "-", "-", "-", "-", "-", err))
+            rows.append((name, "-", "-", "-", "-", "-", err))
     lines = [
         "# Plan audit (auto-generated — `python -m"
         " scala_data_pipeline_spark.plans.report`)",
@@ -62,11 +62,12 @@ def generate(out_path: str = "PLAN_AUDIT.md", sf_dir: str | None = None) -> str:
         "applyInPandas greedy, sim_topk_pq's Arrow encode/ADC scans —",
         "each documented at the operator);",
         "partial = map-side combine",
-        "present; pushdown = non-empty PushedFilters on a scan; codegen =",
-        "distinct WholeStageCodegen spans in the final adaptive plan, read",
-        "after the query has run (the other columns read the plan before",
-        "execution). `*name` rows are the locally-oracled EXTRA queries",
-        "beyond the 50 driver slots.",
+        "present; pushdown = non-empty PushedFilters on a scan. Every",
+        "column reads the plan before execution, so no query runs and the",
+        "file is byte-stable; the codegen stage count, which follows AQE's",
+        "runtime choices, is `plans.plan_audit(df)[\"codegen_stages\"]`.",
+        "`*name` rows are the locally-oracled EXTRA queries beyond the 50",
+        "driver slots.",
         "",
         "NB: the dedup/graph family consumes MEMOIZED checkpointed hubs",
         "(the LSH candidate-pair list and the shingle-intersection core,",
@@ -76,8 +77,8 @@ def generate(out_path: str = "PLAN_AUDIT.md", sf_dir: str | None = None) -> str:
         "sweep, exactly like a production run that persists candidates",
         "between generation and verification.",
         "",
-        "| query | shuffles | bcast joins | sortmerge | Py | partial | pushdown | codegen |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | bcast joins | sortmerge | Py | partial | pushdown |",
+        "|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         lines.append("| " + " | ".join(str(x) for x in r) + " |")

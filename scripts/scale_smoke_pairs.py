@@ -44,38 +44,22 @@ from scala_data_pipeline_spark.ext.textstats import quality_features  # noqa: E4
 from scala_data_pipeline_spark.session import get_session  # noqa: E402
 
 
-def dense_corpus(
-    spark,
-    sf_dir: str,
-    n_copies: int,
-    out_dir: str,
-    keep_cols: tuple[str, ...] = (),
-    prefix_all: bool = False,
-) -> DataFrame:
+def dense_corpus(spark, sf_dir: str, n_copies: int, out_dir: str) -> DataFrame:
     """5k docs x n_copies: copy 0 verbatim, others 'v{i} '-prefixed —
     variants of one source doc share most shingles (dense clusters).
     Written to parquet with splittable partitioning so the scan
-    parallelizes like a real multi-file corpus would.
-
-    ``keep_cols`` carries extra source columns through (e.g. lang for
-    a target predicate); ``prefix_all`` tags EVERY copy including copy
-    0 — the no-verbatim-duplicate variant the DSIR smoke wants (each
-    copy tokenizes fresh; no dedup shortcut applies)."""
+    parallelizes like a real multi-file corpus would."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     copies = spark.range(n_copies).withColumnRenamed("id", "copy")
-    tagged = F.concat(F.lit("v"), F.col("copy"), F.lit(" "), F.col("text"))
     corpus = (
         docs.crossJoin(F.broadcast(copies))
         .select(
             (F.col("doc_id") * n_copies + F.col("copy")).alias("doc_id"),
-            *keep_cols,
-            (
-                tagged
-                if prefix_all
-                else F.when(F.col("copy") == 0, F.col("text")).otherwise(
-                    tagged
-                )
-            ).alias("text"),
+            F.when(F.col("copy") == 0, F.col("text"))
+            .otherwise(
+                F.concat(F.lit("v"), F.col("copy"), F.lit(" "), F.col("text"))
+            )
+            .alias("text"),
         )
         .repartition(64)
     )

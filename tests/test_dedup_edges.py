@@ -473,3 +473,27 @@ def test_excise_seam_duplicates_need_iteration(spark):
         r.n_removed == 0
         for r in excise_duplicated_spans(third, k=3).collect()
     )  # converged
+
+
+def test_contrastive_triplets_invariants(spark, sf_dir):
+    """Over the fixture's LSH candidates: ranks run 1..per_anchor, at
+    most per_anchor triplets per anchor, positives at Jaccard >= hi,
+    negatives at <= lo, and a rerun returns the same rows."""
+    from collections import Counter
+
+    from scala_data_pipeline_spark.ext.dedup import (
+        contrastive_triplets,
+        lsh_candidate_pairs,
+    )
+    from scala_data_pipeline_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = lsh_candidate_pairs(docs).localCheckpoint()
+    rows = contrastive_triplets(docs, pairs).collect()
+    assert rows
+    assert all(1 <= r["rank"] <= 3 for r in rows)
+    assert all(r["pos_jaccard"] >= 0.5 for r in rows)
+    assert all(r["neg_jaccard"] <= 0.1 for r in rows)
+    assert max(Counter(r["anchor_id"] for r in rows).values()) <= 3
+    again = contrastive_triplets(docs, pairs).collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, rows))

@@ -152,3 +152,28 @@ def test_kcore_sql_ignores_self_loops(spark):
     finally:
         con.close()
     assert got == want == {(1, 2), (2, 2), (3, 2)}
+
+
+def test_kcore_degrees_on_lsh_graph(spark, sf_dir):
+    """On the fixture's LSH pair graph every k-core vertex keeps at
+    least k neighbours inside the core, and ``core_deg`` is exactly its
+    degree in the subgraph the core induces."""
+    from collections import Counter
+
+    from scala_data_pipeline_spark.ext.dedup import lsh_candidate_pairs
+    from scala_data_pipeline_spark.ext.graph import KCORE_K, kcore_vertices
+    from scala_data_pipeline_spark.sources import load_table
+
+    pairs = lsh_candidate_pairs(load_table(spark, sf_dir, "documents"))
+    edges = {
+        (min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b))
+        for r in pairs.collect()
+        if r.doc_a != r.doc_b
+    }
+    core = {r.doc_id: r.core_deg for r in kcore_vertices(pairs).collect()}
+    assert core
+    deg = Counter(
+        v for a, b in edges if a in core and b in core for v in (a, b)
+    )
+    assert core == dict(deg)
+    assert min(core.values()) >= KCORE_K

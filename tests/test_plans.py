@@ -45,6 +45,30 @@ def test_codegen_counted_on_the_final_plan(audits):
     assert a["codegen_stages"] >= 2
 
 
+def test_plan_shape_runs_no_job(spark, sf_dir):
+    """PLAN_AUDIT.md is written from plan_shape, which reads the plan
+    before execution and starts no job, so AQE's runtime choices cannot
+    move the file between two runs on one tree. plan_audit, which counts
+    codegen on the final plan, runs the query in the same group."""
+    from scala_data_pipeline_spark.plans.inspect import plan_shape
+
+    from .test_footer_schema import jobs_in_group
+
+    df = QUERIES["pricing_summary"](spark, sf_dir)
+    sc = spark.sparkContext
+    group = f"plan-shape-{id(df)}"
+    sc.setJobGroup(group, "plan shape")
+    try:
+        shape = plan_shape(df)
+        assert jobs_in_group(spark, group) == 0
+        assert plan_audit(df)["codegen_stages"] >= 2
+        assert jobs_in_group(spark, group) >= 1
+    finally:
+        sc._jsc.clearJobGroup()
+    assert "codegen_stages" not in shape
+    assert shape["n_shuffle_exchanges"] == 1
+
+
 def test_single_shuffle_for_simple_aggs(audits):
     """One groupBy = exactly one exchange."""
     assert audits["pricing_summary"]["n_shuffle_exchanges"] == 1

@@ -167,16 +167,6 @@ def test_k1_matches_pure_python_greedy(spark, sf_dir):
     assert dd == expect
 
 
-def test_cluster_cap_raises_in_strict_mode(spark, sf_dir):
-    """over_cap='raise' preserves the r16 abort-over-degrade posture."""
-    with pytest.raises(Exception, match="cluster_cap"):
-        semantic_dedup(
-            _corpus(spark, sf_dir), k=1, cluster_cap=10, over_cap="raise"
-        ).collect()
-    with pytest.raises(ValueError, match="over_cap"):
-        semantic_dedup(_corpus(spark, sf_dir), over_cap="abort")
-
-
 def test_over_cap_split_completes_and_holds_invariants(spark, sf_dir):
     """r16 verdict item 3 done-condition: a planted over-cap cluster
     that previously raised now dedups. k=1 + tiny cap forces the whole
@@ -206,6 +196,24 @@ def test_over_cap_split_completes_and_holds_invariants(spark, sf_dir):
         ).collect()
     }
     assert {k: tuple(v) for k, v in rows.items()} == again
+
+
+def test_planted_duplicates_dropped_after_split(spark, sf_dir):
+    """k=1 and a cap of 64 send the corpus and 20 exact copies through
+    the splitter: identical vectors share a sub-cluster, so a copy and
+    its original are never both kept."""
+    corpus = _corpus(spark, sf_dir)
+    copies = corpus.limit(20).select(
+        (F.col("vec_id") + F.lit(10**9)).alias("vec_id"),
+        "embedding",
+        "label",
+    )
+    rows = semantic_dedup(
+        corpus.unionByName(copies), k=1, eps=EPS, cluster_cap=64
+    ).collect()
+    assert len({r.cluster for r in rows}) >= 2  # the split happened
+    kept = {r.vec_id for r in rows if r.keep}
+    assert not any(v + 10**9 in kept for v in kept if v < 10**9)
 
 
 def test_over_cap_identical_points_hash_shard_fallback(spark):

@@ -467,3 +467,20 @@ def test_ivf_topk_raises_on_dim_mismatch(spark, sf_dir):
     )
     with pytest.raises(Exception, match="dim"):
         ivf_topk(indexed, model, bad, k=3, nprobe=2).collect()
+
+
+def test_ivf_topk_serves_every_query_k_rows(spark, sf_dir):
+    """A query batch whose ids lie past the corpus ids: every query is
+    served, with exactly k rows."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    model = fit_ivf(emb, k=8)
+    indexed = assign_buckets(emb, model)
+    queries = emb.filter(F.col("vec_id") < 50).select(
+        (F.col("vec_id") + F.lit(10**9)).alias("vec_id"), "embedding"
+    )
+    out = ivf_topk(indexed, model, queries, k=5, nprobe=2)
+    per_query = {
+        r["query_id"]: r["n"]
+        for r in out.groupBy("query_id").agg(F.count("*").alias("n")).collect()
+    }
+    assert per_query == {q: 5 for q in range(10**9, 10**9 + 50)}
