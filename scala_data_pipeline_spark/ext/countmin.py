@@ -23,28 +23,29 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .util import hex_int, hex_int_sql, keyed_md5
+
 CM_DEPTH = 4
 CM_WIDTH = 256
 
 
-def _slot(depth: int, key: Column) -> Column:
-    """Row-``depth`` hash slot: 8 md5 hex chars (< 2^32, fits a long,
-    non-negative) mod width — seeded per depth via the '{d}:' prefix."""
-    digest = F.md5(F.concat(F.lit(f"{depth}:"), key))
-    return F.conv(F.substring(digest, 1, 8), 16, 10).cast("long") % CM_WIDTH
+def _slot(depth: int, key_col: str) -> Column:
+    """Row-``depth`` hash slot: 8 hex digits of the key's md5 mod
+    width, seeded per depth by the '{d}:' salt."""
+    return hex_int(keyed_md5(key_col, f"{depth}:"), 8) % CM_WIDTH
 
 
 def countmin_sketch(
     df: DataFrame, key_col: str, depth: int = CM_DEPTH
 ) -> DataFrame:
     """(depth, slot, cnt) sketch table over the key column."""
-    key = F.col(key_col).cast("string")
     cells = df.select(
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(d).alias("depth"), _slot(d, key).alias("slot")
+                        F.lit(d).alias("depth"),
+                        _slot(d, key_col).alias("slot"),
                     )
                     for d in range(depth)
                 ]
@@ -62,14 +63,14 @@ def countmin_estimates(
     """Point estimates for a probe-key frame: min over depths of the
     probed cells (an unhashed cell holds 0). The sketch side is tiny
     (depth·width rows) and broadcasts."""
-    key = F.col(key_col).cast("string")
     probe_cells = probes.select(
         F.col(key_col),
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(d).alias("depth"), _slot(d, key).alias("slot")
+                        F.lit(d).alias("depth"),
+                        _slot(d, key_col).alias("slot"),
                     )
                     for d in range(depth)
                 ]
@@ -90,15 +91,13 @@ def countmin_sql(
     probe_hi: int,
     depth: int = CM_DEPTH,
 ) -> str:
-    """DuckDB twin: identical md5 slot arithmetic ('0x'-cast ≡ Spark's
-    conv(…,16,10)), probes = integer keys in [probe_lo, probe_hi]."""
+    """DuckDB twin: the same slot arithmetic, probes = integer keys
+    in [probe_lo, probe_hi]."""
     depth_list = ", ".join(str(d) for d in range(depth))
 
     def slot(d_expr: str, key: str) -> str:
-        return (
-            f"CAST(('0x' || substr(md5(CAST({d_expr} AS VARCHAR) || ':' "
-            f"|| {key}), 1, 8)) AS BIGINT) % {CM_WIDTH}"
-        )
+        digest = f"md5(CAST({d_expr} AS VARCHAR) || ':' || {key})"
+        return f"{hex_int_sql(digest, 8)} % {CM_WIDTH}"
 
     return f"""
 WITH cells AS (

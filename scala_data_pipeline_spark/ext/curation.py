@@ -30,7 +30,13 @@ from pyspark.sql import functions as F
 from ..session import local_frame
 from .dedup import shingles, shingles_sql
 from .textstats import quality_features
-from .util import fan_out
+from .util import (
+    fan_out,
+    keyed_md5,
+    keyed_md5_sql,
+    md5_uniform,
+    md5_uniform_sql,
+)
 
 
 def sample_threshold_hex(fraction: float) -> str:
@@ -52,9 +58,9 @@ def deterministic_sample(
     threshold — reproducible and engine-independent (string comparison
     on lowercase hex, no hex→int parse). ``salt`` decorrelates
     independent samples over the same keys."""
-    digest = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
     return docs.filter(
-        F.substring(digest, 1, 4) < sample_threshold_hex(fraction)
+        F.substring(keyed_md5(key_col, salt), 1, 4)
+        < sample_threshold_hex(fraction)
     )
 
 
@@ -63,7 +69,7 @@ def deterministic_sample_sql(
 ) -> str:
     """DuckDB twin of the sampling predicate (WHERE-clause fragment)."""
     return (
-        f"substr(md5('{salt}' || CAST({key_col} AS VARCHAR)), 1, 4)"
+        f"substr({keyed_md5_sql(key_col, salt)}, 1, 4)"
         f" < '{sample_threshold_hex(fraction)}'"
     )
 
@@ -106,9 +112,7 @@ def cluster_split(
         .join(comp, on="doc_id", how="left")
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))
     )
-    digest = F.md5(
-        F.concat(F.lit(salt), F.col("cluster_id").cast("string"))
-    )
+    digest = keyed_md5("cluster_id", salt)
     return labeled.withColumn(
         "split",
         F.when(F.substring(digest, 1, 4) < thr, "test").otherwise("train"),
@@ -125,24 +129,17 @@ def cluster_split_sql(
     from .components import connected_components_sql
 
     thr = sample_threshold_hex(test_fraction)
+    digest = keyed_md5_sql("COALESCE(c.cluster_id, d.doc_id)", salt)
     return f"""
 WITH comp AS (
 {connected_components_sql(pairs_sql)}
 )
 SELECT d.doc_id,
        COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-       CASE WHEN substr(md5('{salt}' ||
-                 CAST(COALESCE(c.cluster_id, d.doc_id) AS VARCHAR)), 1, 4)
-                 < '{thr}'
+       CASE WHEN substr({digest}, 1, 4) < '{thr}'
             THEN 'test' ELSE 'train' END AS split
 FROM {table} d LEFT JOIN comp c ON d.doc_id = c.doc_id
 """
-
-
-# 16^13 = 2^52: thirteen md5 hex chars parse to an integer that a
-# double represents EXACTLY, so u = (v+1)/2^52 is the same double in
-# every engine.
-_U52 = 16**13
 
 
 def weighted_sample(
@@ -154,10 +151,10 @@ def weighted_sample(
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement — the
     Efraimidis-Spirakis A-ES scheme with the random draw replaced by the
-    house md5-uniform: u = (md5(salt||key)[:13 hex] + 1) / 2^52 ∈ (0,1],
-    priority = -ln(u)/w, keep the n smallest. P[selected] scales with
-    weight w (quality-weighted corpus subsampling, importance-weighted
-    eval picks), the draw is reproducible and engine-independent, and
+    house md5-uniform u of (salt, key), priority = -ln(u)/w, keep the n
+    smallest. P[selected] scales with weight w (quality-weighted corpus
+    subsampling, importance-weighted eval picks), the draw is
+    reproducible and engine-independent, and
     a different ``salt`` yields an independent sample over the same
     keys. Zero/negative-weight rows are outside the A-ES domain and are
     excluded (loudly documented rather than silently kept).
@@ -170,10 +167,7 @@ def weighted_sample(
     hash agree unless a value lands exactly on a rounding boundary —
     the same exactness class as text_bm25's oracle.
     """
-    digest = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
-    u = (F.conv(F.substring(digest, 1, 13), 16, 10).cast("long") + 1) / F.lit(
-        float(_U52)
-    )
+    u = md5_uniform(keyed_md5(key_col, salt))
     w = F.col(weight_col).cast("double")
     score = F.round(-F.log(u) / w, 6)
     return (
@@ -195,11 +189,9 @@ def weighted_sample_sql(
     salt: str = "",
     table: str = "documents",
 ) -> str:
-    """DuckDB twin of :func:`weighted_sample` — identical md5→uniform
-    mapping (hex-literal cast ≡ Spark's conv(…,16,10)) and identical
-    double ops in identical order."""
-    digest = f"md5('{salt}' || CAST({key_col} AS VARCHAR))"
-    u = f"(CAST(concat('0x', substr({digest}, 1, 13)) AS BIGINT) + 1) / {float(_U52)!r}"
+    """DuckDB twin of :func:`weighted_sample` — the same uniform and
+    the same double ops in the same order."""
+    u = md5_uniform_sql(keyed_md5_sql(key_col, salt))
     return f"""
 SELECT {key_col},
        CAST({weight_col} AS BIGINT) AS weight,
@@ -269,9 +261,7 @@ def stratified_sample(
     Same md5-threshold mechanism as :func:`deterministic_sample` —
     reproducible, engine-independent, a pure scan predicate (no shuffle,
     no per-stratum passes)."""
-    digest = F.substring(
-        F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), 1, 4
-    )
+    digest = F.substring(keyed_md5(key_col, salt), 1, 4)
     thr = F.lit(sample_threshold_hex(default))
     for stratum, frac in sorted(fractions.items()):
         thr = F.when(
@@ -293,9 +283,7 @@ def stratified_sample_sql(
         for s, f in sorted(fractions.items())
     )
     thr = f"CASE {strata_col} {cases} ELSE '{sample_threshold_hex(default)}' END"
-    return (
-        f"substr(md5('{salt}' || CAST({key_col} AS VARCHAR)), 1, 4) < {thr}"
-    )
+    return f"substr({keyed_md5_sql(key_col, salt)}, 1, 4) < {thr}"
 
 
 # PII patterns (RE2/Java-compatible subset; identical semantics in
@@ -472,9 +460,7 @@ def mixture_sample(
         )
         .select(strata_col, "n_s", "thr")
     )
-    digest = F.substring(
-        F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), 1, 4
-    )
+    digest = F.substring(keyed_md5(key_col, salt), 1, 4)
     return (
         docs.join(F.broadcast(rates), on=strata_col)
         .filter(digest < F.col("thr"))
@@ -511,7 +497,7 @@ WITH counts AS (
 )
 SELECT d.{key_col}, d.{strata_col}
 FROM {table} d JOIN thresholds t USING ({strata_col})
-WHERE substr(md5('{salt}' || CAST(d.{key_col} AS VARCHAR)), 1, 4) < t.thr
+WHERE substr({keyed_md5_sql(f"d.{key_col}", salt)}, 1, 4) < t.thr
 """
 
 
@@ -529,7 +515,7 @@ def training_shuffle(
     without a global sort: one shuffle on the shard key, per-shard
     ranking, each shard written independently. Re-salt to re-shuffle
     between epochs."""
-    digest = F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")))
+    digest = keyed_md5(key_col, salt)
     w = Window.partitionBy("shard").orderBy("digest", key_col)
     return (
         docs.select(
@@ -552,7 +538,7 @@ def training_shuffle_sql(
     return f"""
 WITH hashed AS (
   SELECT {key_col},
-         md5('{salt}' || CAST({key_col} AS VARCHAR)) AS digest
+         {keyed_md5_sql(key_col, salt)} AS digest
   FROM {table}
 )
 SELECT {key_col},
@@ -628,9 +614,7 @@ def epoch_oversample(
         _epoch_rate_rows(rates),
         f"{strata_col} string, n_full bigint, thr string",
     )
-    digest = F.substring(
-        F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string"))), 1, 4
-    )
+    digest = F.substring(keyed_md5(key_col, salt), 1, 4)
     n_copies = F.col("n_full") + F.when(digest < F.col("thr"), 1).otherwise(0)
     return (
         docs.join(F.broadcast(rates_df), on=strata_col)
@@ -670,7 +654,7 @@ WITH rates({strata_col}, n_full, thr) AS (VALUES {values}),
 j AS (
   SELECT d.{key_col}, d.{strata_col},
          r.n_full + (CASE WHEN substr(
-             md5('{salt}' || CAST(d.{key_col} AS VARCHAR)), 1, 4) < r.thr
+             {keyed_md5_sql(f"d.{key_col}", salt)}, 1, 4) < r.thr
              THEN 1 ELSE 0 END) AS n_copies
   FROM {table} d JOIN rates r USING ({strata_col})
 )

@@ -219,6 +219,40 @@ def lsh_candidate_pairs(
     )
 
 
+def _lsh_bucketed_sql(text_col: str, table: str) -> str:
+    """The CTEs both MinHash-LSH twins share, ending in ``bucketed``:
+    one row per (doc_id, band, bucket) with the bucket's size ``bsz``
+    and smallest member ``keeper``, the inputs of the cap's keeper
+    star."""
+    mh_cols = ",\n      ".join(
+        f"MIN(substr(md5(shingle), {4 * i + 1}, 4)) AS mh_{i}"
+        for i in range(N_HASHES)
+    )
+    band_rows = " UNION ALL ".join(
+        "SELECT doc_id, {band} AS band, md5({expr}) AS bucket FROM sig".format(
+            band=b,
+            expr=" || '|' || ".join(
+                f"mh_{b * BAND_SIZE + j}" for j in range(BAND_SIZE)
+            ),
+        )
+        for b in range(N_HASHES // BAND_SIZE)
+    )
+    return f"""exploded AS (
+  SELECT doc_id, unnest({shingles_sql(text_col)}) AS shingle FROM {table}
+), sig AS (
+  SELECT doc_id,
+      {mh_cols}
+  FROM exploded GROUP BY doc_id
+), buckets AS (
+  {band_rows}
+), bucketed AS (
+  SELECT doc_id, band, bucket,
+         COUNT(*) OVER (PARTITION BY band, bucket) AS bsz,
+         MIN(doc_id) OVER (PARTITION BY band, bucket) AS keeper
+  FROM buckets
+)"""
+
+
 def minhash_lsh_sql(
     text_col: str = "text",
     table: str = "documents",
@@ -234,34 +268,8 @@ def minhash_lsh_sql(
     (components, pagerank, triangles, kcore, cluster_split,
     contrastive_triplets, …) inherits the replay.
     """
-    mh_cols = ",\n      ".join(
-        f"MIN(substr(md5(shingle), {4 * i + 1}, 4)) AS mh_{i}"
-        for i in range(N_HASHES)
-    )
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {band} AS band, md5({expr}) AS bucket FROM sig".format(
-            band=b,
-            expr=" || '|' || ".join(
-                f"mh_{b * BAND_SIZE + j}" for j in range(BAND_SIZE)
-            ),
-        )
-        for b in range(N_HASHES // BAND_SIZE)
-    )
     return f"""
-WITH exploded AS (
-  SELECT doc_id, unnest({shingles_sql(text_col)}) AS shingle FROM {table}
-), sig AS (
-  SELECT doc_id,
-      {mh_cols}
-  FROM exploded GROUP BY doc_id
-), buckets AS (
-  {band_rows}
-), bucketed AS (
-  SELECT doc_id, band, bucket,
-         COUNT(*) OVER (PARTITION BY band, bucket) AS bsz,
-         MIN(doc_id) OVER (PARTITION BY band, bucket) AS keeper
-  FROM buckets
-)
+WITH {_lsh_bucketed_sql(text_col, table)}
 -- full clique for buckets within the cap, keeper star above it
 -- (a.doc_id < b.doc_id makes the keeper always the a side):
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1947,40 +1955,20 @@ def lsh_incremental_pairs(
 def lsh_incremental_sql(
     new_pred_sql: str, text_col: str = "text", table: str = "documents"
 ) -> str:
-    """DuckDB twin (uncapped, same convention as :func:`minhash_lsh_sql`):
-    full-corpus band buckets, pairs where either side satisfies
-    ``new_pred_sql`` (a boolean SQL expression over ``{table}``
-    columns)."""
-    mh_cols = ",\n      ".join(
-        f"MIN(substr(md5(shingle), {4 * i + 1}, 4)) AS mh_{i}"
-        for i in range(N_HASHES)
-    )
-    band_rows = " UNION ALL ".join(
-        "SELECT doc_id, {band} AS band, md5({expr}) AS bucket FROM sig".format(
-            band=b,
-            expr=" || '|' || ".join(
-                f"mh_{b * BAND_SIZE + j}" for j in range(BAND_SIZE)
-            ),
-        )
-        for b in range(N_HASHES // BAND_SIZE)
-    )
+    """DuckDB twin of :func:`lsh_incremental_pairs`: full-corpus band
+    buckets, pairs where either side satisfies ``new_pred_sql`` (a
+    boolean SQL expression over ``{table}`` columns), with the same
+    ``LSH_BUCKET_CAP`` keeper star as :func:`minhash_lsh_sql`."""
     return f"""
-WITH exploded AS (
-  SELECT doc_id, unnest({shingles_sql(text_col)}) AS shingle FROM {table}
-), sig AS (
-  SELECT doc_id,
-      {mh_cols}
-  FROM exploded GROUP BY doc_id
-), buckets AS (
-  {band_rows}
-), flags AS (
+WITH {_lsh_bucketed_sql(text_col, table)}, flags AS (
   SELECT doc_id, ({new_pred_sql}) AS is_new FROM {table}
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM buckets a
-JOIN buckets b ON a.band = b.band AND a.bucket = b.bucket
-              AND a.doc_id < b.doc_id
+FROM bucketed a
+JOIN bucketed b ON a.band = b.band AND a.bucket = b.bucket
+               AND a.doc_id < b.doc_id
 JOIN flags fa ON fa.doc_id = a.doc_id
 JOIN flags fb ON fb.doc_id = b.doc_id
-WHERE fa.is_new OR fb.is_new
+WHERE (fa.is_new OR fb.is_new)
+  AND (a.bsz <= {LSH_BUCKET_CAP} OR a.doc_id = a.keeper)
 """

@@ -23,11 +23,10 @@ Spark shape — the canonical two-pass fit-then-apply:
    an accident.
 
 Cross-engine determinism (every piece has an in-repo precedent):
-token→bucket is md5-hex→int (``countmin`` precedent, no engine-native
-hash mismatch); per-bucket log ratios are rounded to 8dp; per-token
-contributions sum as DECIMAL(18,8) — exact, order-independent
-(``text_source_divergence`` precedent); the Gumbel key derives from
-md5(doc_id) exactly like ``weighted_sample``'s A-ES priority. The
+token→bucket and the Gumbel draw come from the md5 helpers in
+``ext/util`` (no engine-native hash mismatch); per-bucket log ratios
+are rounded to 8dp; per-token contributions sum as DECIMAL(18,8) —
+exact, order-independent (``text_source_divergence`` precedent). The
 whole operator therefore carries a full DuckDB oracle twin — no
 rows-only concession.
 """
@@ -38,25 +37,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .textstats import tokens_col
+from .util import (
+    hex_int,
+    hex_int_sql,
+    keyed_md5,
+    keyed_md5_sql,
+    md5_uniform,
+    md5_uniform_sql,
+)
 
 N_BUCKETS = 4096
-_U52 = 16**13 + 1  # md5 13-hex-digit prefix → uniform (0, 1)
 
 
 def _bucket(token: Column, n_buckets: int) -> Column:
-    """Hashed-vocabulary bucket: md5 first 8 hex digits → long → mod.
-    Engine-portable (DuckDB computes the identical bytes)."""
-    return (
-        F.conv(F.substring(F.md5(token), 1, 8), 16, 10).cast("long")
-        % n_buckets
-    )
+    """Hashed-vocabulary bucket: md5's first 8 hex digits mod
+    ``n_buckets``."""
+    return hex_int(F.md5(token), 8) % n_buckets
 
 
 def _bucket_sql(token_expr: str, n_buckets: int) -> str:
-    return (
-        f"CAST(concat('0x', substr(md5({token_expr}), 1, 8)) AS BIGINT)"
-        f" % {n_buckets}"
-    )
+    return f"{hex_int_sql(f'md5({token_expr})', 8)} % {n_buckets}"
 
 
 def dsir_weights(
@@ -202,10 +202,7 @@ def dsir_sample(
     Gumbel noise is a pure function of doc_id and salt). Returns the k
     selected docs with their weights and keys."""
     w = dsir_weights(docs, target, n_buckets=n_buckets, text_col=text_col)
-    digest = F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
-    u = (
-        F.conv(F.substring(digest, 1, 13), 16, 10).cast("long") + 1
-    ) / F.lit(float(_U52))
+    u = md5_uniform(keyed_md5("doc_id", salt))
     gumbel = F.round(-F.log(-F.log(u)), 6)
     return (
         w.withColumn(
@@ -226,11 +223,7 @@ def dsir_sample_sql(
     table: str = "documents",
     salt: str = "dsir",
 ) -> str:
-    digest = f"md5('{salt}' || CAST(w.doc_id AS VARCHAR))"
-    u = (
-        f"(CAST(concat('0x', substr({digest}, 1, 13)) AS BIGINT) + 1)"
-        f" / {float(_U52)!r}"
-    )
+    u = md5_uniform_sql(keyed_md5_sql("w.doc_id", salt))
     inner = dsir_weights_sql(
         target_pred, n_buckets=n_buckets, text_expr=text_expr, table=table
     )

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from ..session import local_frame
 from .ivf import assign_buckets, fit_ivf
 from .similarity import prep_vectors
+from .util import hex_int
 
 DEFAULT_EPS = 0.05
 DEFAULT_CLUSTER_CAP = 65536
@@ -217,24 +218,14 @@ def _split_over_cap(
                 n_shards = max(2, math.ceil(n / hash_target)) * (
                     2**hash_round
                 )
-                shard = F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    ":",
-                                    F.col("vec_id").cast("string"),
-                                    F.lit(str(hash_round)),
-                                )
-                            ),
-                            1,
-                            13,
-                        ),
-                        16,
-                        10,
-                    ).cast("long"),
-                    F.lit(n_shards),
+                digest = F.md5(
+                    F.concat_ws(
+                        ":",
+                        F.col("vec_id").cast("string"),
+                        F.lit(str(hash_round)),
+                    )
                 )
+                shard = F.pmod(hex_int(digest, 13), F.lit(n_shards))
                 pieces.append(
                     sub.withColumn(
                         "cluster", (shard + F.lit(base)).cast("int")

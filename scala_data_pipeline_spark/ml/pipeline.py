@@ -12,8 +12,12 @@ pipeline, because IndexToString needs the label array at construction
 time (train.scala:43-46); reproduced here.
 
 Determinism (SURVEY.md §7.5 risk 7): the token array is sorted before
-vectorizing and input rows are pre-sorted by the id column, which pins
-CountVectorizer's vocabulary and the training order.
+vectorizing and input rows are pre-sorted by the id column. That does
+not pin the fitted model: CountVectorizer orders its vocabulary by term
+count, most terms share their count with another, and tied terms follow
+row arrival. Two fits of the same frame can therefore differ in
+vocabulary order and coefficients. ``train_model_hashed`` has no
+vocabulary.
 """
 
 from __future__ import annotations
@@ -60,8 +64,7 @@ def prepare_training_frame(
     class once the corpus is large enough to wash out sampling noise
     (the sf0.1 all-"en" matrix round 3 flagged). Bigrams restore a
     majority-diagonal confusion matrix at every SF. The combined array
-    is sorted AFTER bigram construction, so determinism (fixed
-    CountVectorizer vocabulary order) is preserved without destroying
+    is sorted AFTER bigram construction, so the sort does not destroy
     adjacency information.
     """
     return docs.select(
@@ -124,10 +127,10 @@ def train_model(train_df: DataFrame, vocab_size: int = 1000) -> PipelineModel:
     """Fit the pipeline on one eager ``localCheckpoint`` of ``train_df``:
     the StringIndexer fit, the CountVectorizer fit and LR's passes then
     read the materialized rows instead of each re-running the frame's
-    token building and global sort. The model equals a fit on
-    ``train_df`` itself. Not ``persist()``: fits on a cached frame changed
-    the vocabulary order (CountVectorizer orders tied counts as it meets
-    the rows), and so the coefficients, from run to run."""
+    token building and global sort. The fit is not pinned: CountVectorizer
+    orders tied term counts as it meets the rows, so repeated fits of the
+    same frame can order the vocabulary, and so the coefficients,
+    differently."""
     frame = train_df.localCheckpoint()
     return _strip_lr_summary(build_pipeline(frame, vocab_size).fit(frame))
 

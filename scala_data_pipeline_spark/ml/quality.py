@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..ext.textstats import gopher_quality_rules
+from ..ext.util import keyed_md5, md5_uniform
 from .pipeline import _strip_lr_summary, uni_bigram_tokens
 
 
@@ -107,19 +108,14 @@ def quality_classifier_scores(
     return score_quality(model, docs, text_col)
 
 
-# The house md5-uniform granularity (matches ext/curation.py): 13 hex
-# digits = 52 bits, exact in a double.
-_U52 = float(2**52)
-
-
 def pareto_filter(
     scored: DataFrame, alpha: float = 9.0, salt: str = ""
 ) -> DataFrame:
     """GPT-3's published acceptance rule over classifier scores — keep a
     document iff ``score > 1 - x`` with ``x ~ Pareto(alpha)`` — made
     deterministic: the Pareto draw comes from the inverse transform
-    ``x = (1-u)^(-1/alpha) - 1`` over the house md5-uniform
-    ``u = (md5(salt||doc_id)[:13 hex] + 1) / 2^52``. High scorers are
+    ``x = (1-u)^(-1/alpha) - 1`` over the house md5-uniform ``u`` of
+    (salt, doc_id) (``ext.util.md5_uniform``). High scorers are
     (almost) always kept; low scorers survive with polynomially-decaying
     probability — deliberately preserving a long tail of lower-scoring
     documents for diversity, exactly the published behavior, but
@@ -130,9 +126,6 @@ def pareto_filter(
     filter composes with a pushed-down scan when ``scored`` is a stored
     score table.
     """
-    digest = F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string")))
-    u = (F.conv(F.substring(digest, 1, 13), 16, 10).cast("long") + 1) / F.lit(
-        _U52
-    )
+    u = md5_uniform(keyed_md5("doc_id", salt))
     x = F.pow(F.lit(1.0) - u, F.lit(-1.0 / alpha)) - F.lit(1.0)
     return scored.filter(F.col("p_quality") > F.lit(1.0) - x)

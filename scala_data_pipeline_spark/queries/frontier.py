@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..ext.util import fan_out, hex_int, hex_int_sql
 from ..functions.numeric import dsum, dsum_sql
 from ..sources import load_table
 
@@ -375,25 +376,27 @@ def orders_row_hash():
             )
         ],
     )
-    return F.conv(F.substring(F.md5(ser), 1, 14), 16, 10).cast(
-        "decimal(38,0)"
-    )
+    return hex_int(F.md5(ser), 14).cast("decimal(38,0)")
 
+
+_FINGERPRINT_SER_SQL = " || '|' || ".join(
+    f"COALESCE({c}, '{_NULL_SENTINEL}')"
+    for c in (
+        "CAST(o_orderkey AS VARCHAR)",
+        "CAST(o_custkey AS VARCHAR)",
+        "o_orderstatus",
+        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR)",
+        "CAST(CAST(o_orderdate AS DATE) AS VARCHAR)",
+        "o_orderpriority",
+    )
+)
 
 TABLE_FINGERPRINT_ORACLE = f"""
 SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(CAST(SUM(h) AS DECIMAL(38,0)) AS VARCHAR) AS fingerprint
 FROM (
-  SELECT CAST(('0x' || substr(md5(
-           COALESCE(CAST(o_orderkey AS VARCHAR), '{_NULL_SENTINEL}') || '|' ||
-           COALESCE(CAST(o_custkey AS VARCHAR), '{_NULL_SENTINEL}') || '|' ||
-           COALESCE(o_orderstatus, '{_NULL_SENTINEL}') || '|' ||
-           COALESCE(CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS VARCHAR),
-                    '{_NULL_SENTINEL}') || '|' ||
-           COALESCE(CAST(CAST(o_orderdate AS DATE) AS VARCHAR),
-                    '{_NULL_SENTINEL}') || '|' ||
-           COALESCE(o_orderpriority, '{_NULL_SENTINEL}')
-         ), 1, 14))::BIGINT AS DECIMAL(38,0)) AS h
+  SELECT CAST({hex_int_sql(f"md5({_FINGERPRINT_SER_SQL})", 14)}
+              AS DECIMAL(38,0)) AS h
   FROM orders
 )
 """
@@ -436,8 +439,6 @@ def name_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle so parity stays total. See NAME_BLOCK_LEN above for why the
     prefix length governs whether the pair space is linear at 100 TB.
     """
-    from ..ext.util import fan_out
-
     # fan_out (r17): the small dim broadcasts, so the join's
     # parallelism is the PROBE side's scan partitioning — a single-file
     # customer scan ran all block-pair DPs on one task (measured 15.6 s

@@ -10,6 +10,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..ext.util import (
+    fan_out,
+    keyed_md5,
+    keyed_md5_sql,
+    md5_uniform,
+    md5_uniform_sql,
+)
 from ..functions.numeric import dsum, dsum_sql
 from ..sources import load_table
 
@@ -829,7 +836,6 @@ _POIS1_CDF = (
     0.9999167588507119,
     0.9999897508033253,
 )
-_U52F = float(16**13)  # the house 52-bit md5-uniform granularity
 
 
 def _pois1_draw(u):
@@ -875,8 +881,6 @@ def poisson_bootstrap_ci(
     the final mean and percentile interpolation are float, computed
     identically in both engines.
     """
-    from ..ext.util import fan_out
-
     # fan_out: a single-row-group scan would run the whole
     # (rows x n_boot) explode + md5 pipeline on ONE task — measured
     # 30.9 s for 150k x 100 at sf0.1; parallel + the _u fix below it
@@ -888,11 +892,8 @@ def poisson_bootstrap_ci(
         F.col(value_col).cast("decimal(18,2)").alias("_v"),
         b,
     )
-    digest = F.md5(
-        F.concat(F.lit(salt), F.col("_k"), F.lit(":"), F.col("b").cast("string"))
-    )
-    u = (F.conv(F.substring(digest, 1, 13), 16, 10).cast("long") + 1) / F.lit(
-        _U52F
+    u = md5_uniform(
+        keyed_md5(F.concat("_k", F.lit(":"), F.col("b").cast("string")), salt)
     )
     # Materialize the md5-uniform ONCE per row in a projection: inlining
     # ``u`` into the 9-branch Poisson CASE chain re-evaluates the
@@ -935,10 +936,10 @@ def _bootstrap_ci_sql(
     # salt is threaded (not hardcoded '') so a future registration of a
     # non-default-salt poisson_bootstrap_ci variant stays oracled —
     # mirroring simhash_neardup_sql's bits/block parameterization.
-    u = (
-        f"(CAST(concat('0x', substr(md5(concat({salt!r}, CAST(o_orderkey AS"
-        " VARCHAR), ':', CAST(t.b AS VARCHAR))), 1, 13)) AS BIGINT) + 1)"
-        f" / {_U52F!r}"
+    u = md5_uniform_sql(
+        keyed_md5_sql(
+            "CAST(o_orderkey AS VARCHAR) || ':' || CAST(t.b AS VARCHAR)", salt
+        )
     )
     lo, hi = alpha / 2, 1 - alpha / 2
     return f"""

@@ -352,6 +352,59 @@ def test_minhash_lsh_sql_replays_bucket_cap(spark):
     assert got == want
 
 
+
+def test_lsh_incremental_sql_replays_bucket_cap(spark, tmp_path):
+    """More than LSH_BUCKET_CAP near-identical documents, some of them
+    new, share band buckets: the twin must replay the Spark keeper star
+    above the cap, not the full clique."""
+    import duckdb
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from scala_data_pipeline_spark.ext.dedup import (
+        LSH_BUCKET_CAP,
+        lsh_incremental_pairs,
+        lsh_incremental_sql,
+    )
+
+    base = "error page not found please try again later or contact support"
+    n = LSH_BUCKET_CAP + 16
+    rows = pd.DataFrame(
+        {
+            "doc_id": range(n),
+            "text": [f"{base} ref {i % 5}" for i in range(n)],
+            "source": ["new" if i % 3 == 1 else "old" for i in range(n)],
+        }
+    )
+    path = str(tmp_path / "documents.parquet")
+    rows.to_parquet(path)
+
+    docs = spark.read.parquet(path)
+    is_new = F.col("source") == "new"
+
+    def spark_pairs(cap):
+        return {
+            (r.doc_a, r.doc_b)
+            for r in lsh_incremental_pairs(
+                docs.filter(~is_new), docs.filter(is_new), bucket_cap=cap
+            ).collect()
+        }
+
+    got = spark_pairs(LSH_BUCKET_CAP)
+    assert got != spark_pairs(10**9)  # the cap binds on this fixture
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+        want = {
+            tuple(r)
+            for r in con.execute(
+                lsh_incremental_sql("source = 'new'")
+            ).fetchall()
+        }
+    finally:
+        con.close()
+    assert got == want
+
 def test_contrastive_triplets_parity_on_edge_docs(spark):
     """Round-6 advisor finding: the SQL twin's inner sizes join dropped
     pairs involving degenerate docs. Feed explicit candidates over

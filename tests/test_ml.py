@@ -209,7 +209,7 @@ def test_pareto_filter_matches_python_reference(spark):
 
     def py_keep(doc_id, p, alpha=9.0, salt=""):
         h = hashlib.md5(f"{salt}{doc_id}".encode()).hexdigest()
-        u = (int(h[:13], 16) + 1) / 2.0**52
+        u = (int(h[:13], 16) + 1) / (2.0**52 + 1)
         x = (1.0 - u) ** (-1.0 / alpha) - 1.0
         return p > 1.0 - x
 
