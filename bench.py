@@ -7,7 +7,7 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 The stdout line carries ONLY those five contract keys, compactly
 serialized: the driver records a bounded stdout tail, and the full
 line must fit inside it. The complete artifact — raw reps, spread,
-extras, semantics flags, the cores used — goes to $SPARK_GRAFT_BENCH_OUT.
+semantics flags, the cores used — goes to $SPARK_GRAFT_BENCH_OUT.
 
 ``run`` is the rep protocol; ``scripts/drive.py time`` uses it for
 named queries.
@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scala_data_pipeline_spark.queries import all_queries, extra_queries  # noqa: E402
+from scala_data_pipeline_spark.queries import all_queries  # noqa: E402
 from scala_data_pipeline_spark.session import (  # noqa: E402
     HITS,
     MISSES,
@@ -76,23 +76,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     queries = all_queries()
-    # Named extras ($SPARK_GRAFT_BENCH_EXTRAS="a,b") ride along without
-    # taking driver correctness slots; they stay out of the total.
-    extra_names = [
-        n
-        for n in os.environ.get("SPARK_GRAFT_BENCH_EXTRAS", "").split(",")
-        if n
-    ]
-    if extra_names:
-        eq = extra_queries()
-        unknown = [n for n in extra_names if n not in eq]
-        if unknown:
-            raise SystemExit(
-                f"SPARK_GRAFT_BENCH_EXTRAS names not in extra_queries():"
-                f" {unknown} (did a rotation rename them?)"
-            )
-        for n in extra_names:
-            queries[n] = eq[n]
     names = [n for n in HEADLINE if n in queries]
     names += [n for n in sorted(queries) if n not in names]
 
@@ -102,9 +85,7 @@ def main() -> None:
     cold = os.environ.get("SPARK_GRAFT_BENCH_COLD", "") == "1"
     runs, memoized, compiles = run(names, queries, sf_dir, cold)
     timings = {n: min(r) for n, r in runs.items()}
-    total = round(
-        sum(t for n, t in timings.items() if n not in extra_names), 3
-    )
+    total = round(sum(timings.values()), 3)
     # How noisy was this reading: max over queries of (max-min)/min.
     spread_pct = round(
         100.0
@@ -136,8 +117,6 @@ def main() -> None:
         "codegen_compiles": compiles,
         "max_spread_pct": spread_pct,
         "spread_floor_sec": SPREAD_FLOOR_SEC,
-        # queries that rode along via SPARK_GRAFT_BENCH_EXTRAS
-        "extras": extra_names,
         # local[cpus] and the shuffle partitions the session ran with
         "cpus": default_parallelism(),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

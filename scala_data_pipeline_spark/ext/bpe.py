@@ -63,11 +63,11 @@ N_MERGES = 10
 VOCAB_CAP = 1_000_000
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """Distributed word-frequency aggregate — the only corpus-sized
     step of BPE training (one explode + one shuffle)."""
     return (
-        docs.select(F.explode(tokens_col(F.col(text_col))).alias("word"))
+        docs.select(F.explode(tokens_col(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
@@ -121,7 +121,6 @@ def train_merges(
 def bpe_train(
     docs: DataFrame,
     n_merges: int = N_MERGES,
-    text_col: str = "text",
     min_count: int = 1,
     vocab_cap: int = VOCAB_CAP,
 ) -> DataFrame:
@@ -134,7 +133,7 @@ def bpe_train(
     are collected via a distributed top-K.  See the ``VOCAB_CAP`` note
     for the (bounded, documented) effect on merge selection.
     """
-    wc = word_counts(docs, text_col)
+    wc = word_counts(docs)
     if min_count > 1:
         wc = wc.where(F.col("n") >= F.lit(int(min_count)))
     vocab = [
@@ -158,9 +157,7 @@ def bpe_train(
 
 
 def bpe_apply(
-    docs: DataFrame,
-    merges: list[tuple[str, str, int]],
-    text_col: str = "text",
+    docs: DataFrame, merges: list[tuple[str, str, int]]
 ) -> DataFrame:
     """Tokenize with the learned merges: per-word greedy application in
     merge-priority order, Arrow-batched. Returns
@@ -190,7 +187,7 @@ def bpe_apply(
 
         for pdf in batches:
             rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 # NULL text tokenizes to zero words (round-13 review:
                 # .split on None crashed the task; the JVM token paths
                 # treat NULL as empty).
@@ -206,4 +203,4 @@ def bpe_apply(
                 columns=["doc_id", "n_words", "n_bpe_tokens", "tokens_head"],
             )
 
-    return docs.select("doc_id", text_col).mapInPandas(tokenize, schema)
+    return docs.select("doc_id", "text").mapInPandas(tokenize, schema)

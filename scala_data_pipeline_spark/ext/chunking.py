@@ -32,13 +32,10 @@ STRIDE = 24
 
 
 def chunk_documents(
-    docs: DataFrame,
-    text_col: str = "text",
-    window: int = WINDOW,
-    stride: int = STRIDE,
+    docs: DataFrame, window: int = WINDOW, stride: int = STRIDE
 ) -> DataFrame:
     """(doc_id, chunk_idx, chunk, n_tokens) — one row per token window."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
+    toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
     n = F.size(toks)
     starts = F.sequence(
         F.lit(1), F.greatest(n - window + 1, F.lit(1)), F.lit(stride)
@@ -54,35 +51,25 @@ def chunk_documents(
     )
 
 
-def chunk_documents_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    window: int = WINDOW,
-    stride: int = STRIDE,
-) -> str:
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+def chunk_documents_sql(table: str = "documents") -> str:
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     return f"""
 WITH t AS (
   SELECT doc_id, {toks} AS toks FROM {table}
 ), s AS (
   SELECT doc_id, toks,
-         unnest(range(1, greatest(len(toks) - {window} + 1, 1) + 1, {stride})) AS st
+         unnest(range(1, greatest(len(toks) - {WINDOW} + 1, 1) + 1, {STRIDE})) AS st
   FROM t
 )
 SELECT doc_id,
-       CAST((st - 1) // {stride} AS INT) AS chunk_idx,
-       array_to_string(list_slice(toks, st, st + {window} - 1), ' ') AS chunk,
-       CAST(len(list_slice(toks, st, st + {window} - 1)) AS BIGINT) AS n_tokens
+       CAST((st - 1) // {STRIDE} AS INT) AS chunk_idx,
+       array_to_string(list_slice(toks, st, st + {WINDOW} - 1), ' ') AS chunk,
+       CAST(len(list_slice(toks, st, st + {WINDOW} - 1)) AS BIGINT) AS n_tokens
 FROM s
 """
 
 
-def pack_sequences(
-    docs: DataFrame,
-    text_col: str = "text",
-    budget: int = 512,
-    shard_col: str = "source",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:
     """Sequence packing: assign documents to fixed token-budget bins
     (training sequences are built by concatenating each bin's docs).
 
@@ -93,7 +80,7 @@ def pack_sequences(
     one document (standard greedy packing; long docs should be chunked
     first — see :func:`chunk_documents`).
 
-    Scale: packing is windowed WITHIN a shard (``shard_col``), so the
+    Scale: packing is windowed WITHIN a shard (``source``), so the
     sort is per-partition-group, not global — shards pack in parallel
     and no single task sees the corpus. A global (unsharded) pack would
     be a single-partition window: the anti-pattern this signature
@@ -101,36 +88,31 @@ def pack_sequences(
     """
     from pyspark.sql import Window
 
-    n_tokens = F.size(F.filter(F.split(F.col(text_col), " "), lambda t: t != ""))
+    n_tokens = F.size(F.filter(F.split(F.col("text"), " "), lambda t: t != ""))
     w = (
-        Window.partitionBy(shard_col)
+        Window.partitionBy("source")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = F.sum(n_tokens).over(w)
     return docs.select(
         "doc_id",
-        F.col(shard_col).alias("shard"),
+        F.col("source").alias("shard"),
         n_tokens.cast("long").alias("n_tokens"),
         F.floor((cum - n_tokens) / budget).cast("long").alias("bin_id"),
     )
 
 
-def pack_sequences_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    budget: int = 512,
-    shard_col: str = "source",
-) -> str:
-    n = f"len(list_filter(string_split({text_col}, ' '), t -> t <> ''))"
+def pack_sequences_sql(table: str = "documents") -> str:
+    n = "len(list_filter(string_split(text, ' '), t -> t <> ''))"
     return f"""
 SELECT doc_id,
-       {shard_col} AS shard,
+       source AS shard,
        CAST({n} AS BIGINT) AS n_tokens,
        CAST(floor(CAST(SUM({n}) OVER (
-           PARTITION BY {shard_col} ORDER BY doc_id
+           PARTITION BY source ORDER BY doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) - {n} AS DOUBLE) / {budget}) AS BIGINT) AS bin_id
+         ) - {n} AS DOUBLE) / 512) AS BIGINT) AS bin_id
 FROM {table}
 """
 

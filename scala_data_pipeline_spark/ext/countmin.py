@@ -35,9 +35,7 @@ def _slot(depth: int, key_col: str) -> Column:
     return hex_int(keyed_md5(key_col, f"{depth}:"), 8) % CM_WIDTH
 
 
-def countmin_sketch(
-    df: DataFrame, key_col: str, depth: int = CM_DEPTH
-) -> DataFrame:
+def countmin_sketch(df: DataFrame, key_col: str) -> DataFrame:
     """(depth, slot, cnt) sketch table over the key column."""
     cells = df.select(
         F.explode(
@@ -47,7 +45,7 @@ def countmin_sketch(
                         F.lit(d).alias("depth"),
                         _slot(d, key_col).alias("slot"),
                     )
-                    for d in range(depth)
+                    for d in range(CM_DEPTH)
                 ]
             )
         ).alias("c")
@@ -58,7 +56,7 @@ def countmin_sketch(
 
 
 def countmin_estimates(
-    sketch: DataFrame, probes: DataFrame, key_col: str, depth: int = CM_DEPTH
+    sketch: DataFrame, probes: DataFrame, key_col: str
 ) -> DataFrame:
     """Point estimates for a probe-key frame: min over depths of the
     probed cells (an unhashed cell holds 0). The sketch side is tiny
@@ -72,7 +70,7 @@ def countmin_estimates(
                         F.lit(d).alias("depth"),
                         _slot(d, key_col).alias("slot"),
                     )
-                    for d in range(depth)
+                    for d in range(CM_DEPTH)
                 ]
             )
         ).alias("c"),
@@ -85,15 +83,11 @@ def countmin_estimates(
 
 
 def countmin_sql(
-    key_expr: str,
-    table: str,
-    probe_lo: int,
-    probe_hi: int,
-    depth: int = CM_DEPTH,
+    key_expr: str, table: str, probe_lo: int, probe_hi: int
 ) -> str:
     """DuckDB twin: the same slot arithmetic, probes = integer keys
     in [probe_lo, probe_hi]."""
-    depth_list = ", ".join(str(d) for d in range(depth))
+    depth_list = ", ".join(str(d) for d in range(CM_DEPTH))
 
     def slot(d_expr: str, key: str) -> str:
         digest = f"md5(CAST({d_expr} AS VARCHAR) || ':' || {key})"

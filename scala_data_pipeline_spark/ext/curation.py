@@ -51,34 +51,26 @@ def sample_threshold_hex(fraction: float) -> str:
     return format(min(int(fraction * 65536), 65535), "04x")
 
 
-def deterministic_sample(
-    docs: DataFrame, fraction: float, key_col: str = "doc_id", salt: str = ""
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, selected by md5(salt||key) hex-prefix
+def deterministic_sample(docs: DataFrame, fraction: float) -> DataFrame:
+    """Keep ~``fraction`` of rows, selected by md5(doc_id) hex-prefix
     threshold — reproducible and engine-independent (string comparison
-    on lowercase hex, no hex→int parse). ``salt`` decorrelates
-    independent samples over the same keys."""
+    on lowercase hex, no hex→int parse)."""
     return docs.filter(
-        F.substring(keyed_md5(key_col, salt), 1, 4)
+        F.substring(keyed_md5("doc_id", ""), 1, 4)
         < sample_threshold_hex(fraction)
     )
 
 
-def deterministic_sample_sql(
-    fraction: float, key_col: str = "doc_id", salt: str = ""
-) -> str:
+def deterministic_sample_sql(fraction: float) -> str:
     """DuckDB twin of the sampling predicate (WHERE-clause fragment)."""
     return (
-        f"substr({keyed_md5_sql(key_col, salt)}, 1, 4)"
+        f"substr({keyed_md5_sql('doc_id', '')}, 1, 4)"
         f" < '{sample_threshold_hex(fraction)}'"
     )
 
 
 def cluster_split(
-    docs: DataFrame,
-    test_fraction: float = 0.1,
-    salt: str = "split",
-    pairs: DataFrame | None = None,
+    docs: DataFrame, pairs: DataFrame | None = None
 ) -> DataFrame:
     """Leakage-free train/test split: the split key is the document's
     near-dup CLUSTER, not the document — two near-duplicates can never
@@ -89,7 +81,7 @@ def cluster_split(
     (dedup.lsh_candidate_pairs → components.connected_components);
     singleton documents are their own cluster. The side is the house
     md5-threshold draw over the cluster id, so the split is
-    reproducible, engine-independent, and ~``test_fraction`` of
+    reproducible, engine-independent, and ~10% of
     CLUSTERS (hence of docs, up to cluster-size variance) goes to test.
 
     Returns (doc_id, cluster_id, split) for every document.
@@ -106,30 +98,25 @@ def cluster_split(
     if pairs is None:
         pairs = lsh_candidate_pairs(docs)
     comp = connected_components(pairs)
-    thr = sample_threshold_hex(test_fraction)
+    thr = sample_threshold_hex(0.1)
     labeled = (
         docs.select("doc_id")
         .join(comp, on="doc_id", how="left")
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))
     )
-    digest = keyed_md5("cluster_id", salt)
+    digest = keyed_md5("cluster_id", "split")
     return labeled.withColumn(
         "split",
         F.when(F.substring(digest, 1, 4) < thr, "test").otherwise("train"),
     )
 
 
-def cluster_split_sql(
-    pairs_sql: str,
-    test_fraction: float = 0.1,
-    salt: str = "split",
-    table: str = "documents",
-) -> str:
+def cluster_split_sql(pairs_sql: str) -> str:
     """DuckDB twin of :func:`cluster_split` over the same pair query."""
     from .components import connected_components_sql
 
-    thr = sample_threshold_hex(test_fraction)
-    digest = keyed_md5_sql("COALESCE(c.cluster_id, d.doc_id)", salt)
+    thr = sample_threshold_hex(0.1)
+    digest = keyed_md5_sql("COALESCE(c.cluster_id, d.doc_id)", "split")
     return f"""
 WITH comp AS (
 {connected_components_sql(pairs_sql)}
@@ -138,17 +125,11 @@ SELECT d.doc_id,
        COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
        CASE WHEN substr({digest}, 1, 4) < '{thr}'
             THEN 'test' ELSE 'train' END AS split
-FROM {table} d LEFT JOIN comp c ON d.doc_id = c.doc_id
+FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
 """
 
 
-def weighted_sample(
-    docs: DataFrame,
-    n: int,
-    weight_col: str = "n_chars",
-    key_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
+def weighted_sample(docs: DataFrame, n: int, salt: str = "") -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement — the
     Efraimidis-Spirakis A-ES scheme with the random draw replaced by the
     house md5-uniform u of (salt, key), priority = -ln(u)/w, keep the n
@@ -167,55 +148,44 @@ def weighted_sample(
     hash agree unless a value lands exactly on a rounding boundary —
     the same exactness class as text_bm25's oracle.
     """
-    u = md5_uniform(keyed_md5(key_col, salt))
-    w = F.col(weight_col).cast("double")
+    u = md5_uniform(keyed_md5("doc_id", salt))
+    w = F.col("n_chars").cast("double")
     score = F.round(-F.log(u) / w, 6)
     return (
         docs.filter(w > 0)
         .select(
-            key_col,
-            F.col(weight_col).cast("long").alias("weight"),
+            "doc_id",
+            F.col("n_chars").cast("long").alias("weight"),
             score.alias("priority"),
         )
-        .orderBy(F.col("priority").asc(), F.col(key_col).asc())
+        .orderBy(F.col("priority").asc(), F.col("doc_id").asc())
         .limit(n)
     )
 
 
-def weighted_sample_sql(
-    n: int,
-    weight_col: str = "n_chars",
-    key_col: str = "doc_id",
-    salt: str = "",
-    table: str = "documents",
-) -> str:
+def weighted_sample_sql(n: int) -> str:
     """DuckDB twin of :func:`weighted_sample` — the same uniform and
     the same double ops in the same order."""
-    u = md5_uniform_sql(keyed_md5_sql(key_col, salt))
+    u = md5_uniform_sql(keyed_md5_sql("doc_id", ""))
     return f"""
-SELECT {key_col},
-       CAST({weight_col} AS BIGINT) AS weight,
-       ROUND(-ln({u}) / CAST({weight_col} AS DOUBLE), 6) AS priority
-FROM {table}
-WHERE CAST({weight_col} AS DOUBLE) > 0
-ORDER BY priority ASC, {key_col} ASC
+SELECT doc_id,
+       CAST(n_chars AS BIGINT) AS weight,
+       ROUND(-ln({u}) / CAST(n_chars AS DOUBLE), 6) AS priority
+FROM documents
+WHERE CAST(n_chars AS DOUBLE) > 0
+ORDER BY priority ASC, doc_id ASC
 LIMIT {n}
 """
 
 
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
+def decontaminate(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Remove from ``docs`` every document sharing at least one word
-    ``n``-gram with ``benchmark`` (the eval-set leakage guard)."""
+    8-gram with ``benchmark`` (the eval-set leakage guard)."""
     doc_grams = fan_out(docs).select(
-        "doc_id", F.explode(shingles(F.col(text_col), n)).alias("g")
+        "doc_id", F.explode(shingles(F.col("text"), 8)).alias("g")
     ).select("doc_id", F.md5("g").alias("h"))
     bench_grams = (
-        benchmark.select(F.explode(shingles(F.col(text_col), n)).alias("g"))
+        benchmark.select(F.explode(shingles(F.col("text"), 8)).alias("g"))
         .select(F.md5("g").alias("h"))
         .distinct()
     )
@@ -225,65 +195,54 @@ def decontaminate(
     return docs.join(contaminated, on="doc_id", how="left_anti")
 
 
-def decontaminate_sql(
-    docs_pred: str, bench_pred: str, table: str = "documents", n: int = 8
-) -> str:
+def decontaminate_sql(docs_pred: str, bench_pred: str) -> str:
     """DuckDB twin: documents matching ``docs_pred`` that share no
     n-gram digest with documents matching ``bench_pred``."""
     return f"""
 WITH bench_grams AS (
   SELECT DISTINCT md5(g) AS h
-  FROM (SELECT unnest({shingles_sql('text', n)}) AS g
-        FROM {table} WHERE {bench_pred})
+  FROM (SELECT unnest({shingles_sql('text', 8)}) AS g
+        FROM documents WHERE {bench_pred})
 ), contaminated AS (
   SELECT DISTINCT doc_id
-  FROM (SELECT doc_id, md5(unnest({shingles_sql('text', n)})) AS h
-        FROM {table} WHERE {docs_pred})
+  FROM (SELECT doc_id, md5(unnest({shingles_sql('text', 8)})) AS h
+        FROM documents WHERE {docs_pred})
   WHERE h IN (SELECT h FROM bench_grams)
 )
 SELECT doc_id, lang, source
-FROM {table}
+FROM documents
 WHERE {docs_pred}
   AND doc_id NOT IN (SELECT doc_id FROM contaminated)
 """
 
 
 def stratified_sample(
-    docs: DataFrame,
-    fractions: dict[str, float],
-    strata_col: str = "source",
-    key_col: str = "doc_id",
-    default: float = 0.0,
-    salt: str = "",
+    docs: DataFrame, fractions: dict[str, float], default: float = 0.0
 ) -> DataFrame:
     """Per-stratum deterministic sampling: each stratum keeps its own
     fraction (the data-mixing knob: "30% web, 100% books, 5% logs").
     Same md5-threshold mechanism as :func:`deterministic_sample` —
     reproducible, engine-independent, a pure scan predicate (no shuffle,
     no per-stratum passes)."""
-    digest = F.substring(keyed_md5(key_col, salt), 1, 4)
+    digest = F.substring(keyed_md5("doc_id", ""), 1, 4)
     thr = F.lit(sample_threshold_hex(default))
     for stratum, frac in sorted(fractions.items()):
         thr = F.when(
-            F.col(strata_col) == stratum, sample_threshold_hex(frac)
+            F.col("source") == stratum, sample_threshold_hex(frac)
         ).otherwise(thr)
     return docs.filter(digest < thr)
 
 
 def stratified_sample_sql(
-    fractions: dict[str, float],
-    strata_col: str = "source",
-    key_col: str = "doc_id",
-    default: float = 0.0,
-    salt: str = "",
+    fractions: dict[str, float], default: float = 0.0
 ) -> str:
     """WHERE-clause fragment, DuckDB twin of :func:`stratified_sample`."""
     cases = " ".join(
         f"WHEN '{s}' THEN '{sample_threshold_hex(f)}'"
         for s, f in sorted(fractions.items())
     )
-    thr = f"CASE {strata_col} {cases} ELSE '{sample_threshold_hex(default)}' END"
-    return f"substr({keyed_md5_sql(key_col, salt)}, 1, 4) < {thr}"
+    thr = f"CASE source {cases} ELSE '{sample_threshold_hex(default)}' END"
+    return f"substr({keyed_md5_sql('doc_id', '')}, 1, 4) < {thr}"
 
 
 # PII patterns (RE2/Java-compatible subset; identical semantics in
@@ -307,7 +266,7 @@ def pii_redacted_col(text: Column) -> Column:
     return red
 
 
-def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_redact(docs: DataFrame) -> DataFrame:
     """Scrub emails, phone numbers and IPv4 addresses, replacing each
     with a typed placeholder, and count redactions per document.
 
@@ -316,9 +275,9 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     redacted before IPs so ``user@1.2.3.4``-style hostnames never leave
     a partial address behind.
     """
-    red = pii_redacted_col(F.col(text_col))
+    red = pii_redacted_col(F.col("text"))
     counts = {}
-    probe = F.col(text_col)
+    probe = F.col("text")
     for kind in ("email", "phone", "ipv4"):
         # Count on the text as redacted so far, so an IP inside an
         # already-redacted email host is not double-counted: each count
@@ -335,9 +294,9 @@ def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def pii_redact_sql(text_expr: str = "text", table: str = "documents") -> str:
-    """DuckDB twin of :func:`pii_redact` over ``text_expr``."""
-    red = text_expr
+def pii_redact_sql(table: str = "documents") -> str:
+    """DuckDB twin of :func:`pii_redact` over ``text``."""
+    red = "text"
     counts = {}
     for kind in ("email", "phone", "ipv4"):
         counts[kind] = (
@@ -356,14 +315,12 @@ FROM {table}
 """
 
 
-def repetition_ratio(
-    docs: DataFrame, text_col: str = "text", n: int = 2
-) -> DataFrame:
-    """Within-document repetition: fraction of word ``n``-grams that are
+def repetition_ratio(docs: DataFrame) -> DataFrame:
+    """Within-document repetition: fraction of word bigrams that are
     duplicates (1 - distinct/total). The standard boilerplate/spam
     signal for corpus filtering. Array-local higher-order functions
     only — per-row, no shuffle, no UDF."""
-    sh = shingles(F.col(text_col), n)
+    sh = shingles(F.col("text"), 2)
     ratio = F.round(
         1 - F.size(F.array_distinct(sh)) / F.size(sh), 6
     )
@@ -375,17 +332,15 @@ def repetition_ratio(
     )
 
 
-def repetition_ratio_sql(
-    text_expr: str = "text", table: str = "documents", n: int = 2
-) -> str:
-    sh = shingles_sql(text_expr, n)
+def repetition_ratio_sql() -> str:
+    sh = shingles_sql("text", 2)
     return f"""
 SELECT doc_id,
        CAST(len({sh}) AS BIGINT) AS n_ngrams,
        CAST(len(list_distinct({sh})) AS BIGINT) AS n_distinct,
        ROUND(1 - CAST(len(list_distinct({sh})) AS DOUBLE) / len({sh}), 6)
          AS repetition_ratio
-FROM {table}
+FROM documents
 """
 
 
@@ -405,13 +360,7 @@ def source_quota(docs: DataFrame, n_per_source: int) -> DataFrame:
     )
 
 
-def mixture_sample(
-    docs: DataFrame,
-    target_rows: int,
-    strata_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "mix",
-) -> DataFrame:
+def mixture_sample(docs: DataFrame, target_rows: int) -> DataFrame:
     """Temperature-weighted mixture sampling (α = 0.5): per-source
     sampling shares p_s ∝ sqrt(n_s) — the standard training-mixture
     reweighting that upsamples rare sources relative to their corpus
@@ -429,7 +378,7 @@ def mixture_sample(
     window over that tiny frame, and a broadcast join back — the corpus
     itself never shuffles; the filter is a scan predicate.
     """
-    counts = docs.groupBy(strata_col).agg(F.count(F.lit(1)).alias("n_s"))
+    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
     w_all = Window.partitionBy()
     rates = (
         counts.withColumn("w_s", F.round(F.sqrt(F.col("n_s")), 8))
@@ -458,94 +407,77 @@ def mixture_sample(
                 )
             ),
         )
-        .select(strata_col, "n_s", "thr")
+        .select("source", "n_s", "thr")
     )
-    digest = F.substring(keyed_md5(key_col, salt), 1, 4)
+    digest = F.substring(keyed_md5("doc_id", "mix"), 1, 4)
     return (
-        docs.join(F.broadcast(rates), on=strata_col)
+        docs.join(F.broadcast(rates), on="source")
         .filter(digest < F.col("thr"))
-        .select(key_col, strata_col)
+        .select("doc_id", "source")
     )
 
 
-def mixture_sample_sql(
-    target_rows: int,
-    strata_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "mix",
-    table: str = "documents",
-) -> str:
+def mixture_sample_sql(target_rows: int) -> str:
     """DuckDB twin of :func:`mixture_sample` — identical float ops in
     identical order (sqrt → round 8 → decimal-sum normalizer → same
     multiply/divide sequence → floor/hex threshold)."""
     return f"""
 WITH counts AS (
-  SELECT {strata_col}, COUNT(*) AS n_s FROM {table} GROUP BY {strata_col}
+  SELECT source, COUNT(*) AS n_s FROM documents GROUP BY source
 ), rates AS (
-  SELECT {strata_col}, n_s,
+  SELECT source, n_s,
          LEAST(1.0,
            ROUND(sqrt(n_s), 8)
              / CAST(SUM(CAST(ROUND(sqrt(n_s), 8) AS DECIMAL(18,8))) OVER () AS DOUBLE)
              * {float(target_rows)} / CAST(n_s AS DOUBLE)) AS keep_frac
   FROM counts
 ), thresholds AS (
-  SELECT {strata_col},
+  SELECT source,
          CASE WHEN keep_frac >= 1.0 THEN 'g'
               ELSE lpad(lower(to_hex(CAST(floor(keep_frac * 65536.0) AS BIGINT))), 4, '0')
          END AS thr
   FROM rates
 )
-SELECT d.{key_col}, d.{strata_col}
-FROM {table} d JOIN thresholds t USING ({strata_col})
-WHERE substr({keyed_md5_sql(f"d.{key_col}", salt)}, 1, 4) < t.thr
+SELECT d.doc_id, d.source
+FROM documents d JOIN thresholds t USING (source)
+WHERE substr({keyed_md5_sql("d.doc_id", "mix")}, 1, 4) < t.thr
 """
 
 
-def training_shuffle(
-    docs: DataFrame,
-    key_col: str = "doc_id",
-    salt: str = "shuf",
-    shard_hex_chars: int = 2,
-) -> DataFrame:
+def training_shuffle(docs: DataFrame) -> DataFrame:
     """Deterministic global shuffle + sharding for training order:
-    shard = first ``shard_hex_chars`` hex chars of md5(salt||key) (256
-    shards at 2 chars), position = rank of the full digest within the
-    shard. (shard, pos) is a reproducible, engine-independent random
-    total order — the pattern for writing shuffled training shards
-    without a global sort: one shuffle on the shard key, per-shard
-    ranking, each shard written independently. Re-salt to re-shuffle
-    between epochs."""
-    digest = keyed_md5(key_col, salt)
-    w = Window.partitionBy("shard").orderBy("digest", key_col)
+    shard = first 2 hex chars of md5('shuf' || doc_id) (256 shards),
+    position = rank of the full digest within the shard. (shard, pos)
+    is a reproducible, engine-independent random total order — the
+    pattern for writing shuffled training shards without a global sort:
+    one shuffle on the shard key, per-shard ranking, each shard written
+    independently."""
+    digest = keyed_md5("doc_id", "shuf")
+    w = Window.partitionBy("shard").orderBy("digest", "doc_id")
     return (
         docs.select(
-            key_col,
+            "doc_id",
             digest.alias("digest"),
         )
-        .withColumn("shard", F.substring("digest", 1, shard_hex_chars))
+        .withColumn("shard", F.substring("digest", 1, 2))
         .withColumn("pos", F.row_number().over(w).cast("long"))
-        .select(key_col, "shard", "pos")
+        .select("doc_id", "shard", "pos")
     )
 
 
-def training_shuffle_sql(
-    key_col: str = "doc_id",
-    salt: str = "shuf",
-    shard_hex_chars: int = 2,
-    table: str = "documents",
-) -> str:
+def training_shuffle_sql() -> str:
     """DuckDB twin of :func:`training_shuffle`."""
     return f"""
 WITH hashed AS (
-  SELECT {key_col},
-         {keyed_md5_sql(key_col, salt)} AS digest
-  FROM {table}
+  SELECT doc_id,
+         {keyed_md5_sql('doc_id', 'shuf')} AS digest
+  FROM documents
 )
-SELECT {key_col},
-       substr(digest, 1, {shard_hex_chars}) AS shard,
+SELECT doc_id,
+       substr(digest, 1, 2) AS shard,
        CAST(ROW_NUMBER() OVER (
-           PARTITION BY substr(digest, 1, {shard_hex_chars})
-           ORDER BY digest, {key_col}) AS BIGINT) AS pos
+           PARTITION BY substr(digest, 1, 2)
+           ORDER BY digest, doc_id) AS BIGINT) AS pos
 FROM hashed
 """
 
@@ -555,9 +487,7 @@ FROM hashed
 # ---------------------------------------------------------------------------
 
 
-def _epoch_rate_rows(
-    rates: dict[str, float], salt_frac_bits: int = 65536
-) -> list[tuple[str, int, str]]:
+def _epoch_rate_rows(rates: dict[str, float]) -> list[tuple[str, int, str]]:
     """(source, n_full, extra-copy hex threshold) — thresholds computed
     in PYTHON so neither engine does any float math at all; the rate
     config is literal, exactly like a real mixing config file."""
@@ -568,19 +498,13 @@ def _epoch_rate_rows(
         n_full = int(math.floor(rate))
         frac = rate - n_full
         thr = "g" if frac >= 1 else format(
-            int(math.floor(frac * salt_frac_bits)), "04x"
+            int(math.floor(frac * 65536)), "04x"
         )
         rows.append((src, n_full, thr))
     return rows
 
 
-def epoch_oversample(
-    docs: DataFrame,
-    rates: dict[str, float],
-    strata_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "epoch",
-) -> DataFrame:
+def epoch_oversample(docs: DataFrame, rates: dict[str, float]) -> DataFrame:
     """Per-source repeat-factor sampling — the UPSAMPLING direction
     mixture_sample (pure downsampling) cannot express: a source with
     rate 2.5 contributes every document twice plus a deterministic half
@@ -605,24 +529,24 @@ def epoch_oversample(
         # empty row list would crash, so short-circuit with an empty
         # frame of the output shape.
         return (
-            docs.select(key_col, strata_col)
+            docs.select("doc_id", "source")
             .filter(F.lit(False))
             .withColumn("epoch", F.lit(1).cast("long"))
         )
     rates_df = local_frame(
         spark,
         _epoch_rate_rows(rates),
-        f"{strata_col} string, n_full bigint, thr string",
+        "source string, n_full bigint, thr string",
     )
-    digest = F.substring(keyed_md5(key_col, salt), 1, 4)
+    digest = F.substring(keyed_md5("doc_id", "epoch"), 1, 4)
     n_copies = F.col("n_full") + F.when(digest < F.col("thr"), 1).otherwise(0)
     return (
-        docs.join(F.broadcast(rates_df), on=strata_col)
+        docs.join(F.broadcast(rates_df), on="source")
         .withColumn("n_copies", n_copies)
         .filter(F.col("n_copies") > 0)
         .select(
-            key_col,
-            strata_col,
+            "doc_id",
+            "source",
             F.explode(F.sequence(F.lit(1), F.col("n_copies"))).alias(
                 "epoch"
             ),
@@ -631,17 +555,11 @@ def epoch_oversample(
     )
 
 
-def epoch_oversample_sql(
-    rates: dict[str, float],
-    strata_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "epoch",
-    table: str = "documents",
-) -> str:
+def epoch_oversample_sql(rates: dict[str, float]) -> str:
     if not rates:
         return (
-            f"SELECT {key_col}, {strata_col}, CAST(1 AS BIGINT) AS epoch "
-            f"FROM {table} WHERE FALSE"
+            "SELECT doc_id, source, CAST(1 AS BIGINT) AS epoch "
+            "FROM documents WHERE FALSE"
         )
     values = ", ".join(
         "('{s}', {n}, '{t}')".format(
@@ -650,28 +568,23 @@ def epoch_oversample_sql(
         for s, n, t in _epoch_rate_rows(rates)
     )
     return f"""
-WITH rates({strata_col}, n_full, thr) AS (VALUES {values}),
+WITH rates(source, n_full, thr) AS (VALUES {values}),
 j AS (
-  SELECT d.{key_col}, d.{strata_col},
+  SELECT d.doc_id, d.source,
          r.n_full + (CASE WHEN substr(
-             {keyed_md5_sql(f"d.{key_col}", salt)}, 1, 4) < r.thr
+             {keyed_md5_sql("d.doc_id", "epoch")}, 1, 4) < r.thr
              THEN 1 ELSE 0 END) AS n_copies
-  FROM {table} d JOIN rates r USING ({strata_col})
+  FROM documents d JOIN rates r USING (source)
 )
-SELECT {key_col}, {strata_col}, CAST(epoch AS BIGINT) AS epoch
+SELECT doc_id, source, CAST(epoch AS BIGINT) AS epoch
 FROM (
-  SELECT {key_col}, {strata_col}, unnest(range(1, n_copies + 1)) AS epoch
+  SELECT doc_id, source, unnest(range(1, n_copies + 1)) AS epoch
   FROM j WHERE n_copies > 0
 )
 """
 
 
-def source_reputation(
-    docs: DataFrame,
-    min_docs: int = 5,
-    min_mean_quality: float = 0.5,
-    text_col: str = "text",
-) -> DataFrame:
+def source_reputation(docs: DataFrame) -> DataFrame:
     """Source-level reputation filtering (the UT1-blocklist /
     domain-reputation pattern): score every (source, lang) partition by
     its aggregate document quality, then keep only documents from
@@ -691,7 +604,7 @@ def source_reputation(
     """
     from .textstats import quality_features
 
-    qual = quality_features(docs, text_col=text_col).select(
+    qual = quality_features(docs).select(
         "doc_id", "quality_score"
     )
     scored = docs.select("doc_id", "source", "lang").join(qual, on="doc_id")
@@ -708,8 +621,8 @@ def source_reputation(
             ).alias("mean_quality"),
         )
         .filter(
-            (F.col("n_docs") >= min_docs)
-            & (F.col("mean_quality") >= min_mean_quality)
+            (F.col("n_docs") >= 5)
+            & (F.col("mean_quality") >= 0.5)
         )
     )
     return scored.join(F.broadcast(rep), on=["source", "lang"]).select(
@@ -717,28 +630,23 @@ def source_reputation(
     )
 
 
-def source_reputation_sql(
-    min_docs: int = 5,
-    min_mean_quality: float = 0.5,
-    text_col: str = "text",
-    table: str = "documents",
-) -> str:
+def source_reputation_sql() -> str:
     """DuckDB twin of :func:`source_reputation`."""
     from .textstats import quality_score_sql
 
-    q = quality_score_sql(text_col)
+    q = quality_score_sql()
     return f"""
 WITH scored AS (
-  SELECT doc_id, source, lang, {q} AS quality_score FROM {table}
+  SELECT doc_id, source, lang, {q} AS quality_score FROM documents
 ), rep AS (
   SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
          ROUND(CAST(SUM(CAST(quality_score AS DECIMAL(18,6))) AS DOUBLE)
                / COUNT(*), 6) AS mean_quality
   FROM scored
   GROUP BY source, lang
-  HAVING COUNT(*) >= {min_docs} AND
+  HAVING COUNT(*) >= 5 AND
          ROUND(CAST(SUM(CAST(quality_score AS DECIMAL(18,6))) AS DOUBLE)
-               / COUNT(*), 6) >= {min_mean_quality}
+               / COUNT(*), 6) >= 0.5
 )
 SELECT s.doc_id, s.source, s.lang, r.mean_quality, r.n_docs
 FROM scored s JOIN rep r ON s.source = r.source AND s.lang = r.lang
@@ -876,14 +784,12 @@ def score_calibration(docs: DataFrame, score_frame: DataFrame) -> DataFrame:
     )
 
 
-def score_calibration_sql(
-    score_expr: str, table: str = "documents"
-) -> str:
+def score_calibration_sql(score_expr: str) -> str:
     """DuckDB twin of :func:`score_calibration` over the same score
     expression (same grains, same backfill window)."""
     return f"""
 WITH scored AS (
-  SELECT doc_id, source, {score_expr} AS score FROM {table}
+  SELECT doc_id, source, {score_expr} AS score FROM documents
 ), src_grain AS (
   SELECT source, score, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM scored GROUP BY 1, 2
@@ -925,11 +831,7 @@ FROM filled WHERE kind = 'B'
 
 
 def unimax_allocation(
-    docs: DataFrame,
-    budget_factor: float = 1.5,
-    max_epochs: float = 2.0,
-    lang_col: str = "lang",
-    text_col: str = "text",
+    docs: DataFrame, budget_factor: float = 1.5, max_epochs: float = 2.0
 ) -> DataFrame:
     """UniMax budget allocation (Chung et al., "UniMax: Fairer and More
     Effective Language Sampling for Large-Scale Multilingual
@@ -957,18 +859,15 @@ def unimax_allocation(
     Returns (lang, n_tokens, capacity, alloc_tokens, epochs, capped),
     alloc summing to min(budget, total capacity).
     """
-    n_tok = F.size(F.filter(F.split(F.col(text_col), " "), lambda x: x != ""))
+    n_tok = F.size(F.filter(F.split(F.col("text"), " "), lambda x: x != ""))
     grain = (
         fan_out(docs)
-        .groupBy(F.col(lang_col).alias("lang"))
+        .groupBy(F.col("lang").alias("lang"))
         .agg(F.sum(n_tok.cast("long")).cast("long").alias("n_tokens"))
         .withColumn(
             "capacity", F.col("n_tokens").cast("double") * F.lit(max_epochs)
         )
     )
-    # Alias to "lang" BEFORE any window: the later k/cum_k windows
-    # reuse this ordering, and the source column name no longer exists
-    # after the select (a non-default lang_col would crash them).
     w_ord = Window.orderBy("capacity", "lang")
     w_all = w_ord.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -1018,22 +917,16 @@ def unimax_allocation(
 
 
 def unimax_allocation_sql(
-    budget_factor: float = 1.5,
-    max_epochs: float = 2.0,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    table: str = "documents",
+    budget_factor: float = 1.5, max_epochs: float = 2.0
 ) -> str:
     """DuckDB twin of :func:`unimax_allocation` — identical capacity
     arithmetic, prefix test, and uniform-share division."""
-    n_tok = (
-        f"len(list_filter(string_split({text_col}, ' '), x -> x <> ''))"
-    )
+    n_tok = "len(list_filter(string_split(text, ' '), x -> x <> ''))"
     return f"""
 WITH grain AS (
-  SELECT {lang_col} AS lang,
+  SELECT lang AS lang,
          CAST(SUM(CAST({n_tok} AS BIGINT)) AS BIGINT) AS n_tokens
-  FROM {table} GROUP BY 1
+  FROM documents GROUP BY 1
 ), ranked AS (
   SELECT lang, n_tokens,
          CAST(n_tokens AS DOUBLE) * {max_epochs} AS capacity,

@@ -192,7 +192,7 @@ def lsh_band_buckets(signature: DataFrame) -> DataFrame:
 
 
 def lsh_candidate_pairs(
-    docs: DataFrame, text_col: str = "text", bucket_cap: int = LSH_BUCKET_CAP
+    docs: DataFrame, bucket_cap: int = LSH_BUCKET_CAP
 ) -> DataFrame:
     """Distinct candidate pairs (a < b) sharing at least one LSH band
     bucket — the scalable near-dup candidate generator.
@@ -208,7 +208,7 @@ def lsh_candidate_pairs(
     a star does exactly that with linear output. Run exact dedup first
     (corpus_job does) so only true near-dups reach this stage.
     """
-    buckets = lsh_band_buckets(minhash_signature(docs, text_col))
+    buckets = lsh_band_buckets(minhash_signature(docs))
     grouped = buckets.groupBy("band", "bucket").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
@@ -219,7 +219,7 @@ def lsh_candidate_pairs(
     )
 
 
-def _lsh_bucketed_sql(text_col: str, table: str) -> str:
+def _lsh_bucketed_sql() -> str:
     """The CTEs both MinHash-LSH twins share, ending in ``bucketed``:
     one row per (doc_id, band, bucket) with the bucket's size ``bsz``
     and smallest member ``keeper``, the inputs of the cap's keeper
@@ -238,7 +238,7 @@ def _lsh_bucketed_sql(text_col: str, table: str) -> str:
         for b in range(N_HASHES // BAND_SIZE)
     )
     return f"""exploded AS (
-  SELECT doc_id, unnest({shingles_sql(text_col)}) AS shingle FROM {table}
+  SELECT doc_id, unnest({shingles_sql('text')}) AS shingle FROM documents
 ), sig AS (
   SELECT doc_id,
       {mh_cols}
@@ -253,11 +253,7 @@ def _lsh_bucketed_sql(text_col: str, table: str) -> str:
 )"""
 
 
-def minhash_lsh_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    bucket_cap: int = LSH_BUCKET_CAP,
-) -> str:
+def minhash_lsh_sql(bucket_cap: int = LSH_BUCKET_CAP) -> str:
     """DuckDB oracle for the full MinHash+LSH candidate-pair pipeline.
 
     Replays :func:`lsh_candidate_pairs`' cap-with-keeper-star
@@ -269,7 +265,7 @@ def minhash_lsh_sql(
     contrastive_triplets, …) inherits the replay.
     """
     return f"""
-WITH {_lsh_bucketed_sql(text_col, table)}
+WITH {_lsh_bucketed_sql()}
 -- full clique for buckets within the cap, keeper star above it
 -- (a.doc_id < b.doc_id makes the keeper always the a side):
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -286,9 +282,7 @@ WHERE a.bsz <= {bucket_cap} OR a.doc_id = a.keeper
 _HIGH_HEX = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def simhash(
-    docs: DataFrame, text_col: str = "text", bits: int = 16
-) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     """``bits``-bit SimHash: bit i = majority over tokens of the high
     bit of the token digest's i-th hex digit (one digit per bit).
     Digest: md5 (32 hex digits) for bits <= 32; sha2-256 (64 hex
@@ -305,7 +299,7 @@ def simhash(
             f"bits must be <= 64 (sha2-256 has 64 hex digits), got {bits}"
         )
     tokens = fan_out(docs).select(
-        "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("token")
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
     ).filter(F.col("token") != "")
     # One digest per signature — mixing digests across bit positions
     # would make the signature depend on the width, breaking the
@@ -363,14 +357,12 @@ def simhash(
     return per_doc.select("doc_id", sig.alias("simhash"))
 
 
-def simhash16(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash16(docs: DataFrame) -> DataFrame:
     """16-bit SimHash fingerprint (the compact scan-query form)."""
-    return simhash(docs, text_col, bits=16)
+    return simhash(docs, bits=16)
 
 
-def simhash_sql(
-    text_col: str = "text", table: str = "documents", bits: int = 16
-) -> str:
+def simhash_sql(bits: int = 16) -> str:
     # Digest selection mirrors :func:`simhash` exactly: md5 for
     # bits <= 32, sha256 for the wide rung (DuckDB's sha256() emits the
     # same lowercase hex as Spark's sha2(col, 256)).
@@ -385,7 +377,7 @@ def simhash_sql(
     )
     return f"""
 WITH tokens AS (
-  SELECT doc_id, unnest(string_split({text_col}, ' ')) AS token FROM {table}
+  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
 ), filtered AS (
   SELECT * FROM tokens WHERE token <> ''
 ), sums AS (
@@ -397,8 +389,8 @@ SELECT doc_id, {concat} AS simhash FROM sums
 """
 
 
-def simhash16_sql(text_col: str = "text", table: str = "documents") -> str:
-    return simhash_sql(text_col, table, bits=16)
+def simhash16_sql() -> str:
+    return simhash_sql(bits=16)
 
 
 def _hamming(a: str, b: str, bits: int) -> Column:
@@ -427,7 +419,6 @@ SIMHASH_PAIR_BLOCK = 32
 
 def simhash_neardup_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     max_hamming: int = 1,
     bucket_cap: int = 4096,
     bits: int = SIMHASH_PAIR_BITS,
@@ -491,7 +482,7 @@ def simhash_neardup_pairs(
     # concurrently and each computes the unpersisted RDD). At 100 TB
     # the signature table is exactly the intermediate you'd materialize
     # between the hash and pair stages.
-    sigs = simhash(docs, text_col, bits=bits).localCheckpoint(eager=True)
+    sigs = simhash(docs, bits=bits).localCheckpoint(eager=True)
     # One parsed unpivot expression (r20 construction-cost pass;
     # value-identical named_struct explode).
     halves = sigs.selectExpr(
@@ -532,29 +523,23 @@ def simhash_neardup_pairs(
     )
 
 
-def simhash_neardup_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    max_hamming: int = 1,
-    bits: int = SIMHASH_PAIR_BITS,
-    block: int = SIMHASH_PAIR_BLOCK,
-) -> str:
-    """DuckDB twin (uncapped — the cap only alters degenerate corpora
-    the oracle tables don't contain; same convention as
-    :func:`minhash_lsh_sql`). ``bits``/``block`` mirror
-    :func:`simhash_neardup_pairs` so non-default widths stay oracled."""
+def simhash_neardup_sql() -> str:
+    """DuckDB twin of :func:`simhash_neardup_pairs` at its default
+    widths (uncapped — the cap only alters degenerate corpora the
+    oracle tables don't contain)."""
+    block = SIMHASH_PAIR_BLOCK
     ham = " + ".join(
         f"(CASE WHEN substr(a.simhash, {i + 1}, 1) <> substr(b.simhash, {i + 1}, 1)"
-        f" THEN 1 ELSE 0 END)"
-        for i in range(bits)
+        " THEN 1 ELSE 0 END)"
+        for i in range(SIMHASH_PAIR_BITS)
     )
     blocks = "\n  UNION ALL\n".join(
         f"  SELECT doc_id, {i} AS block,"
         f" substr(simhash, {block * i + 1}, {block}) AS key FROM sigs"
-        for i in range(bits // block)
+        for i in range(SIMHASH_PAIR_BITS // block)
     )
     return f"""
-WITH sigs AS ({simhash_sql(text_col, table, bits=bits)}),
+WITH sigs AS ({simhash_sql(bits=SIMHASH_PAIR_BITS)}),
 blocks AS (
 {blocks}
 ),
@@ -567,7 +552,7 @@ SELECT c.doc_a, c.doc_b, CAST({ham} AS BIGINT) AS hamming
 FROM cand c
 JOIN sigs a ON a.doc_id = c.doc_a
 JOIN sigs b ON b.doc_id = c.doc_b
-WHERE {ham} <= {max_hamming}
+WHERE {ham} <= 1
 """
 
 
@@ -578,8 +563,6 @@ WHERE {ham} <= {max_hamming}
 
 def lsh_quality_metrics(
     docs: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.1,
     candidates: DataFrame | None = None,
     pair_core: DataFrame | None = None,
 ) -> DataFrame:
@@ -588,7 +571,7 @@ def lsh_quality_metrics(
     approximate dedup before it runs at 100 TB:
 
     - ``precision``: fraction of LSH candidate pairs whose EXACT corpus-
-      wide shingle Jaccard clears ``threshold`` (via
+      wide shingle Jaccard clears 0.1 (via
       :func:`jaccard_verify_pairs`).
     - ``recall``: fraction of the blocked exact-Jaccard duplicate pairs
       (:func:`ngram_jaccard_pairs` ground truth, (lang, source) blocks
@@ -619,20 +602,20 @@ def lsh_quality_metrics(
     # caller's storage to manage.
     owned = candidates is None
     cand = (
-        lsh_candidate_pairs(docs, text_col).persist()
+        lsh_candidate_pairs(docs).persist()
         if owned
         else candidates
     )
     try:
-        verified = jaccard_verify_pairs(docs, cand, text_col, threshold)
+        verified = jaccard_verify_pairs(docs, cand)
         # ``pair_core``: an already-materialized block_pair_intersections
         # frame (the _pair_core hub) — the truth branch is exactly its
-        # jaccard scoring at this threshold, so a provided core skips the
+        # jaccard scoring at 0.1, so a provided core skips the
         # corpus-wide shingle-equality join rebuild.
         truth = (
-            jaccard_from_intersections(pair_core, threshold)
+            jaccard_from_intersections(pair_core)
             if pair_core is not None
-            else ngram_jaccard_pairs(docs, text_col, threshold=threshold)
+            else ngram_jaccard_pairs(docs)
         )
         matched = truth.join(cand, on=["doc_a", "doc_b"], how="left_semi")
         # ONE tagged-union aggregate instead of four separate aggregate
@@ -680,17 +663,15 @@ def lsh_quality_metrics(
             cand.unpersist()
 
 
-def lsh_quality_metrics_sql(
-    text_col: str = "text", table: str = "documents", threshold: float = 0.1
-) -> str:
+def lsh_quality_metrics_sql() -> str:
     """DuckDB twin: candidates from :func:`minhash_lsh_sql`, corpus-wide
     verify jaccard inline, truth from :func:`ngram_jaccard_sql`."""
     return f"""
-WITH cand AS ({minhash_lsh_sql(text_col, table)}),
-truth AS ({ngram_jaccard_sql(text_col, table, threshold=threshold)}),
+WITH cand AS ({minhash_lsh_sql()}),
+truth AS ({ngram_jaccard_sql()}),
 sh AS (
   SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest({shingles_sql(text_col)}) AS shingle FROM {table}
+    SELECT doc_id, unnest({shingles_sql('text')}) AS shingle FROM documents
   )
 ), sizes AS (
   SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY 1
@@ -706,7 +687,7 @@ sh AS (
   JOIN sizes sa ON sa.doc_id = c.doc_a
   JOIN sizes sb ON sb.doc_id = c.doc_b
   WHERE ROUND(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 6)
-        >= {threshold}
+        >= 0.1
 ), matched AS (
   SELECT t.doc_a FROM truth t
   WHERE EXISTS (SELECT 1 FROM cand c
@@ -730,11 +711,9 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM cand) AS n_candidates,
 SEGMENT_TOKENS = 8
 
 
-def segment_dedup(
-    docs: DataFrame, text_col: str = "text", seg_tokens: int = SEGMENT_TOKENS
-) -> DataFrame:
+def segment_dedup(docs: DataFrame) -> DataFrame:
     """Paragraph-granularity dedup (the CCNet recipe, with fixed
-    ``seg_tokens``-token windows standing in for paragraphs — the corpus
+    ``SEGMENT_TOKENS``-token windows standing in for paragraphs — the corpus
     has no newline structure): hash every non-overlapping segment, keep
     only the FIRST corpus-wide occurrence of each distinct segment
     (ordered by (doc_id, seg_idx) — deterministic, engine-independent),
@@ -750,16 +729,16 @@ def segment_dedup(
     groupBy(doc_id). Two bounded shuffles total, no pair joins, and the
     shuffled payload is segments (≈ corpus size), never pairs.
     """
-    tokens = F.split(F.col(text_col), " ")
+    tokens = F.split(F.col("text"), " ")
     n_seg = F.greatest(
-        F.ceil(F.size(tokens) / F.lit(seg_tokens)), F.lit(1)
+        F.ceil(F.size(tokens) / F.lit(SEGMENT_TOKENS)), F.lit(1)
     ).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), n_seg - 1),
         lambda i: F.struct(
             i.alias("seg_idx"),
             F.array_join(
-                F.slice(tokens, i * seg_tokens + 1, seg_tokens), " "
+                F.slice(tokens, i * SEGMENT_TOKENS + 1, SEGMENT_TOKENS), " "
             ).alias("seg"),
         ),
     )
@@ -784,14 +763,10 @@ def segment_dedup(
     )
 
 
-def segment_dedup_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    seg_tokens: int = SEGMENT_TOKENS,
-) -> str:
+def segment_dedup_sql() -> str:
     """DuckDB twin of :func:`segment_dedup` (1-based list_slice)."""
-    t = f"string_split({text_col}, ' ')"
-    k = seg_tokens
+    t = "string_split(text, ' ')"
+    k = SEGMENT_TOKENS
     return f"""
 WITH segs AS (
   SELECT doc_id, s.seg_idx AS seg_idx, s.seg AS seg, md5(s.seg) AS h
@@ -802,7 +777,7 @@ WITH segs AS (
             seg_idx := i,
             seg := array_to_string(
                 list_slice({t}, i * {k} + 1, i * {k} + {k}), ' ')))) AS s
-    FROM {table}
+    FROM documents
   )
 ), ranked AS (
   SELECT *, ROW_NUMBER() OVER (
@@ -825,12 +800,12 @@ FROM ranked GROUP BY doc_id
 SPAN_TOKENS = 10
 
 
-def _span_exprs(text_col: str, k: int):
+def _span_exprs(k: int):
     """Shared column expressions for the span family: the filtered
     token array, its size, and the (pos, md5(k-gram)) struct array.
     sequence(1, n) with n < 1 would generate a DESCENDING range, so
     short documents yield an empty position array explicitly."""
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     n_toks = F.size(toks)
     positions = F.when(
         n_toks >= k, F.sequence(F.lit(1), n_toks - F.lit(k - 1))
@@ -893,10 +868,7 @@ def _cross_doc_hits(
 
 
 def duplicated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = SPAN_TOKENS,
-    min_docs: int = 2,
+    docs: DataFrame, k: int = SPAN_TOKENS, min_docs: int = 2
 ) -> DataFrame:
     """Substring-level dedup signal (the ExactSubstr recipe of Lee et
     al. 2021, "Deduplicating Training Data Makes Language Models
@@ -924,7 +896,7 @@ def duplicated_spans(
     the DuckDB oracle computes byte-identical keys; production would
     swap in xxhash64 (same plan, half the shuffle bytes).
     """
-    _, n_toks, spans = _span_exprs(text_col, k)
+    _, n_toks, spans = _span_exprs(k)
     grams = (
         fan_out(docs)
         .select(
@@ -967,10 +939,7 @@ def duplicated_spans(
 
 
 def excise_duplicated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = SPAN_TOKENS,
-    min_docs: int = 2,
+    docs: DataFrame, k: int = SPAN_TOKENS, min_docs: int = 2
 ) -> DataFrame:
     """The ACTION half of :func:`duplicated_spans` (Lee et al. 2021's
     ExactSubstr cut, at k-token granularity): for every cross-document
@@ -998,7 +967,7 @@ def excise_duplicated_spans(
     (equi-join on doc_id). The token-level cut is a per-row lambda over
     (token, interval-list) — no shuffle of its own.
     """
-    toks, _, spans = _span_exprs(text_col, k)
+    toks, _, spans = _span_exprs(k)
     base = fan_out(docs).select("doc_id", toks.alias("toks"), spans.alias("spans"))
     grams = base.select("doc_id", F.explode("spans").alias("s")).select(
         "doc_id", "s.pos", "s.g"
@@ -1050,10 +1019,7 @@ def excise_duplicated_spans(
 
 
 def excise_duplicated_spans_intervals(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = SPAN_TOKENS,
-    min_docs: int = 2,
+    docs: DataFrame, k: int = SPAN_TOKENS
 ) -> DataFrame:
     """The SCALE-PATH form of :func:`excise_duplicated_spans` (round-13
     verdict item 4): same keeper election and island arithmetic, but
@@ -1077,7 +1043,7 @@ def excise_duplicated_spans_intervals(
     islands, one groupBy — and NO corpus-wide base join, NO token
     arrays carried past the explode.
     """
-    _, n_toks, spans = _span_exprs(text_col, k)
+    _, n_toks, spans = _span_exprs(k)
     grams = (
         fan_out(docs)
         .select(
@@ -1087,7 +1053,7 @@ def excise_duplicated_spans_intervals(
         )
         .select("doc_id", "n_tokens", "s.pos", "s.g")
     )
-    losers = _cross_doc_hits(grams, min_docs, losers_only=True)
+    losers = _cross_doc_hits(grams, 2, losers_only=True)
     w_d = Window.partitionBy("doc_id").orderBy("pos")
     prev = F.lag("pos").over(w_d)
     island = F.sum(
@@ -1120,24 +1086,20 @@ def excise_duplicated_spans_intervals(
     )
 
 
-def excise_duplicated_spans_intervals_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    k: int = SPAN_TOKENS,
-    min_docs: int = 2,
-) -> str:
+def excise_duplicated_spans_intervals_sql() -> str:
     """DuckDB twin of :func:`excise_duplicated_spans_intervals` — same
     keeper election, same island arithmetic, arithmetic n_removed."""
-    t = f"list_filter(string_split({text_col}, ' '), x -> x <> '')"
+    k = SPAN_TOKENS
+    t = "list_filter(string_split(text, ' '), x -> x <> '')"
     return f"""
 WITH t AS (
-  SELECT doc_id, {t} AS toks FROM {table}
+  SELECT doc_id, {t} AS toks FROM documents
 ), grams AS (
   SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, i AS pos,
          md5(array_to_string(list_slice(toks, i, i + {k} - 1), ' ')) AS g
   FROM t, unnest(range(1, greatest(len(toks) - {k} + 2, 1))) AS u(i)
 ), dup AS (
-  SELECT g FROM grams GROUP BY g HAVING COUNT(DISTINCT doc_id) >= {min_docs}
+  SELECT g FROM grams GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2
 ), losers AS (
   SELECT doc_id, n_tokens, pos FROM (
     SELECT doc_id, n_tokens, pos,
@@ -1167,24 +1129,20 @@ FROM ivs GROUP BY doc_id
 """
 
 
-def excise_duplicated_spans_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    k: int = SPAN_TOKENS,
-    min_docs: int = 2,
-) -> str:
+def excise_duplicated_spans_sql() -> str:
     """DuckDB twin of :func:`excise_duplicated_spans` — same keeper
     election, same island arithmetic, same token-position cut."""
-    t = f"list_filter(string_split({text_col}, ' '), x -> x <> '')"
+    k = SPAN_TOKENS
+    t = "list_filter(string_split(text, ' '), x -> x <> '')"
     return f"""
 WITH t AS (
-  SELECT doc_id, {t} AS toks FROM {table}
+  SELECT doc_id, {t} AS toks FROM documents
 ), grams AS (
   SELECT doc_id, i AS pos,
          md5(array_to_string(list_slice(toks, i, i + {k} - 1), ' ')) AS g
   FROM t, unnest(range(1, greatest(len(toks) - {k} + 2, 1))) AS u(i)
 ), dup AS (
-  SELECT g FROM grams GROUP BY g HAVING COUNT(DISTINCT doc_id) >= {min_docs}
+  SELECT g FROM grams GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2
 ), losers AS (
   SELECT doc_id, pos FROM (
     SELECT doc_id, pos,
@@ -1219,25 +1177,21 @@ FROM t LEFT JOIN ivs ON t.doc_id = ivs.doc_id
 """
 
 
-def duplicated_spans_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    k: int = SPAN_TOKENS,
-    min_docs: int = 2,
-) -> str:
+def duplicated_spans_sql() -> str:
     """DuckDB twin of :func:`duplicated_spans` — identical md5 span
     keys (1-based inclusive list_slice ≡ Spark's 1-based slice) and
     identical island arithmetic."""
-    t = f"list_filter(string_split({text_col}, ' '), x -> x <> '')"
+    k = SPAN_TOKENS
+    t = "list_filter(string_split(text, ' '), x -> x <> '')"
     return f"""
 WITH t AS (
-  SELECT doc_id, {t} AS toks FROM {table}
+  SELECT doc_id, {t} AS toks FROM documents
 ), grams AS (
   SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, i AS pos,
          md5(array_to_string(list_slice(toks, i, i + {k} - 1), ' ')) AS g
   FROM t, unnest(range(1, greatest(len(toks) - {k} + 2, 1))) AS u(i)
 ), dup AS (
-  SELECT g FROM grams GROUP BY g HAVING COUNT(DISTINCT doc_id) >= {min_docs}
+  SELECT g FROM grams GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2
 ), hits AS (
   SELECT doc_id, n_tokens, pos,
          LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
@@ -1270,11 +1224,7 @@ FROM spans GROUP BY doc_id
 
 
 def hot_ngram_flags(
-    docs: DataFrame,
-    text_col: str = "text",
-    n: int = 3,
-    hot_df: int = 4,
-    flag_frac: float = 0.2,
+    docs: DataFrame, hot_df: int = 4, flag_frac: float = 0.2
 ) -> DataFrame:
     """Per-document boilerplate signal from corpus-wide n-gram document
     frequency (the repeated-substring signal of Lee et al. 2022,
@@ -1292,7 +1242,7 @@ def hot_ngram_flags(
     sh = (
         fan_out(docs)
         .select(
-            "doc_id", F.explode(shingles(F.col(text_col), n)).alias("shingle")
+            "doc_id", F.explode(shingles(F.col("text"))).alias("shingle")
         )
         .distinct()
     )
@@ -1313,34 +1263,26 @@ def hot_ngram_flags(
     )
 
 
-def hot_ngram_flags_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    n: int = 3,
-    hot_df: int = 4,
-    flag_frac: float = 0.2,
-) -> str:
-    frac = (
-        f"ROUND(CAST(n_hot AS DOUBLE) / NULLIF(n_shingles, 0), 6)"
-    )
+def hot_ngram_flags_sql() -> str:
+    frac = "ROUND(CAST(n_hot AS DOUBLE) / NULLIF(n_shingles, 0), 6)"
     return f"""
 WITH sh AS (
   SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest({shingles_sql(text_col, n)}) AS shingle
-    FROM {table}
+    SELECT doc_id, unnest({shingles_sql('text')}) AS shingle
+    FROM documents
   )
 ), with_df AS (
   SELECT doc_id, COUNT(*) OVER (PARTITION BY shingle) AS df FROM sh
 ), agg AS (
   SELECT doc_id,
          CAST(COUNT(*) AS BIGINT) AS n_shingles,
-         CAST(SUM(CASE WHEN df > {hot_df} THEN 1 ELSE 0 END) AS BIGINT)
+         CAST(SUM(CASE WHEN df > 4 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_hot
   FROM with_df GROUP BY doc_id
 )
 SELECT doc_id, n_shingles, n_hot,
        {frac} AS hot_frac,
-       ({frac} >= {flag_frac}) AS flagged
+       ({frac} >= 0.2) AS flagged
 FROM agg
 """
 
@@ -1349,13 +1291,13 @@ FROM agg
 # n-gram Jaccard verification
 # ---------------------------------------------------------------------------
 
+# The blocking key of the exact set-overlap family: only documents of the
+# same language and source are compared.
+BLOCK_COLS = ("lang", "source")
+
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    threshold: float = 0.1,
-    max_doc_freq: int = 64,
+    docs: DataFrame, threshold: float = 0.1, max_doc_freq: int = 64
 ) -> DataFrame:
     """Exact Jaccard over distinct 3-gram shingle sets for pairs inside a
     blocking key (the verify stage for LSH candidates). Jaccard =
@@ -1370,9 +1312,7 @@ def ngram_jaccard_pairs(
     exact dedup first (corpus_job does); docs whose shingles are ALL
     ultra-common simply produce no pairs here.
     """
-    with_sizes = block_pair_intersections(
-        docs, text_col, block_cols, max_doc_freq
-    )
+    with_sizes = block_pair_intersections(docs, max_doc_freq)
     return jaccard_from_intersections(with_sizes, threshold)
 
 
@@ -1393,20 +1333,15 @@ def jaccard_from_intersections(
     )
 
 
-def block_pair_intersections(
-    docs: DataFrame,
-    text_col: str,
-    block_cols: tuple[str, ...],
-    max_doc_freq: int,
-) -> DataFrame:
+def block_pair_intersections(docs: DataFrame, max_doc_freq: int) -> DataFrame:
     """Shared core of the exact set-overlap family: per-block distinct
     shingles → df-capped combination lists → pair intersection counts
     joined with both per-doc set sizes. Returns (doc_a, doc_b,
     n_common, size_a, size_b)."""
     sh = fan_out(docs).select(
         "doc_id",
-        *block_cols,
-        F.explode(shingles(F.col(text_col))).alias("shingle"),
+        *BLOCK_COLS,
+        F.explode(shingles(F.col("text"))).alias("shingle"),
     ).distinct()
     # Intersections via per-(block, shingle) combination lists instead of
     # a shingle self-join (the join recomputed the explode per side — 4
@@ -1415,7 +1350,7 @@ def block_pair_intersections(
     # to numerator and denominator — deliberately NOT a window over the
     # shingle frame: that would shuffle every shingle row on doc_id.
     kept = (
-        sh.groupBy(*block_cols, "shingle")
+        sh.groupBy(*BLOCK_COLS, "shingle")
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") <= max_doc_freq)
     )
@@ -1446,11 +1381,7 @@ def block_pair_intersections(
 
 
 def ngram_containment_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    threshold: float = 0.5,
-    max_doc_freq: int = 64,
+    docs: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """ASYMMETRIC set overlap (containment / Broder's "resemblance vs
     containment" distinction): containment_a = |A∩B| / |A| — how much of
@@ -1462,9 +1393,7 @@ def ngram_containment_pairs(
     superset. Same blocking, df-capping, and combination-list plan as
     :func:`ngram_jaccard_pairs` (shared core), so the scale bounds are
     identical."""
-    with_sizes = block_pair_intersections(
-        docs, text_col, block_cols, max_doc_freq
-    )
+    with_sizes = block_pair_intersections(docs, 64)
     return containment_from_intersections(with_sizes, threshold)
 
 
@@ -1488,26 +1417,20 @@ def containment_from_intersections(
     )
 
 
-def ngram_containment_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    threshold: float = 0.5,
-    max_doc_freq: int = 64,
-) -> str:
+def ngram_containment_sql() -> str:
     """DuckDB twin of :func:`ngram_containment_pairs`."""
-    blocks = ", ".join(block_cols)
-    join_on = " AND ".join(f"a.{c} = b.{c}" for c in block_cols)
+    blocks = ", ".join(BLOCK_COLS)
+    join_on = " AND ".join(f"a.{c} = b.{c}" for c in BLOCK_COLS)
     return f"""
 WITH allsh AS (
   SELECT DISTINCT doc_id, {blocks}, shingle FROM (
-    SELECT doc_id, {blocks}, unnest({shingles_sql(text_col)}) AS shingle
-    FROM {table}
+    SELECT doc_id, {blocks}, unnest({shingles_sql('text')}) AS shingle
+    FROM documents
   )
 ), sh AS (
   SELECT doc_id, {blocks}, shingle FROM (
     SELECT *, COUNT(*) OVER (PARTITION BY {blocks}, shingle) AS df FROM allsh
-  ) WHERE df <= {max_doc_freq}
+  ) WHERE df <= 64
 ), sizes AS (
   SELECT doc_id, COUNT(*) AS n_shingles FROM sh GROUP BY doc_id
 ), inter AS (
@@ -1521,16 +1444,13 @@ SELECT doc_a, doc_b, n_common,
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE ROUND(CAST(n_common AS DOUBLE) / sa.n_shingles, 6) >= {threshold}
-   OR ROUND(CAST(n_common AS DOUBLE) / sb.n_shingles, 6) >= {threshold}
+WHERE ROUND(CAST(n_common AS DOUBLE) / sa.n_shingles, 6) >= 0.5
+   OR ROUND(CAST(n_common AS DOUBLE) / sb.n_shingles, 6) >= 0.5
 """
 
 
 def jaccard_verify_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.1,
+    docs: DataFrame, candidates: DataFrame, threshold: float = 0.1
 ) -> DataFrame:
     """Exact Jaccard for an explicit (doc_a, doc_b) candidate frame — the
     verify stage fed by :func:`lsh_candidate_pairs`.
@@ -1546,7 +1466,7 @@ def jaccard_verify_pairs(
         .distinct()
     )
     sets_ = docs.join(cand_docs, on="doc_id").select(
-        "doc_id", F.array_distinct(shingles(F.col(text_col))).alias("sh")
+        "doc_id", F.array_distinct(shingles(F.col("text"))).alias("sh")
     )
     joined = candidates.join(
         sets_.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
@@ -1568,25 +1488,19 @@ def jaccard_verify_pairs(
     )
 
 
-def ngram_jaccard_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    block_cols: tuple[str, ...] = ("lang", "source"),
-    threshold: float = 0.1,
-    max_doc_freq: int = 64,
-) -> str:
-    blocks = ", ".join(block_cols)
-    join_on = " AND ".join(f"a.{c} = b.{c}" for c in block_cols)
+def ngram_jaccard_sql() -> str:
+    blocks = ", ".join(BLOCK_COLS)
+    join_on = " AND ".join(f"a.{c} = b.{c}" for c in BLOCK_COLS)
     return f"""
 WITH allsh AS (
   SELECT DISTINCT doc_id, {blocks}, shingle FROM (
-    SELECT doc_id, {blocks}, unnest({shingles_sql(text_col)}) AS shingle
-    FROM {table}
+    SELECT doc_id, {blocks}, unnest({shingles_sql('text')}) AS shingle
+    FROM documents
   )
 ), sh AS (
   SELECT doc_id, {blocks}, shingle FROM (
     SELECT *, COUNT(*) OVER (PARTITION BY {blocks}, shingle) AS df FROM allsh
-  ) WHERE df <= {max_doc_freq}
+  ) WHERE df <= 64
 ), sizes AS (
   SELECT doc_id, COUNT(*) AS n_shingles FROM sh GROUP BY doc_id
 ), inter AS (
@@ -1599,26 +1513,19 @@ SELECT doc_a, doc_b, n_common,
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE ROUND(CAST(n_common AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_common), 6) >= {threshold}
+WHERE ROUND(CAST(n_common AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_common), 6) >= 0.1
 """
 
 
-def contrastive_triplets(
-    docs: DataFrame,
-    candidates: DataFrame,
-    text_col: str = "text",
-    hi: float = 0.5,
-    lo: float = 0.1,
-    per_anchor: int = 3,
-) -> DataFrame:
+def contrastive_triplets(docs: DataFrame, candidates: DataFrame) -> DataFrame:
     """Contrastive training-pair mining over the LSH candidate graph:
     (anchor, positive, hard-negative) triplets for embedding-model
     training (the SimCSE/E5-style data-prep step a retrieval stack
-    needs). Positives are candidate pairs whose EXACT Jaccard ≥ ``hi``
+    needs). Positives are candidate pairs whose EXACT Jaccard ≥ 0.5
     (true near-dups); hard negatives are candidate pairs with Jaccard
-    ≤ ``lo`` — "hard" precisely because LSH already found them
+    ≤ 0.1 — "hard" precisely because LSH already found them
     collision-close, the negatives a random sampler never surfaces.
-    Each anchor contributes up to ``per_anchor`` triplets: its i-th
+    Each anchor contributes up to 3 triplets: its i-th
     best positive paired with the corpus's i-th hardest negative PAIR
     (the in-batch-negative convention — near-dup clusters and index
     collisions are usually disjoint doc sets, so anchor-local hard
@@ -1642,7 +1549,7 @@ def contrastive_triplets(
         .distinct()
     )
     sets_ = docs.join(cand_docs, on="doc_id").select(
-        "doc_id", F.array_distinct(shingles(F.col(text_col))).alias("sh")
+        "doc_id", F.array_distinct(shingles(F.col("text"))).alias("sh")
     )
     joined = candidates.join(
         sets_.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
@@ -1678,9 +1585,9 @@ def contrastive_triplets(
         F.col("jaccard").desc(), F.col("other_id").asc()
     )
     pos = (
-        directed.filter(F.col("jaccard") >= hi)
+        directed.filter(F.col("jaccard") >= 0.5)
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= per_anchor)
+        .filter(F.col("rank") <= 3)
         .select(
             "anchor_id",
             "rank",
@@ -1690,10 +1597,10 @@ def contrastive_triplets(
     )
     # Global hardest collisions: orderBy().limit() compiles to
     # TakeOrderedAndProject (per-partition top-k + driver merge of
-    # per_anchor rows), so the global sort is distributed; only the
-    # residual row_number window runs single-partition — over at most
-    # per_anchor rows. A bare Window.orderBy here would instead sort
-    # the WHOLE <= lo pair set in one task, which on a degenerate
+    # 3 rows), so the global sort is distributed; only the residual
+    # row_number window runs single-partition — over at most 3 rows. A
+    # bare Window.orderBy here would instead sort the WHOLE <= 0.1 pair
+    # set in one task, which on a degenerate
     # corpus (LSH star pairing mostly-dissimilar docs) is nearly the
     # entire candidate set. The ordering is a deterministic total
     # order (doc-id tiebreaks), so the pre-cut keeps results identical.
@@ -1701,11 +1608,11 @@ def contrastive_triplets(
         F.col("jaccard").desc(), F.col("doc_a").asc(), F.col("doc_b").asc()
     )
     neg = (
-        scored.filter(F.col("jaccard") <= lo)
+        scored.filter(F.col("jaccard") <= 0.1)
         .orderBy(
             F.col("jaccard").desc(), F.col("doc_a").asc(), F.col("doc_b").asc()
         )
-        .limit(per_anchor)
+        .limit(3)
         .withColumn("rank", F.row_number().over(w_global))
         .select(
             "rank",
@@ -1725,14 +1632,7 @@ def contrastive_triplets(
     )
 
 
-def contrastive_triplets_sql(
-    pairs_sql: str,
-    text_col: str = "text",
-    table: str = "documents",
-    hi: float = 0.5,
-    lo: float = 0.1,
-    per_anchor: int = 3,
-) -> str:
+def contrastive_triplets_sql(pairs_sql: str) -> str:
     """DuckDB twin of :func:`contrastive_triplets` over the same
     candidate-pair query."""
     return f"""
@@ -1741,8 +1641,8 @@ WITH cand AS ({pairs_sql}
   SELECT doc_a AS doc_id FROM cand UNION SELECT doc_b FROM cand
 ), sh AS (
   SELECT DISTINCT doc_id, shingle FROM (
-    SELECT doc_id, unnest({shingles_sql(text_col)}) AS shingle
-    FROM {table} WHERE doc_id IN (SELECT doc_id FROM cand_docs)
+    SELECT doc_id, unnest({shingles_sql('text')}) AS shingle
+    FROM documents WHERE doc_id IN (SELECT doc_id FROM cand_docs)
   )
 ), sizes AS (
   SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
@@ -1778,15 +1678,15 @@ WITH cand AS ({pairs_sql}
   FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY anchor_id
         ORDER BY jaccard DESC, other_id ASC) AS rank
-    FROM directed WHERE jaccard >= {hi}
-  ) WHERE rank <= {per_anchor}
+    FROM directed WHERE jaccard >= 0.5
+  ) WHERE rank <= 3
 ), neg AS (
   SELECT rank, doc_a AS neg_a, doc_b AS neg_b, jaccard AS neg_jaccard
   FROM (
     SELECT *, ROW_NUMBER() OVER (
         ORDER BY jaccard DESC, doc_a ASC, doc_b ASC) AS rank
-    FROM scored WHERE jaccard <= {lo}
-  ) WHERE rank <= {per_anchor}
+    FROM scored WHERE jaccard <= 0.1
+  ) WHERE rank <= 3
 )
 SELECT anchor_id, CAST(rank AS BIGINT) AS rank,
        positive_id, pos_jaccard, neg_a, neg_b, neg_jaccard
@@ -1802,8 +1702,6 @@ ASCII_RE = "^[\\x00-\\x7F]*$"
 def edit_distance_verify(
     docs: DataFrame,
     candidates: DataFrame,
-    text_col: str = "text",
-    prefix_len: int = 200,
     max_norm: float = 0.25,
     ascii_only: bool = False,
 ) -> DataFrame:
@@ -1816,7 +1714,7 @@ def edit_distance_verify(
     Levenshtein is O(n·m) per pair, so two structural bounds keep the
     verify linear in |candidates|:
 
-    - texts are compared on a ``prefix_len``-char prefix (near-dups
+    - texts are compared on a 200-char prefix (near-dups
       diverge early or not at all — the standard production shortcut);
     - Spark's bounded DP (``levenshtein(l, r, threshold)``, O(t·n))
       abandons any pair whose distance exceeds the worst distance that
@@ -1836,9 +1734,9 @@ def edit_distance_verify(
     text (character semantics; unit-tested against a pure-Python DP);
     only the cross-engine parity check needs the restriction.
     """
-    threshold = int(max_norm * prefix_len) + 1
+    threshold = int(max_norm * 200) + 1
     prefixes = docs.select(
-        "doc_id", F.substring(F.col(text_col), 1, prefix_len).alias("txt")
+        "doc_id", F.substring(F.col("text"), 1, 200).alias("txt")
     )
     joined = candidates.join(
         prefixes.select(F.col("doc_id").alias("doc_a"), F.col("txt").alias("txt_a")),
@@ -1864,21 +1762,16 @@ def edit_distance_verify(
     )
 
 
-def edit_distance_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    prefix_len: int = 200,
-    max_norm: float = 0.25,
-) -> str:
+def edit_distance_sql() -> str:
     """DuckDB twin of the ``ascii_only=True`` verify: unbounded
     ``levenshtein`` (DuckDB has no threshold arg — the bound only
     changes cost, never the surviving rows) over the same LSH candidate
     pairs, restricted to ASCII prefixes where DuckDB's byte-edit count
     equals Spark's character-edit count."""
     return f"""
-WITH cand AS ({minhash_lsh_sql(text_col, table)}),
+WITH cand AS ({minhash_lsh_sql()}),
 prefixes AS (
-  SELECT doc_id, substr({text_col}, 1, {prefix_len}) AS txt FROM {table}
+  SELECT doc_id, substr(text, 1, 200) AS txt FROM documents
 ), scored AS (
   SELECT c.doc_a, c.doc_b,
          levenshtein(a.txt, b.txt) AS edit_dist,
@@ -1891,7 +1784,7 @@ prefixes AS (
     AND regexp_matches(b.txt, '{ASCII_RE}')
 )
 SELECT doc_a, doc_b, edit_dist, norm_edit
-FROM scored WHERE norm_edit <= {max_norm}
+FROM scored WHERE norm_edit <= 0.25
 """
 
 
@@ -1952,16 +1845,14 @@ def lsh_incremental_pairs(
     )
 
 
-def lsh_incremental_sql(
-    new_pred_sql: str, text_col: str = "text", table: str = "documents"
-) -> str:
+def lsh_incremental_sql(new_pred_sql: str) -> str:
     """DuckDB twin of :func:`lsh_incremental_pairs`: full-corpus band
     buckets, pairs where either side satisfies ``new_pred_sql`` (a
-    boolean SQL expression over ``{table}`` columns), with the same
+    boolean SQL expression over ``documents`` columns), with the same
     ``LSH_BUCKET_CAP`` keeper star as :func:`minhash_lsh_sql`."""
     return f"""
-WITH {_lsh_bucketed_sql(text_col, table)}, flags AS (
-  SELECT doc_id, ({new_pred_sql}) AS is_new FROM {table}
+WITH {_lsh_bucketed_sql()}, flags AS (
+  SELECT doc_id, ({new_pred_sql}) AS is_new FROM documents
 )
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 FROM bucketed a

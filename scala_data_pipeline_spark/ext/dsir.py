@@ -15,7 +15,7 @@ Spark shape — the canonical two-pass fit-then-apply:
 1. pass 1 (fit): one corpus scan aggregates hashed-bucket counts for
    raw and target simultaneously (the target is a predicate over the
    same table — one scan, two conditional sums), yielding a
-   ``n_buckets``-row model with add-1-smoothed log ratios — BOUNDED,
+   ``N_BUCKETS``-row model with add-1-smoothed log ratios — BOUNDED,
    broadcast to pass 2;
 2. pass 2 (apply): one corpus scan re-tokenizes and sums each doc's
    per-token log ratios against the broadcast model. Two scans is the
@@ -59,12 +59,7 @@ def _bucket_sql(token_expr: str, n_buckets: int) -> str:
     return f"{hex_int_sql(f'md5({token_expr})', 8)} % {n_buckets}"
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target: Column,
-    n_buckets: int = N_BUCKETS,
-    text_col: str = "text",
-) -> DataFrame:
+def dsir_weights(docs: DataFrame, target: Column) -> DataFrame:
     """(doc_id, n_tokens, weight) for every document with ≥1 token:
     weight = Σ_tokens round(log(p̂_target(b)) − log(p̂_raw(b)), 8),
     summed exactly in decimal, reported at 6dp. ``target`` is a boolean
@@ -82,8 +77,8 @@ def dsir_weights(
     toks = docs.select(
         "doc_id",
         target.alias("_tgt"),
-        F.explode(tokens_col(F.col(text_col))).alias("token"),
-    ).withColumn("b", _bucket(F.col("token"), n_buckets))
+        F.explode(tokens_col(F.col("text"))).alias("token"),
+    ).withColumn("b", _bucket(F.col("token"), N_BUCKETS))
 
     # Shared bucket-grain frame: partial-aggregates map-side, then one
     # shuffle on (doc_id, b); _tgt is constant per doc_id.
@@ -112,11 +107,11 @@ def dsir_weights(
         F.round(
             F.log(
                 (F.col("t_cnt") + 1).cast("double")
-                / (F.col("t_tot") + n_buckets).cast("double")
+                / (F.col("t_tot") + N_BUCKETS).cast("double")
             )
             - F.log(
                 (F.col("r_cnt") + 1).cast("double")
-                / (F.col("r_tot") + n_buckets).cast("double")
+                / (F.col("r_tot") + N_BUCKETS).cast("double")
             ),
             8,
         )
@@ -146,21 +141,16 @@ def dsir_weights(
     )
 
 
-def dsir_weights_sql(
-    target_pred: str,
-    n_buckets: int = N_BUCKETS,
-    text_expr: str = "text",
-    table: str = "documents",
-) -> str:
+def dsir_weights_sql(target_pred: str) -> str:
     """DuckDB twin of :func:`dsir_weights` — identical hashing,
     smoothing, rounding, and decimal summation."""
-    b = _bucket_sql("token", n_buckets)
+    b = _bucket_sql("token", N_BUCKETS)
     return f"""
 WITH toks AS (
   SELECT doc_id, ({target_pred}) AS _tgt,
-         unnest(list_filter(string_split({text_expr}, ' '),
+         unnest(list_filter(string_split(text, ' '),
                             t -> t <> '')) AS token
-  FROM {table}
+  FROM documents
 ), bt AS (
   SELECT doc_id, _tgt, {b} AS b FROM toks
 ), model AS (
@@ -174,8 +164,8 @@ WITH toks AS (
 ), lr AS (
   SELECT b,
          CAST(ROUND(
-           ln(CAST(t_cnt + 1 AS DOUBLE) / CAST(t_tot + {n_buckets} AS DOUBLE))
-           - ln(CAST(r_cnt + 1 AS DOUBLE) / CAST(r_tot + {n_buckets} AS DOUBLE)),
+           ln(CAST(t_cnt + 1 AS DOUBLE) / CAST(t_tot + {N_BUCKETS} AS DOUBLE))
+           - ln(CAST(r_cnt + 1 AS DOUBLE) / CAST(r_tot + {N_BUCKETS} AS DOUBLE)),
          8) AS DECIMAL(18,8)) AS lr
   FROM model CROSS JOIN totals
 )
@@ -192,8 +182,6 @@ def dsir_sample(
     target: Column,
     k: int = 50,
     tau: float = 1.0,
-    n_buckets: int = N_BUCKETS,
-    text_col: str = "text",
     salt: str = "dsir",
 ) -> DataFrame:
     """Gumbel-top-k resampling over the importance weights: key =
@@ -201,7 +189,7 @@ def dsir_sample(
     with probability ∝ exp(weight/tau), fully deterministic (the
     Gumbel noise is a pure function of doc_id and salt). Returns the k
     selected docs with their weights and keys."""
-    w = dsir_weights(docs, target, n_buckets=n_buckets, text_col=text_col)
+    w = dsir_weights(docs, target)
     u = md5_uniform(keyed_md5("doc_id", salt))
     gumbel = F.round(-F.log(-F.log(u)), 6)
     return (
@@ -214,23 +202,13 @@ def dsir_sample(
     )
 
 
-def dsir_sample_sql(
-    target_pred: str,
-    k: int = 50,
-    tau: float = 1.0,
-    n_buckets: int = N_BUCKETS,
-    text_expr: str = "text",
-    table: str = "documents",
-    salt: str = "dsir",
-) -> str:
-    u = md5_uniform_sql(keyed_md5_sql("w.doc_id", salt))
-    inner = dsir_weights_sql(
-        target_pred, n_buckets=n_buckets, text_expr=text_expr, table=table
-    )
+def dsir_sample_sql(target_pred: str, k: int = 50) -> str:
+    u = md5_uniform_sql(keyed_md5_sql("w.doc_id", "dsir"))
+    inner = dsir_weights_sql(target_pred)
     return f"""
 WITH w AS ({inner})
 SELECT w.doc_id, w.n_tokens, w.weight,
-       ROUND(w.weight / {float(tau)!r} + ROUND(-ln(-ln({u})), 6), 6) AS key
+       ROUND(w.weight / 1.0 + ROUND(-ln(-ln({u})), 6), 6) AS key
 FROM w
 ORDER BY key DESC, w.doc_id ASC
 LIMIT {k}

@@ -39,11 +39,7 @@ ITERATIONS = 3
 _SCALE = 12
 
 
-def pagerank_on_pairs(
-    pairs: DataFrame,
-    iterations: int = ITERATIONS,
-    damping: float = DAMPING,
-) -> DataFrame:
+def pagerank_on_pairs(pairs: DataFrame) -> DataFrame:
     """Fixed-iteration PageRank over a symmetric pair graph.
 
     ``pairs`` must have columns ``doc_a``/``doc_b`` (one row per
@@ -80,11 +76,11 @@ def pagerank_on_pairs(
             F.col("degree"),
             F.lit(0.0).alias("rank"),
         )
-    base = round((1.0 - damping) / n_vertices, _SCALE)
+    base = round((1.0 - DAMPING) / n_vertices, _SCALE)
     rank = deg.select(
         "src", F.round(F.lit(1.0 / n_vertices), _SCALE).alias("rank")
     )
-    for _ in range(iterations):
+    for _ in range(ITERATIONS):
         contrib = (
             bi.join(rank, on="src")
             .join(deg, on="src")
@@ -101,7 +97,7 @@ def pagerank_on_pairs(
             F.col("dst").alias("src"),
             F.round(
                 F.lit(base)
-                + F.lit(damping) * F.col("in_mass").cast("double"),
+                + F.lit(DAMPING) * F.col("in_mass").cast("double"),
                 _SCALE,
             ).alias("rank"),
         )
@@ -111,11 +107,7 @@ def pagerank_on_pairs(
     return out
 
 
-def pagerank_sql(
-    pairs_sql: str,
-    iterations: int = ITERATIONS,
-    damping: float = DAMPING,
-) -> str:
+def pagerank_sql(pairs_sql: str) -> str:
     """DuckDB twin of :func:`pagerank_on_pairs`: the K iterations are
     unrolled into a chain of CTEs over the same pair query."""
     s = _SCALE
@@ -129,19 +121,19 @@ def pagerank_sql(
         f"r0 AS (SELECT src, ROUND(1.0 / n, {s}) AS rank FROM deg, nv)",
     ]
     prev = "r0"
-    for i in range(1, iterations + 1):
+    for i in range(1, ITERATIONS + 1):
         ctes.append(
             f"r{i} AS (SELECT bi.dst AS src, "
-            f"ROUND(ROUND((1.0 - {damping}) / nv.n, {s}) + {damping} * "
+            f"ROUND(ROUND((1.0 - {DAMPING}) / nv.n, {s}) + {DAMPING} * "
             f"CAST(SUM(CAST(ROUND({prev}.rank / deg.degree, {s}) "
             f"AS DECIMAL(20,{s}))) AS DOUBLE), {s}) AS rank "
             f"FROM bi JOIN {prev} ON bi.src = {prev}.src "
-            f"JOIN deg ON bi.src = deg.src, nv "
-            f"GROUP BY bi.dst, nv.n)"
+            "JOIN deg ON bi.src = deg.src, nv "
+            "GROUP BY bi.dst, nv.n)"
         )
         prev = f"r{i}"
     return (
-        "WITH " + ",\n".join(ctes) + f"\nSELECT deg.src AS doc_id, "
+        "WITH " + ",\n".join(ctes) + "\nSELECT deg.src AS doc_id, "
         f"deg.degree, {prev}.rank FROM deg JOIN {prev} ON deg.src = {prev}.src"
     )
 
@@ -246,9 +238,7 @@ KCORE_K = 3
 KCORE_MAX_ROUNDS = 8
 
 
-def kcore_vertices(
-    pairs: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_MAX_ROUNDS
-) -> DataFrame:
+def kcore_vertices(pairs: DataFrame, k: int = KCORE_K) -> DataFrame:
     """Vertices of the k-core of a symmetric pair graph, with their
     degree inside the core — the standard "dense near-dup community"
     extraction (a k-core survives every vertex having ≥ k neighbors
@@ -259,11 +249,11 @@ def kcore_vertices(
     uniform doc-id keys) and drops sub-k vertices from the edge list
     (two semi-joins), ``localCheckpoint`` per round to cut lineage —
     the connected-components idiom. Rounds are bounded by the peel
-    depth, not the vertex count; ``max_rounds`` makes non-convergence
-    loud instead of silent, and the DuckDB oracle unrolls exactly
-    ``max_rounds`` stages so both engines provably compute the same
-    fixpoint (peeling is idempotent once stable, so extra oracle
-    stages are no-ops).
+    depth, not the vertex count; ``KCORE_MAX_ROUNDS`` makes
+    non-convergence loud instead of silent, and the DuckDB oracle
+    unrolls exactly ``KCORE_MAX_ROUNDS`` stages so both engines
+    provably compute the same fixpoint (peeling is idempotent once
+    stable, so extra oracle stages are no-ops).
     """
     # Canonicalize BEFORE the distinct (least/greatest, self-loops
     # dropped): the downstream union counts each edge once per
@@ -286,7 +276,7 @@ def kcore_vertices(
     )
     edges = bi
     prev_vertices = -1
-    for _ in range(max_rounds):
+    for _ in range(KCORE_MAX_ROUNDS):
         survivors = (
             edges.groupBy("src")
             .count()
@@ -310,7 +300,7 @@ def kcore_vertices(
         )
     else:
         raise RuntimeError(
-            f"k-core peel did not converge in {max_rounds} rounds; "
+            f"k-core peel did not converge in {KCORE_MAX_ROUNDS} rounds; "
             "raise max_rounds (and regenerate the oracle) for this graph"
         )
     return (
@@ -323,20 +313,18 @@ def kcore_vertices(
     )
 
 
-def kcore_sql(
-    pairs_sql: str, k: int = KCORE_K, rounds: int = KCORE_MAX_ROUNDS
-) -> str:
-    """DuckDB twin: ``rounds`` unrolled peel stages over the pair query
-    (must yield doc_a, doc_b). Idempotent past the fixpoint, so it
-    matches the Spark loop whenever that loop converged within
-    ``rounds`` (which it errors on otherwise)."""
+def kcore_sql(pairs_sql: str, k: int = KCORE_K) -> str:
+    """DuckDB twin: ``KCORE_MAX_ROUNDS`` unrolled peel stages over the
+    pair query (must yield doc_a, doc_b). Idempotent past the fixpoint,
+    so it matches the Spark loop whenever that loop converged within
+    ``KCORE_MAX_ROUNDS`` rounds (which it errors on otherwise)."""
     # AS MATERIALIZED is load-bearing: each stage references its
     # predecessor twice, and DuckDB inlines plain CTEs, which would
-    # re-evaluate the whole peel prefix 2^rounds times.
+    # re-evaluate the whole peel prefix 2^KCORE_MAX_ROUNDS times.
     stages = [
         "s0 AS MATERIALIZED (SELECT DISTINCT src AS v FROM bi)",
     ]
-    for i in range(1, rounds + 1):
+    for i in range(1, KCORE_MAX_ROUNDS + 1):
         stages.append(
             f"""s{i} AS MATERIALIZED (
   SELECT src AS v FROM bi
@@ -360,8 +348,8 @@ WITH pairs AS (
 {staged}
 SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS core_deg
 FROM bi
-WHERE src IN (SELECT v FROM s{rounds})
-  AND dst IN (SELECT v FROM s{rounds})
+WHERE src IN (SELECT v FROM s{KCORE_MAX_ROUNDS})
+  AND dst IN (SELECT v FROM s{KCORE_MAX_ROUNDS})
 GROUP BY src
 """
 
@@ -610,12 +598,7 @@ def personalized_pagerank(
     )
 
 
-def personalized_pagerank_sql(
-    pairs_sql: str,
-    seeds_sql: str,
-    iterations: int = ITERATIONS,
-    damping: float = DAMPING,
-) -> str:
+def personalized_pagerank_sql(pairs_sql: str, seeds_sql: str) -> str:
     """DuckDB twin of :func:`personalized_pagerank` — unrolled CTE
     chain; ``seeds_sql`` must yield a doc_id column (intersected with
     the vertex set, as the operator does)."""
@@ -633,31 +616,31 @@ def personalized_pagerank_sql(
         # effective seed set yields ZERO rows, not every vertex at rank
         # 0 (advisor round-11 operator/oracle divergence; also keeps
         # the 1/ns.k teleport term division-safe).
-        f"base AS (SELECT deg.src, deg.degree,"
+        "base AS (SELECT deg.src, deg.degree,"
         " seedset.src IS NOT NULL AS is_seed,"
-        f" CASE WHEN seedset.src IS NOT NULL"
-        f" THEN ROUND((1.0 - {damping}) / ns.k, {s}) ELSE 0.0 END AS b"
+        " CASE WHEN seedset.src IS NOT NULL"
+        f" THEN ROUND((1.0 - {DAMPING}) / ns.k, {s}) ELSE 0.0 END AS b"
         " FROM deg LEFT JOIN seedset ON deg.src = seedset.src, ns"
         " WHERE ns.k > 0)",
         "r0 AS (SELECT src, b AS rank FROM base)",
     ]
     prev = "r0"
-    for i in range(1, iterations + 1):
+    for i in range(1, ITERATIONS + 1):
         ctes.extend(
             [
                 f"c{i} AS (SELECT bi.dst AS src, "
                 f"CAST(SUM(CAST(ROUND({prev}.rank / deg.degree, {s}) "
                 f"AS DECIMAL(20,{s}))) AS DOUBLE) AS in_mass "
                 f"FROM bi JOIN {prev} ON bi.src = {prev}.src "
-                f"JOIN deg ON bi.src = deg.src GROUP BY bi.dst)",
+                "JOIN deg ON bi.src = deg.src GROUP BY bi.dst)",
                 f"r{i} AS (SELECT base.src, "
-                f"ROUND(base.b + {damping} * COALESCE(c{i}.in_mass, 0.0), {s})"
+                f"ROUND(base.b + {DAMPING} * COALESCE(c{i}.in_mass, 0.0), {s})"
                 f" AS rank FROM base LEFT JOIN c{i} ON base.src = c{i}.src)",
             ]
         )
         prev = f"r{i}"
     return (
-        "WITH " + ",\n".join(ctes) + f"\nSELECT base.src AS doc_id,"
+        "WITH " + ",\n".join(ctes) + "\nSELECT base.src AS doc_id,"
         f" base.degree, base.is_seed, {prev}.rank"
         f" FROM base JOIN {prev} ON base.src = {prev}.src"
     )

@@ -61,9 +61,7 @@ def hdr_histogram(df: DataFrame, value_col: str) -> DataFrame:
     )
 
 
-def hdr_quantiles(
-    hist: DataFrame, qs: tuple[float, ...] = DEFAULT_QS
-) -> DataFrame:
+def hdr_quantiles(hist: DataFrame) -> DataFrame:
     """Quantile estimates from the bucket table: per probe q, the
     integer-midpoint of the first bucket (in (e, sub) order) whose
     cumulative count reaches ceil(q*N). Windows run over the BOUNDED
@@ -82,7 +80,7 @@ def hdr_quantiles(
             Window.partitionBy()
         ).cast("long").alias("total"),
     )
-    probes = local_frame(spark, [(q,) for q in qs], "q double")
+    probes = local_frame(spark, [(q,) for q in DEFAULT_QS], "q double")
     # first qualifying bucket = min of the packed (e, sub) key — the
     # packing keeps the argmin a plain long MIN in both engines
     hit = (
@@ -112,19 +110,15 @@ def hdr_quantiles(
     )
 
 
-def hdr_quantiles_sql(
-    value_expr: str = "value",
-    table: str = "events",
-    qs: tuple[float, ...] = DEFAULT_QS,
-) -> str:
+def hdr_quantiles_sql() -> str:
     """DuckDB twin: identical integer bucketing, cumulative lookup and
     midpoint arithmetic."""
     m = HDR_SUB_BITS
-    probes = ", ".join(f"({q!r})" for q in qs)
+    probes = ", ".join(f"({q!r})" for q in DEFAULT_QS)
     return f"""
 WITH cents AS (
-  SELECT CAST(ROUND(({value_expr}) * 100) AS BIGINT) AS v
-  FROM {table} WHERE ({value_expr}) > 0
+  SELECT CAST(ROUND((value) * 100) AS BIGINT) AS v
+  FROM events WHERE (value) > 0
 ), keyed AS (
   SELECT v, CAST(LENGTH(BIN(v)) - 1 AS INTEGER) AS e FROM cents
 ), hist AS (

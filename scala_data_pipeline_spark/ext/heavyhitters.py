@@ -99,16 +99,16 @@ def spacesaving_summaries(docs: DataFrame, m: int = M_COUNTERS) -> DataFrame:
 
 
 def heavy_hitters(
-    spark: SparkSession, sf_dir: str, m: int = M_COUNTERS, k: int = TOP_K
+    spark: SparkSession, sf_dir: str, k: int = TOP_K
 ) -> DataFrame:
     """Approximate top-k tokens across the documents corpus.
 
-    ``guarantee`` is the merged detection threshold Σ n_p/m: any token
+    ``guarantee`` is the merged detection threshold Σ n_p/M_COUNTERS: any token
     whose true corpus frequency exceeds it is certainly present, and
     ``est`` bounds the true count within [est - err, est].
     """
     summaries = spacesaving_summaries(
-        load_table(spark, sf_dir, "documents"), m
+        load_table(spark, sf_dir, "documents")
     )
     merged = summaries.groupBy("token").agg(
         F.sum("est").alias("est"),

@@ -52,10 +52,10 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def to_media_frame(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def to_media_frame(docs: DataFrame) -> DataFrame:
     """documents → media frame: utf-8 bytes of text stand in for an
     image/audio payload; real pipelines read the blob column directly."""
-    payload = F.encode(F.col(text_col), "utf-8")
+    payload = F.encode(F.col("text"), "utf-8")
     return docs.select(
         "doc_id",
         F.lit("fake/utf8").alias("media_type"),
@@ -268,14 +268,12 @@ def sample_frames(
     return media.mapInPandas(batches, schema=FRAME_SCHEMA)
 
 
-def sample_frames_sql(
-    frame_bytes: int = 32, every_k: int = 2, table: str = "documents"
-) -> str:
+def sample_frames_sql() -> str:
     """DuckDB twin over the utf-8 fake payload (hex arithmetic)."""
-    fb2 = frame_bytes * 2
+    fb2 = 64  # hex digits per 32-byte frame
     return f"""
 WITH media AS (
-  SELECT doc_id, lower(hex(encode(text))) AS hx FROM {table}
+  SELECT doc_id, lower(hex(encode(text))) AS hx FROM documents
 ), idx AS (
   SELECT doc_id, hx,
          unnest(range(0, CAST(ceil(length(hx) / {fb2}.0) AS BIGINT))) AS i
@@ -286,7 +284,7 @@ SELECT doc_id,
        substr(hx, CAST(i * {fb2} + 1 AS INTEGER), {fb2}) AS frame_hex,
        CAST(length(substr(hx, CAST(i * {fb2} + 1 AS INTEGER), {fb2})) / 2
             AS BIGINT) AS frame_n_bytes
-FROM idx WHERE i % {every_k} = 0
+FROM idx WHERE i % 2 = 0
 """
 
 
@@ -325,13 +323,11 @@ def resize_thumbnail(media: DataFrame, max_bytes: int = 16) -> DataFrame:
     return media.mapInPandas(batches, schema=THUMB_SCHEMA)
 
 
-def resize_thumbnail_sql(
-    max_bytes: int = 16, table: str = "documents"
-) -> str:
-    mb2 = max_bytes * 2
+def resize_thumbnail_sql() -> str:
+    mb2 = 32  # hex digits of a 16-byte thumbnail
     return f"""
 WITH media AS (
-  SELECT doc_id, lower(hex(encode(text))) AS hx FROM {table}
+  SELECT doc_id, lower(hex(encode(text))) AS hx FROM documents
 )
 SELECT doc_id,
        CAST(length(hx) / 2 AS BIGINT) AS n_bytes,

@@ -68,45 +68,40 @@ def _normalize(X: np.ndarray) -> np.ndarray:
     return X / norms
 
 
-def train_codebooks(
-    corpus: DataFrame,
-    m: int = M_SUBSPACES,
-    k: int = K_CENTROIDS,
-    iters: int = LLOYD_ITERS,
-    sample: int = TRAIN_SAMPLE,
-) -> np.ndarray:
+def train_codebooks(corpus: DataFrame) -> np.ndarray:
     """Deterministic per-subspace Lloyd k-means on a driver-side sample.
 
-    Returns codebooks of shape (m, k, d/m), float64. Initialization is
-    the first k distinct subvectors in vec_id order (no RNG), argmin
-    ties break to the lowest index, and empty clusters retain their
-    previous centroid — all choices made for run-to-run determinism.
+    Returns codebooks of shape (m, k, d/m) with m = M_SUBSPACES and
+    k = K_CENTROIDS, float64. Initialization is the first k distinct
+    subvectors in vec_id order (no RNG), argmin ties break to the
+    lowest index, and empty clusters retain their previous centroid —
+    all choices made for run-to-run determinism.
     """
     rows = (
         corpus.select("vec_id", "embedding")
         .orderBy("vec_id")
-        .limit(sample)
+        .limit(TRAIN_SAMPLE)
         .collect()
     )
     X = _normalize(np.array([r.embedding for r in rows], dtype=np.float64))
     d = X.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub = d // m
-    books = np.empty((m, k, sub), dtype=np.float64)
-    for j in range(m):
+    if d % M_SUBSPACES:
+        raise ValueError(f"dim {d} not divisible by m={M_SUBSPACES}")
+    sub = d // M_SUBSPACES
+    books = np.empty((M_SUBSPACES, K_CENTROIDS, sub), dtype=np.float64)
+    for j in range(M_SUBSPACES):
         Xj = X[:, j * sub : (j + 1) * sub]
         _, first_idx = np.unique(Xj, axis=0, return_index=True)
-        init_rows = Xj[np.sort(first_idx)][:k]
-        if len(init_rows) < k:
+        init_rows = Xj[np.sort(first_idx)][:K_CENTROIDS]
+        if len(init_rows) < K_CENTROIDS:
             # Degenerate sample: pad by repeating rows cyclically.
-            reps = -(-k // len(init_rows))
-            init_rows = np.tile(init_rows, (reps, 1))[:k]
+            reps = -(-K_CENTROIDS // len(init_rows))
+            init_rows = np.tile(init_rows, (reps, 1))[:K_CENTROIDS]
         C = init_rows.copy()
-        for _ in range(iters):
+        for _ in range(LLOYD_ITERS):
             d2 = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)  # ties -> lowest index
-            for c in range(k):
+            for c in range(K_CENTROIDS):
                 members = Xj[assign == c]
                 if len(members):
                     C[c] = members.mean(axis=0)
@@ -153,18 +148,12 @@ def pq_encode(corpus: DataFrame, books: np.ndarray) -> DataFrame:
     )
 
 
-def pq_topk(
-    corpus: DataFrame,
-    k: int = 5,
-    n_queries: int = 5,
-    m: int = M_SUBSPACES,
-    n_centroids: int = K_CENTROIDS,
-) -> DataFrame:
+def pq_topk(corpus: DataFrame, k: int = 5, n_queries: int = 5) -> DataFrame:
     """ADC top-k: queries are the vectors with vec_id < n_queries (the
     convention shared with the brute-force and IVF paths). Returns
     (query_id, rank, vec_id, approx_d2) — approximate squared L2 on
     unit vectors, monotone in cosine distance."""
-    books = train_codebooks(corpus, m=m, k=n_centroids)
+    books = train_codebooks(corpus)
     sub = books.shape[2]
     encoded = pq_encode(corpus, books)
 
@@ -239,8 +228,6 @@ def ivfpq_topk(
     n_queries: int = 5,
     n_coarse: int = 8,
     nprobe: int = 3,
-    m: int = M_SUBSPACES,
-    n_centroids: int = K_CENTROIDS,
 ) -> DataFrame:
     """FAISS-style IVF-PQ composition: a coarse KMeans quantizer prunes
     the corpus to the ``nprobe`` nearest buckets per query, and PQ ADC
@@ -258,7 +245,7 @@ def ivfpq_topk(
     bucketed = assign_buckets(corpus, model).select(
         "vec_id", F.col("ivf_bucket").alias("label"), "embedding"
     )
-    books = train_codebooks(corpus, m=m, k=n_centroids)
+    books = train_codebooks(corpus)
     sub = books.shape[2]
     # pq_encode carries 'label' through; here it carries the coarse
     # bucket id.

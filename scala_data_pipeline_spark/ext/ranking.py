@@ -59,9 +59,6 @@ def retrieval_eval(
     docs: DataFrame,
     queries: dict[str, tuple[str, ...]] | None = None,
     k: int = RANK_K,
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """Per-query IR metrics of BM25 top-``k`` rankings vs exact
     AND-term-containment relevance. Returns one row per query:
@@ -70,7 +67,7 @@ def retrieval_eval(
     queries = EVAL_QUERIES if queries is None else queries
     all_terms = sorted({t for ts in queries.values() for t in ts})
     idx = {t: i for i, t in enumerate(all_terms)}
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
 
     def _tf(term: str) -> Column:
         return F.size(F.filter(toks, lambda x: x == F.lit(term)))
@@ -91,6 +88,7 @@ def retrieval_eval(
             for i in range(len(all_terms))
         ],
     )
+    k1, b = BM25_K1, BM25_B
     entries = []
     for qid in sorted(queries):
         comps: list[Column] = []
@@ -197,20 +195,12 @@ def retrieval_eval(
     )
 
 
-def retrieval_eval_sql(
-    queries: dict[str, tuple[str, ...]] | None = None,
-    k: int = RANK_K,
-    text_col: str = "text",
-    table: str = "documents",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> str:
+def retrieval_eval_sql() -> str:
     """DuckDB twin of :func:`retrieval_eval` — identical score/metric
     arithmetic in identical expression order."""
-    queries = EVAL_QUERIES if queries is None else queries
-    all_terms = sorted({t for ts in queries.values() for t in ts})
+    all_terms = sorted({t for ts in EVAL_QUERIES.values() for t in ts})
     idx = {t: i for i, t in enumerate(all_terms)}
-    t_expr = f"list_filter(string_split({text_col}, ' '), x -> x <> '')"
+    t_expr = "list_filter(string_split(text, ' '), x -> x <> '')"
     tf_cols = ",\n         ".join(
         f"CAST(len(list_filter(toks, x -> x = '{t}')) AS BIGINT) AS tf_{i}"
         for i, t in enumerate(all_terms)
@@ -220,27 +210,27 @@ def retrieval_eval_sql(
         for i in range(len(all_terms))
     )
     q_selects = []
-    for qid in sorted(queries):
+    for qid in sorted(EVAL_QUERIES):
         comps = " + ".join(
             f"(ln((n_docs - df_{idx[t]} + 0.5) / (df_{idx[t]} + 0.5) + 1)"
-            f" * (CAST(tf_{idx[t]} AS DOUBLE) * {k1 + 1})"
+            f" * (CAST(tf_{idx[t]} AS DOUBLE) * {BM25_K1 + 1})"
             f" / (CAST(tf_{idx[t]} AS DOUBLE)"
-            f" + {k1} * (1 - {b} + {b} * dl / avgdl)))"
-            for t in queries[qid]
+            f" + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl / avgdl)))"
+            for t in EVAL_QUERIES[qid]
         )
-        rel = " AND ".join(f"tf_{idx[t]} > 0" for t in queries[qid])
+        rel = " AND ".join(f"tf_{idx[t]} > 0" for t in EVAL_QUERIES[qid])
         q_selects.append(
             f"  SELECT doc_id, '{qid}' AS query_id,\n"
             f"         ROUND({comps}, 6) AS score,\n"
             f"         CASE WHEN {rel} THEN 1 ELSE 0 END AS rel\n"
-            f"  FROM per_doc, stats"
+            "  FROM per_doc, stats"
         )
     scored = "\n  UNION ALL\n".join(q_selects)
     return f"""
 WITH per_doc AS (
   SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
          {tf_cols}
-  FROM (SELECT doc_id, {t_expr} AS toks FROM {table})
+  FROM (SELECT doc_id, {t_expr} AS toks FROM documents)
 ), stats AS (
   SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl,
          {df_cols}
@@ -258,7 +248,7 @@ WITH per_doc AS (
          SUM(rel) OVER (PARTITION BY query_id ORDER BY rank
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
            AS cum_rel
-  FROM ranked WHERE rank <= {k}
+  FROM ranked WHERE rank <= {RANK_K}
 ), agg AS (
   SELECT query_id,
          CAST(MIN(n_rel) AS BIGINT) AS n_rel,
@@ -274,15 +264,15 @@ WITH per_doc AS (
 SELECT query_id, n_rel, hits_at_k,
        CASE WHEN n_rel > 0 THEN
          ROUND(COALESCE(dcg, 0.0) / CAST(list_sum(list_transform(
-           range(1, LEAST(n_rel, {k}) + 1),
+           range(1, LEAST(n_rel, {RANK_K}) + 1),
            r -> CAST(ROUND(1.0 / log2(r + 1), 8) AS DECIMAL(18,8))))
            AS DOUBLE), 6)
        ELSE 0.0 END AS ndcg_at_k,
        ROUND(COALESCE(1.0 / first_rel, 0.0), 6) AS mrr,
        CASE WHEN n_rel > 0 THEN
-         ROUND(COALESCE(ap_num, 0.0) / LEAST(n_rel, {k}), 6)
+         ROUND(COALESCE(ap_num, 0.0) / LEAST(n_rel, {RANK_K}), 6)
        ELSE 0.0 END AS ap_at_k,
-       ROUND(CAST(hits_at_k AS DOUBLE) / {float(k)}, 6) AS p_at_k,
+       ROUND(CAST(hits_at_k AS DOUBLE) / {float(RANK_K)}, 6) AS p_at_k,
        CASE WHEN n_rel > 0 THEN
          ROUND(CAST(hits_at_k AS DOUBLE) / n_rel, 6)
        ELSE 0.0 END AS recall_at_k

@@ -244,7 +244,6 @@ def semantic_dedup(
     corpus: DataFrame,
     k: int = 16,
     eps: float = DEFAULT_EPS,
-    seed: int = 42,
     cluster_cap: int = DEFAULT_CLUSTER_CAP,
 ) -> DataFrame:
     """(vec_id, cluster, centroid_sim, keep, dup_of) for every corpus
@@ -276,13 +275,13 @@ def semantic_dedup(
         centers = [[float(mean_row[f"m{i}"]) for i in range(dim)]]
         assigned = corpus.withColumn("cluster", F.lit(0))
     else:
-        model = fit_ivf(corpus, k=k, seed=seed)
+        model = fit_ivf(corpus, k=k)
         assigned = assign_buckets(corpus, model).withColumnRenamed(
             "ivf_bucket", "cluster"
         )
         centers = [[float(v) for v in c] for c in model.clusterCenters()]
     assigned, centers, hash_ids = _split_over_cap(
-        assigned, centers, cluster_cap, seed
+        assigned, centers, cluster_cap, seed=42
     )
     prepped = prep_vectors(assigned)
 
@@ -497,9 +496,7 @@ def semantic_dedup_k1_exact(
     )
 
 
-def semantic_dedup_k1_sql(
-    eps: float = DEFAULT_EPS, table: str = "embeddings"
-) -> str:
+def semantic_dedup_k1_sql(eps: float = DEFAULT_EPS) -> str:
     """DuckDB twin of :func:`semantic_dedup_k1_exact`: the greedy pass
     as a RECURSIVE CTE over rank order — one row considered per
     recursion step against the accumulated kept list, identical
@@ -511,7 +508,7 @@ WITH RECURSIVE
 t AS (
   SELECT vec_id,
          list_transform(embedding, x -> ROUND(CAST(x AS DOUBLE), 8)) AS e
-  FROM {table}
+  FROM embeddings
 ),
 nrm AS (
   SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nv

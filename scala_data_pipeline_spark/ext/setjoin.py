@@ -57,14 +57,14 @@ from .textstats import tokens_col
 DEFAULT_BUCKET_CAP = 1024
 
 
-def token_sets(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, tokens, sz): each document's DISTINCT tokens as an
     array ordered rarest-first (global document frequency asc, token
     asc — a total order, so every engine and partitioning produces the
     same array), plus the set size."""
     toks = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(tokens_col(F.col(text_col)))).alias(
+        F.explode(F.array_distinct(tokens_col(F.col("text")))).alias(
             "token"
         ),
     )
@@ -97,7 +97,6 @@ def _prefix_len(sz, t_num: int, t_den: int):
 
 def prefix_jaccard_join(
     docs: DataFrame,
-    text_col: str = "text",
     t_num: int = 6,
     t_den: int = 10,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
@@ -113,7 +112,7 @@ def prefix_jaccard_join(
     no job: the final adaptive plan computes it twice, and the two
     verify sides share one exchange.
     """
-    sets = token_sets(docs, text_col)
+    sets = token_sets(docs)
     prefix = sets.select(
         "doc_id",
         "sz",
@@ -159,13 +158,7 @@ def prefix_jaccard_join(
     )
 
 
-def prefix_jaccard_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    t_num: int = 6,
-    t_den: int = 10,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
-) -> str:
+def prefix_jaccard_sql(t_num: int = 6, t_den: int = 10) -> str:
     """DuckDB oracle replaying :func:`prefix_jaccard_join` end to end:
     rarest-first ordering, integer prefix arithmetic, cap keeper-star,
     size filter, exact integer Jaccard verify."""
@@ -173,9 +166,9 @@ def prefix_jaccard_sql(
 WITH toks AS (
   SELECT doc_id,
          unnest(list_distinct(
-           list_filter(string_split({text_col}, ' '), t -> t <> '')
+           list_filter(string_split(text, ' '), t -> t <> '')
          )) AS token
-  FROM {table}
+  FROM documents
 ), dfreq AS (
   SELECT token, COUNT(*) AS df FROM toks GROUP BY token
 ), sets AS (
@@ -199,7 +192,7 @@ WITH toks AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bucketed a JOIN bucketed b
     ON a.token = b.token AND a.doc_id < b.doc_id
-  WHERE (a.bsz <= {bucket_cap} OR a.doc_id = a.keeper)
+  WHERE (a.bsz <= {DEFAULT_BUCKET_CAP} OR a.doc_id = a.keeper)
     AND LEAST(a.sz, b.sz) * {t_den} >= GREATEST(a.sz, b.sz) * {t_num}
 )
 SELECT c.doc_a, c.doc_b,

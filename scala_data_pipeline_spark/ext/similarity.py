@@ -139,12 +139,7 @@ SELECT query_id, rank, vec_id, cos FROM ranked WHERE rank <= {k}
 """
 
 
-def topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    bucket_col: str = "label",
-) -> DataFrame:
+def topk_ivf(corpus: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
     """IVF-style: score only within the query's coarse bucket (prepped
     fast path — norms amortized per row, see topk_bruteforce)."""
     c = prep_vectors(fan_out(corpus))
@@ -152,10 +147,10 @@ def topk_ivf(
         F.col("vec_id").alias("query_id"),
         F.col("emb_r").alias("q_emb"),
         F.col("emb_norm").alias("q_norm"),
-        F.col(bucket_col).alias("bucket"),
+        F.col("label").alias("bucket"),
     )
     scored = (
-        c.withColumnRenamed(bucket_col, "bucket")
+        c.withColumnRenamed("label", "bucket")
         .join(F.broadcast(q), on="bucket")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -176,18 +171,18 @@ def topk_ivf(
     )
 
 
-def topk_ivf_sql(k: int = 3, n_queries: int = 5, bucket_col: str = "label") -> str:
+def topk_ivf_sql(k: int = 3, n_queries: int = 5) -> str:
     dot = DOT_PREPPED_SQL.format(a="q.q_emb", b="e.emb_r")
     return f"""
 WITH prepped AS ({_prepped_cte()}),
 q AS (
   SELECT vec_id AS query_id, emb_r AS q_emb, emb_norm AS q_norm,
-         {bucket_col} AS bucket
+         label AS bucket
   FROM prepped WHERE vec_id < {n_queries}
 ), scored AS (
   SELECT q.query_id, e.vec_id,
          ROUND({dot} / NULLIF(q.q_norm * e.emb_norm, 0), 6) AS cos
-  FROM prepped e JOIN q ON e.{bucket_col} = q.bucket
+  FROM prepped e JOIN q ON e.label = q.bucket
   WHERE e.vec_id <> q.query_id
 ), ranked AS (
   SELECT query_id, vec_id, cos,
@@ -198,9 +193,7 @@ SELECT query_id, rank, vec_id, cos FROM ranked WHERE rank <= {k}
 """
 
 
-def quantize_embeddings(
-    corpus: DataFrame, emb_col: str = "embedding", dim: int = 64
-) -> DataFrame:
+def quantize_embeddings(corpus: DataFrame) -> DataFrame:
     """Scalar int8 quantization: per-DIMENSION min/max over the corpus,
     then q[i] = floor((x[i]-min[i])/(max[i]-min[i]) * 255 + 0.5) - 128
     (floor, not round — round's tie behavior differs across engines).
@@ -211,7 +204,7 @@ def quantize_embeddings(
     the shuffle to 64 rows per task); the stats pack into two arrays on
     a single broadcast row, so quantization itself is a per-row
     transform — no second shuffle, corpus never moves."""
-    rounded = F.transform(F.col(emb_col), lambda x: F.round(x.cast("double"), 8))
+    rounded = F.transform(F.col("embedding"), lambda x: F.round(x.cast("double"), 8))
     per_dim = (
         fan_out(corpus)
         .select(F.posexplode(rounded).alias("pos", "v"))
@@ -255,14 +248,14 @@ def quantize_embeddings(
     )
 
 
-def quantize_embeddings_sql(dim: int = 64, serialize: bool = True) -> str:
+def quantize_embeddings_sql(serialize: bool = True) -> str:
     """DuckDB twin. ``serialize=True`` emits the vector as a CSV string
     for hash-stable comparison (match with array_join on the Spark
     side); ``serialize=False`` keeps the INT list for downstream SQL."""
     qlist = (
-        f"list_transform(range(1, {dim} + 1), "
-        f"i -> CAST(floor((emb[i] - lo_arr[i]) / greatest(hi_arr[i] - lo_arr[i], 1e-12)"
-        f" * 255 + 0.5) - 128 AS INT))"
+        "list_transform(range(1, 64 + 1), "
+        "i -> CAST(floor((emb[i] - lo_arr[i]) / greatest(hi_arr[i] - lo_arr[i], 1e-12)"
+        " * 255 + 0.5) - 128 AS INT))"
     )
     qcol = f"array_to_string({qlist}, ',')" if serialize else qlist
     return f"""
@@ -286,17 +279,14 @@ FROM rounded, stats
 
 
 def topk_quantized(
-    corpus: DataFrame,
-    n_queries: int = 5,
-    k: int = 5,
-    emb_col: str = "embedding",
+    corpus: DataFrame, n_queries: int = 5, k: int = 5
 ) -> DataFrame:
     """ANN top-k in int8 space: quantize once, then rank by integer dot
     product (exact int64 arithmetic — no float-parity concerns at all).
     The production pattern: scan the 4×-smaller quantized corpus for
     candidates, refine the shortlist with float cosine (refinement
     omitted here; see topk_bruteforce for the float path)."""
-    q = quantize_embeddings(corpus, emb_col)
+    q = quantize_embeddings(corpus)
     queries = q.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("qvec").alias("q_qvec")
     )
@@ -324,8 +314,8 @@ def topk_quantized(
     )
 
 
-def topk_quantized_sql(n_queries: int = 5, k: int = 5, dim: int = 64) -> str:
-    quant_list = quantize_embeddings_sql(dim, serialize=False)
+def topk_quantized_sql(n_queries: int = 5, k: int = 5) -> str:
+    quant_list = quantize_embeddings_sql(serialize=False)
     return f"""
 WITH quant AS ({quant_list}),
 q AS (
@@ -333,7 +323,7 @@ q AS (
   WHERE vec_id < {n_queries}
 ), scored AS (
   SELECT q.query_id, e.vec_id,
-         CAST(list_sum(list_transform(range(1, {dim} + 1),
+         CAST(list_sum(list_transform(range(1, 64 + 1),
               i -> CAST(q.q_qvec[i] AS BIGINT) * e.qvec[i])) AS BIGINT)
            AS iscore
   FROM quant e CROSS JOIN q
@@ -350,10 +340,7 @@ FROM ranked WHERE rank <= {k}
 
 
 def embedding_neardup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.3,
-    bucket_col: str = "label",
-    prepped: DataFrame | None = None,
+    corpus: DataFrame, prepped: DataFrame | None = None
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs within coarse buckets — the
     embedding twin of MinHash candidate generation (dedup.py). Uses the
@@ -364,30 +351,29 @@ def embedding_neardup_pairs(
     prep_vectors frame (e.g. semantic_dedup_keepers, which also needs
     the norms) share it across the self-join's two sides instead of
     re-evaluating the prep pipeline per reference (r19). It MUST be
-    ``prep_vectors(corpus)`` (any fan-out/repartition is fine) with the
-    SAME bucket_col — a frame from a different corpus silently yields
-    wrong pairs, so the expected columns are asserted here (r19
-    advisor)."""
+    ``prep_vectors(corpus)`` (any fan-out/repartition is fine) — a
+    frame from a different corpus silently yields wrong pairs, so the
+    expected columns are asserted here (r19 advisor)."""
     if prepped is None:
         prepped = prep_vectors(fan_out(corpus))
     else:
-        missing = {bucket_col, "vec_id", "emb_r", "emb_norm"} - set(
+        missing = {"label", "vec_id", "emb_r", "emb_norm"} - set(
             prepped.columns
         )
         if missing:
             raise ValueError(
                 "embedding_neardup_pairs: prepped frame lacks columns "
                 f"{sorted(missing)} — pass prep_vectors(corpus) built "
-                f"from the same corpus with bucket_col={bucket_col!r}"
+                "from the same corpus"
             )
     a = prepped.select(
-        F.col(bucket_col).alias("bucket"),
+        F.col("label").alias("bucket"),
         F.col("vec_id").alias("vec_a"),
         F.col("emb_r").alias("emb_ra"),
         F.col("emb_norm").alias("norm_a"),
     )
     b = prepped.select(
-        F.col(bucket_col).alias("bucket"),
+        F.col("label").alias("bucket"),
         F.col("vec_id").alias("vec_b"),
         F.col("emb_r").alias("emb_rb"),
         F.col("emb_norm").alias("norm_b"),
@@ -402,25 +388,25 @@ def embedding_neardup_pairs(
                 F.col("emb_ra"), F.col("norm_a"), F.col("emb_rb"), F.col("norm_b")
             ).alias("cos"),
         )
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= 0.3)
     )
 
 
-def embedding_neardup_sql(threshold: float = 0.3, bucket_col: str = "label") -> str:
+def embedding_neardup_sql() -> str:
     prep = PREP_SQL.format(col="embedding")
     norm = NORM_SQL.format(r="emb_r")
     dot = DOT_PREPPED_SQL.format(a="a.emb_r", b="b.emb_r")
     return f"""
 WITH prepped AS (
-  SELECT vec_id, {bucket_col}, emb_r, {norm} AS emb_norm
-  FROM (SELECT vec_id, {bucket_col}, {prep} AS emb_r FROM embeddings)
+  SELECT vec_id, label, emb_r, {norm} AS emb_norm
+  FROM (SELECT vec_id, label, {prep} AS emb_r FROM embeddings)
 ), pairs AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          ROUND({dot} / NULLIF(a.emb_norm * b.emb_norm, 0), 6) AS cos
   FROM prepped a JOIN prepped b
-    ON a.{bucket_col} = b.{bucket_col} AND a.vec_id < b.vec_id
+    ON a.label = b.label AND a.vec_id < b.vec_id
 )
-SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= {threshold}
+SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.3
 """
 
 
@@ -429,9 +415,7 @@ SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= {threshold}
 # ---------------------------------------------------------------------------
 
 
-def semantic_dedup_keepers(
-    corpus: DataFrame, threshold: float = 0.3, bucket_col: str = "label"
-) -> DataFrame:
+def semantic_dedup_keepers(corpus: DataFrame) -> DataFrame:
     """The embedding-space dedup loop closed (the SemDeDup recipe,
     Abbas et al. 2023, on DataFrame primitives): cosine near-dup pairs
     within coarse buckets → connected components → ONE keeper per
@@ -462,7 +446,7 @@ def semantic_dedup_keepers(
     # query itself is acted on.
     prepped = prep_vectors(fan_out(corpus)).localCheckpoint(eager=False)
     pairs = embedding_neardup_pairs(
-        corpus, threshold, bucket_col, prepped=prepped
+        corpus, prepped=prepped
     )
     comp = connected_components(
         pairs, a_col="vec_a", b_col="vec_b"
@@ -487,14 +471,12 @@ def semantic_dedup_keepers(
     )
 
 
-def semantic_dedup_keepers_sql(
-    threshold: float = 0.3, bucket_col: str = "label"
-) -> str:
+def semantic_dedup_keepers_sql() -> str:
     from .components import connected_components_sql
 
     pairs = (
         "SELECT vec_a AS doc_a, vec_b AS doc_b FROM ("
-        + embedding_neardup_sql(threshold, bucket_col)
+        + embedding_neardup_sql()
         + ")"
     )
     prep = PREP_SQL.format(col="embedding")
@@ -534,18 +516,16 @@ KNN_PLANES = 24
 KNN_BAND_BITS = 4
 
 
-def _srp_hyperplanes(
-    n_planes: int = KNN_PLANES, dim: int = KNN_DIM, seed: int = 42
-) -> list[list[int]]:
+def _srp_hyperplanes() -> list[list[int]]:
     """±1 hyperplanes from a FIXED seed — the same literal numbers are
     embedded in the Spark plan and the DuckDB oracle, so bucketing is
     engine-identical by construction (no cross-engine RNG to agree
     on). Rademacher (±1) entries approximate Gaussian SRP for cosine
     while keeping the projection an exact integer-weighted sum."""
-    rng = _random.Random(seed)
+    rng = _random.Random(42)
     return [
-        [1 if rng.random() < 0.5 else -1 for _ in range(dim)]
-        for _ in range(n_planes)
+        [1 if rng.random() < 0.5 else -1 for _ in range(KNN_DIM)]
+        for _ in range(KNN_PLANES)
     ]
 
 
@@ -596,12 +576,7 @@ def _srp_projections_spark(emb: Column, planes: list[list[int]]) -> Column:
 KNN_BUCKET_CAP = 64
 
 
-def srp_index(
-    corpus: DataFrame,
-    n_planes: int = KNN_PLANES,
-    band_bits: int = KNN_BAND_BITS,
-    seed: int = 42,
-) -> DataFrame:
+def srp_index(corpus: DataFrame) -> DataFrame:
     """The SRP-LSH index frame: (vec_id, emb_r, emb_norm,
     band_0..band_{B-1}), materialized once via localCheckpoint.
 
@@ -615,8 +590,8 @@ def srp_index(
     expressions are then trivial codegen over a stored array instead of
     a giant pre-checkpoint tree Catalyst re-analyzes per reference.
     """
-    n_bands = n_planes // band_bits
-    planes = _srp_hyperplanes(n_planes, seed=seed)
+    n_bands = KNN_PLANES // KNN_BAND_BITS
+    planes = _srp_hyperplanes()
     prepped = prep_vectors(fan_out(corpus))
     projs = _srp_projections_spark(F.col("emb_r"), planes)
     keyed = prepped.select("vec_id", "emb_r", "emb_norm", projs.alias("projs"))
@@ -640,9 +615,9 @@ def srp_index(
     bands = [
         "("
         + " + ".join(
-            _bit(b * band_bits) if i == 0
-            else f"{_bit(b * band_bits + i)} * {2 ** i}"
-            for i in range(band_bits)
+            _bit(b * KNN_BAND_BITS) if i == 0
+            else f"{_bit(b * KNN_BAND_BITS + i)} * {2 ** i}"
+            for i in range(KNN_BAND_BITS)
         )
         + f") AS band_{b}"
         for b in range(n_bands)
@@ -669,9 +644,6 @@ def srp_memberships(keyed: DataFrame, n_bands: int) -> DataFrame:
 def knn_join(
     corpus: DataFrame,
     k: int = 5,
-    n_planes: int = KNN_PLANES,
-    band_bits: int = KNN_BAND_BITS,
-    seed: int = 42,
     bucket_cap: int = KNN_BUCKET_CAP,
     sample_bound: int | None = None,
 ) -> DataFrame:
@@ -679,7 +651,7 @@ def knn_join(
     self-join — embedding dedup's core primitive, vs the query-batch
     serving shape of topk_bruteforce/topk_ivf): sign-random-projection
     LSH (Charikar 2002) buckets vectors by the sign pattern of ±1
-    hyperplane projections; vectors sharing any ``band_bits``-bit band
+    hyperplane projections; vectors sharing any ``KNN_BAND_BITS``-bit band
     bucket become candidates; exact cosine ranks each vector's
     candidates and keeps the top ``k``.
 
@@ -691,12 +663,12 @@ def knn_join(
     shuffle); candidates come from one (band, bucket) aggregation whose
     buckets emit their in-bucket pairs through :func:`bucket_pairs` —
     never all-pairs — and per-vector top-k is one window over the
-    candidate pairs. Honest scaling note:
-    expected bucket size is n/2^band_bits, so candidate volume grows as
-    Σ buckets·size² ≈ 6·n²/2^band_bits — ``band_bits`` is NOT a
-    constant of the design but the dial that must grow ≈ log2(n) with
-    the corpus (16-bit bands ⇒ 65k buckets; the same reasoning Spark's
-    own MinHashLSH leaves to its numHashTables/bucketLength knobs). On
+    candidate pairs. Honest scaling note: expected bucket size is
+    n/2^KNN_BAND_BITS, so candidate volume grows as Σ buckets·size² ≈
+    6·n²/2^KNN_BAND_BITS — ``KNN_BAND_BITS`` is the dial that must grow
+    ≈ log2(n) with the corpus (16-bit bands ⇒ 65k buckets; the same
+    reasoning Spark's own MinHashLSH leaves to its
+    numHashTables/bucketLength knobs). On
     top of that dial, ``bucket_cap`` is the hard backstop: a bucket
     larger than the cap — N identical/near-identical vectors landing in
     one band bucket — degrades to a keeper STAR (min id paired with
@@ -710,8 +682,8 @@ def knn_join(
     (size/keeper window + star predicate), so candidates, cosines and
     ranks all match exactly — recall approximation, cap and all.
     """
-    n_bands = n_planes // band_bits
-    keyed = srp_index(corpus, n_planes=n_planes, band_bits=band_bits, seed=seed)
+    n_bands = KNN_PLANES // KNN_BAND_BITS
+    keyed = srp_index(corpus)
     # Candidates via ONE bucket aggregation instead of a self-join per
     # band: explode each vector into its (band, bucket) memberships,
     # collect each bucket's sorted id list, emit the in-bucket pairs.
@@ -734,7 +706,7 @@ def knn_join(
         # vec_id v derives solely from candidate pairs CONTAINING v —
         # so dropping pairs that touch no sampled id before the cosine
         # joins is provably output-identical for the kept rows, and
-        # skips scoring the ~n²/2^band_bits pairs between unsampled
+        # skips scoring the ~n²/2^KNN_BAND_BITS pairs between unsampled
         # vectors (sf0.1: ~650k pairs scored → ~30k). Bucketing still
         # sees the whole corpus: candidates PER QUERY are unchanged.
         cands = cands.filter(
@@ -797,19 +769,13 @@ def knn_join(
     )
 
 
-def knn_join_sql(
-    k: int = 5,
-    n_planes: int = KNN_PLANES,
-    band_bits: int = KNN_BAND_BITS,
-    seed: int = 42,
-    bucket_cap: int = KNN_BUCKET_CAP,
-) -> str:
+def knn_join_sql(k: int = 5) -> str:
     """DuckDB twin of :func:`knn_join` — identical seeded hyperplane
     literals, band packing, candidate generation (including the
     bucket-cap keeper-star degradation, replayed via a per-bucket
     size/min window + star predicate), and cosine/rank arithmetic."""
-    n_bands = n_planes // band_bits
-    planes = _srp_hyperplanes(n_planes, seed=seed)
+    n_bands = KNN_PLANES // KNN_BAND_BITS
+    planes = _srp_hyperplanes()
     prep = PREP_SQL.format(col="embedding")
     norm = NORM_SQL.format(r="emb_r")
     bit_exprs = []
@@ -821,7 +787,8 @@ def knn_join_sql(
         )
     band_exprs = ", ".join(
         " + ".join(
-            f"bit_{b * band_bits + i} * {2 ** i}" for i in range(band_bits)
+            f"bit_{b * KNN_BAND_BITS + i} * {2 ** i}"
+            for i in range(KNN_BAND_BITS)
         )
         + f" AS band_{b}"
         for b in range(n_bands)
@@ -853,7 +820,7 @@ WITH prepped AS (
   FROM bucketed a
   JOIN bucketed b ON a.band = b.band AND a.bucket = b.bucket
                  AND a.vec_id < b.vec_id
-  WHERE a.bsz <= {bucket_cap} OR a.vec_id = a.keeper
+  WHERE a.bsz <= {KNN_BUCKET_CAP} OR a.vec_id = a.keeper
 ), scored AS (
   SELECT c.vec_a, c.vec_b,
          ROUND({dot} / NULLIF(va.emb_norm * vb.emb_norm, 0), 6) AS cos
@@ -877,17 +844,14 @@ SELECT vec_id, CAST(rank AS BIGINT) AS rank, nbr_id, cos FROM (
 # MMR diversified re-rank (Carbonell & Goldstein 1998)
 # ---------------------------------------------------------------------------
 
+MMR_LAMBDA = 0.7  # relevance weight; 1 - MMR_LAMBDA weighs redundancy
 
-def mmr_rerank(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k_candidates: int = 25,
-    k_final: int = 10,
-    lam: float = 0.7,
-) -> DataFrame:
+
+def mmr_rerank(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Maximal Marginal Relevance: re-rank each query's top candidates
     to balance relevance against redundancy — pick argmax of
-    ``lam·rel(c) − (1−lam)·max_{s∈selected} sim(c, s)`` k_final times.
+    ``λ·rel(c) − (1−λ)·max_{s∈selected} sim(c, s)`` (λ = ``MMR_LAMBDA``)
+    ten times over each query's 25 nearest candidates.
     The retrieval answer-diversification step (and, in a data pipeline,
     the "don't fill the context window with five copies of the same
     document" guard on top of any ANN front-end).
@@ -898,7 +862,7 @@ def mmr_rerank(
     groups (Arrow-batched, numpy inside; the url_pipeline precedent for
     a deliberate non-JVM operator). Everything AROUND the sequential
     core stays relational: candidate generation is the existing
-    topk_bruteforce plan, and the group payload is k_candidates rows ×
+    topk_bruteforce plan, and the group payload is 25 rows ×
     (dim+2) — bounded per group, shuffled once on query_id.
 
     Determinism: candidates and their cosines are the (engine-exact)
@@ -910,7 +874,7 @@ def mmr_rerank(
     import numpy as np
     import pandas as pd
 
-    cands = topk_bruteforce(corpus, queries, k=k_candidates)
+    cands = topk_bruteforce(corpus, queries, k=25)
     prepped = prep_vectors(fan_out(corpus)).select(
         "vec_id", "emb_r", "emb_norm"
     )
@@ -936,7 +900,7 @@ def mmr_rerank(
         n = len(pdf)
         selected: list[int] = []
         out = []
-        for rank in range(1, min(k_final, n) + 1):
+        for rank in range(1, min(10, n) + 1):
             best_i, best_score = -1, -np.inf
             for i in range(n):
                 if i in selected:
@@ -944,7 +908,7 @@ def mmr_rerank(
                 redundancy = (
                     max(sims[i][j] for j in selected) if selected else 0.0
                 )
-                score = lam * rel[i] - (1 - lam) * redundancy
+                score = MMR_LAMBDA * rel[i] - (1 - MMR_LAMBDA) * redundancy
                 # strictly-greater keeps the lowest-vec_id winner on
                 # ties (rows are vec_id-sorted)
                 if score > best_score:
@@ -968,12 +932,10 @@ def mmr_rerank(
     )
 
 
-def knn_recall_eval(
-    corpus: DataFrame, k: int = 5, sample_n: int = 50
-) -> DataFrame:
-    """ANN quality audit as a query: recall@k of the SRP-LSH KNN
+def knn_recall_eval(corpus: DataFrame) -> DataFrame:
+    """ANN quality audit as a query: recall@5 of the SRP-LSH KNN
     self-join against exact brute force, over a deterministic query
-    sample (vec_id < ``sample_n``) — the parameter-tuning measurement
+    sample (vec_id < 50) — the parameter-tuning measurement
     you run before pointing the index at a 100 TB corpus (the dedup
     twin is ``lsh_quality_metrics``).
 
@@ -981,13 +943,13 @@ def knn_recall_eval(
     DuckDB twin (composed from the two queries' own SQL). Mean recall
     is integer-hit-count arithmetic — no float-sum order issues.
     """
-    queries = corpus.filter(F.col("vec_id") < sample_n)
-    exact = topk_bruteforce(corpus, queries, k=k)
+    queries = corpus.filter(F.col("vec_id") < 50)
+    exact = topk_bruteforce(corpus, queries)
     # sample_bound prunes candidate pairs that touch no sampled vec_id
     # BEFORE cosine scoring (output-identical under the filter below —
     # every kept vec_id's pair set is intact; see knn_join).
-    approx = knn_join(corpus, k=k, sample_bound=sample_n).filter(
-        F.col("vec_id") < sample_n
+    approx = knn_join(corpus, sample_bound=50).filter(
+        F.col("vec_id") < 50
     )
     hits = (
         exact.alias("e")
@@ -1021,14 +983,14 @@ def knn_recall_eval(
     )
 
 
-def knn_recall_eval_sql(k: int = 5, sample_n: int = 50) -> str:
+def knn_recall_eval_sql() -> str:
     """DuckDB twin of :func:`knn_recall_eval`, composed from the exact
     and approximate queries' own SQL twins."""
-    bf = topk_bruteforce_sql(k=k, n_queries=sample_n)
-    knn = knn_join_sql(k=k)
+    bf = topk_bruteforce_sql(n_queries=50)
+    knn = knn_join_sql()
     return f"""
 WITH exact AS (SELECT * FROM ({bf})),
-approx AS (SELECT * FROM ({knn}) WHERE vec_id < {sample_n}),
+approx AS (SELECT * FROM ({knn}) WHERE vec_id < 50),
 hits AS (
   SELECT e.query_id AS qid, COUNT(*) AS n_hits
   FROM exact e JOIN approx a
@@ -1048,9 +1010,7 @@ FROM per_q
 """
 
 
-def rrf_fuse(
-    rankings: list[DataFrame], k_rrf: int = 60, topk: int = 5
-) -> DataFrame:
+def rrf_fuse(rankings: list[DataFrame]) -> DataFrame:
     """Reciprocal Rank Fusion (Cormack et al., SIGIR 2009) — the
     standard hybrid-retrieval combiner: each input ranking contributes
     ``1/(k + rank)`` per (query, candidate); candidates missing from a
@@ -1070,7 +1030,7 @@ def rrf_fuse(
         c = r.select(
             "query_id",
             "vec_id",
-            (F.lit(1.0) / (F.lit(k_rrf) + F.col("rank"))).alias("c"),
+            (F.lit(1.0) / (F.lit(60) + F.col("rank"))).alias("c"),
         )
         contribs = c if contribs is None else contribs.unionByName(c)
     fused = contribs.groupBy("query_id", "vec_id").agg(
@@ -1081,21 +1041,19 @@ def rrf_fuse(
     )
     return (
         fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "rank", "vec_id", "rrf_score")
     )
 
 
-def rrf_fuse_sql(
-    ranking_sqls: list[str], k_rrf: int = 60, topk: int = 5
-) -> str:
+def rrf_fuse_sql(ranking_sqls: list[str]) -> str:
     """DuckDB twin: same reciprocal contributions over the composed
     ranking CTEs."""
     ctes = ",\n".join(
         f"r{i} AS ({sql})" for i, sql in enumerate(ranking_sqls)
     )
     unions = "\n  UNION ALL\n".join(
-        f"SELECT query_id, vec_id, 1.0 / ({k_rrf} + rank) AS c FROM r{i}"
+        f"SELECT query_id, vec_id, 1.0 / (60 + rank) AS c FROM r{i}"
         for i in range(len(ranking_sqls))
     )
     return f"""
@@ -1112,7 +1070,7 @@ contribs AS (
            ORDER BY rrf_score DESC, vec_id ASC) AS rank
   FROM fused
 )
-SELECT query_id, rank, vec_id, rrf_score FROM ranked WHERE rank <= {topk}
+SELECT query_id, rank, vec_id, rrf_score FROM ranked WHERE rank <= 5
 """
 
 

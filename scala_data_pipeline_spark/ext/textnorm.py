@@ -49,13 +49,11 @@ def clean_text_col(text: Column) -> Column:
     return F.trim(c)
 
 
-def clean_text(
-    docs: DataFrame, text_col: str = "text", out_col: str = "text_clean"
-) -> DataFrame:
+def clean_text(docs: DataFrame) -> DataFrame:
     """Attach the cleaned text plus its post-clean char count (the
     delta against the raw count is the standard dirt metric)."""
-    return docs.withColumn(out_col, clean_text_col(F.col(text_col))).withColumn(
-        f"n_chars_{out_col}", F.length(out_col).cast("long")
+    return docs.withColumn("text_clean", clean_text_col(F.col("text"))).withColumn(
+        "n_chars_text_clean", F.length("text_clean").cast("long")
     )
 
 
@@ -77,9 +75,7 @@ def clean_text_sql(text_expr: str) -> str:
     )
 
 
-def nfkc_normalize(
-    docs: DataFrame, text_col: str = "text", out_col: str = "text_nfkc"
-) -> DataFrame:
+def nfkc_normalize(docs: DataFrame) -> DataFrame:
     """Full Unicode NFKC via stdlib ``unicodedata``, Arrow-batched
     (``mapInPandas``) — ligatures fold (ﬁ->fi), fullwidth forms narrow,
     compatibility composites decompose. This is the one normalization
@@ -92,12 +88,12 @@ def nfkc_normalize(
     # A fresh StructType — StructType.add MUTATES the frame's cached
     # schema object, which poisons mapInPandas's own column listing.
     schema = StructType(
-        list(docs.schema.fields) + [StructField(out_col, StringType())]
+        list(docs.schema.fields) + [StructField("text_nfkc", StringType())]
     )
 
     def norm(batches: Iterator) -> Iterator:
         for pdf in batches:
-            pdf[out_col] = pdf[text_col].map(
+            pdf["text_nfkc"] = pdf["text"].map(
                 lambda s: unicodedata.normalize("NFKC", s)
                 if isinstance(s, str)
                 else s

@@ -53,11 +53,11 @@ def quality_score_col(text: Column) -> Column:
     )
 
 
-def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Per-document quality stats: char/token counts (whitespace + a
     regex word tokenizer), average token length, stopword ratio, and a
     [0,1] quality score."""
-    text = F.col(text_col)
+    text = F.col("text")
     toks = tokens_col(text)
     n_tokens = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*ENGLISH_STOPWORDS)))
@@ -101,23 +101,23 @@ def quality_score_sql(text_col: str = "text") -> str:
     )
 
 
-def quality_features_sql(text_col: str = "text", table: str = "documents") -> str:
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+def quality_features_sql() -> str:
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     stop_list = ", ".join(f"'{w}'" for w in ENGLISH_STOPWORDS)
     n_tokens = f"len({toks})"
     n_stop = f"len(list_filter({toks}, t -> t IN ({stop_list})))"
     stop_ratio = f"ROUND(CAST({n_stop} AS DOUBLE) / {n_tokens}, 6)"
-    avg_tok = f"ROUND(CAST(length({text_col}) - ({n_tokens} - 1) AS DOUBLE) / {n_tokens}, 6)"
-    score = quality_score_sql(text_col)
+    avg_tok = f"ROUND(CAST(length(text) - ({n_tokens} - 1) AS DOUBLE) / {n_tokens}, 6)"
+    score = quality_score_sql()
     return f"""
 SELECT doc_id,
-       length({text_col}) AS n_chars,
+       length(text) AS n_chars,
        CAST({n_tokens} AS BIGINT) AS n_tokens,
-       CAST(len(regexp_extract_all({text_col}, '[a-z]+')) AS BIGINT) AS n_word_tokens,
+       CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS n_word_tokens,
        {avg_tok} AS avg_token_len,
        {stop_ratio} AS stopword_ratio,
        {score} AS quality_score
-FROM {table}
+FROM documents
 """
 
 
@@ -133,12 +133,12 @@ BPE_PRETOKEN_PATTERN = (
 )
 
 
-def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """Per-document token counts under two tokenizers: whitespace split
     and the GPT-2-style pre-tokenizer regex — plus chars-per-BPE-token,
     the usual compression/quality proxy. Pure regex scan, JVM-side,
     no shuffle."""
-    text = F.col(text_col)
+    text = F.col("text")
     ws = F.size(tokens_col(text)).cast("long")
     bpe = F.regexp_count(text, F.lit(BPE_PRETOKEN_PATTERN)).cast("long")
     return docs.select(
@@ -151,23 +151,23 @@ def token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_count_sql(text_col: str = "text", table: str = "documents") -> str:
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+def token_count_sql() -> str:
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     pat = BPE_PRETOKEN_PATTERN.replace("'", "''")
-    bpe = f"len(regexp_extract_all({text_col}, '{pat}'))"
+    bpe = f"len(regexp_extract_all(text, '{pat}'))"
     return f"""
 SELECT doc_id,
        CAST(len({toks}) AS BIGINT) AS n_ws_tokens,
        CAST({bpe} AS BIGINT) AS n_bpe_tokens,
-       ROUND(CAST(length({text_col}) AS DOUBLE) / NULLIF({bpe}, 0), 6) AS chars_per_bpe_token
-FROM {table}
+       ROUND(CAST(length(text) AS DOUBLE) / NULLIF({bpe}, 0), 6) AS chars_per_bpe_token
+FROM documents
 """
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-word language heuristic: per-language hit counts, argmax
     with a fixed preference order on ties."""
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
 
     def marker_score(words: tuple[str, ...]):
         if not words:
@@ -190,8 +190,8 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(*sel)
 
 
-def lang_id_sql(text_col: str = "text", table: str = "documents") -> str:
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+def lang_id_sql() -> str:
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
 
     def score(lang: str) -> str:
         words = LANG_MARKERS[lang]
@@ -216,14 +216,12 @@ def lang_id_sql(text_col: str = "text", table: str = "documents") -> str:
 SELECT doc_id,
        {score_cols},
        {pred} AS predicted_lang
-FROM {table}
+FROM documents
 """
 
 
-def tf_idf(
-    docs: DataFrame, text_col: str = "text", top_n: int = 5
-) -> DataFrame:
-    """Top-``top_n`` TF-IDF terms per document (deterministic tiebreak
+def tf_idf(docs: DataFrame) -> DataFrame:
+    """Top-5 TF-IDF terms per document (deterministic tiebreak
     on term). tf = in-doc count; idf = ln((N+1)/(df+1)) + 1 (smoothed,
     sklearn-style). Two aggregations + one join on term: the document-
     frequency side is tiny (vocabulary-sized) and broadcasts; the
@@ -232,7 +230,7 @@ def tf_idf(
     from pyspark.sql import Window
 
     terms = fan_out(docs).select(
-        "doc_id", F.explode(tokens_col(F.col(text_col))).alias("term")
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     n_docs = docs.count()  # scalar; one lightweight job, reference-style A8
@@ -251,23 +249,21 @@ def tf_idf(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_n)
+        .filter(F.col("rank") <= 5)
         .select("doc_id", "rank", "term", "tfidf")
     )
 
 
-def tf_idf_sql(
-    text_col: str = "text", table: str = "documents", top_n: int = 5
-) -> str:
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+def tf_idf_sql() -> str:
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     return f"""
 WITH terms AS (
-  SELECT doc_id, unnest({toks}) AS term FROM {table}
+  SELECT doc_id, unnest({toks}) AS term FROM documents
 ), tf AS (
   SELECT doc_id, term, COUNT(*) AS tf FROM terms GROUP BY doc_id, term
 ), idf AS (
   SELECT term,
-         ROUND(ln(CAST((SELECT COUNT(*) FROM {table}) + 1 AS DOUBLE)
+         ROUND(ln(CAST((SELECT COUNT(*) FROM documents) + 1 AS DOUBLE)
                   / (COUNT(*) + 1)) + 1, 6) AS idf
   FROM tf GROUP BY term
 ), scored AS (
@@ -280,7 +276,7 @@ WITH terms AS (
   FROM scored
 )
 SELECT doc_id, CAST(rank AS BIGINT) AS rank, term, tfidf
-FROM ranked WHERE rank <= {top_n}
+FROM ranked WHERE rank <= 5
 """
 
 
@@ -289,20 +285,14 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: tuple[str, ...] = BM25_QUERY_TERMS,
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    top_n: int = 20,
-) -> DataFrame:
+def bm25_scores(docs: DataFrame) -> DataFrame:
     """BM25 relevance of every document against a fixed query — the
     retrieval-grade companion to :func:`tf_idf` (corpus quality
     filtering by query relevance, dedup-candidate scoring, eval-set
     mining). Okapi BM25 with Lucene's non-negative idf:
     ``idf = ln((N - df + 0.5)/(df + 0.5) + 1)``;
-    ``score = Σ_t idf_t · tf·(k1+1)/(tf + k1·(1 − b + b·dl/avgdl))``.
+    ``score = Σ_t idf_t · tf·(k1+1)/(tf + k1·(1 − b + b·dl/avgdl))``
+    with k1 = ``BM25_K1`` and b = ``BM25_B`` over ``BM25_QUERY_TERMS``.
 
     Scale shape: per-term tf and doc length are PER-ROW array
     expressions (``size(filter(tokens, = t))`` — codegen, no explode,
@@ -316,7 +306,7 @@ def bm25_scores(
     so the double arithmetic is bit-identical in DuckDB and the result
     can carry a value-hash oracle despite being floating-point.
     """
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
 
     def _tf(term: str) -> Column:
         # NB: a default-arg lambda (``lambda x, t=t``) would be read by
@@ -329,7 +319,7 @@ def bm25_scores(
         F.size(toks).cast("long").alias("dl"),
         *[
             _tf(t).cast("long").alias(f"tf_{i}")
-            for i, t in enumerate(query_terms)
+            for i, t in enumerate(BM25_QUERY_TERMS)
         ],
     )
     stats = per_doc.agg(
@@ -337,11 +327,12 @@ def bm25_scores(
         F.avg("dl").alias("avgdl"),
         *[
             F.sum((F.col(f"tf_{i}") > 0).cast("long")).alias(f"df_{i}")
-            for i in range(len(query_terms))
+            for i in range(len(BM25_QUERY_TERMS))
         ],
     )
+    k1, b = BM25_K1, BM25_B
     comps = []
-    for i in range(len(query_terms)):
+    for i in range(len(BM25_QUERY_TERMS)):
         idf = F.log(
             (F.col("n_docs") - F.col(f"df_{i}") + 0.5)
             / (F.col(f"df_{i}") + 0.5)
@@ -359,40 +350,33 @@ def bm25_scores(
         per_doc.crossJoin(F.broadcast(stats))
         .select("doc_id", "dl", F.round(total, 6).alias("bm25"))
         .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        .limit(top_n)
+        .limit(20)
     )
 
 
-def bm25_scores_sql(
-    query_terms: tuple[str, ...] = BM25_QUERY_TERMS,
-    text_col: str = "text",
-    table: str = "documents",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    top_n: int = 20,
-) -> str:
+def bm25_scores_sql() -> str:
     """DuckDB twin of :func:`bm25_scores` — identical double ops in
     identical (fixed expression) order."""
-    t = f"list_filter(string_split({text_col}, ' '), x -> x <> '')"
+    t = "list_filter(string_split(text, ' '), x -> x <> '')"
     tf_cols = ",\n         ".join(
         f"CAST(len(list_filter(toks, x -> x = '{term}')) AS BIGINT) AS tf_{i}"
-        for i, term in enumerate(query_terms)
+        for i, term in enumerate(BM25_QUERY_TERMS)
     )
     df_cols = ",\n         ".join(
         f"SUM(CASE WHEN tf_{i} > 0 THEN 1 ELSE 0 END) AS df_{i}"
-        for i in range(len(query_terms))
+        for i in range(len(BM25_QUERY_TERMS))
     )
     comps = " + ".join(
         f"(ln((n_docs - df_{i} + 0.5) / (df_{i} + 0.5) + 1) * "
-        f"(CAST(tf_{i} AS DOUBLE) * {k1 + 1}) / "
-        f"(CAST(tf_{i} AS DOUBLE) + {k1} * (1 - {b} + {b} * dl / avgdl)))"
-        for i in range(len(query_terms))
+        f"(CAST(tf_{i} AS DOUBLE) * {BM25_K1 + 1}) / "
+        f"(CAST(tf_{i} AS DOUBLE) + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl / avgdl)))"
+        for i in range(len(BM25_QUERY_TERMS))
     )
     return f"""
 WITH per_doc AS (
   SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
          {tf_cols}
-  FROM (SELECT doc_id, {t} AS toks FROM {table})
+  FROM (SELECT doc_id, {t} AS toks FROM documents)
 ), stats AS (
   SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl,
          {df_cols}
@@ -401,18 +385,18 @@ WITH per_doc AS (
 SELECT doc_id, dl, ROUND({comps}, 6) AS bm25
 FROM per_doc, stats
 ORDER BY bm25 DESC, doc_id ASC
-LIMIT {top_n}
+LIMIT 20
 """
 
 
-def fingerprint(docs: DataFrame, text_col: str = "text", k: int = 4) -> DataFrame:
-    """Winnowing-style document fingerprint: the k smallest distinct
+def fingerprint(docs: DataFrame) -> DataFrame:
+    """Winnowing-style document fingerprint: the 4 smallest distinct
     3-gram shingle digests, concatenated. Near-identical documents agree
     on most of the minima; the fingerprint doubles as a clustering key."""
     from .dedup import shingles
 
     sh = fan_out(docs).select(
-        "doc_id", F.explode(shingles(F.col(text_col))).alias("shingle")
+        "doc_id", F.explode(shingles(F.col("text"))).alias("shingle")
     )
     return (
         sh.select("doc_id", F.md5("shingle").alias("h"))
@@ -420,29 +404,29 @@ def fingerprint(docs: DataFrame, text_col: str = "text", k: int = 4) -> DataFram
         .groupBy("doc_id")
         .agg(
             F.array_join(
-                F.slice(F.array_sort(F.collect_list("h")), 1, k), ""
+                F.slice(F.array_sort(F.collect_list("h")), 1, 4), ""
             ).alias("fingerprint")
         )
     )
 
 
-def fingerprint_sql(text_col: str = "text", table: str = "documents", k: int = 4) -> str:
+def fingerprint_sql() -> str:
     from .dedup import shingles_sql
 
     return f"""
 WITH sh AS (
   SELECT DISTINCT doc_id, md5(shingle) AS h FROM (
-    SELECT doc_id, unnest({shingles_sql(text_col)}) AS shingle FROM {table}
+    SELECT doc_id, unnest({shingles_sql('text')}) AS shingle FROM documents
   )
 )
 SELECT doc_id,
-       array_to_string(list_slice(list_sort(list(h)), 1, {k}), '') AS fingerprint
+       array_to_string(list_slice(list_sort(list(h)), 1, 4), '') AS fingerprint
 FROM sh
 GROUP BY doc_id
 """
 
 
-def unigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def unigram_surprisal(docs: DataFrame) -> DataFrame:
     """Language-model-free perplexity proxy: score each document by the
     average unigram surprisal -log2 p(token) of its tokens under the
     corpus's own unigram distribution. Low = templated/repetitive text,
@@ -460,7 +444,7 @@ def unigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     the token count in double.
     """
     toks = fan_out(docs).select(
-        "doc_id", F.explode(tokens_col(F.col(text_col))).alias("tok")
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n_tok"))
     total = freq.agg(F.sum("n_tok").alias("n_total"))
@@ -487,15 +471,13 @@ def unigram_surprisal(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def unigram_surprisal_sql(
-    text_col: str = "text", table: str = "documents"
-) -> str:
+def unigram_surprisal_sql() -> str:
     """DuckDB twin of :func:`unigram_surprisal` — identical float ops in
     identical order."""
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest({toks}) AS tok FROM {table}
+  SELECT doc_id, unnest({toks}) AS tok FROM documents
 ), freq AS (
   SELECT tok, CAST(COUNT(*) AS BIGINT) AS n_tok FROM toks GROUP BY tok
 ), tot AS (
@@ -520,9 +502,7 @@ GROUP BY doc_id
 # ---------------------------------------------------------------------------
 
 
-def bpe_pair_counts(
-    docs: DataFrame, text_col: str = "text", top_k: int = 20
-) -> DataFrame:
+def bpe_pair_counts(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """The counting step of one BPE merge iteration, at corpus scale:
     adjacent character-pair frequencies inside tokens, weighted by
     corpus token frequency — the candidate list a tokenizer trainer
@@ -539,7 +519,7 @@ def bpe_pair_counts(
     """
     vocab = (
         fan_out(docs)
-        .select(F.explode(tokens_col(F.col(text_col))).alias("token"))
+        .select(F.explode(tokens_col(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -561,15 +541,13 @@ def bpe_pair_counts(
     )
 
 
-def bpe_pair_counts_sql(
-    text_col: str = "text", table: str = "documents", top_k: int = 20
-) -> str:
-    return f"""
+def bpe_pair_counts_sql() -> str:
+    return """
 WITH vocab AS (
   SELECT token, COUNT(*) AS n FROM (
-    SELECT unnest(list_filter(string_split({text_col}, ' '),
+    SELECT unnest(list_filter(string_split(text, ' '),
                               t -> t <> '')) AS token
-    FROM {table}
+    FROM documents
   ) GROUP BY token
 ), pairs AS (
   SELECT substr(token, CAST(i AS INTEGER), 2) AS pair, n
@@ -585,7 +563,7 @@ SELECT pair, n_occurrences, CAST(rank AS BIGINT) AS rank FROM (
   SELECT *, ROW_NUMBER() OVER (
       ORDER BY n_occurrences DESC, pair ASC) AS rank
   FROM agg
-) WHERE rank <= {top_k}
+) WHERE rank <= 20
 """
 
 
@@ -594,12 +572,10 @@ SELECT pair, n_occurrences, CAST(rank AS BIGINT) AS rank FROM (
 # ---------------------------------------------------------------------------
 
 
-def bigram_lm_perplexity(
-    docs: DataFrame, text_col: str = "text", alpha: float = 0.5
-) -> DataFrame:
+def bigram_lm_perplexity(docs: DataFrame) -> DataFrame:
     """CCNet-style LM quality score: each document's average bigram
     surprisal -log2 P(b|a) — and the corresponding perplexity — under
-    the corpus's OWN add-alpha-smoothed bigram language model. The
+    the corpus's OWN add-0.5-smoothed bigram language model. The
     production filter drops both tails (templated/boilerplate text
     scores low, garbled text scores high); CCNet buckets a corpus into
     head/middle/tail by exactly this number. Documents with fewer than
@@ -620,7 +596,7 @@ def bigram_lm_perplexity(
     document (order-independent), averaged in double, rounded to 6;
     perplexity = round(2^avg, 4).
     """
-    toks = tokens_col(F.col(text_col))
+    toks = tokens_col(F.col("text"))
     bigrams_arr = F.when(
         F.size(toks) >= 2,
         F.transform(
@@ -659,8 +635,8 @@ def bigram_lm_perplexity(
             "b",
             F.round(
                 -F.log2(
-                    (F.col("n_ab") + F.lit(alpha)).cast("double")
-                    / (F.col("n_a") + F.lit(alpha) * F.col("v")).cast("double")
+                    (F.col("n_ab") + F.lit(0.5)).cast("double")
+                    / (F.col("n_a") + F.lit(0.5) * F.col("v")).cast("double")
                 ),
                 8,
             ).alias("surprisal"),
@@ -682,16 +658,11 @@ def bigram_lm_perplexity(
     )
 
 
-def perplexity_buckets(
-    docs: DataFrame,
-    text_col: str = "text",
-    lo: float = 0.3,
-    hi: float = 0.7,
-) -> DataFrame:
+def perplexity_buckets(docs: DataFrame) -> DataFrame:
     """CCNet's corpus partitioning step: bucket documents into
     head / middle / tail by LM perplexity percentile (head = lowest-
-    perplexity ``lo`` fraction — the cleanest text; tail = above the
-    ``hi`` cut). This is the decision the CCNet pipeline actually
+    perplexity 30% — the cleanest text; tail = above the 70th
+    percentile). This is the decision the CCNet pipeline actually
     ships: train on head+middle, sample or drop tail.
 
     Scale shape: thresholds are ONE exact-percentile aggregate over the
@@ -713,10 +684,10 @@ def perplexity_buckets(
     # 100 TB the scored frame is (doc_id, 2 doubles, 1 long) — a tiny
     # fraction of the corpus — and a production CCNet run would persist
     # it anyway before choosing cuts.
-    ppl = bigram_lm_perplexity(docs, text_col).localCheckpoint(eager=True)
+    ppl = bigram_lm_perplexity(docs).localCheckpoint(eager=True)
     cuts = ppl.agg(
-        F.expr(f"percentile(perplexity, {lo})").alias("t_lo"),
-        F.expr(f"percentile(perplexity, {hi})").alias("t_hi"),
+        F.expr("percentile(perplexity, 0.3)").alias("t_lo"),
+        F.expr("percentile(perplexity, 0.7)").alias("t_hi"),
     )
     return ppl.crossJoin(F.broadcast(cuts)).select(
         "doc_id",
@@ -728,20 +699,15 @@ def perplexity_buckets(
     )
 
 
-def perplexity_buckets_sql(
-    text_col: str = "text",
-    table: str = "documents",
-    lo: float = 0.3,
-    hi: float = 0.7,
-) -> str:
+def perplexity_buckets_sql() -> str:
     """DuckDB twin of :func:`perplexity_buckets` — wraps the perplexity
     twin and applies identical percentile cuts and comparisons."""
     return f"""
 WITH ppl AS (
-{bigram_lm_perplexity_sql(text_col, table)}
+{bigram_lm_perplexity_sql()}
 ), cuts AS (
-  SELECT quantile_cont(perplexity, {lo}) AS t_lo,
-         quantile_cont(perplexity, {hi}) AS t_hi
+  SELECT quantile_cont(perplexity, 0.3) AS t_lo,
+         quantile_cont(perplexity, 0.7) AS t_hi
   FROM ppl
 )
 SELECT doc_id, perplexity,
@@ -752,15 +718,13 @@ FROM ppl, cuts
 """
 
 
-def bigram_lm_perplexity_sql(
-    text_col: str = "text", table: str = "documents", alpha: float = 0.5
-) -> str:
+def bigram_lm_perplexity_sql() -> str:
     """DuckDB twin of :func:`bigram_lm_perplexity` — identical float ops
     in identical order."""
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     return f"""
 WITH t AS (
-  SELECT doc_id, {toks} AS toks FROM {table}
+  SELECT doc_id, {toks} AS toks FROM documents
 ), idx AS (
   SELECT doc_id, toks,
          unnest(range(1, greatest(len(toks), 1))) AS i
@@ -777,8 +741,8 @@ WITH t AS (
   )
 ), lm AS (
   SELECT counts.a, counts.b,
-         ROUND(-log2(CAST(counts.n_ab + {alpha} AS DOUBLE)
-                     / CAST(ctx.n_a + {alpha} * vocab.v AS DOUBLE)), 8)
+         ROUND(-log2(CAST(counts.n_ab + 0.5 AS DOUBLE)
+                     / CAST(ctx.n_a + 0.5 * vocab.v AS DOUBLE)), 8)
            AS surprisal
   FROM counts JOIN ctx USING (a), vocab
 )
@@ -813,9 +777,7 @@ GOPHER_MAX_ELLIPSIS_LINE_FRAC = 0.3
 
 
 def gopher_quality_rules(
-    docs: DataFrame,
-    text_col: str = "text",
-    keep: tuple[str, ...] = (),
+    docs: DataFrame, keep: tuple[str, ...] = ()
 ) -> DataFrame:
     """Gopher-style + C4-style document quality rules as one codegen scan.
 
@@ -833,7 +795,7 @@ def gopher_quality_rules(
     star), modeled on the published Gopher (Rae et al. 2021) and C4
     (Raffel et al. 2020) filter sets.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     toks = tokens_col(text)
     n_words = F.size(toks).cast("long")
     sum_word_len = F.aggregate(
@@ -933,19 +895,17 @@ def gopher_quality_rules(
     )
 
 
-def gopher_quality_rules_sql(
-    text_col: str = "text", table: str = "documents"
-) -> str:
+def gopher_quality_rules_sql() -> str:
     """DuckDB twin of :func:`gopher_quality_rules`."""
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     req = ", ".join(f"'{w}'" for w in GOPHER_REQUIRED_WORDS)
     return f"""
 WITH base AS (
   SELECT doc_id,
          {toks} AS toks,
-         string_split({text_col}, chr(10)) AS lines,
-         {text_col} AS t
-  FROM {table}
+         string_split(text, chr(10)) AS lines,
+         text AS t
+  FROM documents
 ), stats AS (
   SELECT doc_id,
          CAST(len(toks) AS BIGINT) AS n_words,
@@ -1002,7 +962,7 @@ FROM stats
 ZIPF_TOP_RANKS = 100
 
 
-def zipf_spectrum(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def zipf_spectrum(docs: DataFrame) -> DataFrame:
     """Corpus token-frequency power-law fit: least-squares slope of
     ln(freq) vs ln(rank) over the top ``ZIPF_TOP_RANKS`` tokens —
     natural language sits near slope -1 (Zipf's law); corrupted or
@@ -1017,7 +977,7 @@ def zipf_spectrum(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     freqs = (
         fan_out(docs)
-        .select(F.explode(tokens_col(F.col(text_col))).alias("token"))
+        .select(F.explode(tokens_col(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
         .orderBy(F.col("freq").desc(), F.col("token").asc())
@@ -1059,13 +1019,13 @@ def zipf_spectrum(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def zipf_spectrum_sql(text_col: str = "text", table: str = "documents") -> str:
+def zipf_spectrum_sql() -> str:
     """DuckDB twin of :func:`zipf_spectrum`."""
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     return f"""
 WITH freqs AS (
   SELECT token, COUNT(*) AS freq FROM (
-    SELECT unnest({toks}) AS token FROM {table}
+    SELECT unnest({toks}) AS token FROM documents
   ) GROUP BY token
   ORDER BY freq DESC, token ASC
   LIMIT {ZIPF_TOP_RANKS}
@@ -1099,16 +1059,14 @@ FROM agg
 # ---------------------------------------------------------------------------
 
 
-def inverted_index(
-    docs: DataFrame, text_col: str = "text", max_postings: int = 32
-) -> DataFrame:
+def inverted_index(docs: DataFrame) -> DataFrame:
     """Term → posting-list build: (term, df, ctf, postings) where df is
     the document frequency, ctf the collection term frequency, and
     postings the sorted doc-id list — the batch index-construction step
     behind BM25 serving / retrieval-index bootstrap (text_bm25 SCORES
     with these statistics; this materializes the index itself).
 
-    Posting lists are capped at ``max_postings`` ids (the lowest doc
+    Posting lists are capped at 32 ids (the lowest doc
     ids — deterministic truncation, replayed in the oracle): at 100 TB
     a stopword's full posting list is corpus-sized and belongs in a
     positional index shard, not one aggregation row, so hot terms keep
@@ -1121,7 +1079,7 @@ def inverted_index(
     per_doc = (
         fan_out(docs)
         .select(
-            "doc_id", F.explode(tokens_col(F.col(text_col))).alias("term")
+            "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
         )
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))
@@ -1130,27 +1088,25 @@ def inverted_index(
         F.count(F.lit(1)).cast("long").alias("df"),
         F.sum("tf").cast("long").alias("ctf"),
         F.array_join(
-            F.slice(F.array_sort(F.collect_list("doc_id")), 1, max_postings),
+            F.slice(F.array_sort(F.collect_list("doc_id")), 1, 32),
             ",",
         ).alias("postings"),
     )
 
 
-def inverted_index_sql(
-    text_col: str = "text", table: str = "documents", max_postings: int = 32
-) -> str:
+def inverted_index_sql() -> str:
     """DuckDB twin of :func:`inverted_index` (same truncation replay)."""
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     return f"""
 WITH per_doc AS (
   SELECT term, doc_id, COUNT(*) AS tf FROM (
-    SELECT doc_id, unnest({toks}) AS term FROM {table}
+    SELECT doc_id, unnest({toks}) AS term FROM documents
   ) GROUP BY term, doc_id
 )
 SELECT term,
        CAST(COUNT(*) AS BIGINT) AS df,
        CAST(SUM(tf) AS BIGINT) AS ctf,
-       array_to_string(list_slice(list_sort(list(doc_id)), 1, {max_postings}), ',') AS postings
+       array_to_string(list_slice(list_sort(list(doc_id)), 1, 32), ',') AS postings
 FROM per_doc GROUP BY term
 """
 
@@ -1239,7 +1195,7 @@ def _run_stats(grams: Column) -> Column:
     return F.aggregate(srt, init, merge, finish)
 
 
-def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document, adapted to the
     fixture's single-line token-stream texts (the line/paragraph
     variants are vacuous there): the TOP word-2-gram's character
@@ -1257,7 +1213,7 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     analytics at all; this extends the training-data-pipeline family
     (SURVEY.md north star) next to gopher_quality_rules.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     toks = tokens_col(text)
     totch = F.aggregate(
         toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
@@ -1281,16 +1237,14 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_signals_sql(
-    text_col: str = "text", table: str = "documents"
-) -> str:
+def repetition_signals_sql() -> str:
     """DuckDB twin of :func:`repetition_signals` (set semantics, not
     plan shape: grams unnested and grouped; argmax tie-break = count
     desc, gram asc, matching the sorted-run fold)."""
-    toks = f"list_filter(string_split({text_col}, ' '), t -> t <> '')"
+    toks = "list_filter(string_split(text, ' '), t -> t <> '')"
     return f"""
 WITH base AS (
-  SELECT doc_id, {toks} AS t FROM {table}
+  SELECT doc_id, {toks} AS t FROM documents
 ), tot AS (
   SELECT doc_id,
          len(t)::BIGINT AS n_tokens,

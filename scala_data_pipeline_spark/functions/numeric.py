@@ -25,10 +25,10 @@ def dsum(col: Column, scale: int = 4) -> Column:
     return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
 
 
-def davg(col: Column, scale: int = 4) -> Column:
+def davg(col: Column) -> Column:
     """Order-independent average built from dsum / count (double division
     of identical operands is deterministic on both engines)."""
-    return dsum(col, scale) / F.count(col)
+    return dsum(col) / F.count(col)
 
 
 def dsum_sql(expr: str, scale: int = 4) -> str:
@@ -36,5 +36,5 @@ def dsum_sql(expr: str, scale: int = 4) -> str:
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,{scale}))) AS DOUBLE)"
 
 
-def davg_sql(expr: str, scale: int = 4) -> str:
-    return f"{dsum_sql(expr, scale)} / COUNT({expr})"
+def davg_sql(expr: str) -> str:
+    return f"{dsum_sql(expr)} / COUNT({expr})"

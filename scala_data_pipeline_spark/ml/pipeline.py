@@ -34,13 +34,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def uni_bigram_tokens(text_col: str = "text"):
+def uni_bigram_tokens():
     """Shared uni+bigram token-array expression (round-13 review: three
     byte-identical copies lived in pipeline.py x2 and ml/quality.py —
     the bigram construction carries subtle invariants (0-based
     transform index vs 1-based element_at, the slice-length guard) that
     must stay consistent with every model's feature space)."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     bigrams = F.transform(
         F.slice(toks, 1, F.size(toks) - 1),
         lambda x, i: F.concat_ws("_", x, F.element_at(toks, i + F.lit(2))),
@@ -48,12 +48,7 @@ def uni_bigram_tokens(text_col: str = "text"):
     return F.concat(toks, bigrams)
 
 
-def prepare_training_frame(
-    docs: DataFrame,
-    text_col: str = "text",
-    label_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def prepare_training_frame(docs: DataFrame) -> DataFrame:
     """documents → (id, tokens array<string>, label) — the shape the
     reference builds with collect_list(domain) (train.scala:30-35).
 
@@ -68,18 +63,13 @@ def prepare_training_frame(
     adjacency information.
     """
     return docs.select(
-        id_col,
-        F.array_sort(uni_bigram_tokens(text_col)).alias("tokens"),
-        F.col(label_col).alias("label_str"),
-    ).orderBy(id_col)
+        "doc_id",
+        F.array_sort(uni_bigram_tokens()).alias("tokens"),
+        F.col("lang").alias("label_str"),
+    ).orderBy("doc_id")
 
 
-def prepare_inference_frame(
-    docs: DataFrame,
-    text_col: str = "text",
-    label_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def prepare_inference_frame(docs: DataFrame) -> DataFrame:
     """Inference twin of ``prepare_training_frame`` WITHOUT the global
     ``orderBy`` and without ``array_sort``: both CountVectorizerModel
     and HashingTF score a row by token COUNTS, which are invariant to
@@ -90,32 +80,41 @@ def prepare_inference_frame(
     this drops a full-corpus global sort (one shuffle + sort of every
     token array) from the hot path."""
     return docs.select(
-        id_col,
-        uni_bigram_tokens(text_col).alias("tokens"),
-        F.col(label_col).alias("label_str"),
+        "doc_id",
+        uni_bigram_tokens().alias("tokens"),
+        F.col("lang").alias("label_str"),
     )
+
+
+def _classifier(features, train_df: DataFrame) -> Pipeline:
+    """``features`` → StringIndexer → LogisticRegression → IndexToString,
+    the tail both pipelines share. The indexer is fitted here, on
+    ``train_df``: IndexToString needs its labels at construction."""
+    indexer = StringIndexer(inputCol="label_str", outputCol="label").fit(train_df)
+    lr = LogisticRegression(maxIter=10, regParam=0.001)
+    converter = IndexToString(
+        inputCol="prediction", outputCol="category", labels=indexer.labels
+    )
+    return Pipeline(stages=[features, indexer, lr, converter])
 
 
 def build_pipeline(train_df: DataFrame, vocab_size: int = 1000) -> Pipeline:
     cv = CountVectorizer(
         inputCol="tokens", outputCol="features", vocabSize=vocab_size
     )
-    indexer = StringIndexer(inputCol="label_str", outputCol="label").fit(train_df)
-    lr = LogisticRegression(maxIter=10, regParam=0.001)
-    converter = IndexToString(
-        inputCol="prediction", outputCol="category", labels=indexer.labels
-    )
-    return Pipeline(stages=[cv, indexer, lr, converter])
+    return _classifier(cv, train_df)
 
 
-def _strip_lr_summary(model: PipelineModel) -> PipelineModel:
-    """Drop LogisticRegression's training summary in place: the summary
-    pins the SparkSession and LR's prediction UDF closes over the model
-    object, so a session with unserializable state (e.g. after any
-    ``df.observe``) would fail task serialization at transform time.
-    Scoring never needs the summary (save/load drops it too)."""
+def _fit(pipeline: Pipeline, frame: DataFrame) -> PipelineModel:
+    """Fit ``pipeline`` on ``frame`` and drop LogisticRegression's
+    training summary from the model: the summary pins the SparkSession
+    and LR's prediction UDF closes over the model object, so a session
+    with unserializable state (e.g. after any ``df.observe``) would fail
+    task serialization at transform time. Scoring never needs the
+    summary (save/load drops it too)."""
     import pyspark
 
+    model = pipeline.fit(frame)
     sc = pyspark.SparkContext._active_spark_context
     for stage in model.stages:
         if hasattr(stage, "hasSummary") and stage.hasSummary:
@@ -132,15 +131,13 @@ def train_model(train_df: DataFrame, vocab_size: int = 1000) -> PipelineModel:
     same frame can order the vocabulary, and so the coefficients,
     differently."""
     frame = train_df.localCheckpoint()
-    return _strip_lr_summary(build_pipeline(frame, vocab_size).fit(frame))
+    return _fit(build_pipeline(frame, vocab_size), frame)
 
 
 def train_model_hashed(
     train_df: DataFrame, num_features: int = 8192
 ) -> PipelineModel:
-    return _strip_lr_summary(
-        build_pipeline_hashed(train_df, num_features).fit(train_df)
-    )
+    return _fit(build_pipeline_hashed(train_df, num_features), train_df)
 
 
 def build_pipeline_hashed(
@@ -159,9 +156,4 @@ def build_pipeline_hashed(
     tf = HashingTF(
         inputCol="tokens", outputCol="features", numFeatures=num_features
     )
-    indexer = StringIndexer(inputCol="label_str", outputCol="label").fit(train_df)
-    lr = LogisticRegression(maxIter=10, regParam=0.001)
-    converter = IndexToString(
-        inputCol="prediction", outputCol="category", labels=indexer.labels
-    )
-    return Pipeline(stages=[tf, indexer, lr, converter])
+    return _classifier(tf, train_df)

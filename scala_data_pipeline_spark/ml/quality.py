@@ -34,14 +34,10 @@ from pyspark.sql import functions as F
 
 from ..ext.textstats import gopher_quality_rules
 from ..ext.util import keyed_md5, md5_uniform
-from .pipeline import _strip_lr_summary, uni_bigram_tokens
+from .pipeline import _fit, uni_bigram_tokens
 
 
-def train_quality_classifier(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_features: int = 2048,
-) -> PipelineModel:
+def train_quality_classifier(docs: DataFrame) -> PipelineModel:
     """Binary LR over hashed uni+bigram counts; labels = Gopher-rule
     conjunction. The labeled frame is the (small) training side — at
     100 TB you train on a labeled sample, not the corpus; the full
@@ -57,28 +53,23 @@ def train_quality_classifier(
     # ml_confusion_matrix precedent — which is fine because the
     # LABELED frame is the small side at scale (train on a sample).
     train = (
-        gopher_quality_rules(docs, text_col, keep=(text_col,))
+        gopher_quality_rules(docs, keep=("text",))
         .select(
             "doc_id",
-            uni_bigram_tokens(text_col).alias("tokens"),
+            uni_bigram_tokens().alias("tokens"),
             F.col("passes_gopher").cast("double").alias("label"),
         )
         .repartition(1)
         .sortWithinPartitions("doc_id")
     )
     tf = HashingTF(
-        inputCol="tokens", outputCol="features", numFeatures=num_features
+        inputCol="tokens", outputCol="features", numFeatures=2048
     )
     lr = LogisticRegression(maxIter=10, regParam=0.01)
-    # _strip_lr_summary: the summary pins the SparkSession and LR's
-    # prediction UDF closes over the model — shared helper, see
-    # ml/pipeline.py.
-    return _strip_lr_summary(Pipeline(stages=[tf, lr]).fit(train))
+    return _fit(Pipeline(stages=[tf, lr]), train)
 
 
-def score_quality(
-    model: PipelineModel, docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def score_quality(model: PipelineModel, docs: DataFrame) -> DataFrame:
     """(doc_id, passes_gopher, p_quality): the classifier's P(reference-
     quality) per document, alongside the rule label it was distilled
     from — downstream curation thresholds or importance-samples on
@@ -86,10 +77,10 @@ def score_quality(
     # One projection, zero joins (round-13 review): the rule label and
     # the token features ride the same scan; HashingTF + LR transform
     # row-wise, so the whole scoring pass is shuffle-free.
-    feats = gopher_quality_rules(docs, text_col, keep=(text_col,)).select(
+    feats = gopher_quality_rules(docs, keep=("text",)).select(
         "doc_id",
         "passes_gopher",
-        uni_bigram_tokens(text_col).alias("tokens"),
+        uni_bigram_tokens().alias("tokens"),
     )
     return model.transform(feats).select(
         "doc_id",
@@ -100,32 +91,27 @@ def score_quality(
     )
 
 
-def quality_classifier_scores(
-    docs: DataFrame, text_col: str = "text", num_features: int = 2048
-) -> DataFrame:
+def quality_classifier_scores(docs: DataFrame) -> DataFrame:
     """Train-then-score convenience used by the registry query."""
-    model = train_quality_classifier(docs, text_col, num_features)
-    return score_quality(model, docs, text_col)
+    model = train_quality_classifier(docs)
+    return score_quality(model, docs)
 
 
-def pareto_filter(
-    scored: DataFrame, alpha: float = 9.0, salt: str = ""
-) -> DataFrame:
+def pareto_filter(scored: DataFrame) -> DataFrame:
     """GPT-3's published acceptance rule over classifier scores — keep a
-    document iff ``score > 1 - x`` with ``x ~ Pareto(alpha)`` — made
+    document iff ``score > 1 - x`` with ``x ~ Pareto(9)`` — made
     deterministic: the Pareto draw comes from the inverse transform
-    ``x = (1-u)^(-1/alpha) - 1`` over the house md5-uniform ``u`` of
-    (salt, doc_id) (``ext.util.md5_uniform``). High scorers are
+    ``x = (1-u)^(-1/9) - 1`` over the house md5-uniform ``u`` of
+    doc_id (``ext.util.md5_uniform``). High scorers are
     (almost) always kept; low scorers survive with polynomially-decaying
     probability — deliberately preserving a long tail of lower-scoring
     documents for diversity, exactly the published behavior, but
-    reproducible: same corpus ⇒ same subset under any partitioning, and
-    a different ``salt`` draws an independent subset.
+    reproducible: same corpus ⇒ same subset under any partitioning.
 
     One codegen scan (md5 + pow per row, no shuffle, no UDF); the
     filter composes with a pushed-down scan when ``scored`` is a stored
     score table.
     """
-    u = md5_uniform(keyed_md5("doc_id", salt))
-    x = F.pow(F.lit(1.0) - u, F.lit(-1.0 / alpha)) - F.lit(1.0)
+    u = md5_uniform(keyed_md5("doc_id", ""))
+    x = F.pow(F.lit(1.0) - u, F.lit(-1.0 / 9.0)) - F.lit(1.0)
     return scored.filter(F.col("p_quality") > F.lit(1.0) - x)

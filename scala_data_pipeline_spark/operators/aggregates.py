@@ -108,11 +108,7 @@ def distinct_values(df: DataFrame, col: str) -> list[str]:
 
 
 def unpivot_counts(
-    df: DataFrame,
-    key: str,
-    value_cols: Sequence[str],
-    var_name: str = "item_id",
-    value_name: str = "cnt",
+    df: DataFrame, key: str, value_cols: Sequence[str]
 ) -> DataFrame:
     """Melt a wide count matrix back to long form (F19).
 
@@ -121,21 +117,12 @@ def unpivot_counts(
     (users_items/users_items.scala:59-73).
     """
     return df.unpivot(
-        ids=[key], values=list(value_cols), variableColumnName=var_name,
-        valueColumnName=value_name,
+        ids=[key], values=list(value_cols), variableColumnName="item_id",
+        valueColumnName="cnt",
     )
 
 
-def topk(
-    df: DataFrame,
-    order_col: str,
-    k: int,
-    tiebreak: str,
-    ascending: bool = False,
-) -> DataFrame:
-    """Deterministic top-k: TakeOrderedAndProject with a total order."""
-    order = [
-        F.col(order_col).asc() if ascending else F.col(order_col).desc(),
-        F.col(tiebreak).asc(),
-    ]
-    return df.orderBy(*order).limit(k)
+def topk(df: DataFrame, order_col: str, k: int, tiebreak: str) -> DataFrame:
+    """Deterministic top-k (``order_col`` descending, ``tiebreak``
+    ascending): TakeOrderedAndProject with a total order."""
+    return df.orderBy(F.col(order_col).desc(), F.col(tiebreak).asc()).limit(k)

@@ -56,8 +56,8 @@ def event_items_long(
     )
 
 
-def item_values(item_ids: Sequence[str] = ITEM_IDS) -> list[str]:
-    return [f"view_item{i}" for i in item_ids] + [f"buy_item{i}" for i in item_ids]
+def item_values() -> list[str]:
+    return [f"view_item{i}" for i in ITEM_IDS] + [f"buy_item{i}" for i in ITEM_IDS]
 
 
 def users_items_matrix(events: DataFrame) -> DataFrame:

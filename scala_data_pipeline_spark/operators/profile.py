@@ -27,11 +27,8 @@ from pyspark.sql.types import (
 )
 
 
-def profile_table(
-    df: DataFrame,
-    cols: list[str] | None = None,
-) -> DataFrame:
-    cols = cols or df.columns
+def profile_table(df: DataFrame) -> DataFrame:
+    cols = df.columns
     aggs = []
     for c in cols:
         dt = df.schema[c].dataType

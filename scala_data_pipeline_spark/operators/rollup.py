@@ -74,7 +74,7 @@ def daily_rollup(events: DataFrame) -> DataFrame:
     return daily_from_hourly(hourly_rollup(events))
 
 
-def daily_rollup_sql(table: str = "events") -> str:
+def daily_rollup_sql() -> str:
     """DuckDB twin: the identical two-level aggregation (hour partials
     merged into days) so the decimal semantics line up exactly."""
     s = _MONEY_SCALE
@@ -85,7 +85,7 @@ WITH hourly AS (
                   AS DECIMAL(18,{s}))) AS revenue_partial,
          COUNT(*) AS n_events,
          COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS n_purchases
-  FROM {table}
+  FROM events
   GROUP BY 1
 )
 SELECT date_trunc('day', bucket_hour) AS bucket_day,

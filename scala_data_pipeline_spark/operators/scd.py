@@ -157,15 +157,10 @@ WHERE EXISTS (SELECT 1 FROM changed_keys k
 """
 
 
-def cdc_latest_wins(
-    base: DataFrame,
-    log: DataFrame,
-    key: str = "cust_key",
-    seq_cols: tuple[str, ...] = ("o_orderdate", "o_orderkey"),
-) -> DataFrame:
+def cdc_latest_wins(base: DataFrame, log: DataFrame) -> DataFrame:
     """Type-1 CDC MERGE (the latest-wins compaction a Debezium/Delta
     ingest runs): per key, ONE window over the changelog picks the
-    last change by ``seq_cols``; deletes drop the row, upserts
+    last change by (o_orderdate, o_orderkey); deletes drop the row, upserts
     overwrite ``acctbal``, untouched base rows pass through, inserts
     for keys absent from base synthesize a name. Exactly the merge
     body of queries/scd_queries.py::cdc_apply_customer, lifted to
@@ -177,27 +172,27 @@ def cdc_latest_wins(
     the same log twice yields the same state (at-least-once delivery
     safety; asserted by tests/test_scd.py::test_cdc_latest_wins_idempotent).
 
-    ``base`` columns: (key, name, acctbal); ``log`` columns:
-    (key, op in {'U','D'}, new_acctbal, *seq_cols).
+    ``base`` columns: (cust_key, name, acctbal); ``log`` columns:
+    (cust_key, op in {'U','D'}, new_acctbal, o_orderdate, o_orderkey).
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key).orderBy(
-        *[F.col(c).desc() for c in seq_cols]
+    w = Window.partitionBy("cust_key").orderBy(
+        F.col("o_orderdate").desc(), F.col("o_orderkey").desc()
     )
     latest = (
         log.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(key, "op", "new_acctbal")
+        .select("cust_key", "op", "new_acctbal")
     )
-    merged = base.join(latest, on=key, how="full_outer")
+    merged = base.join(latest, on="cust_key", how="full_outer")
     return merged.filter(
         F.col("op").isNull() | (F.col("op") != "D")
     ).select(
-        key,
+        "cust_key",
         F.coalesce(
             F.col("name"),
-            F.concat(F.lit("NEW#"), F.col(key).cast("string")),
+            F.concat(F.lit("NEW#"), F.col("cust_key").cast("string")),
         ).alias("name"),
         F.coalesce(F.col("new_acctbal"), F.col("acctbal")).alias("acctbal"),
         F.coalesce(F.col("op"), F.lit("KEEP")).alias("last_op"),

@@ -30,7 +30,6 @@ def salted_agg(
     key: str,
     partial_aggs: Sequence[tuple[Column, str]],
     merge_aggs: Sequence[tuple[Column, str]],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase skew-proof aggregation.
 
@@ -38,7 +37,7 @@ def salted_agg(
     merge_aggs:   (expr over the partial aliases, final alias).
     """
     salted = df.withColumn(
-        "_salt", (F.rand(seed=42) * n_salts).cast("int")
+        "_salt", (F.rand(seed=42) * 16).cast("int")
     )
     partial = salted.groupBy(key, "_salt").agg(
         *[expr.alias(name) for expr, name in partial_aggs]
@@ -71,7 +70,6 @@ def adaptive_salted_join(
     key: str,
     hot_threshold: int = 100_000,
     n_salts: int = 16,
-    hot_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Hot-key-only salting — the production form of :func:`salted_join`.
 
@@ -100,23 +98,15 @@ def adaptive_salted_join(
     the frame is pinned with ``localCheckpoint(eager=True)`` first —
     otherwise the profile count pass re-executes big's ENTIRE upstream
     lineage (advisor round-9: ``skewsafe_nation_revenue`` computed its
-    orders⋈customer join twice). Callers that already know the hot
-    set (a stats table, a prior profile run) pass ``hot_keys`` (any
-    frame with a ``key`` column) and skip both the checkpoint and the
-    count pass entirely — the cheapest production shape."""
-    if hot_keys is None:
-        # One materialization scan buys: profile reads the pinned
-        # partitions, not the upstream plan, and the join re-reads the
-        # same pin — big's lineage executes exactly once.
-        big = big.localCheckpoint(eager=True)
-        counts = big.groupBy(key).agg(F.count(F.lit(1)).alias("_cnt"))
-        hot = counts.filter(F.col("_cnt") > hot_threshold).select(
-            key, F.lit(True).alias("_hot")
-        )
-    else:
-        hot = hot_keys.select(key).distinct().withColumn(
-            "_hot", F.lit(True)
-        )
+    orders⋈customer join twice)."""
+    # One materialization scan buys: profile reads the pinned
+    # partitions, not the upstream plan, and the join re-reads the
+    # same pin — big's lineage executes exactly once.
+    big = big.localCheckpoint(eager=True)
+    counts = big.groupBy(key).agg(F.count(F.lit(1)).alias("_cnt"))
+    hot = counts.filter(F.col("_cnt") > hot_threshold).select(
+        key, F.lit(True).alias("_hot")
+    )
     big_tagged = big.join(F.broadcast(hot), on=key, how="left")
     big_salted = big_tagged.withColumn(
         "_salt",

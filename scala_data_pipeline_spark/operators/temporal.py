@@ -111,15 +111,11 @@ def asof_join(
 
 
 def range_band_join(
-    fact: DataFrame,
-    bands: DataFrame,
-    value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
+    fact: DataFrame, bands: DataFrame, value_col: str
 ) -> DataFrame:
     """fact ⋈ bands ON value ∈ [lo, hi) — the band side broadcast so the
     non-equi join is a fact-local nested loop over a handful of bands."""
-    cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
+    cond = (F.col(value_col) >= F.col("lo")) & (F.col(value_col) < F.col("hi"))
     return fact.join(F.broadcast(bands), on=cond, how="inner")
 
 

@@ -44,10 +44,7 @@ def _pair_core(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pair_core",
         sf_dir,
         lambda: block_pair_intersections(
-            load_table(spark, sf_dir, "documents"),
-            "text",
-            ("lang", "source"),
-            64,
+            load_table(spark, sf_dir, "documents"), 64
         ),
     )
 

@@ -854,13 +854,7 @@ def _pois1_draw_sql(u: str) -> str:
 
 
 def poisson_bootstrap_ci(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    key_col: str,
-    n_boot: int = 100,
-    alpha: float = 0.05,
-    salt: str = "",
+    df: DataFrame, value_col: str, group_cols: list[str], key_col: str
 ) -> DataFrame:
     """Percentile-bootstrap CI for the per-group MEAN via the Poisson
     bootstrap (Chamandy et al. 2012, "Estimating Uncertainty for
@@ -868,24 +862,24 @@ def poisson_bootstrap_ci(
     pass over data too large to index): instead of drawing n rows with
     replacement per replicate (which needs global coordination), each
     row independently contributes Poisson(1) copies to each of the
-    ``n_boot`` replicates. Made deterministic with the house
-    md5-uniform over (salt, row key, replicate id), so the same corpus
+    100 replicates. Made deterministic with the house
+    md5-uniform over (row key, replicate id), so the same corpus
     yields the same CI under any partitioning — and the DuckDB twin is
     exact, branch for branch.
 
-    Scale shape: the explode to (row x n_boot) is MAP-SIDE ONLY —
-    partial aggregation collapses it to (group x n_boot) partial sums
+    Scale shape: the explode to (row x 100) is MAP-SIDE ONLY —
+    partial aggregation collapses it to (group x 100) partial sums
     before the one shuffle, so shuffled rows are bounded by the group
-    count times ``n_boot`` regardless of corpus size. Replicate sums
+    count times 100 regardless of corpus size. Replicate sums
     are exact DECIMAL (order-independent, the dsum house rule); only
     the final mean and percentile interpolation are float, computed
     identically in both engines.
     """
     # fan_out: a single-row-group scan would run the whole
-    # (rows x n_boot) explode + md5 pipeline on ONE task — measured
+    # (rows x 100) explode + md5 pipeline on ONE task — measured
     # 30.9 s for 150k x 100 at sf0.1; parallel + the _u fix below it
     # is ~1.5 s. No-op on multi-partition inputs (the 100 TB case).
-    b = F.explode(F.sequence(F.lit(0), F.lit(n_boot - 1))).alias("b")
+    b = F.explode(F.sequence(F.lit(0), F.lit(99))).alias("b")
     long = fan_out(df).select(
         *group_cols,
         F.col(key_col).cast("string").alias("_k"),
@@ -893,7 +887,7 @@ def poisson_bootstrap_ci(
         b,
     )
     u = md5_uniform(
-        keyed_md5(F.concat("_k", F.lit(":"), F.col("b").cast("string")), salt)
+        keyed_md5(F.concat("_k", F.lit(":"), F.col("b").cast("string")), "")
     )
     # Materialize the md5-uniform ONCE per row in a projection: inlining
     # ``u`` into the 9-branch Poisson CASE chain re-evaluates the
@@ -910,7 +904,7 @@ def poisson_bootstrap_ci(
         *group_cols,
         F.try_divide(F.col("_s").cast("double"), F.col("_n")).alias("_m"),
     )
-    lo, hi = alpha / 2, 1 - alpha / 2
+    lo, hi = 0.025, 0.975
     return means.groupBy(*group_cols).agg(
         F.round(F.expr(f"percentile(_m, {lo!r})"), 4).alias("ci_lo"),
         F.round(F.expr("percentile(_m, 0.5)"), 4).alias("boot_median"),
@@ -930,24 +924,19 @@ def bootstrap_ci_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bootstrap_ci_sql(
-    n_boot: int = 100, alpha: float = 0.05, salt: str = ""
-) -> str:
-    # salt is threaded (not hardcoded '') so a future registration of a
-    # non-default-salt poisson_bootstrap_ci variant stays oracled —
-    # mirroring simhash_neardup_sql's bits/block parameterization.
+def _bootstrap_ci_sql() -> str:
     u = md5_uniform_sql(
         keyed_md5_sql(
-            "CAST(o_orderkey AS VARCHAR) || ':' || CAST(t.b AS VARCHAR)", salt
+            "CAST(o_orderkey AS VARCHAR) || ':' || CAST(t.b AS VARCHAR)", ""
         )
     )
-    lo, hi = alpha / 2, 1 - alpha / 2
+    lo, hi = 0.025, 0.975
     return f"""
 WITH reps AS (
   SELECT o_orderpriority, t.b AS b,
          {_pois1_draw_sql(u)} AS cnt,
          CAST(o_totalprice AS DECIMAL(18,2)) AS v
-  FROM orders, (SELECT unnest(range({n_boot})) AS b) t
+  FROM orders, (SELECT unnest(range(100)) AS b) t
 ), agg AS (
   SELECT o_orderpriority, b,
          CAST(SUM(cnt * v) AS DOUBLE) AS s,

@@ -171,8 +171,8 @@ def problems(path: str, current: bool = True) -> list[str]:
 
     Every BENCH record must hold a parsed bench result with a numeric
     total and numeric timings. A ``current`` (this round's) record must
-    also cover the live registry: BENCH times every driver query and
-    requested extra; FULLDRIVE and SWEEP drive every driver query /
+    also cover the live registry: BENCH times every driver query;
+    FULLDRIVE and SWEEP drive every driver query /
     oracled extra with no failures; and GATE, FULLDRIVE and SWEEP record
     a head that contains the last source commit.
     """
@@ -193,7 +193,7 @@ def problems(path: str, current: bool = True) -> list[str]:
             out.append(f"{name}: headline total missing or not a number")
         if not all(isinstance(v, numbers.Number) for v in timings.values()):
             out.append(f"{name}: a query timing is not a number")
-        expected = set(all_queries()) | set(parsed.get("extras", []))
+        expected = set(all_queries())
         if current and set(timings) != expected:
             out.append(
                 f"{name}: missing timings {sorted(expected - set(timings))},"

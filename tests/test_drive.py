@@ -38,7 +38,6 @@ def _bench_record(**over) -> dict:
     parsed = {
         "value": 30.0,
         "queries": {n: 0.5 for n in all_queries()},
-        "extras": [],
     }
     parsed.update(over)
     return {"n": 99, "rc": 0, "cpus": 4, "sf": 0.1, "parsed": parsed}
